@@ -66,9 +66,10 @@ _SAFE_INFER = (bool, int, float, str, bytes)
 
 
 def _contains_timestamp(dt) -> bool:
-    """True if ``dt`` nests a TimestampType anywhere below a
-    container type we do not normalize (arrays/maps)."""
-    if isinstance(dt, TimestampType):
+    """True if ``dt`` nests a TimestampType or TimestampNTZType
+    anywhere below a container type we do not normalize
+    (arrays/maps)."""
+    if isinstance(dt, (TimestampType, TimestampNTZType)):
         return True
     if isinstance(dt, ArrayType):
         return _contains_timestamp(dt.elementType)
@@ -93,8 +94,8 @@ def _rows_as_dicts(data: Iterable[Any], names: list[str], fields=None):
     07:00Z. ``v.astimezone(timezone.utc)`` reproduces classic for
     both cases (astimezone on a naive datetime assumes OS-local time,
     exactly like mktime). Aware datetimes in TimestampNTZ fields and
-    timestamps nested in arrays/maps raise so the caller's classic
-    fallback handles them instead."""
+    timestamps of either kind nested in arrays/maps raise so the
+    caller's classic fallback handles them instead."""
     out = []
     for r in data:
         if isinstance(r, dict):

@@ -7,8 +7,9 @@ The reference writes to an Iceberg v2 table via
 equivalent used here: a path-backed Parquet table written with
 dynamic partition overwrite — only the ``event_date`` partitions
 present in the batch are replaced, so re-running a day converges to
-the same state. When Delta is importable (session.HAS_DELTA) the same
-writer switches to ``format("delta")`` and gains ACID/time-travel.
+the same state. ``table_format="snapshot"`` lands the batch on the
+manifest-log table format (sources/snaptable.py) instead, which adds
+ACID commits and time travel.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import safe_div
 from ..schemas import EV_GOLD_SELECT_COLS
-from ..session import HAS_DELTA
 
 
 def build_gold(df: DataFrame) -> DataFrame:
@@ -38,7 +38,7 @@ CREATE TABLE IF NOT EXISTS {table} (
   created TIMESTAMP, ended TIMESTAMP, event_date DATE,
   session_duration_minutes DOUBLE, avg_cost_per_kwh DOUBLE
 )
-USING {fmt}
+USING PARQUET
 PARTITIONED BY (event_date)
 LOCATION '{location}'
 """
@@ -51,8 +51,7 @@ def ensure_fact_table(
     :125-150). Returns the qualified table name."""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
     fqn = f"{database}.{table}"
-    fmt = "DELTA" if HAS_DELTA else "PARQUET"
-    spark.sql(FACT_TABLE_DDL.format(table=fqn, fmt=fmt, location=location))
+    spark.sql(FACT_TABLE_DDL.format(table=fqn, location=location))
     return fqn
 
 

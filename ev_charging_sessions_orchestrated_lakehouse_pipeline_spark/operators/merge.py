@@ -10,8 +10,8 @@ we implement them as DataFrame transforms that (a) run anywhere
 Parquet runs, and (b) compile to exactly the join plans a Delta MERGE
 executes underneath (anti-join + union ≙ the rewrite-matched-files
 path). The functions compose with ``writers.overwrite_partitions`` /
-``write_bucketed`` for persistence; when HAS_DELTA, callers can swap
-in native ``DeltaTable.merge`` without changing call sites.
+``write_bucketed`` for persistence; ``sources/snaptable.merge_into``
+is the transactional MERGE on the snapshot table format.
 
 Scale notes:
 - ``merge_upsert`` is one shuffle on the merge keys for the anti join
@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localframe import local_df
 from ..functions.oracle import dsum, dsum_spark_sql, dsum_sql
+from ..sources.scratch import scratch_dir
 
 ORACLE: dict[str, str] = {}
 
@@ -419,40 +420,30 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked. The per-version aggregate is collected driver-side
     (2 rows, bounded) because the table lives in a run-scoped temp
     dir that must not outlive the call."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_tt_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    st.overwrite_partitions(
-        orders.filter(
-            (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
-        ),
-        table,
-    )
-    rows = []
-    for v in (1, 2):
-        snap = st.read_snapshot(spark, table, version=v)
-        r = snap.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
-        ).collect()[0]
-        # SUM over an empty snapshot is NULL (matches the oracle's
-        # SUM over zero rows) — keep it None instead of crashing on
-        # an empty daily partition.
-        total = None if r.sum_totalprice is None else float(r.sum_totalprice)
-        rows.append((v, r.n_orders, total))
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_tt") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        st.overwrite_partitions(
+            orders.filter(
+                (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
+            ),
+            table,
+        )
+        rows = []
+        for v in (1, 2):
+            snap = st.read_snapshot(spark, table, version=v)
+            r = snap.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            ).collect()[0]
+            # SUM over an empty snapshot is NULL (matches the oracle's
+            # SUM over zero rows) — keep it None instead of crashing on
+            # an empty daily partition.
+            total = None if r.sum_totalprice is None else float(r.sum_totalprice)
+            rows.append((v, r.n_orders, total))
     return local_df(spark, 
         rows, "version int, n_orders bigint, sum_totalprice double"
     ).orderBy("version")
@@ -483,40 +474,30 @@ def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the manifest carry-over + rewrite logic itself. Per-segment
     aggregate is collected driver-side (5 rows, bounded) because the
     table lives in a run-scoped temp dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     cust = read_fixture(spark, sf_dir, "customer")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_merge_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(cust, table, ["c_mktsegment"])
-    seg = F.col("c_mktsegment") == "BUILDING"
-    updates = cust.filter(seg & (F.col("c_custkey") % 10 == 0)).withColumn(
-        "c_acctbal", F.col("c_acctbal") + F.lit(1000.0)
-    )
-    inserts = cust.filter(seg & (F.col("c_custkey") % 100 == 7)).withColumn(
-        "c_custkey", F.col("c_custkey") + F.lit(9000000)
-    )
-    st.merge_into(spark, table, updates.unionByName(inserts), ["c_custkey"])
-    audit = (
-        st.read_snapshot(spark, table)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-            dsum("c_acctbal").alias("total_acctbal"),
+    with scratch_dir("snap_merge") as table:
+        st.create_table(cust, table, ["c_mktsegment"])
+        seg = F.col("c_mktsegment") == "BUILDING"
+        updates = cust.filter(seg & (F.col("c_custkey") % 10 == 0)).withColumn(
+            "c_acctbal", F.col("c_acctbal") + F.lit(1000.0)
         )
-        .orderBy("c_mktsegment")
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        inserts = cust.filter(seg & (F.col("c_custkey") % 100 == 7)).withColumn(
+            "c_custkey", F.col("c_custkey") + F.lit(9000000)
+        )
+        st.merge_into(spark, table, updates.unionByName(inserts), ["c_custkey"])
+        audit = (
+            st.read_snapshot(spark, table)
+            .groupBy("c_mktsegment")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_customers"),
+                dsum("c_acctbal").alias("total_acctbal"),
+            )
+            .orderBy("c_mktsegment")
+            .collect()
+        )
     return local_df(spark, 
         [(r.c_mktsegment, r.n_customers, float(r.total_acctbal)) for r in audit],
         "c_mktsegment string, n_customers bigint, total_acctbal double",
@@ -560,33 +541,23 @@ def q_snapshot_scan_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned_fewer_files (files planned < files in the manifest —
     fails if stats stop pruning), n_rows + sum_totalprice
     (hash-matched against the oracle's replay of the predicate)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_skip_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders.repartitionByRange(8, "o_totalprice"), table, [])
-    manifest = st._read_manifest(table, 1)
-    filters = [("o_totalprice", ">", 400000.0)]
-    planned = st._prune_files(table, manifest, filters)
-    agg = (
-        st.scan(spark, table, filters)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+    with scratch_dir("snap_skip") as table:
+        st.create_table(orders.repartitionByRange(8, "o_totalprice"), table, [])
+        manifest = st._read_manifest(table, 1)
+        filters = [("o_totalprice", ">", 400000.0)]
+        planned = st._prune_files(table, manifest, filters)
+        agg = (
+            st.scan(spark, table, filters)
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
-    shutil.rmtree(table, ignore_errors=True)
     return local_df(spark, 
         [
             (
@@ -615,40 +586,30 @@ def q_snapshot_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered column (live booleans — fail if the interleave or the
     stats collection breaks), and the pruned scans' aggregates must
     hash-match a SQL replay of the same predicates over orders."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_z_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, [])
-    st.optimize(
-        spark,
-        table,
-        files_per_partition=8,
-        cluster_by=["o_custkey", "o_totalprice"],
-        zorder=True,
-    )
-    m = st._read_manifest(table, 2)
-    f_price = [("o_totalprice", ">", 400000.0)]
-    f_cust = [("o_custkey", ">", 14000)]
-    pruned_price = len(st._prune_files(table, m, f_price)) < len(m["files"])
-    pruned_cust = len(st._prune_files(table, m, f_cust)) < len(m["files"])
-    a = st.scan(spark, table, f_price).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    ).collect()[0].n
-    b = st.scan(spark, table, f_cust).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    ).collect()[0].n
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_z") as table:
+        st.create_table(orders, table, [])
+        st.optimize(
+            spark,
+            table,
+            files_per_partition=8,
+            cluster_by=["o_custkey", "o_totalprice"],
+            zorder=True,
+        )
+        m = st._read_manifest(table, 2)
+        f_price = [("o_totalprice", ">", 400000.0)]
+        f_cust = [("o_custkey", ">", 14000)]
+        pruned_price = len(st._prune_files(table, m, f_price)) < len(m["files"])
+        pruned_cust = len(st._prune_files(table, m, f_cust)) < len(m["files"])
+        a = st.scan(spark, table, f_price).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n")
+        ).collect()[0].n
+        b = st.scan(spark, table, f_cust).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n")
+        ).collect()[0].n
     return local_df(spark, 
         [(pruned_price, pruned_cust, a, b)],
         "pruned_on_price boolean, pruned_on_custkey boolean, "
@@ -674,43 +635,33 @@ def q_snapshot_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final per-status aggregate against a SQL replay of both
     mutations. files_carried is a live boolean: it fails if the
     rewrite stops carrying untouched files by reference."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_dml_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, [])
-    st.optimize(spark, table, files_per_partition=8, cluster_by=["o_totalprice"])
-    before = set(st._read_manifest(table, 2)["files"])
-    st.delete_where(spark, table, [("o_totalprice", ">", 400000.0)])
-    st.update_where(
-        spark,
-        table,
-        [("o_totalprice", "<", 10000.0)],
-        {"o_totalprice": "o_totalprice + 1.0"},
-    )
-    after = set(st._read_manifest(table, st.current_version(table))["files"])
-    carried = len(before & after) > 0
-    audit = (
-        st.read_snapshot(spark, table)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+    with scratch_dir("snap_dml") as table:
+        st.create_table(orders, table, [])
+        st.optimize(spark, table, files_per_partition=8, cluster_by=["o_totalprice"])
+        before = set(st._read_manifest(table, 2)["files"])
+        st.delete_where(spark, table, [("o_totalprice", ">", 400000.0)])
+        st.update_where(
+            spark,
+            table,
+            [("o_totalprice", "<", 10000.0)],
+            {"o_totalprice": "o_totalprice + 1.0"},
         )
-        .orderBy("o_orderstatus")
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        after = set(st._read_manifest(table, st.current_version(table))["files"])
+        carried = len(before & after) > 0
+        audit = (
+            st.read_snapshot(spark, table)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .orderBy("o_orderstatus")
+            .collect()
+        )
     return local_df(spark, 
         [
             (r.o_orderstatus, r.n_orders, float(r.sum_totalprice), carried)
@@ -745,39 +696,29 @@ def q_snapshot_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     refuse a rule the existing data violates. All booleans are live —
     computed from what the table actually did — and row counts
     hash-match a SQL replay."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_ck_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(
-        orders, table, [], constraints={"price_nonneg": "o_totalprice >= 0"}
-    )
-    bad = orders.limit(5).withColumn("o_totalprice", F.lit(-1.0))
-    rejected = False
-    try:
-        st.append(bad, table)
-    except st.ConstraintViolation:
-        rejected = True
-    head_unchanged = st.current_version(table) == 1
-    st.append(orders.filter(F.col("o_custkey") % 100 == 3), table)
-    valid_landed = st.current_version(table) == 2
-    add_refused = False
-    try:
-        st.add_constraint(spark, table, "impossible", "o_totalprice < 0")
-    except st.ConstraintViolation:
-        add_refused = True
-    n_rows = st.read_snapshot(spark, table).count()
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_ck") as table:
+        st.create_table(
+            orders, table, [], constraints={"price_nonneg": "o_totalprice >= 0"}
+        )
+        bad = orders.limit(5).withColumn("o_totalprice", F.lit(-1.0))
+        rejected = False
+        try:
+            st.append(bad, table)
+        except st.ConstraintViolation:
+            rejected = True
+        head_unchanged = st.current_version(table) == 1
+        st.append(orders.filter(F.col("o_custkey") % 100 == 3), table)
+        valid_landed = st.current_version(table) == 2
+        add_refused = False
+        try:
+            st.add_constraint(spark, table, "impossible", "o_totalprice < 0")
+        except st.ConstraintViolation:
+            add_refused = True
+        n_rows = st.read_snapshot(spark, table).count()
     return local_df(spark, 
         [(rejected, head_unchanged, valid_landed, add_refused, n_rows)],
         "violating_append_rejected boolean, head_unchanged boolean, "
@@ -801,40 +742,30 @@ def q_snapshot_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows read as NULL for it, the pre-evolution version keeps its
     original schema via time travel. Counts hash-match a SQL replay;
     the schema booleans are live."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_evo_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, [])
-    batch = orders.filter(F.col("o_custkey") % 100 == 7).withColumn(
-        "priority_score", F.lit(2.5)
-    )
-    rejected_without_flag = False
-    try:
-        st.append(batch, table)
-    except ValueError:
-        rejected_without_flag = True
-    st.append(batch, table, merge_schema=True)
-    head = st.read_snapshot(spark, table)
-    v1 = st.read_snapshot(spark, table, version=1)
-    out = (
-        rejected_without_flag,
-        "priority_score" in head.columns,
-        "priority_score" not in v1.columns,
-        head.filter(F.col("priority_score").isNull()).count(),
-        head.filter(F.col("priority_score") == 2.5).count(),
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_evo") as table:
+        st.create_table(orders, table, [])
+        batch = orders.filter(F.col("o_custkey") % 100 == 7).withColumn(
+            "priority_score", F.lit(2.5)
+        )
+        rejected_without_flag = False
+        try:
+            st.append(batch, table)
+        except ValueError:
+            rejected_without_flag = True
+        st.append(batch, table, merge_schema=True)
+        head = st.read_snapshot(spark, table)
+        v1 = st.read_snapshot(spark, table, version=1)
+        out = (
+            rejected_without_flag,
+            "priority_score" in head.columns,
+            "priority_score" not in v1.columns,
+            head.filter(F.col("priority_score").isNull()).count(),
+            head.filter(F.col("priority_score") == 2.5).count(),
+        )
     return local_df(spark, 
         [out],
         "rejected_without_flag boolean, head_has_column boolean, "
@@ -867,45 +798,35 @@ def q_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is precisely the content-preservation contract the feed
     guarantees. Driver-side collect is the bounded audit rollup
     (<=3 rows); the table lives in a run-scoped temp dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_cdf_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    st.overwrite_partitions(
-        orders.filter(
-            (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
-        ),
-        table,
-    )
-    st.append(
-        orders.filter(F.col("o_orderkey") % 97 == 3).withColumn(
-            "o_orderkey", F.col("o_orderkey") + F.lit(5000000)
-        ),
-        table,
-    )
-    st.optimize(spark, table, files_per_partition=1)
-    audit = (
-        st.changes(spark, table, from_version=1)
-        .groupBy("_commit_version", "_change_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+    with scratch_dir("snap_cdf") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        st.overwrite_partitions(
+            orders.filter(
+                (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
+            ),
+            table,
         )
-        .orderBy("_commit_version", "_change_type")
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        st.append(
+            orders.filter(F.col("o_orderkey") % 97 == 3).withColumn(
+                "o_orderkey", F.col("o_orderkey") + F.lit(5000000)
+            ),
+            table,
+        )
+        st.optimize(spark, table, files_per_partition=1)
+        audit = (
+            st.changes(spark, table, from_version=1)
+            .groupBy("_commit_version", "_change_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .orderBy("_commit_version", "_change_type")
+            .collect()
+        )
     return local_df(spark, 
         [
             (r._commit_version, r._change_type, r.n_rows, float(r.sum_totalprice))
@@ -943,55 +864,45 @@ def q_snapshot_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     invertible; see maintain_count_sum's docstring). Driver-side
     collect is the bounded per-status rollup; the table lives in a
     run-scoped temp dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..functions.oracle import DEC
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_ivm_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    base = (
-        st.read_snapshot(spark, table, version=1)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.col("o_totalprice").cast(DEC)).cast(DEC).alias("s"),
+    with scratch_dir("snap_ivm") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        base = (
+            st.read_snapshot(spark, table, version=1)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+                F.sum(F.col("o_totalprice").cast(DEC)).cast(DEC).alias("s"),
+            )
         )
-    )
-    st.overwrite_partitions(
-        orders.filter(
-            (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
-        ),
-        table,
-    )
-    st.append(
-        orders.filter(F.col("o_orderkey") % 97 == 3).withColumn(
-            "o_orderkey", F.col("o_orderkey") + F.lit(5000000)
-        ),
-        table,
-    )
-    maintained = st.maintain_count_sum(
-        spark, table, base, ["o_orderstatus"], "o_totalprice", from_version=1
-    )
-    rows = (
-        maintained.select(
-            "o_orderstatus",
-            F.col("n").alias("n_orders"),
-            F.col("s").cast("string").cast("double").alias("sum_totalprice"),
+        st.overwrite_partitions(
+            orders.filter(
+                (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
+            ),
+            table,
         )
-        .orderBy("o_orderstatus")
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        st.append(
+            orders.filter(F.col("o_orderkey") % 97 == 3).withColumn(
+                "o_orderkey", F.col("o_orderkey") + F.lit(5000000)
+            ),
+            table,
+        )
+        maintained = st.maintain_count_sum(
+            spark, table, base, ["o_orderstatus"], "o_totalprice", from_version=1
+        )
+        rows = (
+            maintained.select(
+                "o_orderstatus",
+                F.col("n").alias("n_orders"),
+                F.col("s").cast("string").cast("double").alias("sum_totalprice"),
+            )
+            .orderBy("o_orderstatus")
+            .collect()
+        )
     return local_df(spark, 
         [(r.o_orderstatus, r.n_orders, float(r.sum_totalprice)) for r in rows],
         "o_orderstatus string, n_orders bigint, sum_totalprice double",
@@ -1027,49 +938,39 @@ def q_snapshot_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the metadata path equals the scan path. (That the answer
     truly reads no data is pinned separately in tests/test_snaptable:
     table_stats still answers after data/ is deleted.)"""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_stats_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    st.overwrite_partitions(
-        orders.filter(
-            (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
-        ),
-        table,
-    )
-    rows = []
-    for v in (1, 2):
-        s = st.table_stats(table, version=v)
-
-        # footer stats don't exist for a zero-file snapshot (empty
-        # daily partition): surface NULL min/max, like MIN/MAX over
-        # zero rows, instead of crashing on the missing key.
-        def _stat(kind: str, col: str, cast):
-            val = s[kind].get(col)
-            return None if val is None else cast(val)
-
-        rows.append(
-            (
-                v,
-                s["rows"],
-                _stat("min", "o_totalprice", float),
-                _stat("max", "o_totalprice", float),
-                _stat("min", "o_orderkey", int),
-                _stat("max", "o_orderkey", int),
-            )
+    with scratch_dir("snap_stats") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        st.overwrite_partitions(
+            orders.filter(
+                (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000)
+            ),
+            table,
         )
-    shutil.rmtree(table, ignore_errors=True)
+        rows = []
+        for v in (1, 2):
+            s = st.table_stats(table, version=v)
+
+            # footer stats don't exist for a zero-file snapshot (empty
+            # daily partition): surface NULL min/max, like MIN/MAX over
+            # zero rows, instead of crashing on the missing key.
+            def _stat(kind: str, col: str, cast):
+                val = s[kind].get(col)
+                return None if val is None else cast(val)
+
+            rows.append(
+                (
+                    v,
+                    s["rows"],
+                    _stat("min", "o_totalprice", float),
+                    _stat("max", "o_totalprice", float),
+                    _stat("min", "o_orderkey", int),
+                    _stat("max", "o_orderkey", int),
+                )
+            )
     return local_df(spark, 
         rows,
         "version int, n_rows bigint, min_totalprice double, "
@@ -1187,40 +1088,29 @@ GROUP BY e.user_id ORDER BY e.user_id
 # pinned by tests/test_snaptable.py.
 # ---------------------------------------------------------------------------
 def q_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_bloom_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders.repartitionByRange(8, "o_custkey"), table, [])
-    st.add_bloom_index(spark, table, "o_custkey")
-    out_schema = (
-        "custkey bigint, n_orders bigint, sum_totalprice double, "
-        "min_orderkey bigint, max_orderkey bigint"
-    )
-    min_key = orders.agg(F.min("o_custkey")).collect()[0][0]
-    if min_key is None:  # empty partition: no key to look up
-        shutil.rmtree(table, ignore_errors=True)
-        return local_df(spark, [], out_schema)
-    key = int(min_key)
-    hit = st.scan(spark, table, [("o_custkey", "=", key)])
-    out = hit.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        dsum("o_totalprice").alias("sum_totalprice"),
-        F.min("o_orderkey").alias("min_orderkey"),
-        F.max("o_orderkey").alias("max_orderkey"),
-    ).withColumnRenamed("o_custkey", "custkey")
-    rows = [tuple(r) for r in out.collect()]  # bounded: one group
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_bloom") as table:
+        st.create_table(orders.repartitionByRange(8, "o_custkey"), table, [])
+        st.add_bloom_index(spark, table, "o_custkey")
+        out_schema = (
+            "custkey bigint, n_orders bigint, sum_totalprice double, "
+            "min_orderkey bigint, max_orderkey bigint"
+        )
+        min_key = orders.agg(F.min("o_custkey")).collect()[0][0]
+        if min_key is None:  # empty partition: no key to look up
+            return local_df(spark, [], out_schema)
+        key = int(min_key)
+        hit = st.scan(spark, table, [("o_custkey", "=", key)])
+        out = hit.groupBy("o_custkey").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            dsum("o_totalprice").alias("sum_totalprice"),
+            F.min("o_orderkey").alias("min_orderkey"),
+            F.max("o_orderkey").alias("max_orderkey"),
+        ).withColumnRenamed("o_custkey", "custkey")
+        rows = [tuple(r) for r in out.collect()]  # bounded: one group
     return local_df(spark, rows, out_schema).orderBy("custkey")
 
 
@@ -1247,36 +1137,26 @@ GROUP BY o.o_custkey ORDER BY custkey
 # mechanics themselves are pinned in tests/test_snaptable.py.
 # ---------------------------------------------------------------------------
 def q_snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_pev_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders.filter(F.col("o_orderkey") % 2 == 0), table,
-                    ["o_orderstatus"])
-    st.evolve_partitioning(table, ["o_orderpriority"])
-    st.append(orders.filter(F.col("o_orderkey") % 2 == 1), table)
-    snap = st.scan(spark, table, [("o_orderstatus", "=", "F")])
-    out = (
-        snap.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+    with scratch_dir("snap_pev") as table:
+        st.create_table(orders.filter(F.col("o_orderkey") % 2 == 0), table,
+                        ["o_orderstatus"])
+        st.evolve_partitioning(table, ["o_orderpriority"])
+        st.append(orders.filter(F.col("o_orderkey") % 2 == 1), table)
+        snap = st.scan(spark, table, [("o_orderstatus", "=", "F")])
+        out = (
+            snap.groupBy("o_orderpriority")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .withColumnRenamed("o_orderpriority", "priority")
+            .orderBy("priority")
         )
-        .withColumnRenamed("o_orderpriority", "priority")
-        .orderBy("priority")
-    )
-    rows = [tuple(r) for r in out.collect()]  # bounded: |priorities|
-    shutil.rmtree(table, ignore_errors=True)
+        rows = [tuple(r) for r in out.collect()]  # bounded: |priorities|
     return local_df(spark, 
         rows, "priority string, n_orders bigint, sum_totalprice double"
     ).orderBy("priority")
@@ -1305,35 +1185,25 @@ HIDDEN_PART_CUTOFF = "2024-01-15 00:00:00"
 
 
 def q_snapshot_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     ev = read_fixture(spark, sf_dir, "events")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_hp_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(ev, table, ["days(ts)"])
-    import datetime
+    with scratch_dir("snap_hp") as table:
+        st.create_table(ev, table, ["days(ts)"])
+        import datetime
 
-    cutoff = datetime.datetime.strptime(HIDDEN_PART_CUTOFF, "%Y-%m-%d %H:%M:%S")
-    snap = st.scan(spark, table, [("ts", ">=", cutoff)])
-    out = (
-        snap.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            dsum("value").alias("total_value"),
+        cutoff = datetime.datetime.strptime(HIDDEN_PART_CUTOFF, "%Y-%m-%d %H:%M:%S")
+        snap = st.scan(spark, table, [("ts", ">=", cutoff)])
+        out = (
+            snap.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_events"),
+                dsum("value").alias("total_value"),
+            )
+            .orderBy("event_type")
         )
-        .orderBy("event_type")
-    )
-    rows = [tuple(r) for r in out.collect()]  # bounded: |event types|
-    shutil.rmtree(table, ignore_errors=True)
+        rows = [tuple(r) for r in out.collect()]  # bounded: |event types|
     return local_df(spark, 
         rows, "event_type string, n_events bigint, total_value double"
     ).orderBy("event_type")
@@ -1362,36 +1232,26 @@ DV_DELETE_THRESHOLD = 400000.0
 
 
 def q_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_dv_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    st.delete_where(
-        spark, table, [("o_totalprice", ">", DV_DELETE_THRESHOLD)], use_dv=True
-    )
-    out = (
-        st.read_snapshot(spark, table)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+    with scratch_dir("snap_dv") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        st.delete_where(
+            spark, table, [("o_totalprice", ">", DV_DELETE_THRESHOLD)], use_dv=True
         )
-        .withColumnRenamed("o_orderstatus", "status")
-        .orderBy("status")
-    )
-    rows = [tuple(r) for r in out.collect()]  # bounded: |statuses|
-    shutil.rmtree(table, ignore_errors=True)
+        out = (
+            st.read_snapshot(spark, table)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .withColumnRenamed("o_orderstatus", "status")
+            .orderBy("status")
+        )
+        rows = [tuple(r) for r in out.collect()]  # bounded: |statuses|
     return local_df(spark, 
         rows, "status string, n_orders bigint, sum_totalprice double"
     ).orderBy("status")
@@ -1419,50 +1279,40 @@ def q_snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical-named files reading back under logical names, the append
     translating logical -> physical, and time travel resolving each
     version under ITS OWN manifest's mapping."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_cm_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    st.rename_column(table, "o_totalprice", "total_price")
-    st.drop_column(table, "o_orderpriority")
-    batch = (
-        orders.orderBy("o_orderkey")
-        .limit(100)
-        .drop("o_orderpriority")
-        .withColumnRenamed("o_totalprice", "total_price")
-        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
-    )
-    st.append(batch, table)
-    head = st.read_snapshot(spark, table)
-    cur = head.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        dsum("total_price").alias("sum_price"),
-    )
-    rows = [
-        ("v4:" + r.o_orderstatus, r.n_orders, float(r.sum_price))
-        for r in cur.collect()
-    ]
-    v1 = st.read_snapshot(spark, table, version=1)
-    r1 = v1.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        dsum("o_totalprice").alias("s"),
-        F.count_distinct("o_orderpriority").cast("bigint").alias("p"),
-    ).collect()[0]
-    # SUM over an empty snapshot is NULL (empty-lake sweep) — keep it
-    rows.append(("v1:all", r1.n, None if r1.s is None else float(r1.s)))
-    rows.append(("v1:priorities", r1.p, None))
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_cm") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        st.rename_column(table, "o_totalprice", "total_price")
+        st.drop_column(table, "o_orderpriority")
+        batch = (
+            orders.orderBy("o_orderkey")
+            .limit(100)
+            .drop("o_orderpriority")
+            .withColumnRenamed("o_totalprice", "total_price")
+            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
+        )
+        st.append(batch, table)
+        head = st.read_snapshot(spark, table)
+        cur = head.groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            dsum("total_price").alias("sum_price"),
+        )
+        rows = [
+            ("v4:" + r.o_orderstatus, r.n_orders, float(r.sum_price))
+            for r in cur.collect()
+        ]
+        v1 = st.read_snapshot(spark, table, version=1)
+        r1 = v1.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            dsum("o_totalprice").alias("s"),
+            F.count_distinct("o_orderpriority").cast("bigint").alias("p"),
+        ).collect()[0]
+        # SUM over an empty snapshot is NULL (empty-lake sweep) — keep it
+        rows.append(("v1:all", r1.n, None if r1.s is None else float(r1.s)))
+        rows.append(("v1:priorities", r1.p, None))
     return local_df(spark, 
         rows, "slice string, n bigint, sum_price double"
     ).orderBy("slice")
@@ -1499,50 +1349,40 @@ def q_snapshot_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked is the enforcement machinery: compute-on-omit,
     recompute-on-update, and that no stale band survives the source
     change."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_gen_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(
-        orders,
-        table,
-        [],
-        generated={
-            "price_band": "CASE WHEN o_totalprice > 200000 THEN 'hi' ELSE 'lo' END"
-        },
-    )
-    batch = (
-        orders.orderBy("o_orderkey")
-        .limit(200)
-        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(20_000_000))
-    )
-    st.append(batch, table)  # omits price_band -> computed
-    st.update_where(
-        spark,
-        table,
-        [("o_totalprice", ">", 400000.0)],
-        {"o_totalprice": "CAST(o_totalprice / 10.0 AS DOUBLE)"},
-    )
-    out = (
-        st.read_snapshot(spark, table)
-        .groupBy("price_band")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            dsum("o_totalprice").alias("sum_price"),
+    with scratch_dir("snap_gen") as table:
+        st.create_table(
+            orders,
+            table,
+            [],
+            generated={
+                "price_band": "CASE WHEN o_totalprice > 200000 THEN 'hi' ELSE 'lo' END"
+            },
         )
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        batch = (
+            orders.orderBy("o_orderkey")
+            .limit(200)
+            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(20_000_000))
+        )
+        st.append(batch, table)  # omits price_band -> computed
+        st.update_where(
+            spark,
+            table,
+            [("o_totalprice", ">", 400000.0)],
+            {"o_totalprice": "CAST(o_totalprice / 10.0 AS DOUBLE)"},
+        )
+        out = (
+            st.read_snapshot(spark, table)
+            .groupBy("price_band")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+                dsum("o_totalprice").alias("sum_price"),
+            )
+            .collect()
+        )
     return local_df(spark, 
         [(r.price_band, r.n, float(r.sum_price)) for r in out],
         "price_band string, n bigint, sum_price double",
@@ -1577,37 +1417,27 @@ def q_snapshot_dnf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive orders) through per-branch file pruning + union. The
     oracle replays the OR-of-ANDs in SQL, so what's hash-checked is
     that the branch-pruned union loses no qualifying row."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_dnf_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders.orderBy("o_totalprice").coalesce(8), table, [])
-    st.optimize(
-        spark, table, files_per_partition=8, cluster_by=["o_totalprice"]
-    )
-    hits = st.scan_any(
-        spark,
-        table,
-        [
-            [("o_totalprice", "<", 5000.0), ("o_orderstatus", "=", "F")],
-            [("o_totalprice", ">", 480000.0)],
-        ],
-    )
-    out = hits.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        dsum("o_totalprice").alias("sum_price"),
-    ).collect()
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_dnf") as table:
+        st.create_table(orders.orderBy("o_totalprice").coalesce(8), table, [])
+        st.optimize(
+            spark, table, files_per_partition=8, cluster_by=["o_totalprice"]
+        )
+        hits = st.scan_any(
+            spark,
+            table,
+            [
+                [("o_totalprice", "<", 5000.0), ("o_orderstatus", "=", "F")],
+                [("o_totalprice", ">", 480000.0)],
+            ],
+        )
+        out = hits.groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            dsum("o_totalprice").alias("sum_price"),
+        ).collect()
     return local_df(spark, 
         [
             (r.o_orderstatus, r.n, None if r.sum_price is None else float(r.sum_price))
@@ -1647,48 +1477,38 @@ def q_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     so what's hash-checked is fork carry-over + DV remapping through
     the fast-forward + tag resolution. Bounded driver-side collect
     (2 rows) because the table lives in a run-scoped temp dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_wap_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    st.create_tag(table, "baseline")
-    bp = st.create_branch(table, "audit")
-    batch = (
-        orders.filter(F.col("o_orderkey") % 100 == 7)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000)
-        .withColumn(
-            "o_totalprice",
-            F.when(
-                F.col("o_custkey") % 2 == 1, -F.col("o_totalprice")
-            ).otherwise(F.col("o_totalprice")),
+    with scratch_dir("snap_wap") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        st.create_tag(table, "baseline")
+        bp = st.create_branch(table, "audit")
+        batch = (
+            orders.filter(F.col("o_orderkey") % 100 == 7)
+            .withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000)
+            .withColumn(
+                "o_totalprice",
+                F.when(
+                    F.col("o_custkey") % 2 == 1, -F.col("o_totalprice")
+                ).otherwise(F.col("o_totalprice")),
+            )
         )
-    )
-    st.append(batch, bp)
-    st.delete_where(spark, bp, [("o_totalprice", "<", 0)], use_dv=True)
-    st.fast_forward(table, "audit")
-    rows = []
-    for v, snap in (
-        (1, st.read_snapshot(spark, table, tag="baseline")),
-        (2, st.read_snapshot(spark, table)),
-    ):
-        r = snap.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
-        ).collect()[0]
-        total = None if r.sum_totalprice is None else float(r.sum_totalprice)
-        rows.append((v, r.n_orders, total))
-    shutil.rmtree(table, ignore_errors=True)
+        st.append(batch, bp)
+        st.delete_where(spark, bp, [("o_totalprice", "<", 0)], use_dv=True)
+        st.fast_forward(table, "audit")
+        rows = []
+        for v, snap in (
+            (1, st.read_snapshot(spark, table, tag="baseline")),
+            (2, st.read_snapshot(spark, table)),
+        ):
+            r = snap.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            ).collect()[0]
+            total = None if r.sum_totalprice is None else float(r.sum_totalprice)
+            rows.append((v, r.n_orders, total))
     return local_df(spark, 
         rows, "version int, n_orders bigint, sum_totalprice double"
     ).orderBy("version")
@@ -1720,56 +1540,46 @@ def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched files carried by reference, and that delete+insert
     consumed a single version. Final per-priority aggregate
     hash-matches a SQL replay of the band replacement."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_rw_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, [])
-    st.optimize(spark, table, files_per_partition=8, cluster_by=["o_totalprice"])
-    v_before = st.current_version(table)
-    band = [("o_totalprice", ">=", 100000.0), ("o_totalprice", "<", 200000.0)]
-    files_before = set(st._read_manifest(table, v_before)["files"])
+    with scratch_dir("snap_rw") as table:
+        st.create_table(orders, table, [])
+        st.optimize(spark, table, files_per_partition=8, cluster_by=["o_totalprice"])
+        v_before = st.current_version(table)
+        band = [("o_totalprice", ">=", 100000.0), ("o_totalprice", "<", 200000.0)]
+        files_before = set(st._read_manifest(table, v_before)["files"])
 
-    replacement = (
-        orders.filter(
-            (F.col("o_totalprice") >= 100000.0) & (F.col("o_totalprice") < 200000.0)
+        replacement = (
+            orders.filter(
+                (F.col("o_totalprice") >= 100000.0) & (F.col("o_totalprice") < 200000.0)
+            )
+            .filter(F.col("o_orderkey") % 2 == 0)
+            .withColumn("o_orderpriority", F.lit("9-REPLACED"))
         )
-        .filter(F.col("o_orderkey") % 2 == 0)
-        .withColumn("o_orderpriority", F.lit("9-REPLACED"))
-    )
-    v_after = st.replace_where(spark, replacement, table, band)
-    single_commit = v_after == v_before + 1
-    files_after = set(st._read_manifest(table, v_after)["files"])
-    carried = len(files_before & files_after) > 0
+        v_after = st.replace_where(spark, replacement, table, band)
+        single_commit = v_after == v_before + 1
+        files_after = set(st._read_manifest(table, v_after)["files"])
+        carried = len(files_before & files_after) > 0
 
-    stray = orders.limit(1).withColumn("o_totalprice", F.lit(1.0))
-    try:
-        st.replace_where(spark, stray, table, band)
-        reject_enforced = False
-    except ValueError:
-        reject_enforced = st.current_version(table) == v_after
+        stray = orders.limit(1).withColumn("o_totalprice", F.lit(1.0))
+        try:
+            st.replace_where(spark, stray, table, band)
+            reject_enforced = False
+        except ValueError:
+            reject_enforced = st.current_version(table) == v_after
 
-    audit = (
-        st.read_snapshot(spark, table)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+        audit = (
+            st.read_snapshot(spark, table)
+            .groupBy("o_orderpriority")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .orderBy("o_orderpriority")
+            .collect()
         )
-        .orderBy("o_orderpriority")
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
     return local_df(spark, 
         [
             (
@@ -1815,11 +1625,6 @@ def q_snapshot_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     time travel still reads the pre-widen narrow schema. The final
     aggregate hash-matches a SQL replay of the same narrow-then-widen
     value pipeline plus the sentinel row."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
@@ -1828,38 +1633,33 @@ def q_snapshot_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("int").alias("user_id"),
         F.col("value").cast("float").alias("value"),
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_tw_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(ev, table, [])
-    files_before = set(st._read_manifest(table, 1)["files"])
-    st.widen_column(table, "user_id", "long")
-    st.widen_column(table, "value", "double")
-    v_widen = st.current_version(table)
-    metadata_only = (
-        set(st._read_manifest(table, v_widen)["files"]) == files_before
-    )
-    narrow_travel = dict(st.read_snapshot(spark, table, version=1).dtypes) == {
-        "event_id": "int",
-        "user_id": "int",
-        "value": "float",
-    }
-    sentinel = local_df(spark, 
-        [(2_000_000_000, 2**35, 0.5)], "event_id int, user_id long, value double"
-    )
-    st.append(sentinel, table)
-    got = st.read_snapshot(spark, table)
-    wide_types = dict(got.dtypes)["user_id"] == "bigint" and (
-        dict(got.dtypes)["value"] == "double"
-    )
-    audit = got.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum("user_id").cast("bigint").alias("sum_user"),
-        dsum("value").alias("sum_value"),
-    ).collect()[0]
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_tw") as table:
+        st.create_table(ev, table, [])
+        files_before = set(st._read_manifest(table, 1)["files"])
+        st.widen_column(table, "user_id", "long")
+        st.widen_column(table, "value", "double")
+        v_widen = st.current_version(table)
+        metadata_only = (
+            set(st._read_manifest(table, v_widen)["files"]) == files_before
+        )
+        narrow_travel = dict(st.read_snapshot(spark, table, version=1).dtypes) == {
+            "event_id": "int",
+            "user_id": "int",
+            "value": "float",
+        }
+        sentinel = local_df(spark, 
+            [(2_000_000_000, 2**35, 0.5)], "event_id int, user_id long, value double"
+        )
+        st.append(sentinel, table)
+        got = st.read_snapshot(spark, table)
+        wide_types = dict(got.dtypes)["user_id"] == "bigint" and (
+            dict(got.dtypes)["value"] == "double"
+        )
+        audit = got.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum("user_id").cast("bigint").alias("sum_user"),
+            dsum("value").alias("sum_value"),
+        ).collect()[0]
     return local_df(spark, 
         [
             (
@@ -1908,11 +1708,8 @@ def q_snapshot_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     still READS but refuses commits. The final per-status aggregate
     (through the renamed, widened, DV-filtered head) hash-matches a
     SQL replay."""
-    import hashlib
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
@@ -1924,116 +1721,102 @@ def q_snapshot_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "o_orderpriority",
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_proto_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(
-        orders, table, [], constraints={"price_nonneg": "o_totalprice >= 0"}
-    )
-    st.delete_where(spark, table, [("o_totalprice", ">", 400000.0)], use_dv=True)
-    st.rename_column(table, "o_orderpriority", "priority")
-    st.widen_column(table, "o_custkey", "long")
-    st.append(st.read_snapshot(spark, table).limit(0), table)  # plain commit
-    head = st._read_manifest(table, st.current_version(table))
-    feats = set(head.get("reader_features") or [])
-    features_exact = feats == {
-        "deletion-vectors",
-        "column-mapping",
-        "type-widening",
-    }
-    writer_features_exact = set(head.get("writer_features") or []) == (
-        feats | {"check-constraints"}
-    )
+    with scratch_dir("snap_proto") as root:
+        table = os.path.join(root, "table")
+        forged = os.path.join(root, "forged")
+        forged_w = os.path.join(root, "forged_w")
+        st.create_table(
+            orders, table, [], constraints={"price_nonneg": "o_totalprice >= 0"}
+        )
+        st.delete_where(spark, table, [("o_totalprice", ">", 400000.0)], use_dv=True)
+        st.rename_column(table, "o_orderpriority", "priority")
+        st.widen_column(table, "o_custkey", "long")
+        st.append(st.read_snapshot(spark, table).limit(0), table)  # plain commit
+        head = st._read_manifest(table, st.current_version(table))
+        feats = set(head.get("reader_features") or [])
+        features_exact = feats == {
+            "deletion-vectors",
+            "column-mapping",
+            "type-widening",
+        }
+        writer_features_exact = set(head.get("writer_features") or []) == (
+            feats | {"check-constraints"}
+        )
 
-    # DROP FEATURE (protocol downgrade, r13): refused while a live
-    # file carries a DV; after OPTIMIZE purges the DVs (and rewrites
-    # the widened column's files wide) BOTH flags drop; a later DV
-    # delete re-accrues deletion-vectors content-driven
-    try:
+        # DROP FEATURE (protocol downgrade, r13): refused while a live
+        # file carries a DV; after OPTIMIZE purges the DVs (and rewrites
+        # the widened column's files wide) BOTH flags drop; a later DV
+        # delete re-accrues deletion-vectors content-driven
+        try:
+            st.drop_feature(table, "deletion-vectors")
+            drop_refused_while_live = False
+        except ValueError:
+            drop_refused_while_live = True
+        st.optimize(spark, table, files_per_partition=2)
         st.drop_feature(table, "deletion-vectors")
-        drop_refused_while_live = False
-    except ValueError:
-        drop_refused_while_live = True
-    st.optimize(spark, table, files_per_partition=2)
-    st.drop_feature(table, "deletion-vectors")
-    st.drop_feature(table, "type-widening")
-    after_drop = st._read_manifest(table, st.current_version(table))
-    dropped_ok = set(after_drop.get("reader_features") or []) == {
-        "column-mapping"
-    }
-    st.delete_where(spark, table, [("o_totalprice", "<", 5000.0)], use_dv=True)
-    rehead = st._read_manifest(table, st.current_version(table))
-    drop_then_reaccrue_ok = bool(
-        dropped_ok
-        and set(rehead.get("reader_features") or [])
-        == {"column-mapping", "deletion-vectors"}
-        and set(rehead.get("writer_features") or [])
-        == {"column-mapping", "deletion-vectors", "check-constraints"}
-    )
-
-    forged = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_forge_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(forged, ignore_errors=True)
-    st.create_table(orders.limit(5), forged, [])
-    mpath = st._manifest_path(forged, 1)
-    m = _json.load(open(mpath))
-    m["reader_features"] = ["row-tracking-v9"]
-    os.unlink(mpath)
-    with open(mpath, "w") as fh:
-        _json.dump(m, fh)
-    try:
-        st.read_snapshot(spark, forged).count()
-        future_read_refused = False
-    except ValueError:
-        future_read_refused = True
-    try:
-        st.append(orders.limit(1), forged)
-        future_commit_refused = False
-    except ValueError:
-        future_commit_refused = True
-
-    # forged WRITER feature: reads stay allowed, commits refuse
-    forged_w = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_forgew_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(forged_w, ignore_errors=True)
-    st.create_table(orders.limit(5), forged_w, [])
-    wpath = st._manifest_path(forged_w, 1)
-    mw = _json.load(open(wpath))
-    mw["writer_features"] = ["vector-clock-commits"]
-    os.unlink(wpath)
-    with open(wpath, "w") as fh:
-        _json.dump(mw, fh)
-    try:
-        future_writer_read_ok = (
-            st.read_snapshot(spark, forged_w).count() == 5
+        st.drop_feature(table, "type-widening")
+        after_drop = st._read_manifest(table, st.current_version(table))
+        dropped_ok = set(after_drop.get("reader_features") or []) == {
+            "column-mapping"
+        }
+        st.delete_where(spark, table, [("o_totalprice", "<", 5000.0)], use_dv=True)
+        rehead = st._read_manifest(table, st.current_version(table))
+        drop_then_reaccrue_ok = bool(
+            dropped_ok
+            and set(rehead.get("reader_features") or [])
+            == {"column-mapping", "deletion-vectors"}
+            and set(rehead.get("writer_features") or [])
+            == {"column-mapping", "deletion-vectors", "check-constraints"}
         )
-    except ValueError:
-        future_writer_read_ok = False
-    try:
-        st.append(orders.limit(1), forged_w)
-        future_writer_commit_refused = False
-    except ValueError:
-        future_writer_commit_refused = True
 
-    audit = (
-        st.read_snapshot(spark, table)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+        st.create_table(orders.limit(5), forged, [])
+        mpath = st._manifest_path(forged, 1)
+        m = _json.load(open(mpath))
+        m["reader_features"] = ["row-tracking-v9"]
+        os.unlink(mpath)
+        with open(mpath, "w") as fh:
+            _json.dump(m, fh)
+        try:
+            st.read_snapshot(spark, forged).count()
+            future_read_refused = False
+        except ValueError:
+            future_read_refused = True
+        try:
+            st.append(orders.limit(1), forged)
+            future_commit_refused = False
+        except ValueError:
+            future_commit_refused = True
+
+        # forged WRITER feature: reads stay allowed, commits refuse
+        st.create_table(orders.limit(5), forged_w, [])
+        wpath = st._manifest_path(forged_w, 1)
+        mw = _json.load(open(wpath))
+        mw["writer_features"] = ["vector-clock-commits"]
+        os.unlink(wpath)
+        with open(wpath, "w") as fh:
+            _json.dump(mw, fh)
+        try:
+            future_writer_read_ok = (
+                st.read_snapshot(spark, forged_w).count() == 5
+            )
+        except ValueError:
+            future_writer_read_ok = False
+        try:
+            st.append(orders.limit(1), forged_w)
+            future_writer_commit_refused = False
+        except ValueError:
+            future_writer_commit_refused = True
+
+        audit = (
+            st.read_snapshot(spark, table)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .orderBy("o_orderstatus")
+            .collect()
         )
-        .orderBy("o_orderstatus")
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    shutil.rmtree(forged, ignore_errors=True)
-    shutil.rmtree(forged_w, ignore_errors=True)
     return local_df(spark, 
         [
             (
@@ -2093,11 +1876,6 @@ def q_snapshot_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     their ids continue from the high-water mark, proving the mark
     survived materialization. The final per-priority aggregate over
     (_row_id, priority) hash-checks the whole id ledger."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
@@ -2108,38 +1886,33 @@ def q_snapshot_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     def one_file(df):
         return df.repartition(1).sortWithinPartitions("o_orderkey")
 
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_rt_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(one_file(orders.filter(F.col("o_orderstatus") == "F")), table, [])
-    st.enable_row_tracking(table)
-    st.append(one_file(orders.filter(F.col("o_orderstatus") == "P")), table)
-    st.delete_where(
-        spark, table, [("o_totalprice", ">", 400000.0)], use_dv=True
-    )
-    st.optimize(spark, table, files_per_partition=1)
-    st.append(
-        one_file(
-            orders.filter(F.col("o_orderstatus") == "O")
-            .orderBy("o_orderkey")
-            .limit(100)
-        ),
-        table,
-    )
-    snap = st.read_snapshot(spark, table, with_row_ids=True)
-    out = (
-        snap.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.min("_row_id").cast("bigint").alias("min_rid"),
-            F.max("_row_id").cast("bigint").alias("max_rid"),
-            F.sum("_row_id").cast("bigint").alias("sum_rid"),
+    with scratch_dir("snap_rt") as table:
+        st.create_table(one_file(orders.filter(F.col("o_orderstatus") == "F")), table, [])
+        st.enable_row_tracking(table)
+        st.append(one_file(orders.filter(F.col("o_orderstatus") == "P")), table)
+        st.delete_where(
+            spark, table, [("o_totalprice", ">", 400000.0)], use_dv=True
         )
-        .collect()  # bounded: one row per order priority (5)
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        st.optimize(spark, table, files_per_partition=1)
+        st.append(
+            one_file(
+                orders.filter(F.col("o_orderstatus") == "O")
+                .orderBy("o_orderkey")
+                .limit(100)
+            ),
+            table,
+        )
+        snap = st.read_snapshot(spark, table, with_row_ids=True)
+        out = (
+            snap.groupBy("o_orderpriority")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.min("_row_id").cast("bigint").alias("min_rid"),
+                F.max("_row_id").cast("bigint").alias("max_rid"),
+                F.sum("_row_id").cast("bigint").alias("sum_rid"),
+            )
+            .collect()  # bounded: one row per order priority (5)
+        )
     return local_df(spark, 
         [
             (r.o_orderpriority, r.n_rows, r.min_rid, r.max_rid, r.sum_rid)
@@ -2199,53 +1972,43 @@ def q_snapshot_checkpoint_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     list), then hash-check that time travel THROUGH a segment chain
     and the head read across the checkpoint both materialize the
     exact row sets the oracle replays in SQL."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_ckpt_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders.filter(F.col("o_orderstatus") == "F"), table, [])
-    other = orders.filter(F.col("o_orderstatus") == "O")
-    for b in range(12):
-        st.append(other.filter(F.col("o_orderkey") % 12 == b), table)
-    versions = st._list_versions(table)
-    raws = {v: st._raw_manifest(table, v) for v in versions}
-    # v1 parentless checkpoint; v2..v10 segments (chain depth 1..9);
-    # v11 re-checkpoints at CHECKPOINT_INTERVAL=10; v12..v13 segments
-    forms_ok = (
-        not raws[1].get("segment")
-        and all(raws[v].get("segment") for v in range(2, 11))
-        and not raws[11].get("segment")
-        and all(raws[v].get("segment") for v in (12, 13))
-        and all("files" not in m for m in raws.values() if m.get("segment"))
-    )
-    rows = []
-    for v in (7, 13):
-        snap = st.read_snapshot(spark, table, version=v)
-        r = snap.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
-        ).collect()[0]
-        rows.append(
-            (
-                v,
-                bool(forms_ok),
-                r.n_orders,
-                None if r.sum_totalprice is None else float(r.sum_totalprice),
-            )
+    with scratch_dir("snap_ckpt") as table:
+        st.create_table(orders.filter(F.col("o_orderstatus") == "F"), table, [])
+        other = orders.filter(F.col("o_orderstatus") == "O")
+        for b in range(12):
+            st.append(other.filter(F.col("o_orderkey") % 12 == b), table)
+        versions = st._list_versions(table)
+        raws = {v: st._raw_manifest(table, v) for v in versions}
+        # v1 parentless checkpoint; v2..v10 segments (chain depth 1..9);
+        # v11 re-checkpoints at CHECKPOINT_INTERVAL=10; v12..v13 segments
+        forms_ok = (
+            not raws[1].get("segment")
+            and all(raws[v].get("segment") for v in range(2, 11))
+            and not raws[11].get("segment")
+            and all(raws[v].get("segment") for v in (12, 13))
+            and all("files" not in m for m in raws.values() if m.get("segment"))
         )
-    shutil.rmtree(table, ignore_errors=True)
+        rows = []
+        for v in (7, 13):
+            snap = st.read_snapshot(spark, table, version=v)
+            r = snap.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            ).collect()[0]
+            rows.append(
+                (
+                    v,
+                    bool(forms_ok),
+                    r.n_orders,
+                    None if r.sum_totalprice is None else float(r.sum_totalprice),
+                )
+            )
     return local_df(spark, 
         rows,
         "version int, stored_forms_ok boolean, n_orders bigint, "
@@ -2277,63 +2040,53 @@ def q_snapshot_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-contained checkpoint first: the round-9 chain-rewrite path),
     the head stays intact, expired time travel refuses fast, and the
     untagged expired manifests are actually gone."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_vac_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders.filter(F.col("o_orderstatus") == "F"), table, [])
-    st.append(orders.filter(F.col("o_orderstatus") == "P"), table)
-    st.create_tag(table, "audit", version=2)
-    st.append(
-        orders.filter(F.col("o_orderstatus") == "O")
-        .orderBy("o_orderkey")
-        .limit(100),
-        table,
-    )
-    st.append(
-        orders.filter(F.col("o_orderstatus") == "O")
-        .orderBy(F.desc("o_orderkey"))
-        .limit(100),
-        table,
-    )
-    st.vacuum(table, retain_last=1)
-    kept = st._list_versions(table)
-    try:
-        st.read_snapshot(spark, table, version=3)
-        refused = False
-    except ValueError:
-        refused = True
-    contract_ok = bool(refused and kept == [2, 4])
-    rows = []
-    for label, df in (
-        ("head", st.read_snapshot(spark, table)),
-        ("tagged", st.read_snapshot(spark, table, tag="audit")),
-    ):
-        r = df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
-        ).collect()[0]
-        rows.append(
-            (
-                label,
-                contract_ok,
-                r.n_orders,
-                None if r.sum_totalprice is None else float(r.sum_totalprice),
-            )
+    with scratch_dir("snap_vac") as table:
+        st.create_table(orders.filter(F.col("o_orderstatus") == "F"), table, [])
+        st.append(orders.filter(F.col("o_orderstatus") == "P"), table)
+        st.create_tag(table, "audit", version=2)
+        st.append(
+            orders.filter(F.col("o_orderstatus") == "O")
+            .orderBy("o_orderkey")
+            .limit(100),
+            table,
         )
-    shutil.rmtree(table, ignore_errors=True)
+        st.append(
+            orders.filter(F.col("o_orderstatus") == "O")
+            .orderBy(F.desc("o_orderkey"))
+            .limit(100),
+            table,
+        )
+        st.vacuum(table, retain_last=1)
+        kept = st._list_versions(table)
+        try:
+            st.read_snapshot(spark, table, version=3)
+            refused = False
+        except ValueError:
+            refused = True
+        contract_ok = bool(refused and kept == [2, 4])
+        rows = []
+        for label, df in (
+            ("head", st.read_snapshot(spark, table)),
+            ("tagged", st.read_snapshot(spark, table, tag="audit")),
+        ):
+            r = df.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            ).collect()[0]
+            rows.append(
+                (
+                    label,
+                    contract_ok,
+                    r.n_orders,
+                    None if r.sum_totalprice is None else float(r.sum_totalprice),
+                )
+            )
     return local_df(spark, 
         rows,
         "snapshot string, retention_ok boolean, n_orders bigint, "
@@ -2374,11 +2127,6 @@ def q_snapshot_cdf_rowid(spark: SparkSession, sf_dir: str) -> DataFrame:
     over (_row_id, o_totalprice) hash-checks ids and values at once;
     ids are reproducible because every batch lands as one file
     sorted by o_orderkey (see snapshot_row_tracking)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
@@ -2389,50 +2137,45 @@ def q_snapshot_cdf_rowid(spark: SparkSession, sf_dir: str) -> DataFrame:
     def one_file(df):
         return df.repartition(1).sortWithinPartitions("o_orderkey")
 
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_cdfrid_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(one_file(orders.filter(F.col("o_orderstatus") == "F")), table, [])
-    st.enable_row_tracking(table)
-    st.update_where(
-        spark,
-        table,
-        [("o_totalprice", ">", 400000.0)],
-        {"o_totalprice": "o_totalprice + 1.0"},
-        use_dv=True,
-    )
-    # modulo predicates aren't in the pruning filter grammar; express
-    # the delete through the grammar-supported IN list instead
-    keys = [
-        r.o_orderkey
-        for r in orders.filter(
-            (F.col("o_orderstatus") == "F")
-            & (F.col("o_orderkey") % 97 == 0)
-        ).collect()  # bounded: ~1/97th of one status slice, ids only
-    ]
-    if keys:
-        st.delete_where(spark, table, [("o_orderkey", "in", keys)], use_dv=True)
-    st.append(
-        one_file(
-            orders.filter(F.col("o_orderstatus") == "O")
-            .orderBy("o_orderkey")
-            .limit(100)
-        ),
-        table,
-    )
-    cdf = st.changes(spark, table, 2, with_row_ids=True)
-    out = (
-        cdf.groupBy("_change_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum("_row_id").cast("bigint").alias("sum_rid"),
-            dsum("o_totalprice").alias("sum_price"),
+    with scratch_dir("snap_cdfrid") as table:
+        st.create_table(one_file(orders.filter(F.col("o_orderstatus") == "F")), table, [])
+        st.enable_row_tracking(table)
+        st.update_where(
+            spark,
+            table,
+            [("o_totalprice", ">", 400000.0)],
+            {"o_totalprice": "o_totalprice + 1.0"},
+            use_dv=True,
         )
-        .collect()  # bounded: one row per change type (<= 4)
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        # modulo predicates aren't in the pruning filter grammar; express
+        # the delete through the grammar-supported IN list instead
+        keys = [
+            r.o_orderkey
+            for r in orders.filter(
+                (F.col("o_orderstatus") == "F")
+                & (F.col("o_orderkey") % 97 == 0)
+            ).collect()  # bounded: ~1/97th of one status slice, ids only
+        ]
+        if keys:
+            st.delete_where(spark, table, [("o_orderkey", "in", keys)], use_dv=True)
+        st.append(
+            one_file(
+                orders.filter(F.col("o_orderstatus") == "O")
+                .orderBy("o_orderkey")
+                .limit(100)
+            ),
+            table,
+        )
+        cdf = st.changes(spark, table, 2, with_row_ids=True)
+        out = (
+            cdf.groupBy("_change_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.sum("_row_id").cast("bigint").alias("sum_rid"),
+                dsum("o_totalprice").alias("sum_price"),
+            )
+            .collect()  # bounded: one row per change type (<= 4)
+        )
     return local_df(spark, 
         [
             (
@@ -2493,62 +2236,52 @@ def q_snapshot_auto_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched by reference, (b) the fragmented one collapsed to one
     file, (c) the policy report is empty afterwards, and (d) the
     visible rows are exactly the oracle's replay of the appends."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_ac_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(
-        orders.repartition(1).sortWithinPartitions("o_orderkey"),
-        table,
-        ["o_orderstatus"],
-    )
-    frag = orders.filter(F.col("o_orderstatus") == "F")
-    for b in range(5):
-        st.append(
-            frag.filter(F.col("o_orderkey") % 5 == b)
-            .repartition(1)
-            .sortWithinPartitions("o_orderkey"),
+    with scratch_dir("snap_ac") as table:
+        st.create_table(
+            orders.repartition(1).sortWithinPartitions("o_orderkey"),
             table,
+            ["o_orderstatus"],
         )
-    plan = st.plan_compaction(table, max_files_per_partition=4)
-    flagged_only_f = list(plan) == [(("o_orderstatus", "F"),)]
-    before = st._read_manifest(table, st.current_version(table))
-    healthy_before = sorted(
-        f for f in before["files"] if "o_orderstatus=F" not in f
-    )
-    st.auto_compact(spark, table, max_files_per_partition=4)
-    after = st._read_manifest(table, st.current_version(table))
-    healthy_after = sorted(
-        f for f in after["files"] if "o_orderstatus=F" not in f
-    )
-    contract_ok = bool(
-        flagged_only_f
-        and healthy_after == healthy_before
-        and len([f for f in after["files"] if "o_orderstatus=F" in f]) == 1
-        and st.plan_compaction(table, max_files_per_partition=4) == {}
-    )
-    rows = (
-        st.read_snapshot(spark, table)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            dsum("o_totalprice").alias("sum_totalprice"),
+        frag = orders.filter(F.col("o_orderstatus") == "F")
+        for b in range(5):
+            st.append(
+                frag.filter(F.col("o_orderkey") % 5 == b)
+                .repartition(1)
+                .sortWithinPartitions("o_orderkey"),
+                table,
+            )
+        plan = st.plan_compaction(table, max_files_per_partition=4)
+        flagged_only_f = list(plan) == [(("o_orderstatus", "F"),)]
+        before = st._read_manifest(table, st.current_version(table))
+        healthy_before = sorted(
+            f for f in before["files"] if "o_orderstatus=F" not in f
         )
-        .collect()  # bounded: one row per order status
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        st.auto_compact(spark, table, max_files_per_partition=4)
+        after = st._read_manifest(table, st.current_version(table))
+        healthy_after = sorted(
+            f for f in after["files"] if "o_orderstatus=F" not in f
+        )
+        contract_ok = bool(
+            flagged_only_f
+            and healthy_after == healthy_before
+            and len([f for f in after["files"] if "o_orderstatus=F" in f]) == 1
+            and st.plan_compaction(table, max_files_per_partition=4) == {}
+        )
+        rows = (
+            st.read_snapshot(spark, table)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                dsum("o_totalprice").alias("sum_totalprice"),
+            )
+            .collect()  # bounded: one row per order status
+        )
     return local_df(spark, 
         [
             (
@@ -2594,58 +2327,48 @@ def q_snapshot_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same write orders — any divergence in ordering, continuation,
     retirement, or post-OPTIMIZE stability moves a surrogate and the
     hash."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_ident_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    b1 = (
-        orders.filter(F.col("o_orderstatus") == "F")
-        .orderBy("o_orderkey")
-        .limit(500)
-        .repartition(1)
-        .sortWithinPartitions("o_orderkey")
-    )
-    st.create_table(b1, table, [])
-    st.enable_identity(table, "order_sk", start=1000, step=2)
-    b2 = (
-        orders.filter(F.col("o_orderstatus") == "O")
-        .orderBy("o_orderkey")
-        .limit(300)
-        .repartition(1)
-        .sortWithinPartitions("o_orderkey")
-    )
-    st.append(b2, table)
-    st.delete_where(
-        spark, table, [("o_totalprice", "<", 50000.0)], use_dv=True
-    )
-    st.optimize(spark, table, files_per_partition=1)
-    final = st.read_snapshot(spark, table)
-    stats = final.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.count_distinct("order_sk").cast("bigint").alias("n_sk"),
-        F.min("order_sk").alias("min_sk"),
-        F.max("order_sk").alias("max_sk"),
-        dsum("o_totalprice").alias("sum_price"),
-    ).collect()
-    head = (
-        final.orderBy("order_sk")
-        .limit(5)
-        .select("order_sk", "o_orderkey")
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_ident") as table:
+        b1 = (
+            orders.filter(F.col("o_orderstatus") == "F")
+            .orderBy("o_orderkey")
+            .limit(500)
+            .repartition(1)
+            .sortWithinPartitions("o_orderkey")
+        )
+        st.create_table(b1, table, [])
+        st.enable_identity(table, "order_sk", start=1000, step=2)
+        b2 = (
+            orders.filter(F.col("o_orderstatus") == "O")
+            .orderBy("o_orderkey")
+            .limit(300)
+            .repartition(1)
+            .sortWithinPartitions("o_orderkey")
+        )
+        st.append(b2, table)
+        st.delete_where(
+            spark, table, [("o_totalprice", "<", 50000.0)], use_dv=True
+        )
+        st.optimize(spark, table, files_per_partition=1)
+        final = st.read_snapshot(spark, table)
+        stats = final.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.count_distinct("order_sk").cast("bigint").alias("n_sk"),
+            F.min("order_sk").alias("min_sk"),
+            F.max("order_sk").alias("max_sk"),
+            dsum("o_totalprice").alias("sum_price"),
+        ).collect()
+        head = (
+            final.orderBy("order_sk")
+            .limit(5)
+            .select("order_sk", "o_orderkey")
+            .collect()
+        )
     rows = [
         ("stats", r.n, r.n_sk, r.min_sk, r.max_sk, float(r.sum_price))
         for r in stats
@@ -2713,56 +2436,46 @@ def q_snapshot_merge_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL; the audit groups by the evolved column (null group
     included) so a wrong null-fill, a dropped update, or a missed
     insert all move the hash."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_mev_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, [])
-    upd = (
-        orders.filter(F.col("o_orderkey") % 10 == 3)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            (F.col("o_totalprice") + F.lit(1.0)).alias("o_totalprice"),
-            F.lit("web").alias("o_channel"),
+    with scratch_dir("snap_mev") as table:
+        st.create_table(orders, table, [])
+        upd = (
+            orders.filter(F.col("o_orderkey") % 10 == 3)
+            .select(
+                "o_orderkey",
+                "o_orderstatus",
+                (F.col("o_totalprice") + F.lit(1.0)).alias("o_totalprice"),
+                F.lit("web").alias("o_channel"),
+            )
         )
-    )
-    ins = (
-        orders.orderBy("o_orderkey")
-        .limit(50)
-        .select(
-            (F.col("o_orderkey") + F.lit(30_000_000)).alias("o_orderkey"),
-            F.lit("N").alias("o_orderstatus"),
-            F.lit(10.0).alias("o_totalprice"),
-            F.lit("app").alias("o_channel"),
+        ins = (
+            orders.orderBy("o_orderkey")
+            .limit(50)
+            .select(
+                (F.col("o_orderkey") + F.lit(30_000_000)).alias("o_orderkey"),
+                F.lit("N").alias("o_orderstatus"),
+                F.lit(10.0).alias("o_totalprice"),
+                F.lit("app").alias("o_channel"),
+            )
         )
-    )
-    st.merge_into(
-        spark, table, upd.unionByName(ins), ["o_orderkey"],
-        evolve_schema=True,
-    )
-    out = (
-        st.read_snapshot(spark, table)
-        .groupBy("o_channel")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            dsum("o_totalprice").alias("sum_price"),
+        st.merge_into(
+            spark, table, upd.unionByName(ins), ["o_orderkey"],
+            evolve_schema=True,
         )
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        out = (
+            st.read_snapshot(spark, table)
+            .groupBy("o_channel")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+                dsum("o_totalprice").alias("sum_price"),
+            )
+            .collect()
+        )
     return local_df(spark, 
         [
             (r.o_channel, r.n, None if r.sum_price is None else float(r.sum_price))
@@ -2807,50 +2520,40 @@ def q_snapshot_restore_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving a younger snapshot. The oracle replays v2's logical row
     set; contract bits ride every row so a wrong resolution moves the
     hash."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_rts_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders.filter(F.col("o_orderstatus") == "F"), table, [])
-    st.append(orders.filter(F.col("o_orderstatus") == "P"), table)  # v2
-    ts_v2 = st._read_manifest(table, 2)["committed_at"]
-    st.append(orders.filter(F.col("o_orderstatus") == "O"), table)  # v3
-    new_head = st.restore_to_timestamp(table, ts_v2)
-    try:
-        st.restore_to_timestamp(table, 0.0)
-        refused = False
-    except ValueError:
-        refused = True
-    contract_ok = bool(
-        refused
-        and new_head == 4
-        and st.current_version(table) == 4
-        # the pre-restore head is still reachable by version
-        and st.read_snapshot(spark, table, version=3).count()
-        >= st.read_snapshot(spark, table).count()
-    )
-    out = (
-        st.read_snapshot(spark, table)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            dsum("o_totalprice").alias("sum_price"),
+    with scratch_dir("snap_rts") as table:
+        st.create_table(orders.filter(F.col("o_orderstatus") == "F"), table, [])
+        st.append(orders.filter(F.col("o_orderstatus") == "P"), table)  # v2
+        ts_v2 = st._read_manifest(table, 2)["committed_at"]
+        st.append(orders.filter(F.col("o_orderstatus") == "O"), table)  # v3
+        new_head = st.restore_to_timestamp(table, ts_v2)
+        try:
+            st.restore_to_timestamp(table, 0.0)
+            refused = False
+        except ValueError:
+            refused = True
+        contract_ok = bool(
+            refused
+            and new_head == 4
+            and st.current_version(table) == 4
+            # the pre-restore head is still reachable by version
+            and st.read_snapshot(spark, table, version=3).count()
+            >= st.read_snapshot(spark, table).count()
         )
-        .collect()
-    )
-    shutil.rmtree(table, ignore_errors=True)
+        out = (
+            st.read_snapshot(spark, table)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+                dsum("o_totalprice").alias("sum_price"),
+            )
+            .collect()
+        )
     return local_df(spark, 
         [
             (r.o_orderstatus, contract_ok, r.n, float(r.sum_price))
@@ -2890,10 +2593,6 @@ def q_snapshot_concurrent_writers(
     replays the merged log's CDF insert/delete counts from v1 — a
     clobbered partition, a lost writer, or a double-applied rebase
     all move the hash."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
     import threading
 
     from ..sources import snaptable as st
@@ -2902,55 +2601,50 @@ def q_snapshot_concurrent_writers(
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_ccw_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, ["o_orderstatus"])
-    src_f = orders.filter(F.col("o_orderstatus") == "F").withColumn(
-        "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
-    )
-    src_o = orders.filter(F.col("o_orderstatus") == "O").withColumn(
-        "o_totalprice", F.col("o_totalprice") + F.lit(2.0)
-    )
-    barrier = threading.Barrier(2, timeout=300)
-    lock = threading.Lock()
-    n_pub = [0]
+    with scratch_dir("snap_ccw") as table:
+        st.create_table(orders, table, ["o_orderstatus"])
+        src_f = orders.filter(F.col("o_orderstatus") == "F").withColumn(
+            "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
+        )
+        src_o = orders.filter(F.col("o_orderstatus") == "O").withColumn(
+            "o_totalprice", F.col("o_totalprice") + F.lit(2.0)
+        )
+        barrier = threading.Barrier(2, timeout=300)
+        lock = threading.Lock()
+        n_pub = [0]
 
-    def gated(tbl, version, manifest):
-        # gate ONLY this query's table: an unrelated snapshot commit
-        # from elsewhere in the process must pass straight through,
-        # never count toward (or block at) this query's 2-party barrier
-        if tbl != table:
-            return
-        with lock:
-            n_pub[0] += 1
-            k = n_pub[0]
-        if k <= 2:  # both writers finish computing before either publishes
-            barrier.wait()
+        def gated(tbl, version, manifest):
+            # gate ONLY this query's table: an unrelated snapshot commit
+            # from elsewhere in the process must pass straight through,
+            # never count toward (or block at) this query's 2-party barrier
+            if tbl != table:
+                return
+            with lock:
+                n_pub[0] += 1
+                k = n_pub[0]
+            if k <= 2:  # both writers finish computing before either publishes
+                barrier.wait()
 
-    errs: list[BaseException] = []
+        errs: list[BaseException] = []
 
-    def run(src):
+        def run(src):
+            try:
+                st.overwrite_partitions(src, table)
+            except BaseException as e:  # noqa: BLE001 — surfaced below
+                errs.append(e)
+
+        # the engine's documented injection seam — no internals swapped
+        st.pre_publish_hook = gated
         try:
-            st.overwrite_partitions(src, table)
-        except BaseException as e:  # noqa: BLE001 — surfaced below
-            errs.append(e)
-
-    # the engine's documented injection seam — no internals swapped
-    st.pre_publish_hook = gated
-    try:
-        threads = [
-            threading.Thread(target=run, args=(s,)) for s in (src_f, src_o)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=600)
-    finally:
-        st.pre_publish_hook = None
-    try:
+            threads = [
+                threading.Thread(target=run, args=(s,)) for s in (src_f, src_o)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=600)
+        finally:
+            st.pre_publish_hook = None
         if errs:
             raise errs[0]
         head = st.current_version(table)
@@ -2969,9 +2663,6 @@ def q_snapshot_concurrent_writers(
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
             .collect()
         )
-    finally:
-        # also on the error path: never leak the temp table across runs
-        shutil.rmtree(table, ignore_errors=True)
     rows = [
         (r.o_orderstatus, r.n, float(r.sum_price)) for r in agg
     ] + [("head", int(head) if head else 0, None)] + [
@@ -3023,11 +2714,6 @@ def q_snapshot_incremental_minmax(
     hash match is the maintenance-equals-recompute theorem for the
     rescan path too. Bounded driver collect (50 groups); run-scoped
     temp dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
@@ -3036,12 +2722,7 @@ def q_snapshot_incremental_minmax(
         (F.col("o_custkey") % 50).alias("g"),
         "o_totalprice",
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_mm_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    try:
+    with scratch_dir("snap_mm") as table:
         st.create_table(orders, table, [])
         base = (
             st.read_snapshot(spark, table, version=1)
@@ -3070,8 +2751,6 @@ def q_snapshot_incremental_minmax(
             .orderBy("g")
             .collect()
         )
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
     return local_df(spark, 
         [(r.g, r.n, float(r.mn), float(r.mx)) for r in rows],
         "g bigint, n_orders bigint, min_price double, max_price double",
@@ -3112,47 +2791,37 @@ def q_snapshot_sql_endpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     DV anti-join in the view's plan -> SQL over the registered name.
     Bounded collect (≤6 rows) because the table lives in a run-scoped
     temp dir that must not outlive the call."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_sqlv_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    try:
-        st.create_table(orders, table, ["o_orderstatus"])
-        st.delete_where(
-            spark, table, [("o_totalprice", "<", 20000.0)], use_dv=True
-        )
-        head_view = st.register_snapshot_view(spark, table, "snap_sql_head")
-        v1_view = st.register_snapshot_view(
-            spark, table, "snap_sql_v1", version=1
-        )
-        rows = spark.sql(
-            f"""
-            SELECT 'head' AS snapshot, o_orderstatus,
-                   COUNT(*) AS n_orders,
-                   {dsum_spark_sql('o_totalprice')} AS sum_totalprice
-            FROM {head_view} GROUP BY o_orderstatus
-            UNION ALL
-            SELECT 'v1', o_orderstatus, COUNT(*),
-                   {dsum_spark_sql('o_totalprice')}
-            FROM {v1_view} GROUP BY o_orderstatus
-            """
-        ).collect()
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-        spark.catalog.dropTempView("snap_sql_head")
-        spark.catalog.dropTempView("snap_sql_v1")
+    with scratch_dir("snap_sqlv") as table:
+        try:
+            st.create_table(orders, table, ["o_orderstatus"])
+            st.delete_where(
+                spark, table, [("o_totalprice", "<", 20000.0)], use_dv=True
+            )
+            head_view = st.register_snapshot_view(spark, table, "snap_sql_head")
+            v1_view = st.register_snapshot_view(
+                spark, table, "snap_sql_v1", version=1
+            )
+            rows = spark.sql(
+                f"""
+                SELECT 'head' AS snapshot, o_orderstatus,
+                       COUNT(*) AS n_orders,
+                       {dsum_spark_sql('o_totalprice')} AS sum_totalprice
+                FROM {head_view} GROUP BY o_orderstatus
+                UNION ALL
+                SELECT 'v1', o_orderstatus, COUNT(*),
+                       {dsum_spark_sql('o_totalprice')}
+                FROM {v1_view} GROUP BY o_orderstatus
+                """
+            ).collect()
+        finally:
+            spark.catalog.dropTempView("snap_sql_head")
+            spark.catalog.dropTempView("snap_sql_v1")
     return local_df(spark, 
         [
             (r.snapshot, r.o_orderstatus, r.n_orders, float(r.sum_totalprice))
@@ -3195,10 +2864,7 @@ def q_ev_lineage_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     minutes, guarded cost-per-kWh) replays the whole cleaning +
     derivation chain against the DuckDB oracle."""
     import datetime
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..operators.gold import run_gold
     from ..operators.silver import run_silver
@@ -3241,50 +2907,44 @@ def q_ev_lineage_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{100 + k % 20},{10 + k % 5},{k % 2},{1 + k % 4},"
             f"0,0,0,0,0,0,0,0"
         )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_lineage_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root)
-    csv_path = os.path.join(root, "bronze.csv")
-    with open(csv_path, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    silver_path = os.path.join(root, "silver")
-    quarantine_path = os.path.join(root, "quarantine")
-    gold_table = os.path.join(root, "gold_snap")
-    res = run_silver(spark, csv_path, silver_path, quarantine_path)
-    run_gold(spark, silver_path, gold_table, table_format="snapshot")
-    run_gold(spark, silver_path, gold_table, table_format="snapshot")
-    head = st.current_version(gold_table)
-    v1 = st.read_snapshot(spark, gold_table, version=1)
-    v2 = st.read_snapshot(spark, gold_table, version=2)
+    with scratch_dir("lineage") as root:
+        csv_path = os.path.join(root, "bronze.csv")
+        with open(csv_path, "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+        silver_path = os.path.join(root, "silver")
+        quarantine_path = os.path.join(root, "quarantine")
+        gold_table = os.path.join(root, "gold_snap")
+        res = run_silver(spark, csv_path, silver_path, quarantine_path)
+        run_gold(spark, silver_path, gold_table, table_format="snapshot")
+        run_gold(spark, silver_path, gold_table, table_format="snapshot")
+        head = st.current_version(gold_table)
+        v1 = st.read_snapshot(spark, gold_table, version=1)
+        v2 = st.read_snapshot(spark, gold_table, version=2)
 
-    def _state(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            dsum("kwhTotal").alias("s1"),
-            dsum("session_duration_minutes").alias("s2"),
-        ).collect()[0]
-        return (r.n, str(r.s1), str(r.s2))
+        def _state(df):
+            r = df.agg(
+                F.count(F.lit(1)).alias("n"),
+                dsum("kwhTotal").alias("s1"),
+                dsum("session_duration_minutes").alias("s2"),
+            ).collect()[0]
+            return (r.n, str(r.s1), str(r.s2))
 
-    contract_ok = (
-        head == 2
-        and res.good_count == len(keys)
-        and res.bad_count == 0
-        and _state(v1) == _state(v2)  # rerun idempotent, time travel intact
-    )
-    agg = (
-        v2.groupBy("facilityType")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            dsum("kwhTotal").alias("sum_kwh"),
-            dsum("session_duration_minutes").alias("sum_duration_min"),
-            dsum("avg_cost_per_kwh").alias("sum_cost_per_kwh"),
+        contract_ok = (
+            head == 2
+            and res.good_count == len(keys)
+            and res.bad_count == 0
+            and _state(v1) == _state(v2)  # rerun idempotent, time travel intact
         )
-        .collect()
-    )
-    shutil.rmtree(root, ignore_errors=True)
+        agg = (
+            v2.groupBy("facilityType")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+                dsum("kwhTotal").alias("sum_kwh"),
+                dsum("session_duration_minutes").alias("sum_duration_min"),
+                dsum("avg_cost_per_kwh").alias("sum_cost_per_kwh"),
+            )
+            .collect()
+        )
     rows = [
         (
             r.facilityType,
@@ -3350,10 +3010,7 @@ def q_snapshot_ddl_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     column name; contract columns pin the empty-create row count,
     the analyze row count, and the exact history operation sequence,
     so a silently misrouted statement hash-mismatches."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import ddl as snapddl
     from ..sources import snaptable as st
@@ -3362,170 +3019,164 @@ def q_snapshot_ddl_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_ddl_sql_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh)
-    t = os.path.join(wh, "facts")
+    with scratch_dir("ddl_sql") as wh:
+        t = os.path.join(wh, "facts")
 
-    def run(stmt: str):
-        return snapddl.execute_sql(spark, stmt, warehouse=wh)
+        def run(stmt: str):
+            return snapddl.execute_sql(spark, stmt, warehouse=wh)
 
-    try:
-        base = orders.filter(F.col("o_orderkey") % 7 == 0)
-        # the reference's exact DDL shape: empty typed table with an
-        # embedded -- comment, then INSERT INTO ... SELECT feeds it
-        run(
-            """
-            CREATE TABLE IF NOT EXISTS facts (
-              o_orderkey BIGINT,
-              o_orderstatus STRING,
-              -- measure column (renamed to price later in the chain)
-              o_totalprice DOUBLE
+        try:
+            base = orders.filter(F.col("o_orderkey") % 7 == 0)
+            # the reference's exact DDL shape: empty typed table with an
+            # embedded -- comment, then INSERT INTO ... SELECT feeds it
+            run(
+                """
+                CREATE TABLE IF NOT EXISTS facts (
+                  o_orderkey BIGINT,
+                  o_orderstatus STRING,
+                  -- measure column (renamed to price later in the chain)
+                  o_totalprice DOUBLE
+                )
+                USING snapshot
+                """
+            )  # v1 — EMPTY
+            empty_create_rows = st.read_snapshot(spark, t, version=1).count()
+            base.createOrReplaceTempView("ddl_sql_base")
+            run(
+                "INSERT INTO facts SELECT o_orderkey, o_orderstatus, "
+                "o_totalprice FROM ddl_sql_base"
+            )  # v2
+            run("ALTER TABLE facts SET TBLPROPERTIES ('owner'='sql')")  # v3
+            run(
+                "ALTER TABLE facts ADD CONSTRAINT price_nonneg "
+                "CHECK (o_totalprice >= 0)"
+            )  # v4
+            # bad batch lands (passes the constraint but is wrong data)...
+            bad = base.select(
+                (F.col("o_orderkey") + 5000000).alias("o_orderkey"),
+                F.lit("X").alias("o_orderstatus"),
+                F.col("o_totalprice"),
             )
-            USING snapshot
-            """
-        )  # v1 — EMPTY
-        empty_create_rows = st.read_snapshot(spark, t, version=1).count()
-        base.createOrReplaceTempView("ddl_sql_base")
-        run(
-            "INSERT INTO facts SELECT o_orderkey, o_orderstatus, "
-            "o_totalprice FROM ddl_sql_base"
-        )  # v2
-        run("ALTER TABLE facts SET TBLPROPERTIES ('owner'='sql')")  # v3
-        run(
-            "ALTER TABLE facts ADD CONSTRAINT price_nonneg "
-            "CHECK (o_totalprice >= 0)"
-        )  # v4
-        # bad batch lands (passes the constraint but is wrong data)...
-        bad = base.select(
-            (F.col("o_orderkey") + 5000000).alias("o_orderkey"),
-            F.lit("X").alias("o_orderstatus"),
-            F.col("o_totalprice"),
-        )
-        st.append(bad.filter(F.col("o_orderkey") % 3 == 0), t)  # v5
-        # ...and is rolled back through SQL text
-        run("RESTORE TABLE facts TO VERSION AS OF 4")  # v6
-        # a negative-price batch must be REFUSED by the SQL-added
-        # constraint (nothing published)
-        neg = local_df(spark, 
-            [(9000001, "X", -5.0)],
-            "o_orderkey bigint, o_orderstatus string, o_totalprice double",
-        )
-        try:
-            st.append(neg, t)
-            constraint_enforced = False
-        except st.ConstraintViolation:
-            constraint_enforced = True
-        good = base.select(
-            (F.col("o_orderkey") + 6000000).alias("o_orderkey"),
-            F.col("o_orderstatus"),
-            (F.col("o_totalprice") * 2.0).alias("o_totalprice"),
-        )
-        st.append(good.filter(F.col("o_orderkey") % 2 == 0), t)  # v7
-        # rename refuses while a CHECK constraint references the
-        # column (correctly — the expression would silently break),
-        # so the lifecycle drops it through SQL first
-        try:
-            run("ALTER TABLE facts RENAME COLUMN o_totalprice TO price")
-            rename_guard_ok = False
-        except ValueError:
-            rename_guard_ok = True
-        run("ALTER TABLE facts DROP CONSTRAINT price_nonneg")  # v8
-        run("ALTER TABLE facts RENAME COLUMN o_totalprice TO price")  # v9
-        run("OPTIMIZE facts")  # v10
-        run("ANALYZE TABLE facts COMPUTE STATISTICS FOR COLUMNS price")  # v11
-        # SQL DML leg (r13): INSERT (subquery over the re-registered
-        # head view), UPDATE/DELETE through the skipping-friendly
-        # conjunctive WHERE grammar, and whole-row MERGE — each one a
-        # text statement routed to the snapshot DML
-        snapddl.register_all_tables(spark, wh)
-        run(
-            "INSERT INTO facts SELECT o_orderkey + 90000000, "
-            "o_orderstatus, price FROM facts WHERE o_orderkey % 1000 = 0"
-        )  # v12
-        run(
-            "UPDATE facts SET price = price * 1.1 "
-            "WHERE o_orderstatus = 'F' AND price < 50000"
-        )  # v13
-        run("DELETE FROM facts WHERE price > 500000")  # v14
-        # disjunctive DELETE (r14): top-level OR lowers to DNF
-        # branches — each disjunct prunes files independently
-        run(
-            "DELETE FROM facts WHERE (price < 950.0) "
-            "OR (o_orderstatus = 'P' AND price > 400000.0)"
-        )  # v15
-        snapddl.register_all_tables(spark, wh)  # advance view to head
-        run(
-            "MERGE INTO facts USING (SELECT o_orderkey, o_orderstatus, "
-            "price * 0.5 AS price FROM facts WHERE o_orderkey % 5 = 0) "
-            "AS s ON t.o_orderkey = s.o_orderkey "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )  # v16
-        # ADD COLUMNS (r14): metadata-only schema evolution — every
-        # row committed so far null-fills `chan`; the UPDATE then
-        # populates it for one status through the same SQL surface
-        run("ALTER TABLE facts ADD COLUMNS (chan string)")  # v17
-        run("UPDATE facts SET chan = 'web' WHERE o_orderstatus = 'O'")  # v18
-        # plain VACUUM (no RETAIN): sweeps orphans only — RETAIN n
-        # HOURS now expires history by AGE (r13), which would delete
-        # the very versions the contract below reads
-        run("VACUUM facts")
-        ops = [r.operation for r in run("DESCRIBE HISTORY facts").collect()]
-        ops_expected = [
-            "create",
-            "append",  # INSERT INTO ... SELECT into the EMPTY table
-            "set_properties",
-            "add_constraint",
-            "append",
-            "rollback_to_v4",
-            "append",
-            "drop_constraint",
-            "rename_column",
-            "optimize",
-            "analyze",
-            "append",  # INSERT INTO
-            "update",
-            "delete",
-            "delete",  # disjunctive DELETE (DNF)
-            "overwrite",  # MERGE INTO
-            "add_columns",  # metadata-only evolution
-            "update",  # populates the added column
-        ]
-        # stats were computed at the ANALYZE version (v11), BEFORE the
-        # DML leg — pin them against that version's row count (stats
-        # are a versioned artifact, not a live view)
-        stats = st._read_manifest(t, 11)["table_stats"]
-        v11_rows = st.read_snapshot(spark, t, version=11).count()
-        detail = run("DESCRIBE DETAIL facts").collect()[0]
-        view = st.register_snapshot_view(spark, t, "ddl_sql_facts")
-        rows = spark.sql(
-            f"""
-            SELECT o_orderstatus, COUNT(*) AS n,
-                   {dsum_spark_sql('price')} AS sum_price,
-                   COUNT(chan) AS n_chan
-            FROM {view} GROUP BY o_orderstatus
-            """
-        ).collect()
-        contract_ok = bool(
-            constraint_enforced
-            and rename_guard_ok
-            and ops == ops_expected
-            and empty_create_rows == 0
-            and stats["rows"] == v11_rows
-            and detail.properties == '{"owner": "sql"}'
-            and detail.constraints == "{}"
-        )
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-        for vname in ("ddl_sql_facts", "ddl_sql_base", "facts"):
+            st.append(bad.filter(F.col("o_orderkey") % 3 == 0), t)  # v5
+            # ...and is rolled back through SQL text
+            run("RESTORE TABLE facts TO VERSION AS OF 4")  # v6
+            # a negative-price batch must be REFUSED by the SQL-added
+            # constraint (nothing published)
+            neg = local_df(spark, 
+                [(9000001, "X", -5.0)],
+                "o_orderkey bigint, o_orderstatus string, o_totalprice double",
+            )
             try:
-                spark.catalog.dropTempView(vname)
-            except Exception:
-                pass
+                st.append(neg, t)
+                constraint_enforced = False
+            except st.ConstraintViolation:
+                constraint_enforced = True
+            good = base.select(
+                (F.col("o_orderkey") + 6000000).alias("o_orderkey"),
+                F.col("o_orderstatus"),
+                (F.col("o_totalprice") * 2.0).alias("o_totalprice"),
+            )
+            st.append(good.filter(F.col("o_orderkey") % 2 == 0), t)  # v7
+            # rename refuses while a CHECK constraint references the
+            # column (correctly — the expression would silently break),
+            # so the lifecycle drops it through SQL first
+            try:
+                run("ALTER TABLE facts RENAME COLUMN o_totalprice TO price")
+                rename_guard_ok = False
+            except ValueError:
+                rename_guard_ok = True
+            run("ALTER TABLE facts DROP CONSTRAINT price_nonneg")  # v8
+            run("ALTER TABLE facts RENAME COLUMN o_totalprice TO price")  # v9
+            run("OPTIMIZE facts")  # v10
+            run("ANALYZE TABLE facts COMPUTE STATISTICS FOR COLUMNS price")  # v11
+            # SQL DML leg (r13): INSERT (subquery over the re-registered
+            # head view), UPDATE/DELETE through the skipping-friendly
+            # conjunctive WHERE grammar, and whole-row MERGE — each one a
+            # text statement routed to the snapshot DML
+            snapddl.register_all_tables(spark, wh)
+            run(
+                "INSERT INTO facts SELECT o_orderkey + 90000000, "
+                "o_orderstatus, price FROM facts WHERE o_orderkey % 1000 = 0"
+            )  # v12
+            run(
+                "UPDATE facts SET price = price * 1.1 "
+                "WHERE o_orderstatus = 'F' AND price < 50000"
+            )  # v13
+            run("DELETE FROM facts WHERE price > 500000")  # v14
+            # disjunctive DELETE (r14): top-level OR lowers to DNF
+            # branches — each disjunct prunes files independently
+            run(
+                "DELETE FROM facts WHERE (price < 950.0) "
+                "OR (o_orderstatus = 'P' AND price > 400000.0)"
+            )  # v15
+            snapddl.register_all_tables(spark, wh)  # advance view to head
+            run(
+                "MERGE INTO facts USING (SELECT o_orderkey, o_orderstatus, "
+                "price * 0.5 AS price FROM facts WHERE o_orderkey % 5 = 0) "
+                "AS s ON t.o_orderkey = s.o_orderkey "
+                "WHEN MATCHED THEN UPDATE SET * "
+                "WHEN NOT MATCHED THEN INSERT *"
+            )  # v16
+            # ADD COLUMNS (r14): metadata-only schema evolution — every
+            # row committed so far null-fills `chan`; the UPDATE then
+            # populates it for one status through the same SQL surface
+            run("ALTER TABLE facts ADD COLUMNS (chan string)")  # v17
+            run("UPDATE facts SET chan = 'web' WHERE o_orderstatus = 'O'")  # v18
+            # plain VACUUM (no RETAIN): sweeps orphans only — RETAIN n
+            # HOURS now expires history by AGE (r13), which would delete
+            # the very versions the contract below reads
+            run("VACUUM facts")
+            ops = [r.operation for r in run("DESCRIBE HISTORY facts").collect()]
+            ops_expected = [
+                "create",
+                "append",  # INSERT INTO ... SELECT into the EMPTY table
+                "set_properties",
+                "add_constraint",
+                "append",
+                "rollback_to_v4",
+                "append",
+                "drop_constraint",
+                "rename_column",
+                "optimize",
+                "analyze",
+                "append",  # INSERT INTO
+                "update",
+                "delete",
+                "delete",  # disjunctive DELETE (DNF)
+                "overwrite",  # MERGE INTO
+                "add_columns",  # metadata-only evolution
+                "update",  # populates the added column
+            ]
+            # stats were computed at the ANALYZE version (v11), BEFORE the
+            # DML leg — pin them against that version's row count (stats
+            # are a versioned artifact, not a live view)
+            stats = st._read_manifest(t, 11)["table_stats"]
+            v11_rows = st.read_snapshot(spark, t, version=11).count()
+            detail = run("DESCRIBE DETAIL facts").collect()[0]
+            view = st.register_snapshot_view(spark, t, "ddl_sql_facts")
+            rows = spark.sql(
+                f"""
+                SELECT o_orderstatus, COUNT(*) AS n,
+                       {dsum_spark_sql('price')} AS sum_price,
+                       COUNT(chan) AS n_chan
+                FROM {view} GROUP BY o_orderstatus
+                """
+            ).collect()
+            contract_ok = bool(
+                constraint_enforced
+                and rename_guard_ok
+                and ops == ops_expected
+                and empty_create_rows == 0
+                and stats["rows"] == v11_rows
+                and detail.properties == '{"owner": "sql"}'
+                and detail.constraints == "{}"
+            )
+        finally:
+            for vname in ("ddl_sql_facts", "ddl_sql_base", "facts"):
+                try:
+                    spark.catalog.dropTempView(vname)
+                except Exception:
+                    pass
     return local_df(spark, 
         [
             (r.o_orderstatus, r.n, float(r.sum_price), r.n_chan, contract_ok)
@@ -3673,10 +3324,7 @@ def q_snapshot_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_not_matched_by_source_clauses). The oracle replays the
     clause cascades as CASE logic; the NULL-status insert group keeps
     the column-list semantics honest in the hash."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import ddl as snapddl
     from ..sources import snaptable as st
@@ -3685,53 +3333,47 @@ def q_snapshot_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_merge_cl_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh)
-    t = os.path.join(wh, "facts")
-    try:
-        st.create_table(orders.filter(F.col("o_orderkey") % 6 == 0), t, [])
-        orders.filter(F.col("o_orderkey") % 4 == 0).select(
-            "o_orderkey",
-            "o_orderstatus",
-            (F.col("o_totalprice") * 1.5).alias("o_totalprice"),
-        ).createOrReplaceTempView("merge_cl_src")
-        snapddl.execute_sql(
-            spark,
-            "MERGE INTO facts USING merge_cl_src AS s "
-            "ON t.o_orderkey = s.o_orderkey "
-            "WHEN MATCHED AND s.o_totalprice > 200000.0 THEN UPDATE SET "
-            "o_totalprice = s.o_totalprice - t.o_totalprice, "
-            "o_orderstatus = 'H' "
-            "WHEN MATCHED AND t.o_orderstatus = 'F' THEN DELETE "
-            "WHEN NOT MATCHED AND s.o_totalprice < 50000.0 THEN INSERT "
-            "(o_orderkey, o_totalprice) VALUES (s.o_orderkey, "
-            "s.o_totalprice * 2.0) "
-            "WHEN NOT MATCHED BY SOURCE AND t.o_totalprice < 100000.0 "
-            "THEN UPDATE SET o_orderstatus = 'Z' "
-            "WHEN NOT MATCHED BY SOURCE AND t.o_orderstatus = 'O' "
-            "THEN DELETE",
-            warehouse=wh,
-        )
-        out = (
-            st.read_snapshot(spark, t)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                dsum("o_totalprice").alias("sum_price"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
+    with scratch_dir("merge_cl") as wh:
+        t = os.path.join(wh, "facts")
         try:
-            spark.catalog.dropTempView("merge_cl_src")
-        except Exception:
-            pass
+            st.create_table(orders.filter(F.col("o_orderkey") % 6 == 0), t, [])
+            orders.filter(F.col("o_orderkey") % 4 == 0).select(
+                "o_orderkey",
+                "o_orderstatus",
+                (F.col("o_totalprice") * 1.5).alias("o_totalprice"),
+            ).createOrReplaceTempView("merge_cl_src")
+            snapddl.execute_sql(
+                spark,
+                "MERGE INTO facts USING merge_cl_src AS s "
+                "ON t.o_orderkey = s.o_orderkey "
+                "WHEN MATCHED AND s.o_totalprice > 200000.0 THEN UPDATE SET "
+                "o_totalprice = s.o_totalprice - t.o_totalprice, "
+                "o_orderstatus = 'H' "
+                "WHEN MATCHED AND t.o_orderstatus = 'F' THEN DELETE "
+                "WHEN NOT MATCHED AND s.o_totalprice < 50000.0 THEN INSERT "
+                "(o_orderkey, o_totalprice) VALUES (s.o_orderkey, "
+                "s.o_totalprice * 2.0) "
+                "WHEN NOT MATCHED BY SOURCE AND t.o_totalprice < 100000.0 "
+                "THEN UPDATE SET o_orderstatus = 'Z' "
+                "WHEN NOT MATCHED BY SOURCE AND t.o_orderstatus = 'O' "
+                "THEN DELETE",
+                warehouse=wh,
+            )
+            out = (
+                st.read_snapshot(spark, t)
+                .groupBy("o_orderstatus")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    dsum("o_totalprice").alias("sum_price"),
+                )
+                .orderBy("o_orderstatus")
+                .collect()
+            )
+        finally:
+            try:
+                spark.catalog.dropTempView("merge_cl_src")
+            except Exception:
+                pass
     return local_df(spark, 
         [(r.o_orderstatus, r.n, float(r.sum_price)) for r in out],
         "o_orderstatus string, n bigint, sum_price double",
@@ -3800,10 +3442,7 @@ def q_snapshot_replace_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition set, and DESCRIBE TABLE's partition flag after the
     replace; ``tt_sum`` hashes the TIME-TRAVELED pre-replace state
     (truncate + re-insert survived the replace in history)."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import ddl as snapddl
     from ..sources import snaptable as st
@@ -3812,91 +3451,85 @@ def q_snapshot_replace_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_rtl_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh)
-    t = os.path.join(wh, "facts")
+    with scratch_dir("rtl") as wh:
+        t = os.path.join(wh, "facts")
 
-    def run(stmt: str):
-        return snapddl.execute_sql(spark, stmt, warehouse=wh)
+        def run(stmt: str):
+            return snapddl.execute_sql(spark, stmt, warehouse=wh)
 
-    try:
-        base = orders.filter(F.col("o_orderkey") % 9 == 0)
-        n_base = base.count()
-        base.createOrReplaceTempView("rtl_base")
-        run(
-            "CREATE TABLE facts PARTITIONED BY (o_orderstatus) "
-            "AS SELECT o_orderkey, o_orderstatus, o_totalprice "
-            "FROM rtl_base"
-        )  # v1
-        c1 = st.metadata_count(t)
-        snapddl.register_all_tables(spark, wh)
-        run(
-            "INSERT OVERWRITE facts SELECT o_orderkey, o_orderstatus, "
-            "o_totalprice * 2.0 FROM facts WHERE o_orderkey % 2 = 0"
-        )  # v2 — static full-table overwrite
-        c2 = st.metadata_count(t)
-        n_even = base.filter(F.col("o_orderkey") % 2 == 0).count()
-        run("TRUNCATE TABLE facts")  # v3 — metadata-only
-        c3 = st.metadata_count(t)
-        zero_files = st._read_manifest(t, 3)["files"] == []
-        run(
-            "INSERT INTO facts SELECT o_orderkey, o_orderstatus, "
-            "o_totalprice FROM rtl_base WHERE o_orderkey % 2 = 0"
-        )  # v4 — repopulate after truncate
-        c4 = st.metadata_count(t)
-        run(
-            "CREATE OR REPLACE TABLE facts "
-            "PARTITIONED BY (o_orderstatus) AS "
-            "SELECT o_orderstatus, COUNT(*) AS n FROM rtl_base "
-            "GROUP BY o_orderstatus"
-        )  # v5 — new schema + content, history preserved
-        # time-traveled pre-replace state rides the hash as a scalar —
-        # read AFTER the replace committed, so the query actually
-        # proves REPLACE preserved history (a replace that dropped old
-        # manifests or data files would break this read)
-        tt_sum = float(
-            st.read_snapshot(spark, t, version=4)
-            .agg(dsum("o_totalprice").alias("s"))
-            .collect()[0]
-            .s
-            or 0.0  # empty lake: SUM over zero rows is NULL
-        )
-        parts = {
-            r.partition for r in run("SHOW PARTITIONS facts").collect()
-        }
-        desc = {
-            r.col_name: r.is_partition
-            for r in run("DESCRIBE TABLE facts").collect()
-        }
-        ops = [r.operation for r in run("DESCRIBE HISTORY facts").collect()]
-        rows = (
-            st.read_snapshot(spark, t)
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-        statuses = {r.o_orderstatus for r in rows}
-        contract_ok = bool(
-            c1 == n_base
-            and c2 == n_even
-            and c3 == 0
-            and zero_files
-            and c4 == n_even
-            and ops == ["create", "overwrite", "truncate",
-                        "append", "replace"]
-            and parts == {f"o_orderstatus={s}" for s in statuses}
-            and desc == {"o_orderstatus": True, "n": False}
-        )
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-        for vname in ("rtl_base", "facts"):
-            try:
-                spark.catalog.dropTempView(vname)
-            except Exception:
-                pass
+        try:
+            base = orders.filter(F.col("o_orderkey") % 9 == 0)
+            n_base = base.count()
+            base.createOrReplaceTempView("rtl_base")
+            run(
+                "CREATE TABLE facts PARTITIONED BY (o_orderstatus) "
+                "AS SELECT o_orderkey, o_orderstatus, o_totalprice "
+                "FROM rtl_base"
+            )  # v1
+            c1 = st.metadata_count(t)
+            snapddl.register_all_tables(spark, wh)
+            run(
+                "INSERT OVERWRITE facts SELECT o_orderkey, o_orderstatus, "
+                "o_totalprice * 2.0 FROM facts WHERE o_orderkey % 2 = 0"
+            )  # v2 — static full-table overwrite
+            c2 = st.metadata_count(t)
+            n_even = base.filter(F.col("o_orderkey") % 2 == 0).count()
+            run("TRUNCATE TABLE facts")  # v3 — metadata-only
+            c3 = st.metadata_count(t)
+            zero_files = st._read_manifest(t, 3)["files"] == []
+            run(
+                "INSERT INTO facts SELECT o_orderkey, o_orderstatus, "
+                "o_totalprice FROM rtl_base WHERE o_orderkey % 2 = 0"
+            )  # v4 — repopulate after truncate
+            c4 = st.metadata_count(t)
+            run(
+                "CREATE OR REPLACE TABLE facts "
+                "PARTITIONED BY (o_orderstatus) AS "
+                "SELECT o_orderstatus, COUNT(*) AS n FROM rtl_base "
+                "GROUP BY o_orderstatus"
+            )  # v5 — new schema + content, history preserved
+            # time-traveled pre-replace state rides the hash as a scalar —
+            # read AFTER the replace committed, so the query actually
+            # proves REPLACE preserved history (a replace that dropped old
+            # manifests or data files would break this read)
+            tt_sum = float(
+                st.read_snapshot(spark, t, version=4)
+                .agg(dsum("o_totalprice").alias("s"))
+                .collect()[0]
+                .s
+                or 0.0  # empty lake: SUM over zero rows is NULL
+            )
+            parts = {
+                r.partition for r in run("SHOW PARTITIONS facts").collect()
+            }
+            desc = {
+                r.col_name: r.is_partition
+                for r in run("DESCRIBE TABLE facts").collect()
+            }
+            ops = [r.operation for r in run("DESCRIBE HISTORY facts").collect()]
+            rows = (
+                st.read_snapshot(spark, t)
+                .orderBy("o_orderstatus")
+                .collect()
+            )
+            statuses = {r.o_orderstatus for r in rows}
+            contract_ok = bool(
+                c1 == n_base
+                and c2 == n_even
+                and c3 == 0
+                and zero_files
+                and c4 == n_even
+                and ops == ["create", "overwrite", "truncate",
+                            "append", "replace"]
+                and parts == {f"o_orderstatus={s}" for s in statuses}
+                and desc == {"o_orderstatus": True, "n": False}
+            )
+        finally:
+            for vname in ("rtl_base", "facts"):
+                try:
+                    spark.catalog.dropTempView(vname)
+                except Exception:
+                    pass
     return local_df(spark, 
         [
             (r.o_orderstatus, r.n, tt_sum, contract_ok)
@@ -3936,61 +3569,52 @@ def q_snapshot_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pre-seeded keys outside the feed's residue range survive
     untouched — the full type-1 CDC apply contract in one statement.
     The oracle replays it as ROW_NUMBER latest-per-key."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import ddl as snapddl
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_ac_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh)
-    t = os.path.join(wh, "facts")
-    try:
-        seeded = spark.range(1000, 1010).select(
-            F.col("id").cast("long").alias("k"),
-            F.lit("Z").alias("label"),
-            F.lit(1.0).alias("price"),
-        )
-        st.create_table(seeded, t, [])
-        orders.select(
-            (F.col("o_orderkey") % 1000).alias("k"),
-            F.col("o_orderstatus").alias("label"),
-            F.col("o_totalprice").alias("price"),
-            F.col("o_orderkey").alias("seq"),
-            F.when(F.col("o_orderstatus") == "F", "D")
-            .otherwise("U")
-            .alias("op"),
-        ).createOrReplaceTempView("ac_feed")
-        r = snapddl.execute_sql(
-            spark,
-            "APPLY CHANGES INTO facts FROM ac_feed KEYS (k) "
-            "SEQUENCE BY seq APPLY AS DELETE WHEN op = 'D'",
-            warehouse=wh,
-        ).collect()[0]
-        ok = r.operation == "apply_changes"
-        out = (
-            st.read_snapshot(spark, t)
-            .groupBy("label")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                dsum("price").alias("sum_price"),
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
+    with scratch_dir("ac") as wh:
+        t = os.path.join(wh, "facts")
         try:
-            spark.catalog.dropTempView("ac_feed")
-        except Exception:
-            pass
+            seeded = spark.range(1000, 1010).select(
+                F.col("id").cast("long").alias("k"),
+                F.lit("Z").alias("label"),
+                F.lit(1.0).alias("price"),
+            )
+            st.create_table(seeded, t, [])
+            orders.select(
+                (F.col("o_orderkey") % 1000).alias("k"),
+                F.col("o_orderstatus").alias("label"),
+                F.col("o_totalprice").alias("price"),
+                F.col("o_orderkey").alias("seq"),
+                F.when(F.col("o_orderstatus") == "F", "D")
+                .otherwise("U")
+                .alias("op"),
+            ).createOrReplaceTempView("ac_feed")
+            r = snapddl.execute_sql(
+                spark,
+                "APPLY CHANGES INTO facts FROM ac_feed KEYS (k) "
+                "SEQUENCE BY seq APPLY AS DELETE WHEN op = 'D'",
+                warehouse=wh,
+            ).collect()[0]
+            ok = r.operation == "apply_changes"
+            out = (
+                st.read_snapshot(spark, t)
+                .groupBy("label")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    dsum("price").alias("sum_price"),
+                )
+                .collect()
+            )
+        finally:
+            try:
+                spark.catalog.dropTempView("ac_feed")
+            except Exception:
+                pass
     return local_df(spark, 
         [(r.label, r.n, float(r.sum_price), ok) for r in out],
         "label string, n bigint, sum_price double, contract_ok boolean",
@@ -4116,10 +3740,7 @@ def q_snapshot_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unknown column refused, CLUSTER BY NONE unsets). The final
     per-band aggregate replays the table content in DuckDB, so the
     rewrite's row preservation is value-checked, not just counted."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import ddl as snapddl
     from ..sources import snaptable as st
@@ -4130,18 +3751,12 @@ def q_snapshot_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_custkey") % 1000).cast("int").alias("cust_band"),
         "o_totalprice",
     )
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_liquid_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh)
-    t = os.path.join(wh, "facts")
+    with scratch_dir("liquid") as wh:
+        t = os.path.join(wh, "facts")
 
-    def run(stmt: str):
-        return snapddl.execute_sql(spark, stmt, warehouse=wh)
+        def run(stmt: str):
+            return snapddl.execute_sql(spark, stmt, warehouse=wh)
 
-    try:
         # shuffled layout: cust_band spread across every file
         st.create_table(orders.repartition(8), t, [])
         try:
@@ -4179,8 +3794,6 @@ def q_snapshot_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("band")
             .collect()
         )
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
     return local_df(spark, 
         [(r.band, r.n, float(r.sum_price), contract_ok) for r in rows],
         "band int, n bigint, sum_price double, contract_ok boolean",
@@ -4207,10 +3820,7 @@ def q_snapshot_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     file. Contract columns pin the loaded/skipped arithmetic and the
     op sequence; the final rollup value-checks that idempotence never
     duplicated a row."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
@@ -4218,25 +3828,20 @@ def q_snapshot_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_copyinto_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    land = os.path.join(root, "landing")
-    os.makedirs(land)
+    with scratch_dir("copyinto") as root:
+        land = os.path.join(root, "landing")
+        os.makedirs(land)
 
-    def drop(name: str, df) -> None:
-        stage = os.path.join(root, "stage_" + name)
-        df.coalesce(1).write.parquet(stage)
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        os.rename(os.path.join(stage, part), os.path.join(land, name))
+        def drop(name: str, df) -> None:
+            stage = os.path.join(root, "stage_" + name)
+            df.coalesce(1).write.parquet(stage)
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            os.rename(os.path.join(stage, part), os.path.join(land, name))
 
-    t = os.path.join(root, "facts")
-    t2 = os.path.join(root, "f_only")
-    try:
+        t = os.path.join(root, "facts")
+        t2 = os.path.join(root, "f_only")
         drop("batch_a.parquet", orders.filter(F.col("o_orderkey") % 3 == 0))
         drop("batch_b.parquet", orders.filter(F.col("o_orderkey") % 3 == 1))
         st.create_table(orders.limit(0), t, [])
@@ -4269,8 +3874,6 @@ def q_snapshot_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
         n_pattern = st.read_snapshot(spark, t2).count()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return local_df(spark, 
         [
             (r.o_orderstatus, r.n, float(r.sum_price), n_pattern, contract_ok)
@@ -4305,10 +3908,7 @@ def q_snapshot_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, the policy-free table is untouched, and a second pass
     no-ops. The final per-status rollup value-checks that maintenance
     preserved every row."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import ddl as snapddl
     from ..sources import snaptable as st
@@ -4318,14 +3918,8 @@ def q_snapshot_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_maint_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(wh, ignore_errors=True)
-    os.makedirs(wh)
-    t = os.path.join(wh, "hot")
-    try:
+    with scratch_dir("maint") as wh:
+        t = os.path.join(wh, "hot")
         st.create_table(
             orders.repartition(6), t, ["o_orderstatus"]
         )  # 6 files per status dir: fragmented
@@ -4373,8 +3967,6 @@ def q_snapshot_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             and second["hot"]["compacted_versions"] == []
             and second["hot"]["vacuum"]["deleted_files"] == 0
         )
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
     return local_df(spark, 
         [
             (r.o_orderstatus, r.n, float(r.sum_price), contract_ok)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localframe import local_df
+from ..sources.scratch import scratch_dir
 from .quality import RowRule, annotate_rows
 
 ORACLE: dict[str, str] = {}
@@ -279,35 +280,25 @@ def q_snapshot_metric_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics per version and drift flags vs the previous version. The
     oracle replays each version's visible rows in SQL, so the
     version/metric/drift pipeline is hash-checked end-to-end."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
 
     orders = read_fixture(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_snap_drift_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(table, ignore_errors=True)
-    st.create_table(orders, table, [])
-    st.delete_where(spark, table, [("o_totalprice", ">", 300000.0)])
-    st.append(orders.filter(F.col("o_custkey") % 500 == 1), table)
-    hist = snapshot_metric_history(
-        spark,
-        table,
-        {
-            "n_rows": "CAST(COUNT(*) AS BIGINT)",
-            "total_price": (
-                "CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,10))) AS STRING)"
-                " AS DOUBLE)"
-            ),
-        },
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    with scratch_dir("snap_drift") as table:
+        st.create_table(orders, table, [])
+        st.delete_where(spark, table, [("o_totalprice", ">", 300000.0)])
+        st.append(orders.filter(F.col("o_custkey") % 500 == 1), table)
+        hist = snapshot_metric_history(
+            spark,
+            table,
+            {
+                "n_rows": "CAST(COUNT(*) AS BIGINT)",
+                "total_price": (
+                    "CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,10))) AS STRING)"
+                    " AS DOUBLE)"
+                ),
+            },
+        )
     rows = []
     prev = None
     for h in hist:

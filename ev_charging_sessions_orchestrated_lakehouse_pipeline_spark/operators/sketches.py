@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localframe import local_df
 from ..functions.hashing import hash60, hash60_sql
+from ..sources.scratch import scratch_dir
 
 ORACLE: dict[str, str] = {}
 
@@ -420,10 +421,7 @@ def q_snapshot_incremental_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group estimate + exact count replay in DuckDB from the same
     md5 register algebra, so the whole maintained sketch is
     value-oracled, not contract-oracled."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources import snaptable as st
     from ..sources.readers import read_fixture
@@ -432,14 +430,9 @@ def q_snapshot_incremental_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         (F.col("o_custkey") % 5).cast("int").alias("g"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "evlake_ivm_hll_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    src = os.path.join(root, "src")
-    sink = os.path.join(root, "sink")
-    try:
+    with scratch_dir("ivm_hll") as root:
+        src = os.path.join(root, "src")
+        sink = os.path.join(root, "sink")
         st.create_table(orders, src, [])
         r1 = st.refresh_hll_view(spark, src, sink, ["g"], "o_orderkey")
         # churn: a whole-group delete (every register witness gone ->
@@ -485,8 +478,6 @@ def q_snapshot_incremental_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("g")
             .collect()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return local_df(spark, 
         [(r.g, r.n_exact, float(r.hll_est), contract_ok) for r in rows],
         "g int, n_exact bigint, hll_est double, contract_ok boolean",

@@ -14,11 +14,11 @@ jobs/ev_sessions_gold_etl.py:65-66) but scale-hardened:
   the default to ANSI, so we pin it off for parity.
 - Arrow enabled for the Pandas-UDF slow path.
 
-Delta Lake is wired up only if the ``delta`` package is importable
-(it is not in the v1 image); everything falls back to Parquet tables
-with Spark-native dynamic partition overwrite, which preserves the
-reference's ``overwritePartitions()`` semantics
-(jobs/ev_sessions_gold_etl.py:156).
+Tables are plain Parquet (or the snapshot format in
+sources/snaptable.py) with Spark-native dynamic partition overwrite,
+which preserves the reference's ``overwritePartitions()`` semantics
+(jobs/ev_sessions_gold_etl.py:156). No Delta Lake extension is
+configured.
 """
 
 from __future__ import annotations
@@ -26,15 +26,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-try:  # pragma: no cover - not present in the v1 image
-    from delta import configure_spark_with_delta_pip  # type: ignore
-
-    HAS_DELTA = True
-except Exception:  # pragma: no cover
-    configure_spark_with_delta_pip = None
-    HAS_DELTA = False
-
 
 DEFAULT_CONF: dict[str, str] = {
     # -- scale/perf ---------------------------------------------------
@@ -62,7 +53,6 @@ def get_spark(
     master: str | None = None,
     conf: dict[str, str] | None = None,
     driver_memory: str | None = None,
-    with_delta: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -83,17 +73,7 @@ def get_spark(
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)
 
-    if with_delta and HAS_DELTA and configure_spark_with_delta_pip is not None:
-        builder = builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-        spark = configure_spark_with_delta_pip(builder).getOrCreate()
-    else:
-        spark = builder.getOrCreate()
-
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

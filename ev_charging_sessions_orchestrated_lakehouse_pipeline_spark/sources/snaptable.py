@@ -3332,8 +3332,11 @@ def _apply_dvs(spark, df, table: str, dvs: dict):
     Vectors that resolved lazily (> DV_DRIVER_DECODE_MAX positions)
     never touch the driver at all: their sidecars decode in EXECUTORS
     (one file per task via mapInArrow over the ref list) and
-    anti-join WITHOUT a broadcast — at that cardinality the planner's
-    shuffled join is the memory-safe shape (guide §5)."""
+    anti-join WITHOUT a broadcast — at that cardinality a shuffled
+    join is the memory-safe shape (guide §5). The ``shuffle_hash``
+    hint forces it: the decoded side's size estimate comes from the
+    few-row ref list, so auto-broadcast would otherwise pick it and
+    collect every position through the driver."""
     from pyspark.sql import functions as F
 
     # _abs_uri (Java-rule URI quoting, pure Python) is per-FILE work:
@@ -3365,7 +3368,7 @@ def _apply_dvs(spark, df, table: str, dvs: dict):
         ).repartition(len(lazy))  # one sidecar decode per task
         big = refs.mapInArrow(
             _decode_dv_refs_arrow, "___dvf string, ___dvp long"
-        )
+        ).hint("shuffle_hash")
         df = df.join(
             big,
             (df["___f"] == big["___dvf"]) & (df["___ri"] == big["___dvp"]),

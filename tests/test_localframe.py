@@ -20,6 +20,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -144,6 +145,16 @@ def test_timestamp_in_array_falls_back_to_classic(spark):
     rows = [([datetime.datetime(2024, 6, 1, 10, 0, 0, tzinfo=tz2)],)]
     got = _assert_same(spark, rows, schema)
     assert got.collect()[0].a[0] == datetime.datetime(2024, 6, 1, 8, 0, 0)
+
+
+def test_tz_aware_timestamp_ntz_in_array_falls_back_to_classic(spark):
+    # an aware datetime nested in an NTZ array is not normalized
+    # either — classic keeps its wall clock, and so must local_df.
+    schema = StructType([StructField("a", ArrayType(TimestampNTZType()))])
+    tz2 = datetime.timezone(datetime.timedelta(hours=2))
+    rows = [([datetime.datetime(2024, 6, 1, 10, 0, 0, tzinfo=tz2)],)]
+    got = _assert_same(spark, rows, schema)
+    assert got.collect()[0].a[0] == datetime.datetime(2024, 6, 1, 10, 0, 0)
 
 
 def test_empty_frame_with_schema(spark):

@@ -4,12 +4,25 @@ the SCD2 invariants + its one-shuffle plan."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
+from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark import operators
 from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.merge import (
     compact_changelog,
     merge_upsert,
+    q_snapshot_time_travel,
     scd2,
+)
+from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
+    snaptable as st,
+)
+from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources.scratch import (
+    scratch_dir,
 )
 
 
@@ -358,3 +371,36 @@ def test_scd2_replay_equals_single_shot(spark, assign):
     assert {tuple(r) for r in hist.collect()} == {
         tuple(r) for r in single.collect()
     }
+
+
+def test_snapshot_query_scratch_table_cleaned_up_on_error(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A registry query that fails mid-way must not leak its throwaway
+    table: the scratch directory is removed on the error path too."""
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected overwrite failure")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(st, "overwrite_partitions", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        q_snapshot_time_travel(spark, sf_dir)
+    assert not [p.name for p in tmp_path.iterdir() if p.name.startswith("evlake_")]
+
+
+def test_scratch_dir_paths_are_unique():
+    with scratch_dir("x") as a, scratch_dir("x") as b:
+        assert a != b and os.path.isdir(a) and os.path.isdir(b)
+    assert not os.path.exists(a) and not os.path.exists(b)
+
+
+def test_operators_do_not_hand_roll_temp_paths():
+    """Queries get throwaway tables from sources.scratch.scratch_dir,
+    never from a path built on tempfile.gettempdir()."""
+    pkg = os.path.dirname(operators.__file__)
+    offenders = [
+        os.path.basename(p)
+        for p in sorted(glob.glob(os.path.join(pkg, "*.py")))
+        if "gettempdir(" in open(p).read()
+    ]
+    assert offenders == []

@@ -1554,6 +1554,44 @@ def test_full_lifecycle_composition(spark, orders, tmp_path):
         st.read_snapshot(spark, clone).count()
 
 
+def _joins_over(plan, leaf: str) -> list[tuple[str, set[str]]]:
+    """(join node name, node names of the join side holding ``leaf``)
+    for every join in a physical plan with ``leaf`` below one side.
+    Walks through AQE wrappers and query stages to the final plan."""
+
+    def kids(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return [node.executedPlan()]
+        if "QueryStage" in name:
+            return [node.plan()]
+        if name == "ReusedExchange":
+            return [node.child()]
+        cs = node.children()
+        return [cs.apply(i) for i in range(cs.size())]
+
+    def names(node) -> set[str]:
+        out = {node.nodeName()}
+        for c in kids(node):
+            out |= names(c)
+        return out
+
+    found = []
+
+    def walk(node):
+        cs = kids(node)
+        if "Join" in node.nodeName():
+            for c in cs:
+                side = names(c)
+                if leaf in side:
+                    found.append((node.nodeName(), side))
+        for c in cs:
+            walk(c)
+
+    walk(plan)
+    return found
+
+
 def test_deletion_vector_executor_decode_above_threshold(
     spark, orders, tmp_path, monkeypatch
 ):
@@ -1594,13 +1632,29 @@ def test_deletion_vector_executor_decode_above_threshold(
     ]
     assert lazies and sum(len(ps) for ps in lazies) >= n_del - st.DV_INLINE_MAX
 
-    snap = st.read_snapshot(spark, t)
-    plan = snap._sc._jvm.PythonSQLUtils.explainString(
-        snap._jdf.queryExecution(), "formatted"
-    )
-    assert "MapInArrow" in plan  # executor decode is actually planned
-    got = {r.o_orderkey for r in snap.select("o_orderkey").collect()}
-    assert got == expect
+    # conf matrix: the DV side must stay shuffled whether or not
+    # auto-broadcast is enabled (session default 64MB, then disabled)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    for threshold in (prior, "-1"):
+        spark.conf.set(key, threshold)
+        try:
+            snap = st.read_snapshot(spark, t).select("o_orderkey")
+            got = {r.o_orderkey for r in snap.collect()}
+            dv_joins = _joins_over(
+                snap._jdf.queryExecution().executedPlan(), "MapInArrow"
+            )
+        finally:
+            spark.conf.set(key, prior)
+        assert got == expect
+        # executor decode is actually planned, and never broadcast
+        assert dv_joins, threshold
+        for join, side in dv_joins:
+            assert join != "BroadcastHashJoin", (threshold, join)
+            assert not {"BroadcastExchange", "BroadcastQueryStage"} & side, (
+                threshold,
+                side,
+            )
 
     # metadata COUNT and CDF set-diffs decode the lazy ref on demand
     assert st.table_stats(t)["rows"] == n0 - n_del
