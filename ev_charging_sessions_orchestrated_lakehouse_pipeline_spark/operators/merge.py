@@ -650,7 +650,7 @@ def q_snapshot_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("o_totalprice", "<", 10000.0)],
             {"o_totalprice": "o_totalprice + 1.0"},
         )
-        after = set(st._read_manifest(table, st.current_version(table))["files"])
+        after = set(st._manifest_at(table)[1]["files"])
         carried = len(before & after) > 0
         audit = (
             st.read_snapshot(spark, table)
@@ -1732,7 +1732,7 @@ def q_snapshot_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.rename_column(table, "o_orderpriority", "priority")
         st.widen_column(table, "o_custkey", "long")
         st.append(st.read_snapshot(spark, table).limit(0), table)  # plain commit
-        head = st._read_manifest(table, st.current_version(table))
+        head = st._manifest_at(table)[1]
         feats = set(head.get("reader_features") or [])
         features_exact = feats == {
             "deletion-vectors",
@@ -1755,12 +1755,12 @@ def q_snapshot_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.optimize(spark, table, files_per_partition=2)
         st.drop_feature(table, "deletion-vectors")
         st.drop_feature(table, "type-widening")
-        after_drop = st._read_manifest(table, st.current_version(table))
+        after_drop = st._manifest_at(table)[1]
         dropped_ok = set(after_drop.get("reader_features") or []) == {
             "column-mapping"
         }
         st.delete_where(spark, table, [("o_totalprice", "<", 5000.0)], use_dv=True)
-        rehead = st._read_manifest(table, st.current_version(table))
+        rehead = st._manifest_at(table)[1]
         drop_then_reaccrue_ok = bool(
             dropped_ok
             and set(rehead.get("reader_features") or [])
@@ -2258,12 +2258,12 @@ def q_snapshot_auto_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         plan = st.plan_compaction(table, max_files_per_partition=4)
         flagged_only_f = list(plan) == [(("o_orderstatus", "F"),)]
-        before = st._read_manifest(table, st.current_version(table))
+        before = st._manifest_at(table)[1]
         healthy_before = sorted(
             f for f in before["files"] if "o_orderstatus=F" not in f
         )
         st.auto_compact(spark, table, max_files_per_partition=4)
-        after = st._read_manifest(table, st.current_version(table))
+        after = st._manifest_at(table)[1]
         healthy_after = sorted(
             f for f in after["files"] if "o_orderstatus=F" not in f
         )
@@ -3766,14 +3766,14 @@ def q_snapshot_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             unknown_refused = True
         run("ALTER TABLE facts CLUSTER BY (cust_band)")
         declared = st.table_properties(t).get("clusterBy") == "cust_band"
-        before = st._read_manifest(t, st.current_version(t))
+        before = st._manifest_at(t)[1]
         pruned_before = len(
             st._prune_files(t, before, [("cust_band", "=", 7)])
         )
         # no cluster_by restated — optimize must pick up the declared
         # keys; 8 output files so range-split pruning is observable
         st.optimize(spark, t, files_per_partition=8)
-        after = st._read_manifest(t, st.current_version(t))
+        after = st._manifest_at(t)[1]
         pruned_after = len(st._prune_files(t, after, [("cust_band", "=", 7)]))
         files_pruned_lt_total = bool(
             pruned_before == len(before["files"])  # shuffled: no pruning
@@ -3939,7 +3939,7 @@ def q_snapshot_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         dry = run_maintenance(spark, wh, dry_run=True)
         head_after_dry = st.current_version(t)
         real = run_maintenance(spark, wh)
-        man = st._read_manifest(t, st.current_version(t))
+        man = st._manifest_at(t)[1]
         from collections import Counter
 
         per_part = Counter(f.split("/")[1] for f in man["files"])

@@ -421,10 +421,7 @@ def _lower_merge_clauses(
     """
     from pyspark.sql import functions as F
 
-    head = st.current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    man = st._read_manifest(table, head)
+    _, man = st._manifest_at(table)
     ident = (man.get("identity") or {}).get("col")
     tgt = st.read_snapshot(spark, table)
     tgt_fields = [f for f in tgt.schema.fields if f.name != ident]
@@ -828,9 +825,6 @@ def execute_sql(
             df = spark.sql(f"SELECT * FROM ({body})")
         else:
             df = spark.sql(body)
-        head = st.current_version(t)
-        if head is None:
-            raise ValueError(f"{t} does not exist")
         target = st.read_snapshot(spark, t).schema
         if len(df.columns) != len(target.fields):
             raise ValueError(
@@ -1314,14 +1308,7 @@ def execute_sql(
                     "OPTIMIZE WHERE takes one conjunction of partition "
                     "equalities (no OR)"
                 )
-            head = st.current_version(t)
-            if head is None:
-                raise ValueError(f"{t} does not exist")
-            pcols = set(
-                st._spec_names(
-                    st._read_manifest(t, head)["partition_cols"]
-                )
-            )
+            pcols = set(st._spec_names(st._manifest_at(t)[1]["partition_cols"]))
             parts = {}
             for col, op, val in conj:
                 if op not in ("=", "==") or col not in pcols:
@@ -1525,10 +1512,7 @@ def execute_sql(
     m = _m(rf"DESCRIBE\s+DETAIL\s+{_IDENT}", s)
     if m:
         t = tbl(m.group(1))
-        head = st.current_version(t)
-        if head is None:
-            raise ValueError(f"{t} does not exist")
-        man = st._read_manifest(t, head)
+        head, man = st._manifest_at(t)
         return _row_df(
             spark,
             {
@@ -1703,10 +1687,7 @@ def execute_sql(
     m = _m(rf"DESCRIBE\s+(?:TABLE\s+)?{_IDENT}", s)
     if m:
         t = tbl(m.group(1))
-        head = st.current_version(t)
-        if head is None:
-            raise ValueError(f"{t} does not exist")
-        man = st._read_manifest(t, head)
+        _, man = st._manifest_at(t)
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(man["schema"]))

@@ -44,6 +44,9 @@ Log-structured design (the same shape as the Delta/Iceberg logs):
   commits. Snapshot isolation falls out: a reader holding version N's
   file list is immune to later commits, and VACUUM retains every file
   any kept manifest references.
+- **One resolver**: :func:`_manifest_at` is the single place a version
+  (head, or an explicit one) is resolved to its manifest, and the
+  single source of the "does not exist" errors.
 
 At 100 TB the manifests stay tiny (file paths + counts, not data) and
 the read plan is exactly the same partition-pruned Parquet scan as a
@@ -439,6 +442,26 @@ def _read_manifest(table: str, version: int) -> dict:
     ):
         out["deletion_vectors"] = _resolve_dvs(table, out["deletion_vectors"])
     return out
+
+
+def _manifest_at(table: str, version: int | None = None) -> tuple[int, dict]:
+    """Resolve ``version`` (default: the head) and materialize its
+    manifest — the one place every read, DML, DDL and ref operation
+    answers "which version?". Raises ``ValueError`` when the table has
+    no committed version, or when an explicit ``version`` was never
+    committed (or retention expired it). An explicit version costs one
+    existence check; the directory is listed only for the head or for
+    the error message."""
+    if version is None or not os.path.exists(_manifest_path(table, version)):
+        versions = _list_versions(table)
+        if not versions:
+            raise ValueError(f"{table} does not exist")
+        if version is not None:
+            raise ValueError(
+                f"version {version} of {table} does not exist (head={versions[-1]})"
+            )
+        version = versions[-1]
+    return version, _read_manifest(table, version)
 
 
 # per-commit staging directories under data/ (see _write_data): files
@@ -1631,10 +1654,7 @@ def append(
     UPDATE_IN_DATABASE policy, infra/glue-crawlers.tf:47-50, and of
     Delta's mergeSchema): the manifest schema gains the new fields
     and earlier files read as null for them."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist; use create_table")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     _guard_identity(prev, df)
     df = _apply_generated(df, prev.get("generated") or {})
     schema_json = _evolve_schema(prev["schema"], df, merge_schema)
@@ -1686,10 +1706,7 @@ def truncate_table(table: str, txn: tuple[str, int] | None = None) -> int:
     version still reads every row, and VACUUM later reclaims the
     bytes once retention allows. Refused on appendOnly tables (it is
     the ultimate row-removing operation)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     return _commit(
         table,
         "truncate",
@@ -1853,12 +1870,9 @@ def overwrite_partitions(
     between collide at publish and revalidate through
     :func:`_try_rebase`, instead of being silently built over (a
     lost update inside the rewritten partitions)."""
-    head = (
-        current_version(table) if parent_version is None else int(parent_version)
+    head, prev = _manifest_at(
+        table, None if parent_version is None else int(parent_version)
     )
-    if head is None:
-        raise ValueError(f"{table} does not exist; use create_table")
-    prev = _read_manifest(table, head)
     pcols = prev["partition_cols"]
     if not pcols:
         raise ValueError(f"{table} is unpartitioned; use overwrite_table")
@@ -1949,10 +1963,7 @@ def replace_where(
     clustered data a selective replace rewrites a handful of files
     out of thousands — the same economics as :func:`delete_where`.
     """
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist; use create_table")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     if not filters:
         raise ValueError(
             "refusing an unfiltered replace_where; use overwrite_table"
@@ -2015,10 +2026,7 @@ def evolve_partitioning(table: str, new_cols: list[str]) -> int:
     :func:`optimize` migrates the old files (see the guard there);
     every other operation (scan, time travel, append, DML, CDF,
     vacuum) works across mixed layouts."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2093,10 +2101,7 @@ def _guard_column_ddl(prev: dict, col: str, verb: str) -> None:
 
 def table_properties(table: str) -> dict:
     """The head's table-property map (empty when none set)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    return dict(_read_manifest(table, head).get("properties") or {})
+    return dict(_manifest_at(table)[1].get("properties") or {})
 
 
 def set_table_properties(table: str, props: dict) -> int:
@@ -2117,10 +2122,7 @@ def set_table_properties(table: str, props: dict) -> int:
       :func:`set_clustering`, Delta's liquid-clustering surface).
 
     Everything else is opaque user metadata carried verbatim."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     merged = dict(prev.get("properties") or {})
     merged.update({str(k): str(v) for k, v in props.items()})
     return _commit(
@@ -2142,10 +2144,7 @@ def unset_table_properties(
 ) -> int:
     """ALTER TABLE UNSET TBLPROPERTIES: remove ``keys`` metadata-only.
     Missing keys raise unless ``if_exists`` (the SQL default)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     props = dict(prev.get("properties") or {})
     missing = [k for k in keys if k not in props]
     if missing and not if_exists:
@@ -2252,10 +2251,7 @@ def drop_feature(table: str, feature: str) -> int:
         raise ValueError(
             f"unknown feature {feature!r}; this engine knows {sorted(known)}"
         )
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     present = set(prev.get("reader_features") or []) | set(
         prev.get("writer_features") or []
     )
@@ -2405,8 +2401,7 @@ def copy_into(
     import fnmatch
     import glob as _glob
 
-    if current_version(table) is None:
-        raise ValueError(f"{table} does not exist; use create_table")
+    _manifest_at(table)  # raises if the table does not exist
     src = source.rstrip("/")
     names = sorted(
         p
@@ -2466,12 +2461,9 @@ def set_clustering(table: str, cols: list[str] | None) -> int:
     (unsets). Refused for partition columns (constant within a
     partition directory — clustering them is a no-op that would
     silently waste the sort) and unknown columns."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
+    _, prev = _manifest_at(table)
     if not cols:
         return unset_table_properties(table, ["clusterBy"], if_exists=True)
-    prev = _read_manifest(table, head)
     schema = json.loads(prev["schema"])
     names = {f["name"] for f in schema["fields"]}
     unknown = [c for c in cols if c not in names]
@@ -2497,10 +2489,7 @@ def add_constraint(
     records the constraint in a metadata-only commit. Every future
     data-adding commit enforces it. Adding a name that already exists
     raises, like Delta."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     cons = dict(prev.get("constraints") or {})
     if name in cons:
         raise ValueError(
@@ -2526,10 +2515,7 @@ def drop_constraint(table: str, name: str, if_exists: bool = False) -> int:
     """ALTER TABLE DROP CONSTRAINT: metadata-only removal. A missing
     name raises unless ``if_exists`` (Delta's IF EXISTS), in which
     case the head is returned unchanged."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     cons = dict(prev.get("constraints") or {})
     if name not in cons:
         if if_exists:
@@ -2564,10 +2550,7 @@ def rename_column(table: str, old: str, new: str) -> int:
     Refused for partition columns and columns referenced by CHECK
     constraints (rename would silently break them — Delta refuses
     likewise)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     from pyspark.sql.types import StructField, StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2684,10 +2667,7 @@ def widen_column(table: str, col: str, new_type: str) -> int:
     so dropping is the always-safe direction); footer min/max stats
     stay, their JSON scalars compare unchanged under the wider type.
     """
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     from pyspark.sql.types import DecimalType, StructField, StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2751,10 +2731,7 @@ def drop_column(table: str, col: str) -> int:
     name gets a FRESH physical alias (see :func:`append`'s
     resurrection guard), so dropped data can never silently resurface
     under a new column."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2809,10 +2786,7 @@ def add_columns(
     alias in the column mapping — otherwise ``RENAME a->b`` followed
     by ``ADD COLUMNS (a int)`` would read b's old data back out under
     the new column."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     from pyspark.sql.types import StructField, StructType
 
     if isinstance(columns, str):
@@ -2945,17 +2919,11 @@ def read_snapshot(
     the materialized id column in files OPTIMIZE rewrote."""
     if sum(x is not None for x in (version, as_of, tag)) > 1:
         raise ValueError("pass at most one of version=, as_of=, tag=")
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
     if tag is not None:
         version = read_tag(table, tag)
     if as_of is not None:
         version = version_as_of(table, as_of)
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    v, manifest = _manifest_at(table, version)
     ident = manifest.get("identity")
     if with_row_ids or ident:
         if not manifest.get("row_tracking"):
@@ -3082,10 +3050,7 @@ def enable_row_tracking(table: str) -> int:
     — Delta's preserved-row-tracking writes). update_where's rewrite
     path assigns fresh ids to rewritten rows — the Delta default
     without preservation; its DV path preserves. Idempotent."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     if prev.get("row_tracking"):
         return head
     stats = {f: dict(e) for f, e in prev.get("file_stats", {}).items()}
@@ -3132,10 +3097,7 @@ def enable_identity(
     gated by the ``identity-columns`` feature. Enabling is one
     commit; idempotent for an identical spec, refused for a
     conflicting one (same stance as re-pointing a tag)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     spec = {"col": col, "start": int(start), "step": int(step)}
     if prev.get("identity"):
         if prev["identity"] == spec:
@@ -3610,13 +3572,7 @@ def metadata_count(
     file may still hold non-matching rows, so a stats-only count
     would be an upper bound, not a count — use :func:`scan` +
     ``count()`` for those."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _manifest_at(table, version)
     hive = _spec_names(manifest["partition_cols"])
     for col, op, _val in filters or []:
         if op not in ("=", "==") or col not in hive:
@@ -3662,43 +3618,32 @@ def scan(
     into a handful of files without any partition-layout help.
     ``filters``: [(col, op, literal)] with op in <,<=,>,>=,=,==,
     combined conjunctively."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    return _scan_branches(spark, table, [list(filters or [])], version)
+
+
+def _scan_branches(
+    spark: SparkSession,
+    table: str,
+    branches: list[list[tuple]],
+    version: int | None,
+) -> DataFrame:
+    """Shared body of :func:`scan` and :func:`scan_any`: resolve the
+    version, keep the files at least one branch's stats admit, read
+    them, and re-apply the exact OR-of-ANDs predicate. A single empty
+    branch reads every file unfiltered."""
     from pyspark.sql.types import StructType
 
+    _, manifest = _manifest_at(table, version)
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    files = _prune_files(table, manifest, filters or [])
     df = _read_union(
         spark,
         table,
-        files,
+        _prune_files_any(table, manifest, branches),
         schema,
         dvs=manifest.get("deletion_vectors"),
         mapping=manifest.get("column_mapping"),
     )
-    from pyspark.sql import functions as F
-
-    for col, op, val in filters or []:
-        c = F.col(col)
-        if op == "isnull":
-            df = df.filter(c.isNull())
-            continue
-        if op == "notnull":
-            df = df.filter(c.isNotNull())
-            continue
-        if op == "in":
-            df = df.filter(c.isin(list(val)))
-            continue
-        df = df.filter(
-            {"=": c == val, "==": c == val, ">": c > val, ">=": c >= val,
-             "<": c < val, "<=": c <= val, "!=": c != val}[op]
-        )
-    return df
+    return df.filter(_filters_to_column(branches)) if any(branches) else df
 
 
 def table_layout(table: str, version: int | None = None) -> list[dict]:
@@ -3709,13 +3654,7 @@ def table_layout(table: str, version: int | None = None) -> list[dict]:
     table size). A partition with many small files is a compaction
     target; one huge file wants a split. Sorted by file count
     descending so the worst offender leads."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _manifest_at(table, version)
     stats = manifest.get("file_stats", {})
     hive = _spec_names(manifest["partition_cols"])
     groups: dict[tuple, list[int]] = {}
@@ -3757,32 +3696,9 @@ def scan_any(
     a full scan: pushing only the conjunctive common factor (what a
     single conjunct API forces) keeps every file a weak branch would
     have pruned."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     if not branches or any(not b for b in branches):
         raise ValueError("scan_any needs >=1 branch, each a non-empty conjunct list")
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    keep = _prune_files_any(table, manifest, branches)
-    df = _read_union(
-        spark,
-        table,
-        sorted(keep),
-        schema,
-        dvs=manifest.get("deletion_vectors"),
-        mapping=manifest.get("column_mapping"),
-    )
-    cond = F.lit(False)
-    for branch in branches:
-        cond = cond | _filters_to_column(branch)
-    return df.filter(cond)
+    return _scan_branches(spark, table, [list(b) for b in branches], version)
 
 
 def commit_with_retry(fn, retries: int = 5):
@@ -3885,10 +3801,7 @@ def _rewrite_matching_files(
     carries over by reference — the Delta DELETE/UPDATE file-rewrite
     model. With clustered data (see :func:`optimize`) a selective
     predicate rewrites a handful of files out of thousands."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     pcols = prev["partition_cols"]
     branches = _as_branches(filters)
     if not branches:
@@ -3960,10 +3873,7 @@ def delete_where(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     branches = _as_branches(filters)
     if not branches:
         raise ValueError("refusing an unfiltered delete; pass filters")
@@ -4032,10 +3942,7 @@ def update_where(
     if use_dv:
         from pyspark.sql.types import StructType
 
-        head = current_version(table)
-        if head is None:
-            raise ValueError(f"{table} does not exist")
-        prev = _read_manifest(table, head)
+        head, prev = _manifest_at(table)
         branches = _as_branches(filters)
         if not branches:
             raise ValueError("refusing an unfiltered update; pass filters")
@@ -4148,10 +4055,7 @@ def update_where(
             for c in names
         ]
         out = df.select(*cols)
-        head = current_version(table)
-        gen = (
-            (_read_manifest(table, head).get("generated") or {}) if head else {}
-        )
+        gen = _manifest_at(table)[1].get("generated") or {}
         # recompute generated columns over the rewritten frame: rows
         # the predicate matched may have changed the sources, and
         # untouched rows recompute to their existing values
@@ -4183,10 +4087,7 @@ def analyze_table(
     from pyspark.sql import functions as F
     from pyspark.sql.types import AtomicType
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _manifest_at(table)
     df = read_snapshot(spark, table)
     if columns is None:
         pnames = set(_spec_names(prev["partition_cols"]))
@@ -4239,11 +4140,7 @@ def analyzed_stats(table: str, version: int | None = None) -> dict | None:
     :func:`table_stats`, which folds exact COUNT/MIN/MAX from the
     per-file footer index without any scan; NDV and null counts need
     the one-pass scan ANALYZE runs."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    return _read_manifest(table, v).get("table_stats")
+    return _manifest_at(table, version)[1].get("table_stats")
 
 
 def history(table: str) -> list[dict]:
@@ -4331,23 +4228,16 @@ def changes(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    versions = _list_versions(table)
-    if from_version not in versions:
-        raise ValueError(f"version {from_version} of {table} does not exist")
-    head = versions[-1]
-    to = head if to_version is None else to_version
-    if to not in versions:
-        raise ValueError(f"version {to} of {table} does not exist (head={head})")
-
-    if with_row_ids and not _read_manifest(table, to).get("row_tracking"):
+    _, prev = _manifest_at(table, from_version)
+    to, to_manifest = _manifest_at(table, to_version)
+    if with_row_ids and not to_manifest.get("row_tracking"):
         raise ValueError(
             f"{table} v{to} has no row tracking; call "
             "enable_row_tracking(table) first"
         )
 
     parts: list[DataFrame] = []
-    prev = _read_manifest(table, from_version)
-    for v in versions:
+    for v in _list_versions(table):
         if v <= from_version:
             continue
         if v > to:
@@ -4556,13 +4446,7 @@ def table_stats(table: str, version: int | None = None) -> dict:
     the result rather than answered stale."""
     from pyspark.sql.types import StructType
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _manifest_at(table, version)
     fs = manifest.get("file_stats", {})
     files = manifest["files"]
     missing = [f for f in files if f not in fs]
@@ -4665,10 +4549,7 @@ def add_bloom_index(
 
     from ..functions.hashing import hash60
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    manifest = _read_manifest(table, head)
+    head, manifest = _manifest_at(table)
     files = manifest["files"]
     stats = {f: dict(s) for f, s in manifest.get("file_stats", {}).items()}
     cmap = manifest.get("column_mapping") or {}
@@ -4901,6 +4782,86 @@ def maintain_minmax(
     return out
 
 
+def _refresh_view(
+    spark: SparkSession,
+    source_table: str,
+    sink_table: str,
+    app_id: str,
+    pin_schema,
+    full,
+    delta,
+) -> dict:
+    """The exactly-once refresh protocol every ``refresh_*_view``
+    runs; a view supplies only its aggregate: ``pin_schema(df)`` fixes
+    the sink schema, ``full(head)`` recomputes the view from the
+    source snapshot ``head``, and ``delta(base, cursor, head)`` rolls
+    ``base`` (the sink, materialized at source version ``cursor``)
+    forward to ``head`` over the change feed.
+
+    The cursor is not a sidecar file that can diverge from the data —
+    it rides the SINK's commit as ``txn = (app_id, source_version)``,
+    so the rolled-forward aggregate and the new cursor become visible
+    in ONE atomic commit (the Delta idempotent-writer protocol bent
+    to view maintenance). Kill a refresh anywhere and re-run: either
+    the commit never published (cursor unchanged — the delta
+    re-applies to the OLD aggregate, converging to the same state) or
+    it published (``txn_epoch`` reports the new cursor — the replay
+    no-ops). Exactly-once by construction, no caller bookkeeping.
+
+    Falls back to a FULL rebuild when the recorded cursor's source
+    version no longer exists (history expired by ``vacuum(keep_last=
+    ...)`` between refreshes) — correctness never depends on
+    retention. Returns ``{"mode": "full"|"delta"|"noop",
+    "from_version", "to_version", "sink_version"}``."""
+    head, _ = _manifest_at(source_table)
+    # Pin the SINK read atomically: cursor, delta base, and commit
+    # parent all come from the same sink snapshot. Reading the cursor
+    # and base at whatever the head happens to be, then committing
+    # without a parent pin, left a window where a concurrent
+    # same-app_id refresher publishing in between was silently built
+    # over (no publish collision -> the rebase txn guard never ran)
+    # and its delta double-applied.
+    sink_head = current_version(sink_table)
+    cursor = txn_epoch(sink_table, app_id, at_version=sink_head)
+    if cursor is not None and cursor >= head:
+        return {
+            "mode": "noop",
+            "from_version": cursor,
+            "to_version": head,
+            "sink_version": current_version(sink_table),
+        }
+    if cursor is not None and cursor in _list_versions(source_table):
+        # the BASE is pinned too: a sink written before its view's
+        # current pin (count/sum's pre-r12 decimal(38,10) ``s``) would
+        # otherwise trip the very allowPrecisionLoss rounding the pin
+        # exists to avoid, once, on the first post-upgrade refresh
+        base = pin_schema(read_snapshot(spark, sink_table, version=sink_head))
+        rolled, frm = delta(base, cursor, head), cursor
+    else:
+        # first refresh, or retention expired the cursor's snapshot:
+        # no diff base left
+        rolled, frm = full(head), None
+    if cursor is None:
+        v = create_table(pin_schema(rolled), sink_table, [], txn=(app_id, head))
+    else:
+        # parent_version=sink_head: a racing same-app_id refresher
+        # that published after our cursor read now COLLIDES, and
+        # _try_rebase's txn replay guard rejects the double-apply
+        # instead of rebasing.
+        v = overwrite_table(
+            pin_schema(rolled),
+            sink_table,
+            parent_version=sink_head,
+            txn=(app_id, head),
+        )
+    return {
+        "mode": "full" if frm is None else "delta",
+        "from_version": frm,
+        "to_version": head,
+        "sink_version": v,
+    }
+
+
 def refresh_count_sum_view(
     spark: SparkSession,
     source_table: str,
@@ -4912,23 +4873,9 @@ def refresh_count_sum_view(
     """Cursor-driven MATERIALIZED-VIEW refresh: maintain the per-key
     COUNT + SUM aggregate of ``source_table`` as its own snapshot
     table, folding in only the source commits since the last refresh
-    (:func:`maintain_count_sum` over the change feed).
-
-    The cursor is not a sidecar file that can diverge from the data —
-    it rides the SINK's commit as ``txn = (app_id, source_version)``,
-    so the rolled-forward aggregate and the new cursor become visible
-    in ONE atomic commit (the Delta idempotent-writer protocol bent
-    to view maintenance). Kill this function anywhere and re-run:
-    either the commit never published (cursor unchanged — the delta
-    re-applies to the OLD aggregate, converging to the same state) or
-    it published (``txn_epoch`` reports the new cursor — the replay
-    no-ops). Exactly-once by construction, no caller bookkeeping.
-
-    Falls back to a FULL rebuild when the recorded cursor's source
-    version no longer exists (history expired by ``vacuum(keep_last=
-    ...)`` between refreshes) — correctness never depends on
-    retention. Returns ``{"mode": "full"|"delta"|"noop",
-    "from_version", "to_version", "sink_version"}``.
+    (:func:`maintain_count_sum` over the change feed) under the
+    exactly-once cursor protocol of :func:`_refresh_view`. Returns its
+    mode dict.
 
     Scale: the steady-state refresh reads only the files the source
     commits since the cursor touched (the whole point of CDF at
@@ -4937,19 +4884,6 @@ def refresh_count_sum_view(
     the source's.
     """
     from pyspark.sql import functions as F
-
-    head = current_version(source_table)
-    if head is None:
-        raise ValueError(f"{source_table} does not exist")
-    # Pin the SINK read atomically: cursor, delta base, and commit
-    # parent all come from the same sink snapshot. Reading the cursor
-    # and base at whatever the head happens to be, then committing
-    # without a parent pin, left a window where a concurrent
-    # same-app_id refresher publishing in between was silently built
-    # over (no publish collision -> the rebase txn guard never ran)
-    # and its delta double-applied.
-    sink_head = current_version(sink_table)
-    cursor = txn_epoch(sink_table, app_id, at_version=sink_head)
 
     def pin_schema(df):
         # stable sink schema across refreshes: Spark's decimal sum /
@@ -4968,8 +4902,8 @@ def refresh_count_sum_view(
             F.col("s").cast("decimal(37,10)").alias("s"),
         )
 
-    def full_agg():
-        return pin_schema(
+    def full(head):
+        return (
             read_snapshot(spark, source_table, version=head)
             .groupBy(*keys)
             .agg(
@@ -4978,57 +4912,14 @@ def refresh_count_sum_view(
             )
         )
 
-    if cursor is None:
-        v = create_table(full_agg(), sink_table, [], txn=(app_id, head))
-        return {
-            "mode": "full",
-            "from_version": None,
-            "to_version": head,
-            "sink_version": v,
-        }
-    if cursor >= head:
-        return {
-            "mode": "noop",
-            "from_version": cursor,
-            "to_version": head,
-            "sink_version": current_version(sink_table),
-        }
-    if cursor not in _list_versions(source_table):
-        # retention expired the cursor's snapshot: no diff base left
-        rolled = full_agg()
-        mode, frm = "full", None
-    else:
-        rolled = pin_schema(
-            maintain_count_sum(
-                spark,
-                source_table,
-                # pin the BASE to (37,10) too: a sink created by the
-                # pre-r12 code stored s as decimal(38,10), and adding
-                # the (35,10) delta to THAT would trip the very
-                # allowPrecisionLoss rounding the pin exists to
-                # avoid — once, on the first post-upgrade refresh
-                pin_schema(
-                    read_snapshot(spark, sink_table, version=sink_head)
-                ),
-                keys,
-                sum_col,
-                cursor,
-                head,
-            )
+    def delta(base, cursor, head):
+        return maintain_count_sum(
+            spark, source_table, base, keys, sum_col, cursor, head
         )
-        mode, frm = "delta", cursor
-    # parent_version=sink_head: a racing same-app_id refresher that
-    # published after our cursor read now COLLIDES, and _try_rebase's
-    # txn replay guard rejects the double-apply instead of rebasing.
-    v = overwrite_table(
-        rolled, sink_table, parent_version=sink_head, txn=(app_id, head)
+
+    return _refresh_view(
+        spark, source_table, sink_table, app_id, pin_schema, full, delta
     )
-    return {
-        "mode": mode,
-        "from_version": frm,
-        "to_version": head,
-        "sink_version": v,
-    }
 
 
 def refresh_minmax_view(
@@ -5039,26 +4930,14 @@ def refresh_minmax_view(
     col: str,
     app_id: str = "ivm_minmax",
 ) -> dict:
-    """Cursor-driven refresh for the per-key COUNT/MIN/MAX view —
-    :func:`refresh_count_sum_view`'s twin over
-    :func:`maintain_minmax`, sharing the same exactly-once protocol:
-    the cursor rides the sink's commit as ``txn = (app_id,
-    source_version)``, the sink read (cursor + delta base + commit
-    parent) is pinned to ONE snapshot, and ``parent_version`` makes a
-    racing same-app_id refresher collide instead of double-applying.
-    Falls back to a FULL rebuild when retention expired the cursor's
-    snapshot. Returns the same mode dict.
+    """Cursor-driven refresh for the per-key COUNT/MIN/MAX view:
+    :func:`maintain_minmax` run under :func:`_refresh_view`'s
+    exactly-once cursor protocol. Returns its mode dict.
 
     Scale: the steady-state refresh pays the change-feed delta plus
     the bounded per-group rescan for deleted extremes
     (maintain_minmax's contract) — never a source rescan."""
     from pyspark.sql import functions as F
-
-    head = current_version(source_table)
-    if head is None:
-        raise ValueError(f"{source_table} does not exist")
-    sink_head = current_version(sink_table)
-    cursor = txn_epoch(sink_table, app_id, at_version=sink_head)
 
     def pin_schema(df):
         # mn/mx are selections of source values (no arithmetic), so
@@ -5070,9 +4949,9 @@ def refresh_minmax_view(
             F.col("mx").alias("mx"),
         )
 
-    def full_agg():
+    def full(head):
         c = F.col(col)
-        return pin_schema(
+        return (
             read_snapshot(spark, source_table, version=head)
             .groupBy(*keys)
             .agg(
@@ -5082,46 +4961,12 @@ def refresh_minmax_view(
             )
         )
 
-    if cursor is None:
-        v = create_table(full_agg(), sink_table, [], txn=(app_id, head))
-        return {
-            "mode": "full",
-            "from_version": None,
-            "to_version": head,
-            "sink_version": v,
-        }
-    if cursor >= head:
-        return {
-            "mode": "noop",
-            "from_version": cursor,
-            "to_version": head,
-            "sink_version": current_version(sink_table),
-        }
-    if cursor not in _list_versions(source_table):
-        rolled = full_agg()
-        mode, frm = "full", None
-    else:
-        rolled = pin_schema(
-            maintain_minmax(
-                spark,
-                source_table,
-                read_snapshot(spark, sink_table, version=sink_head),
-                keys,
-                col,
-                cursor,
-                head,
-            )
-        )
-        mode, frm = "delta", cursor
-    v = overwrite_table(
-        rolled, sink_table, parent_version=sink_head, txn=(app_id, head)
+    def delta(base, cursor, head):
+        return maintain_minmax(spark, source_table, base, keys, col, cursor, head)
+
+    return _refresh_view(
+        spark, source_table, sink_table, app_id, pin_schema, full, delta
     )
-    return {
-        "mode": mode,
-        "from_version": frm,
-        "to_version": head,
-        "sink_version": v,
-    }
 
 
 #: HLL sketch geometry for the incremental distinct-count view family
@@ -5281,22 +5126,13 @@ def refresh_hll_view(
     col: str,
     app_id: str = "ivm_hll",
 ) -> dict:
-    """Cursor-driven refresh for the per-group HLL-register view —
-    :func:`refresh_minmax_view`'s twin over :func:`maintain_hll`,
-    same exactly-once protocol: cursor = ``txn(app_id,
-    source_version)`` riding the sink commit, sink reads pinned to
-    one snapshot, ``parent_version`` collides racing refreshers,
-    full rebuild when retention expired the cursor. The sink stores
-    SPARSE registers (``keys + idx + r``) — any engine can derive the
-    distinct-count estimate with :func:`hll_estimate`, and two sinks
-    over disjoint sources union losslessly by per-idx max."""
+    """Cursor-driven refresh for the per-group HLL-register view:
+    :func:`maintain_hll` run under :func:`_refresh_view`'s
+    exactly-once cursor protocol. Returns its mode dict. The sink
+    stores SPARSE registers (``keys + idx + r``) — any engine can
+    derive the distinct-count estimate with :func:`hll_estimate`, and
+    two sinks over disjoint sources union losslessly by per-idx max."""
     from pyspark.sql import functions as F
-
-    head = current_version(source_table)
-    if head is None:
-        raise ValueError(f"{source_table} does not exist")
-    sink_head = current_version(sink_table)
-    cursor = txn_epoch(sink_table, app_id, at_version=sink_head)
 
     def pin_schema(df):
         return df.select(
@@ -5305,53 +5141,17 @@ def refresh_hll_view(
             F.col("r").cast("int").alias("r"),
         )
 
-    def full_regs():
-        return pin_schema(
-            hll_regs(
-                read_snapshot(spark, source_table, version=head), keys, col
-            )
+    def full(head):
+        return hll_regs(
+            read_snapshot(spark, source_table, version=head), keys, col
         )
 
-    if cursor is None:
-        v = create_table(full_regs(), sink_table, [], txn=(app_id, head))
-        return {
-            "mode": "full",
-            "from_version": None,
-            "to_version": head,
-            "sink_version": v,
-        }
-    if cursor >= head:
-        return {
-            "mode": "noop",
-            "from_version": cursor,
-            "to_version": head,
-            "sink_version": current_version(sink_table),
-        }
-    if cursor not in _list_versions(source_table):
-        rolled = full_regs()
-        mode, frm = "full", None
-    else:
-        rolled = pin_schema(
-            maintain_hll(
-                spark,
-                source_table,
-                read_snapshot(spark, sink_table, version=sink_head),
-                keys,
-                col,
-                cursor,
-                head,
-            )
-        )
-        mode, frm = "delta", cursor
-    v = overwrite_table(
-        rolled, sink_table, parent_version=sink_head, txn=(app_id, head)
+    def delta(base, cursor, head):
+        return maintain_hll(spark, source_table, base, keys, col, cursor, head)
+
+    return _refresh_view(
+        spark, source_table, sink_table, app_id, pin_schema, full, delta
     )
-    return {
-        "mode": mode,
-        "from_version": frm,
-        "to_version": head,
-        "sink_version": v,
-    }
 
 
 def restore_to_timestamp(table: str, ts) -> int:
@@ -5368,17 +5168,14 @@ def rollback(table: str, version: int) -> int:
     list duplicates ``version``'s. Nothing is rewritten or deleted —
     the bad head stays in history (auditable) and time travel to it
     still works until vacuumed."""
-    head = current_version(table)
-    if head is None or version not in _list_versions(table):
-        raise ValueError(f"version {version} of {table} does not exist")
-    target = _read_manifest(table, version)
+    _, target = _manifest_at(table, version)
     return _commit(
         table,
         f"rollback_to_v{version}",
         target["files"],
         target["partition_cols"],
         target["schema"],
-        head,
+        current_version(table),
         file_stats=target.get("file_stats", {}),
         constraints=target.get("constraints", {}),
         deletion_vectors=target.get("deletion_vectors", {}),
@@ -5503,15 +5300,12 @@ def optimize(
     one) — Delta's liquid-clustering surface: the layout policy lives
     on the TABLE, and every maintenance pass re-applies it without the
     caller re-stating keys."""
-    head = current_version(table)
-    if cluster_by is None and head is not None:
-        declared = (table_properties(table) or {}).get("clusterBy")
+    head, prev = _manifest_at(table)
+    if cluster_by is None:
+        declared = (prev.get("properties") or {}).get("clusterBy")
         if declared:
             cluster_by = [c for c in declared.split(",") if c]
             zorder = len(cluster_by) > 1
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
     pcols = prev["partition_cols"]
     if target_file_bytes is not None and target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
@@ -5762,10 +5556,7 @@ def merge_into(
     is inherently a whole-table statement."""
     from ..operators.merge import merge_upsert
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    man = _read_manifest(table, head)
+    head, man = _manifest_at(table)
     pcols = man["partition_cols"]
     track = bool(man.get("row_tracking"))
     if track:
@@ -5976,12 +5767,9 @@ def clone_table(src_table: str, dst_table: str) -> int:
     references expired source files, exactly Delta's documented
     shallow-clone hazard). Readers handle the mixed ownership via
     per-group basePath resolution (:func:`_data_root_of`)."""
-    head = current_version(src_table)
-    if head is None:
-        raise ValueError(f"{src_table} does not exist")
+    _, prev = _manifest_at(src_table)
     if current_version(dst_table) is not None:
         raise ValueError(f"{dst_table} already exists")
-    prev = _read_manifest(src_table, head)
     abs_files = [
         f if os.path.isabs(f) else os.path.normpath(os.path.join(src_table, f))
         for f in prev["files"]
@@ -6329,12 +6117,7 @@ def create_tag(table: str, name: str, version: int | None = None) -> int:
     name fails — drop it first (matching Iceberg's refusal to
     silently repoint a tag)."""
     _check_ref_name(name)
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
+    v, _ = _manifest_at(table, version)
     final = _tag_path(table, name)
     os.makedirs(os.path.dirname(final), exist_ok=True)
     tmp = final + f".{uuid.uuid4().hex}.tmp"
@@ -6388,16 +6171,10 @@ def create_branch(table: str, name: str, version: int | None = None) -> str:
     Writes to the branch land in the branch's OWN data tree; the
     parent never sees them until :func:`fast_forward`."""
     _check_ref_name(name)
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
+    v, prev = _manifest_at(table, version)
     bp = branch_path(table, name)
     if current_version(bp) is not None:
         raise ValueError(f"branch {name!r} already exists on {table}")
-    prev = _read_manifest(table, v)
     abs_files = [
         f if os.path.isabs(f) else os.path.normpath(os.path.join(table, f))
         for f in prev["files"]
@@ -6489,10 +6266,10 @@ def fast_forward(table: str, name: str) -> int:
     consumed (dropped) — its lineage referenced the now-moved files.
     """
     bp = branch_path(table, name)
-    bhead = current_version(bp)
-    if bhead is None:
-        raise ValueError(f"branch {name!r} does not exist on {table}")
-    bman = _read_manifest(bp, bhead)
+    try:
+        bhead, bman = _manifest_at(bp)
+    except ValueError as exc:
+        raise ValueError(f"branch {name!r} does not exist on {table}") from exc
     fork = _read_manifest(bp, 1).get("branch_of", {}).get("fork_version")
     head = current_version(table)
     if head != fork:
@@ -6593,10 +6370,7 @@ def plan_compaction(
     arithmetic, no data read. The policy half of auto OPTIMIZE: at
     100 TB you compact the partitions streaming ingest fragmented,
     never the whole table."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    m = _read_manifest(table, head)
+    _, m = _manifest_at(table)
     hive = _spec_names(m["partition_cols"])
     counts: dict[tuple, int] = {}
     for f in m["files"]:
@@ -6622,10 +6396,7 @@ def plan_compaction_bytes(
 
     if target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    m = _read_manifest(table, head)
+    _, m = _manifest_at(table)
     hive = _spec_names(m["partition_cols"])
     groups: dict[tuple, list[str]] = {}
     for f in m["files"]:
@@ -6677,7 +6448,7 @@ def auto_compact(
             # rewrite (per-partition scoping can't address dir-less
             # files).
             if target_file_bytes:
-                m = _read_manifest(table, current_version(table))
+                _, m = _manifest_at(table)
                 n = max(
                     1,
                     math.ceil(

@@ -714,13 +714,13 @@ class SnapshotStreamWriter(DataSourceStreamWriter):
                 ]
             )
         self._app_id = app_id
-        head = st.current_version(self._table)
-        if head is None:
+        try:
+            _, man = st._manifest_at(self._table)
+        except ValueError as exc:
             raise ValueError(
                 f"{self._table} does not exist; create it first "
                 "(snaptable.create_table or write_snapshot_stream)"
-            )
-        man = st._read_manifest(self._table, head)
+            ) from exc
         if man.get("constraints"):
             raise ValueError(
                 "snapshot_stream sink cannot validate CHECK "
@@ -849,8 +849,7 @@ class SnapshotStreamWriter(DataSourceStreamWriter):
             return
         if not staged:
             return  # empty batch: nothing to publish (epochs may gap)
-        head = st.current_version(self._table)
-        prev = st._read_manifest(self._table, head)
+        head, prev = st._manifest_at(self._table)
         # metadata-change guard (Delta's MetadataChangedException for
         # a QUIESCENT change — racing ones are caught by _try_rebase):
         # schema/constraint/mapping/partition DDL committed between
@@ -914,10 +913,7 @@ class SnapshotStreamDataSource(DataSource):
 
         table = _opt_path(self.options)
         st = _manifest_chain(table)
-        head = st.current_version(table)
-        if head is None:
-            raise ValueError(f"{table} does not exist")
-        man = st._read_manifest(table, head)
+        _, man = st._manifest_at(table)
         base = StructType.fromJson(json.loads(man["schema"]))
         ident = man.get("identity")
         if ident:

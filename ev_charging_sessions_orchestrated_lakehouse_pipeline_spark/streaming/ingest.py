@@ -385,13 +385,8 @@ def cdc_merge_stream(
             # merge
             import json as _json
 
-            head = snaptable.current_version(table)
-            target_cols = {
-                f["name"]
-                for f in _json.loads(
-                    snaptable._read_manifest(table, head)["schema"]
-                )["fields"]
-            }
+            schema = snaptable._manifest_at(table)[1]["schema"]
+            target_cols = {f["name"] for f in _json.loads(schema)["fields"]}
             extra = [
                 c
                 for c in order_cols

@@ -58,17 +58,20 @@ def sweep_queries(names, worker, max_workers: int = 0) -> list[str]:
     driver-side planning plus a few tiny jobs — work Spark happily
     overlaps across driver threads (guide §2.6: actions are only
     sequential because the caller calls them sequentially). Queries
-    are independent by construction; the one piece of shared state a
-    worker touches, spark.catalog.clearCache(), only ever drops cache
-    entries (a concurrent recompute returns identical rows — every
-    query is deterministic, which is exactly what these sweeps
-    assert). r15: the four sweeps were the suite's top time sinks
-    (423/234/220/195 s of a 67-minute serial run)."""
+    are independent by construction, and workers must not touch
+    session-wide state: the cache is cleared ONCE, after every worker
+    has finished, so no query's cached intermediate is dropped while
+    another worker is still running on it. r15: the four sweeps were
+    the suite's top time sinks (423/234/220/195 s of a 67-minute
+    serial run)."""
+    from pyspark.sql import SparkSession
+
     pool = ThreadPoolExecutor(max_workers=max_workers or SWEEP_WORKERS)
     try:
         return [f for f in pool.map(worker, names) if f]
     finally:
         pool.shutdown(wait=True)
+        SparkSession.builder.getOrCreate().catalog.clearCache()
 
 
 @pytest.fixture(scope="session")

@@ -53,8 +53,6 @@ def test_every_query_survives_an_empty_lake(spark, empty_sf_dir):
             QUERIES[name](spark, empty_sf_dir).count()
         except Exception as e:  # noqa: BLE001 — collecting the sweep
             return f"{name}: {str(e).splitlines()[0][:140]}"
-        finally:
-            spark.catalog.clearCache()
         return None
 
     failures = sweep_queries(sorted(QUERIES), probe)

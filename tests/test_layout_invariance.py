@@ -70,7 +70,6 @@ def _rows(spark, name, sf_dir):
         map(tuple, QUERIES[name](spark, sf_dir).collect()),
         key=lambda r: tuple(str(x) for x in r),
     )
-    spark.catalog.clearCache()
     return out
 
 

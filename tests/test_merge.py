@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import tempfile
 
 import pytest
@@ -402,5 +403,20 @@ def test_operators_do_not_hand_roll_temp_paths():
         os.path.basename(p)
         for p in sorted(glob.glob(os.path.join(pkg, "*.py")))
         if "gettempdir(" in open(p).read()
+    ]
+    assert offenders == []
+
+
+def test_package_does_not_hand_roll_version_lookup():
+    """Snapshot versions resolve through snaptable._manifest_at, never
+    through a hand-rolled current_version / is-None / raise block."""
+    block = re.compile(
+        r"current_version\([^)]*\)\s*\n\s*if \w+ is None:\s*\n\s*raise"
+    )
+    pkg = os.path.dirname(os.path.dirname(operators.__file__))
+    offenders = [
+        os.path.relpath(p, pkg)
+        for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
+        if block.search(open(p).read())
     ]
     assert offenders == []

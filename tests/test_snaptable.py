@@ -111,6 +111,37 @@ def test_vacuum_retention_expires_time_travel(spark, orders, tmp_path):
         st.read_snapshot(spark, t, version=1)
 
 
+#: every entry point that resolves a table version, called as
+#: (spark, table, version)
+_VERSIONED_CALLS = {
+    "read_snapshot": lambda spark, t, v: st.read_snapshot(spark, t, version=v),
+    "scan": lambda spark, t, v: st.scan(spark, t, version=v),
+    "scan_any": lambda spark, t, v: st.scan_any(
+        spark, t, [[("id", "=", 1)]], version=v
+    ),
+    "metadata_count": lambda spark, t, v: st.metadata_count(t, version=v),
+    "table_layout": lambda spark, t, v: st.table_layout(t, version=v),
+    "table_stats": lambda spark, t, v: st.table_stats(t, version=v),
+    "analyzed_stats": lambda spark, t, v: st.analyzed_stats(t, version=v),
+    "create_tag": lambda spark, t, v: st.create_tag(t, "tg", version=v),
+    "create_branch": lambda spark, t, v: st.create_branch(t, "br", version=v),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_VERSIONED_CALLS))
+def test_missing_table_or_version_raises_value_error(spark, tmp_path, op):
+    """A path with no table, and a version an existing table never
+    committed, both raise ValueError("... does not exist") — never a
+    raw FileNotFoundError from the manifest read."""
+    call = _VERSIONED_CALLS[op]
+    with pytest.raises(ValueError, match="does not exist"):
+        call(spark, str(tmp_path / "absent"), None)
+    t = str(tmp_path / "present")
+    st.create_table(spark.createDataFrame([(1,)], "id int"), t, [])
+    with pytest.raises(ValueError, match="does not exist"):
+        call(spark, t, 7)
+
+
 def test_concurrent_commit_collision_raises(spark, orders, tmp_path):
     t = _tbl(tmp_path)
     st.create_table(orders.limit(10), t, [])
@@ -4562,6 +4593,50 @@ def _sink_rows(spark, sink):
     }
 
 
+def _minmax_recompute(spark, source):
+    return {
+        (r.g, r.n, r.mn, r.mx)
+        for r in st.read_snapshot(spark, source)
+        .groupBy("g")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.min("v").alias("mn"),
+            F.max("v").alias("mx"),
+        )
+        .collect()
+    }
+
+
+def _minmax_sink_rows(spark, sink):
+    return {
+        (r.g, r.n, r.mn, r.mx)
+        for r in st.read_snapshot(spark, sink).collect()
+    }
+
+
+def _hll_recompute(spark, source):
+    return sorted(
+        (r.g, r.idx, r.r)
+        for r in st.hll_regs(st.read_snapshot(spark, source), ["g"], "v").collect()
+    )
+
+
+def _hll_sink_rows(spark, sink):
+    return sorted(
+        (r.g, r.idx, r.r) for r in st.read_snapshot(spark, sink).collect()
+    )
+
+
+#: view kind -> (refresh function, recompute oracle over the source,
+#: sink reader): the exactly-once protocol tests run over all three
+#: views, each against its own oracle
+_VIEWS = {
+    "count_sum": (st.refresh_count_sum_view, _recompute, _sink_rows),
+    "minmax": (st.refresh_minmax_view, _minmax_recompute, _minmax_sink_rows),
+    "hll": (st.refresh_hll_view, _hll_recompute, _hll_sink_rows),
+}
+
+
 def test_refresh_count_sum_view_lifecycle(spark, tmp_path):
     """full -> delta -> noop, each state bit-identical to a recompute
     over the source's visible rows, with the cursor advancing inside
@@ -4592,16 +4667,18 @@ def test_refresh_count_sum_view_lifecycle(spark, tmp_path):
     assert str(s_field.dataType) == "DecimalType(37,10)"
 
 
-def test_refresh_count_sum_view_crash_at_publish_converges(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("view", sorted(_VIEWS))
+def test_refresh_view_crash_at_publish_converges(
+    spark, tmp_path, monkeypatch, view
 ):
     """Kill the refresh AT the publish (commit never lands): the
     cursor is unchanged, so the re-run re-applies the same delta to
     the OLD aggregate and converges — no double-fold possible because
     data and cursor share the commit."""
+    refresh, recompute, sink_rows = _VIEWS[view]
     src = _mk_ivm_source(spark, tmp_path)
     sink = str(tmp_path / "ivm_sink2")
-    st.refresh_count_sum_view(spark, src, sink, ["g"], "v")
+    refresh(spark, src, sink, ["g"], "v")
     st.append(
         spark.createDataFrame([(100, "B", 9.0)], "id int, g string, v double"),
         src,
@@ -4617,24 +4694,24 @@ def test_refresh_count_sum_view_crash_at_publish_converges(
 
     monkeypatch.setattr(st, "_publish", crashing)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        st.refresh_count_sum_view(spark, src, sink, ["g"], "v")
+        refresh(spark, src, sink, ["g"], "v")
     # replay: cursor still at v1, delta re-applies cleanly
-    r = st.refresh_count_sum_view(spark, src, sink, ["g"], "v")
+    r = refresh(spark, src, sink, ["g"], "v")
     assert r["mode"] == "delta"
-    assert _sink_rows(spark, sink) == _recompute(spark, src)
+    assert sink_rows(spark, sink) == recompute(spark, src)
     # and once landed, a further replay no-ops
-    assert st.refresh_count_sum_view(spark, src, sink, ["g"], "v")["mode"] == "noop"
+    assert refresh(spark, src, sink, ["g"], "v")["mode"] == "noop"
 
 
-def test_refresh_count_sum_view_expired_cursor_full_rebuild(
-    spark, tmp_path
-):
+@pytest.mark.parametrize("view", sorted(_VIEWS))
+def test_refresh_view_expired_cursor_full_rebuild(spark, tmp_path, view):
     """Source retention expired the cursor's snapshot between
     refreshes: the refresh falls back to a FULL rebuild instead of
     failing — correctness never depends on history retention."""
+    refresh, recompute, sink_rows = _VIEWS[view]
     src = _mk_ivm_source(spark, tmp_path)
     sink = str(tmp_path / "ivm_sink3")
-    st.refresh_count_sum_view(spark, src, sink, ["g"], "v")  # cursor = v1
+    refresh(spark, src, sink, ["g"], "v")  # cursor = v1
     for i in range(3):
         st.append(
             spark.createDataFrame(
@@ -4644,9 +4721,9 @@ def test_refresh_count_sum_view_expired_cursor_full_rebuild(
         )
     st.vacuum(src, retain_last=1, grace_seconds=0)  # v1 expired
     assert 1 not in st._list_versions(src)
-    r = st.refresh_count_sum_view(spark, src, sink, ["g"], "v")
+    r = refresh(spark, src, sink, ["g"], "v")
     assert r["mode"] == "full"
-    assert _sink_rows(spark, sink) == _recompute(spark, src)
+    assert sink_rows(spark, sink) == recompute(spark, src)
 
 
 def test_register_snapshot_view_sql_and_time_travel(spark, orders, tmp_path):
@@ -5060,23 +5137,10 @@ def test_refresh_minmax_view_lifecycle(spark, tmp_path):
     sink = str(tmp_path / "ivm_mm_sink")
 
     def recompute():
-        return {
-            (r.g, r.n, r.mn, r.mx)
-            for r in st.read_snapshot(spark, src)
-            .groupBy("g")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.min("v").alias("mn"),
-                F.max("v").alias("mx"),
-            )
-            .collect()
-        }
+        return _minmax_recompute(spark, src)
 
     def sink_rows():
-        return {
-            (r.g, r.n, r.mn, r.mx)
-            for r in st.read_snapshot(spark, sink).collect()
-        }
+        return _minmax_sink_rows(spark, sink)
 
     r1 = st.refresh_minmax_view(spark, src, sink, ["g"], "v")
     assert r1["mode"] == "full"
@@ -5107,14 +5171,18 @@ def test_refresh_minmax_view_lifecycle(spark, tmp_path):
     assert sink_rows() == recompute()
 
 
-def test_refresh_concurrent_same_app_id_collides(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("view", sorted(_VIEWS))
+def test_refresh_concurrent_same_app_id_collides(
+    spark, tmp_path, monkeypatch, view
+):
     """A concurrent refresher with the same app_id publishing between
     our cursor read and our commit must COLLIDE (parent_version pin ->
     rebase txn replay guard), not be silently built over with the
     delta double-applied."""
+    refresh, recompute, sink_rows = _VIEWS[view]
     src = _mk_ivm_source(spark, tmp_path)
     sink = str(tmp_path / "ivm_sink_race")
-    st.refresh_count_sum_view(spark, src, sink, ["g"], "v")
+    refresh(spark, src, sink, ["g"], "v")
     st.append(
         spark.createDataFrame([(100, "A", 7.0)], "id int, g string, v double"),
         src,
@@ -5126,16 +5194,16 @@ def test_refresh_concurrent_same_app_id_collides(spark, tmp_path, monkeypatch):
         if table == sink and not fired:
             fired["x"] = True
             # the concurrent refresher lands the SAME delta first
-            st.refresh_count_sum_view(spark, src, sink, ["g"], "v")
+            refresh(spark, src, sink, ["g"], "v")
         return orig_read(spark_, table, version=version, **kw)
 
     monkeypatch.setattr(st, "read_snapshot", racy_read)
     with pytest.raises(st.ConcurrentCommit):
-        st.refresh_count_sum_view(spark, src, sink, ["g"], "v")
+        refresh(spark, src, sink, ["g"], "v")
     monkeypatch.setattr(st, "read_snapshot", orig_read)
     # the inner refresher's result stands; no double-fold happened
-    assert _sink_rows(spark, sink) == _recompute(spark, src)
-    assert st.refresh_count_sum_view(spark, src, sink, ["g"], "v")["mode"] == "noop"
+    assert sink_rows(spark, sink) == recompute(spark, src)
+    assert refresh(spark, src, sink, ["g"], "v")["mode"] == "noop"
 
 
 def test_refresh_tenth_decimal_digit_survives_delta(spark, tmp_path):
@@ -5516,18 +5584,10 @@ def test_refresh_hll_view_lifecycle(spark, tmp_path):
     sink = str(tmp_path / "ivm_hll_sink")
 
     def recompute():
-        return sorted(
-            (r.g, r.idx, r.r)
-            for r in st.hll_regs(
-                st.read_snapshot(spark, src), ["g"], "v"
-            ).collect()
-        )
+        return _hll_recompute(spark, src)
 
     def sink_regs():
-        return sorted(
-            (r.g, r.idx, r.r)
-            for r in st.read_snapshot(spark, sink).collect()
-        )
+        return _hll_sink_rows(spark, sink)
 
     r1 = st.refresh_hll_view(spark, src, sink, ["g"], "v")
     assert r1["mode"] == "full"
