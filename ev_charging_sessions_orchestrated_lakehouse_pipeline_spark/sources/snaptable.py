@@ -47,6 +47,9 @@ Log-structured design (the same shape as the Delta/Iceberg logs):
 - **One resolver**: :func:`_manifest_at` is the single place a version
   (head, or an explicit one) is resolved to its manifest, and the
   single source of the "does not exist" errors.
+- **One commit contract**: :func:`_commit` alone decides what a new
+  manifest carries forward from its parent; callers pass only what
+  their operation changes.
 
 At 100 TB the manifests stay tiny (file paths + counts, not data) and
 the read plan is exactly the same partition-pruned Parquet scan as a
@@ -789,8 +792,9 @@ def _try_rebase(
         conflict("constraint DDL does not auto-rebase")
     par_files = set(par["files"])
     h_files = set(H["files"])
+    l_files = set(files)
     added = [f for f in files if f not in par_files]
-    removed = par_files - set(files)
+    removed = par_files - l_files
     if set(added) & h_files:
         conflict("commit re-references files a winner owns")
     if not removed <= h_files:
@@ -855,7 +859,7 @@ def _try_rebase(
     # winners left that file's vector alone (and vice versa)
     new_dv: dict = {}
     for f, ps in l_dv.items():
-        if f in par_files and f in set(files) and ps != par_dv.get(f):
+        if f in par_files and f in l_files and ps != par_dv.get(f):
             if f not in h_files:
                 conflict(
                     f"concurrent rewrite of a file this commit adds deletes to ({f})"
@@ -1018,10 +1022,10 @@ def _collect_stats(table: str, rel_paths: list[str]) -> dict:
 def _commit(
     table: str,
     operation: str,
-    files: list[str],
-    partition_cols: list[str],
-    schema_json: str,
-    parent: int | None,
+    files: list[str] | None = None,
+    partition_cols: list[str] | None = None,
+    schema_json: str | None = None,
+    parent: int | None = None,
     txn: tuple[str, int] | None = None,
     file_stats: dict | None = None,
     constraints: dict[str, str] | None = None,
@@ -1033,30 +1037,84 @@ def _commit(
     _rebase_attempts: int = 3,
     _drop_features: frozenset | set | None = None,
 ) -> int:
+    """Publish version ``parent + 1`` of ``table``: the one place that
+    decides what a new manifest carries forward from its parent.
+
+    - **Inherit.** A field left as ``None`` (``files``,
+      ``partition_cols``, ``schema_json``, ``file_stats``,
+      ``constraints``, ``deletion_vectors``, ``column_mapping``,
+      ``retired_columns``, ``generated``) keeps the parent's value.
+      Properties, identity, row tracking and features are sticky too.
+    - **Restrict to files.** The committed deletion vectors and the
+      inherited file stats keep only entries for files in the committed
+      list; passed ``file_stats`` entries overlay the inherited ones, so
+      a caller passes only the stats of files it added or changed.
+    - **Explicit wins.** A passed value replaces the parent's
+      (``replace_table``'s resets, ``rollback``'s target state).
+    - **Parentless** (``parent=None``): every omitted field is empty.
+
+    An unchanged lazily-resolved deletion vector passes through without
+    a driver decode; its stored sidecar ref is reused verbatim."""
     version = (parent or 0) + 1
     par = _read_manifest(table, parent) if parent is not None else None
+    par_raw = _raw_manifest(table, parent) if parent is not None else {}
+    base = par or {}
+
+    def inherit(value, key: str, empty=None):
+        return (base.get(key) or empty) if value is None else value
+
+    files = inherit(files, "files", [])
+    partition_cols = inherit(partition_cols, "partition_cols", [])
+    schema_json = inherit(schema_json, "schema")
+    constraints = inherit(constraints, "constraints", {})
+    column_mapping = inherit(column_mapping, "column_mapping")
+    retired_columns = inherit(retired_columns, "retired_columns")
+    generated = inherit(generated, "generated")
+    live = set(files)
+    file_stats = {
+        **{f: s for f, s in (base.get("file_stats") or {}).items() if f in live},
+        **(file_stats or {}),
+    }
+    deletion_vectors = {
+        f: ps
+        for f, ps in inherit(deletion_vectors, "deletion_vectors", {}).items()
+        if ps and f in live
+    }
+    properties = base.get("properties")
     # writer-feature gate (Delta's writerFeatures): committing onto a
     # table whose invariants this engine doesn't implement corrupts
     # them (ids, constraints, generated values). Reads stay allowed —
     # only _read_manifest's reader gate restricts those.
-    if par is not None:
-        unknown_w = (
-            set(par.get("writer_features") or []) - SUPPORTED_WRITER_FEATURES
+    unknown_w = set(base.get("writer_features") or []) - SUPPORTED_WRITER_FEATURES
+    if unknown_w:
+        raise ValueError(
+            f"{table} v{parent} requires writer feature(s) this engine "
+            f"does not implement: {sorted(unknown_w)} — reading is "
+            "allowed, committing is not; upgrade before writing"
         )
-        if unknown_w:
-            raise ValueError(
-                f"{table} v{parent} requires writer feature(s) this engine "
-                f"does not implement: {sorted(unknown_w)} — reading is "
-                "allowed, committing is not; upgrade before writing"
-            )
+    # per-table txn high-water index (Delta's setTransactions in the
+    # checkpoint): carried on every manifest so txn_epoch is an O(1)
+    # head lookup instead of an O(history) scan. A pre-index parent
+    # (old table, or a commit published by an older writer) seeds the
+    # index with ONE scan of its chain; every later commit just
+    # carries + updates the map (size = #writer identities, tiny).
+    txn_index: dict | None = (
+        dict(base["txn_index"]) if base.get("txn_index") is not None else None
+    )
+    if txn_index is None and parent is not None:
+        txn_index = {}
+        for v in _list_versions(table):
+            if v > parent:
+                break
+            t = _raw_manifest(table, v).get("txn")
+            if t:
+                txn_index[t["app_id"]] = int(t["epoch"])
     # per-app_id epoch monotonicity is a documented CONTRACT (replay
-    # detection in txn_epoch/_try_rebase depends on newest-commit-wins)
-    # but was only checked after a publish collision: a writer that
-    # committed a lower epoch on the conflict-free path silently
-    # rewound the cursor. Enforce it up front so a non-monotone writer
-    # fails loudly instead of corrupting replay detection.
-    if txn is not None and parent is not None:
-        prior = txn_epoch(table, txn[0], at_version=parent)
+    # detection in txn_epoch/_try_rebase depends on newest-commit-wins):
+    # a writer presenting an epoch <= its last committed one fails
+    # loudly instead of silently rewinding the cursor
+    if txn is not None:
+        prior = (txn_index or {}).get(txn[0])
         if prior is not None and int(txn[1]) <= prior:
             raise ValueError(
                 f"non-monotone txn epoch for app_id {txn[0]!r}: "
@@ -1064,19 +1122,6 @@ def _commit(
                 "strictly increase per writer; a replayed epoch should "
                 "be skipped via txn_epoch, not re-committed)"
             )
-    # column mapping / retired physical names / generated-column
-    # definitions carry forward from the parent automatically so no
-    # commit path can silently lose them — only the DDL entry points
-    # (rename/drop/clone/create) pass them explicitly
-    properties = None
-    if par is not None:
-        if column_mapping is None:
-            column_mapping = par.get("column_mapping")
-        if retired_columns is None:
-            retired_columns = par.get("retired_columns")
-        if generated is None:
-            generated = par.get("generated")
-        properties = par.get("properties")
     # appendOnly table property (Delta's delta.appendOnly): rows may
     # never be deleted or updated — any row-removing operation is
     # refused at the single commit gate. Metadata ops, appends, and
@@ -1116,10 +1161,13 @@ def _commit(
         "partition_cols": partition_cols,
         "schema": schema_json,
         "files": files,
-        "file_stats": file_stats or {},
-        "constraints": constraints or {},
+        "file_stats": file_stats,
+        "constraints": constraints,
+        # an unchanged lazy ref stays unsorted: its sidecar is already
+        # sorted and deduped, and sorting would decode it on the driver
         "deletion_vectors": {
-            f: sorted(ps) for f, ps in (deletion_vectors or {}).items() if ps
+            f: ps if isinstance(ps, _LazyDVPositions) else sorted(ps)
+            for f, ps in deletion_vectors.items()
         },
     }
     if column_mapping:
@@ -1130,26 +1178,6 @@ def _commit(
         manifest["generated"] = generated
     if txn is not None:
         manifest["txn"] = {"app_id": txn[0], "epoch": int(txn[1])}
-    # per-table txn high-water index (Delta's setTransactions in the
-    # checkpoint): carried on every manifest so txn_epoch is an O(1)
-    # head lookup instead of an O(history) scan. A pre-index parent
-    # (old table, or a commit published by an older writer) seeds the
-    # index with ONE scan of its chain; every later commit just
-    # carries + updates the map (size = #writer identities, tiny).
-    txn_index: dict | None = (
-        dict(par["txn_index"])
-        if par is not None and par.get("txn_index") is not None
-        else None
-    )
-    if txn_index is None and parent is not None:
-        txn_index = {}
-        for v in _list_versions(table):
-            if v > parent:
-                break
-            t = _raw_manifest(table, v).get("txn")
-            if t:
-                txn_index[t["app_id"]] = int(t["epoch"])
-    if txn is not None:
         if txn_index is None:
             txn_index = {}
         txn_index[txn[0]] = int(txn[1])
@@ -1166,14 +1194,13 @@ def _commit(
     # "features are never silently dropped" stance.
     # row tracking is sticky like reader features: once enabled, every
     # descendant commit carries the flag and the id high-water mark
-    if par is not None and par.get("row_tracking") and "row_tracking" not in manifest:
+    if base.get("row_tracking") and "row_tracking" not in manifest:
         manifest["row_tracking"] = True
     # identity specs are sticky the same way (they ride on row ids)
-    if par is not None and par.get("identity") and "identity" not in manifest:
-        manifest["identity"] = par["identity"]
+    if base.get("identity") and "identity" not in manifest:
+        manifest["identity"] = base["identity"]
     features = set(manifest.get("reader_features") or [])
-    if par is not None:
-        features |= set(par.get("reader_features") or [])
+    features |= set(base.get("reader_features") or [])
     if properties and "properties" not in manifest:
         manifest["properties"] = properties
     # content-driven requirements, tracked SEPARATELY from the sticky
@@ -1211,8 +1238,7 @@ def _commit(
     # in the reader set also obligates writers, plus CHECK constraints
     # (pure writer obligation — readers never evaluate them)
     wfeatures = set(manifest.get("writer_features") or [])
-    if par is not None:
-        wfeatures |= set(par.get("writer_features") or [])
+    wfeatures |= set(base.get("writer_features") or [])
     wfeatures |= features
     if manifest["constraints"]:
         wfeatures.add("check-constraints")
@@ -1231,9 +1257,9 @@ def _commit(
     # operation metrics (Delta's operationMetrics): file-set diff vs
     # the parent plus row counts from the footer-stats index — pure
     # driver-side set arithmetic, no data read
-    parent_files = set(par["files"]) if par is not None else set()
+    parent_files = set(base.get("files", []))
     added = [f for f in files if f not in parent_files]
-    removed = sorted(parent_files - set(files))
+    removed = sorted(parent_files - live)
     stats = manifest["file_stats"]
     manifest["metrics"] = {
         "num_added_files": len(added),
@@ -1247,7 +1273,7 @@ def _commit(
             stats[f]["bytes"] for f in added if f in stats and "bytes" in stats[f]
         ),
         "num_removed_bytes": sum(
-            (par or {}).get("file_stats", {}).get(f, {}).get("bytes", 0)
+            base.get("file_stats", {}).get(f, {}).get("bytes", 0)
             for f in removed
         ),
     }
@@ -1261,9 +1287,9 @@ def _commit(
     if manifest.get("row_tracking"):
         nxt = manifest.get("next_row_id")
         if nxt is None:
-            nxt = int((par or {}).get("next_row_id") or 0)
+            nxt = int(base.get("next_row_id") or 0)
         nxt = int(nxt)
-        par_stats = par.get("file_stats", {}) if par is not None else {}
+        par_stats = base.get("file_stats", {})
 
         def _lacks_id(e: dict) -> bool:
             return "base_row_id" not in e and not e.get("materialized_row_ids")
@@ -1293,16 +1319,12 @@ def _commit(
             table,
             version,
             manifest["deletion_vectors"],
-            (
-                _raw_manifest(table, parent).get("deletion_vectors") or {}
-                if parent is not None
-                else {}
-            ),
-            (par.get("deletion_vectors") or {}) if par is not None else {},
+            par_raw.get("deletion_vectors") or {},
+            base.get("deletion_vectors") or {},
         )
     try:
         _publish(
-            table, version, _store_form(table, parent, par, manifest, added, removed)
+            table, version, _store_form(parent, par, par_raw, manifest, added, removed)
         )
     except ConcurrentCommit:
         # automatic commit reconciliation (Delta/Iceberg
@@ -1365,9 +1387,9 @@ def _file_rows(table: str, rel_or_abs: str) -> int:
 
 
 def _store_form(
-    table: str,
     parent: int | None,
     par: dict | None,
+    par_raw: dict,
     manifest: dict,
     added: list[str],
     removed: list[str],
@@ -1386,7 +1408,7 @@ def _store_form(
     globally sorted) is semantically inert."""
     if par is None:
         return manifest
-    depth = int(_raw_manifest(table, parent).get("chain_depth", 0)) + 1
+    depth = int(par_raw.get("chain_depth", 0)) + 1
     if depth >= CHECKPOINT_INTERVAL:
         return manifest
     if len(added) + len(removed) >= len(manifest["files"]):
@@ -1420,15 +1442,6 @@ def _store_form(
     if stats_removed:
         seg["stats_removed"] = stats_removed
     return seg
-
-
-def _carry_stats(prev: dict, kept: list[str], new_stats: dict) -> dict:
-    """Stats for a child commit: carried-over files keep the parent's
-    entries, new files bring their freshly-collected ones."""
-    old = prev.get("file_stats", {})
-    out = {f: old[f] for f in kept if f in old}
-    out.update(new_stats)
-    return out
 
 
 def _validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
@@ -1570,11 +1583,11 @@ def create_table(
         files,
         partition_cols,
         df.schema.json(),
-        current_version(table),
+        parent=None,
         txn=txn,
         file_stats=_collect_stats(table, files),
-        constraints=constraints or {},
-        generated=generated or {},
+        constraints=constraints,
+        generated=generated,
     )
 
 
@@ -1685,13 +1698,10 @@ def append(
         table,
         _operation,
         sorted(prev["files"] + new),
-        prev["partition_cols"],
-        schema_json,
-        head,
+        schema_json=schema_json,
+        parent=head,
         txn=txn,
-        file_stats=_carry_stats(prev, prev["files"], _collect_stats(table, new)),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
+        file_stats=_collect_stats(table, new),
         column_mapping=mapping,
         extra=_extra,
     )
@@ -1706,18 +1716,8 @@ def truncate_table(table: str, txn: tuple[str, int] | None = None) -> int:
     version still reads every row, and VACUUM later reclaims the
     bytes once retention allows. Refused on appendOnly tables (it is
     the ultimate row-removing operation)."""
-    head, prev = _manifest_at(table)
-    return _commit(
-        table,
-        "truncate",
-        [],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        txn=txn,
-        file_stats={},
-        constraints=prev.get("constraints", {}),
-    )
+    head, _ = _manifest_at(table)
+    return _commit(table, "truncate", [], parent=head, txn=txn)
 
 
 def replace_table(
@@ -1831,12 +1831,10 @@ def overwrite_table(
         table,
         "overwrite",
         new,
-        prev["partition_cols"],
-        df.drop(ROW_ID_COL).schema.json(),
-        head,
+        schema_json=df.drop(ROW_ID_COL).schema.json(),
+        parent=head,
         txn=txn,
         file_stats=stats,
-        constraints=prev.get("constraints", {}),
         column_mapping=mapping,
         extra=(
             {"next_row_id": int(next_row_id)}
@@ -1910,20 +1908,13 @@ def overwrite_partitions(
         table,
         "overwrite_partitions",
         sorted(kept + new),
-        pcols,
         # schema_json: widened schema from a schema-evolving MERGE —
         # carried files of untouched partitions null-fill the new
         # columns at read, exactly like append(merge_schema=True)
-        schema_json or prev["schema"],
-        head,
+        schema_json=schema_json,
+        parent=head,
         txn=txn,
-        file_stats=_carry_stats(prev, kept, new_stats),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors={
-            f: ps
-            for f, ps in prev.get("deletion_vectors", {}).items()
-            if f in set(kept)
-        },
+        file_stats=new_stats,
         extra=(
             {"next_row_id": int(next_row_id)}
             if next_row_id is not None
@@ -1979,7 +1970,8 @@ def replace_where(
     _validate_constraints(df, prev.get("constraints", {}))
     pcols = prev["partition_cols"]
     candidates = _prune_files(table, prev, filters)
-    untouched = [f for f in prev["files"] if f not in set(candidates)]
+    cand_set = set(candidates)
+    untouched = [f for f in prev["files"] if f not in cand_set]
     new: list[str] = []
     if candidates:
         from pyspark.sql.types import StructType
@@ -2000,17 +1992,9 @@ def replace_where(
         table,
         "replace_where",
         sorted(untouched + new),
-        pcols,
-        prev["schema"],
-        head,
+        parent=head,
         txn=txn,
-        file_stats=_carry_stats(prev, untouched, _collect_stats(table, new)),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors={
-            f: ps
-            for f, ps in prev.get("deletion_vectors", {}).items()
-            if f in set(untouched)
-        },
+        file_stats=_collect_stats(table, new),
     )
 
 
@@ -2038,15 +2022,7 @@ def evolve_partitioning(table: str, new_cols: list[str]) -> int:
     if list(new_cols) == list(prev["partition_cols"]):
         return head  # no-op
     return _commit(
-        table,
-        "evolve_partitioning",
-        prev["files"],
-        list(new_cols),
-        prev["schema"],
-        parent=head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
+        table, "evolve_partitioning", partition_cols=list(new_cols), parent=head
     )
 
 
@@ -2126,16 +2102,7 @@ def set_table_properties(table: str, props: dict) -> int:
     merged = dict(prev.get("properties") or {})
     merged.update({str(k): str(v) for k, v in props.items()})
     return _commit(
-        table,
-        "set_properties",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
-        extra={"properties": merged},
+        table, "set_properties", parent=head, extra={"properties": merged}
     )
 
 
@@ -2152,16 +2119,7 @@ def unset_table_properties(
     for k in keys:
         props.pop(k, None)
     return _commit(
-        table,
-        "unset_properties",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
-        extra={"properties": props},
+        table, "unset_properties", parent=head, extra={"properties": props}
     )
 
 
@@ -2335,16 +2293,7 @@ def drop_feature(table: str, feature: str) -> int:
     return _commit(
         table,
         f"drop_feature_{feature}",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
-        column_mapping=prev.get("column_mapping"),
-        retired_columns=prev.get("retired_columns"),
-        generated=prev.get("generated"),
+        parent=head,
         extra=extra or None,
         _drop_features=drop,
     )
@@ -2498,17 +2447,7 @@ def add_constraint(
         )
     _validate_constraints(read_snapshot(spark, table, version=head), {name: expr})
     cons[name] = expr
-    return _commit(
-        table,
-        "add_constraint",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=cons,
-        deletion_vectors=prev.get("deletion_vectors", {}),
-    )
+    return _commit(table, "add_constraint", parent=head, constraints=cons)
 
 
 def drop_constraint(table: str, name: str, if_exists: bool = False) -> int:
@@ -2522,17 +2461,7 @@ def drop_constraint(table: str, name: str, if_exists: bool = False) -> int:
             return head
         raise ValueError(f"no constraint {name!r} on {table}")
     del cons[name]
-    return _commit(
-        table,
-        "drop_constraint",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=cons,
-        deletion_vectors=prev.get("deletion_vectors", {}),
-    )
+    return _commit(table, "drop_constraint", parent=head, constraints=cons)
 
 
 def rename_column(table: str, old: str, new: str) -> int:
@@ -2583,15 +2512,9 @@ def rename_column(table: str, old: str, new: str) -> int:
     return _commit(
         table,
         "rename_column",
-        prev["files"],
-        prev["partition_cols"],
-        new_schema.json(),
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
+        schema_json=new_schema.json(),
+        parent=head,
         column_mapping=mapping,
-        retired_columns=prev.get("retired_columns") or [],
         extra=extra,
     )
 
@@ -2707,15 +2630,9 @@ def widen_column(table: str, col: str, new_type: str) -> int:
     return _commit(
         table,
         "widen_column",
-        prev["files"],
-        prev["partition_cols"],
-        new_schema.json(),
-        head,
+        schema_json=new_schema.json(),
+        parent=head,
         file_stats=file_stats,
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
-        column_mapping=prev.get("column_mapping") or {},
-        retired_columns=prev.get("retired_columns") or [],
         extra={
             "reader_features": ["type-widening"],
             "writer_features": ["type-widening"],
@@ -2748,13 +2665,8 @@ def drop_column(table: str, col: str) -> int:
     return _commit(
         table,
         "drop_column",
-        prev["files"],
-        prev["partition_cols"],
-        new_schema.json(),
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
+        schema_json=new_schema.json(),
+        parent=head,
         column_mapping=mapping,
         retired_columns=retired,
     )
@@ -2834,14 +2746,9 @@ def add_columns(
     return _commit(
         table,
         "add_columns",
-        prev["files"],
-        prev["partition_cols"],
-        new_schema.json(),
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
-        column_mapping=mapping or None,
+        schema_json=new_schema.json(),
+        parent=head,
+        column_mapping=mapping,
     )
 
 
@@ -3064,13 +2971,8 @@ def enable_row_tracking(table: str) -> int:
     return _commit(
         table,
         "enable_row_tracking",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
+        parent=head,
         file_stats=stats,
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
         extra={"row_tracking": True, "next_row_id": nxt},
     )
 
@@ -3133,16 +3035,7 @@ def enable_identity(
             nxt += int(e["rows"])
         extra.update({"row_tracking": True, "next_row_id": nxt})
     return _commit(
-        table,
-        "enable_identity",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=stats,
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
-        extra=extra,
+        table, "enable_identity", parent=head, file_stats=stats, extra=extra
     )
 
 
@@ -3404,7 +3297,8 @@ def _read_union(
         ]
     from pyspark.sql import functions as F
 
-    live_dvs = {f: ps for f, ps in (dvs or {}).items() if f in set(files)}
+    file_set = set(files)
+    live_dvs = {f: ps for f, ps in (dvs or {}).items() if f in file_set}
     names = [f.name for f in schema.fields]
     if live_dvs or keep_pos:
         # position-keyed read: the parquet row index + file path ride
@@ -3809,7 +3703,8 @@ def _rewrite_matching_files(
     candidates = _prune_files_any(table, prev, branches)
     if not candidates:
         return head  # stats prove nothing matches: metadata no-op
-    untouched = [f for f in prev["files"] if f not in set(candidates)]
+    cand_set = set(candidates)
+    untouched = [f for f in prev["files"] if f not in cand_set]
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -3828,16 +3723,8 @@ def _rewrite_matching_files(
         table,
         operation,
         sorted(untouched + new),
-        pcols,
-        prev["schema"],
-        head,
-        file_stats=_carry_stats(prev, untouched, _collect_stats(table, new)),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors={
-            f: ps
-            for f, ps in prev.get("deletion_vectors", {}).items()
-            if f in set(untouched)
-        },
+        parent=head,
+        file_stats=_collect_stats(table, new),
     )
 
 
@@ -3899,22 +3786,27 @@ def delete_where(
     )
     if not hits:
         return head
-    abs_to_entry = {_abs_uri(table, f): f for f in prev["files"]}
-    dvs = {f: set(ps) for f, ps in prev.get("deletion_vectors", {}).items()}
-    for r in hits:
-        entry = abs_to_entry[r.f]
-        dvs.setdefault(entry, set()).add(int(r.p))
     return _commit(
         table,
         "delete_dv",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors={f: sorted(ps) for f, ps in dvs.items()},
+        parent=head,
+        deletion_vectors=_dvs_with_hits(table, prev, hits),
     )
+
+
+def _dvs_with_hits(table: str, prev: dict, hits) -> dict:
+    """``prev``'s deletion vectors plus ``hits`` (rows of file URI
+    ``f`` and row position ``p``). Only the vectors of files hit are
+    rebuilt, so every other (possibly lazy) vector passes through to
+    the commit undecoded."""
+    abs_to_entry = {_abs_uri(table, f): f for f in prev["files"]}
+    grown: dict[str, set] = {}
+    for r in hits:
+        grown.setdefault(abs_to_entry[r.f], set()).add(int(r.p))
+    dvs = dict(prev.get("deletion_vectors") or {})
+    for f, ps in grown.items():
+        dvs[f] = sorted(ps.union(dvs.get(f, ())))
+    return dvs
 
 
 def update_where(
@@ -4019,12 +3911,6 @@ def update_where(
         if not hits:
             return head
         new = _write_data(updated, table, prev["partition_cols"])
-        abs_to_entry = {_abs_uri(table, f): f for f in prev["files"]}
-        dvs = {
-            f: set(ps) for f, ps in prev.get("deletion_vectors", {}).items()
-        }
-        for r in hits:
-            dvs.setdefault(abs_to_entry[r.f], set()).add(int(r.p))
         new_stats = _collect_stats(table, new)
         if track:
             for e in new_stats.values():
@@ -4033,12 +3919,9 @@ def update_where(
             table,
             "update_dv",
             sorted(prev["files"] + new),
-            prev["partition_cols"],
-            prev["schema"],
-            head,
-            file_stats=_carry_stats(prev, prev["files"], new_stats),
-            constraints=prev.get("constraints", {}),
-            deletion_vectors={f: sorted(ps) for f, ps in dvs.items()},
+            parent=head,
+            file_stats=new_stats,
+            deletion_vectors=_dvs_with_hits(table, prev, hits),
         )
 
     def transform(df: DataFrame):
@@ -4117,18 +4000,7 @@ def analyze_table(
             for c in columns
         },
     }
-    return _commit(
-        table,
-        "analyze",
-        prev["files"],
-        prev["partition_cols"],
-        prev["schema"],
-        head,
-        file_stats=prev.get("file_stats", {}),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=prev.get("deletion_vectors", {}),
-        extra={"table_stats": stats},
-    )
+    return _commit(table, "analyze", parent=head, extra={"table_stats": stats})
 
 
 def analyzed_stats(table: str, version: int | None = None) -> dict | None:
@@ -4513,8 +4385,8 @@ def table_stats(table: str, version: int | None = None) -> dict:
 #
 # The bitmap lives INSIDE the file's ``file_stats`` entry, so every
 # existing commit path carries it automatically with the file
-# (_carry_stats), and rewrites (optimize, merge, update) naturally
-# DROP it for rewritten files — a file without a bloom is never
+# (_commit inherits the parent's stats), and rewrites (optimize,
+# merge, update) naturally DROP it for rewritten files — a file without a bloom is never
 # pruned by one, so correctness is unconditional and re-indexing is
 # an explicit maintenance step, exactly like Delta's.
 # ---------------------------------------------------------------------------
@@ -4608,17 +4480,7 @@ def add_bloom_index(
     # list, so a concurrent commit must surface as ConcurrentCommit
     # (caller re-runs against the new head) rather than silently
     # committing a stale file list over it.
-    return _commit(
-        table,
-        "index",
-        files,
-        manifest["partition_cols"],
-        manifest["schema"],
-        parent=head,
-        file_stats=stats,
-        constraints=manifest.get("constraints", {}),
-        deletion_vectors=manifest.get("deletion_vectors", {}),
-    )
+    return _commit(table, "index", parent=head, file_stats=stats)
 
 
 def maintain_count_sum(
@@ -5394,14 +5256,7 @@ def optimize(
         for e in new_stats.values():
             e["materialized_row_ids"] = True
     return _commit(
-        table,
-        "optimize",
-        sorted(new),
-        pcols,
-        prev["schema"],
-        head,
-        file_stats=new_stats,
-        constraints=prev.get("constraints", {}),
+        table, "optimize", sorted(new), parent=head, file_stats=new_stats
     )
 
 
@@ -5453,7 +5308,8 @@ def _optimize_partitions(
                 _live_file_bytes(table, prev, cand) / target_file_bytes
             ),
         )
-    carried = [f for f in prev["files"] if f not in set(cand)]
+    cand_set = set(cand)
+    carried = [f for f in prev["files"] if f not in cand_set]
     schema = StructType.fromJson(json.loads(prev["schema"]))
     track = bool(prev.get("row_tracking"))
     if track:
@@ -5495,16 +5351,8 @@ def _optimize_partitions(
         table,
         "optimize",
         sorted(carried + new),
-        pcols,
-        prev["schema"],
-        head,
-        file_stats=_carry_stats(prev, carried, new_stats),
-        constraints=prev.get("constraints", {}),
-        deletion_vectors={
-            f: ps
-            for f, ps in prev.get("deletion_vectors", {}).items()
-            if f in set(carried)
-        },
+        parent=head,
+        file_stats=new_stats,
     )
 
 
@@ -5770,67 +5618,51 @@ def clone_table(src_table: str, dst_table: str) -> int:
     _, prev = _manifest_at(src_table)
     if current_version(dst_table) is not None:
         raise ValueError(f"{dst_table} already exists")
-    abs_files = [
-        f if os.path.isabs(f) else os.path.normpath(os.path.join(src_table, f))
+    remap = {
+        f: f if os.path.isabs(f) else os.path.normpath(os.path.join(src_table, f))
         for f in prev["files"]
-    ]
-    old_stats = prev.get("file_stats", {})
-    stats = {
-        a: old_stats[f]
-        for a, f in zip(abs_files, prev["files"])
-        if f in old_stats
-    }
-    old_dvs = prev.get("deletion_vectors", {})
-    dvs = {
-        a: old_dvs[f]
-        for a, f in zip(abs_files, prev["files"])
-        if f in old_dvs
     }
     os.makedirs(_data_dir(dst_table), exist_ok=True)
+    return _commit_copy(dst_table, "clone", None, prev, remap)
+
+
+def _commit_copy(
+    table: str,
+    operation: str,
+    parent: int | None,
+    src: dict,
+    remap: dict[str, str],
+    extra: dict | None = None,
+) -> int:
+    """Publish another manifest's state (``src``, a clone source, fork
+    point or branch head) as ``table``'s next version, with every file
+    entry renamed through ``remap``. Stats and deletion vectors follow
+    their files; constraints, column mapping, retired columns and
+    generated columns come from ``src``. Its feature sets are carried
+    explicitly, because some features cannot be re-derived from content
+    (a widened table's files are NARROW parquet under the wide schema),
+    and row tracking stays live: the flag and ``src``'s id high-water
+    mark travel with the files, so later commits allocate ids above
+    every id ``src`` handed out."""
+    carried = {k: src[k] for k in ("reader_features", "writer_features") if src.get(k)}
+    if src.get("row_tracking"):
+        carried.update(row_tracking=True, next_row_id=int(src.get("next_row_id") or 0))
     return _commit(
-        dst_table,
-        "clone",
-        sorted(abs_files),
-        prev["partition_cols"],
-        prev["schema"],
-        parent=None,
-        file_stats=stats,
-        constraints=prev.get("constraints", {}),
-        deletion_vectors=dvs,
-        column_mapping=prev.get("column_mapping") or {},
-        retired_columns=prev.get("retired_columns") or [],
-        generated=prev.get("generated") or {},
-        # the clone has no parent to inherit from, and some features
-        # are not derivable from content (a widened source's files
-        # are NARROW parquet under the wide schema) — carry the
-        # source head's full feature set explicitly, and keep row
-        # tracking live (flag + id high-water mark travel with the
-        # reader feature, as Delta preserves through shallow clones:
-        # the cloned files' base_row_id stats stay valid, and new
-        # clone commits must allocate ids ABOVE the source's mark)
-        extra=(
-            {
-                **(
-                    {"reader_features": prev["reader_features"]}
-                    if prev.get("reader_features")
-                    else {}
-                ),
-                **(
-                    {"writer_features": prev["writer_features"]}
-                    if prev.get("writer_features")
-                    else {}
-                ),
-                **(
-                    {
-                        "row_tracking": True,
-                        "next_row_id": int(prev.get("next_row_id") or 0),
-                    }
-                    if prev.get("row_tracking")
-                    else {}
-                ),
-            }
-            or None
-        ),
+        table,
+        operation,
+        sorted(remap[f] for f in src["files"]),
+        src["partition_cols"],
+        src["schema"],
+        parent=parent,
+        file_stats={remap[f]: s for f, s in src.get("file_stats", {}).items() if f in remap},
+        constraints=src.get("constraints") or {},
+        deletion_vectors={
+            remap[f]: d for f, d in src.get("deletion_vectors", {}).items() if f in remap
+        },
+        column_mapping=src.get("column_mapping") or {},
+        retired_columns=src.get("retired_columns") or [],
+        generated=src.get("generated") or {},
+        extra={**(extra or {}), **carried} or None,
     )
 
 
@@ -6175,54 +6007,12 @@ def create_branch(table: str, name: str, version: int | None = None) -> str:
     bp = branch_path(table, name)
     if current_version(bp) is not None:
         raise ValueError(f"branch {name!r} already exists on {table}")
-    abs_files = [
-        f if os.path.isabs(f) else os.path.normpath(os.path.join(table, f))
+    remap = {
+        f: f if os.path.isabs(f) else os.path.normpath(os.path.join(table, f))
         for f in prev["files"]
-    ]
-    remap = dict(zip(prev["files"], abs_files))
-    old_stats = prev.get("file_stats", {})
-    old_dvs = prev.get("deletion_vectors", {})
+    }
     os.makedirs(_data_dir(bp), exist_ok=True)
-    _commit(
-        bp,
-        "branch",
-        sorted(abs_files),
-        prev["partition_cols"],
-        prev["schema"],
-        parent=None,
-        file_stats={remap[f]: s for f, s in old_stats.items() if f in remap},
-        constraints=prev.get("constraints", {}),
-        deletion_vectors={remap[f]: d for f, d in old_dvs.items() if f in remap},
-        column_mapping=prev.get("column_mapping") or {},
-        retired_columns=prev.get("retired_columns") or [],
-        generated=prev.get("generated") or {},
-        # parentless fork: carry the fork point's feature set (same
-        # reasoning as clone_table — widening is not content-derivable)
-        # plus live row tracking (flag + next_row_id), so branch
-        # commits keep allocating unique ids and with_row_ids reads
-        # work on the branch exactly as on the parent
-        extra={
-            "branch_of": {"fork_version": v},
-            **(
-                {"reader_features": prev["reader_features"]}
-                if prev.get("reader_features")
-                else {}
-            ),
-            **(
-                {"writer_features": prev["writer_features"]}
-                if prev.get("writer_features")
-                else {}
-            ),
-            **(
-                {
-                    "row_tracking": True,
-                    "next_row_id": int(prev.get("next_row_id") or 0),
-                }
-                if prev.get("row_tracking")
-                else {}
-            ),
-        },
-    )
+    _commit_copy(bp, "branch", None, prev, remap, {"branch_of": {"fork_version": v}})
     return bp
 
 
@@ -6279,7 +6069,6 @@ def fast_forward(table: str, name: str) -> int:
         )
     main_data = os.path.abspath(_data_dir(table))
     branch_data = os.path.abspath(_data_dir(bp))
-    files_out: list[str] = []
     remap: dict[str, str] = {}
     linked: list[str] = []
     try:
@@ -6302,54 +6091,18 @@ def fast_forward(table: str, name: str) -> int:
                 # foreign absolute reference (e.g. the branch was
                 # forked from a clone): carry it verbatim
                 out = af
-            files_out.append(out)
             remap[f] = out
-        old_stats = bman.get("file_stats", {})
-        old_dvs = bman.get("deletion_vectors", {})
-        version = _commit(
+        # the branch head's features and id high-water mark win: the
+        # fork parent's next_row_id predates every id the branch
+        # allocated, and fast-forward is only legal while the parent
+        # is frozen at the fork
+        version = _commit_copy(
             table,
             "fast_forward",
-            sorted(files_out),
-            bman["partition_cols"],
-            bman["schema"],
-            parent=head,
-            file_stats={remap[f]: s for f, s in old_stats.items() if f in remap},
-            constraints=bman.get("constraints", {}),
-            deletion_vectors={
-                remap[f]: d for f, d in old_dvs.items() if f in remap
-            },
-            column_mapping=bman.get("column_mapping") or {},
-            retired_columns=bman.get("retired_columns") or [],
-            generated=bman.get("generated") or {},
-            # the branch may carry features the parent head lacks and
-            # content cannot re-derive (type widening on the branch) —
-            # seed the union with the branch head's feature set
-            extra={
-                "fast_forward_of": {"branch": name, "branch_head": bhead},
-                **(
-                    {"reader_features": bman["reader_features"]}
-                    if bman.get("reader_features")
-                    else {}
-                ),
-                **(
-                    {"writer_features": bman["writer_features"]}
-                    if bman.get("writer_features")
-                    else {}
-                ),
-                # publish the branch's id high-water mark: the fork
-                # parent's next_row_id predates every id the branch
-                # allocated, and fast-forward is only legal while the
-                # parent is frozen at the fork, so the branch head's
-                # mark is the table-wide maximum
-                **(
-                    {
-                        "row_tracking": True,
-                        "next_row_id": int(bman.get("next_row_id") or 0),
-                    }
-                    if bman.get("row_tracking")
-                    else {}
-                ),
-            },
+            head,
+            bman,
+            remap,
+            {"fast_forward_of": {"branch": name, "branch_head": bhead}},
         )
     except BaseException:
         for dst in linked:

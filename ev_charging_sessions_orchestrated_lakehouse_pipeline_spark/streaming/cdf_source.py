@@ -886,15 +886,10 @@ class SnapshotStreamWriter(DataSourceStreamWriter):
             self._table,
             "append",
             sorted(prev["files"] + rels),
-            prev["partition_cols"],
-            self._schema_json,
-            head,
+            schema_json=self._schema_json,
+            parent=head,
             txn=(self._app_id, int(batchId)),
-            file_stats=st._carry_stats(
-                prev, prev["files"], st._collect_stats(self._table, rels)
-            ),
-            constraints=prev.get("constraints", {}),
-            deletion_vectors=prev.get("deletion_vectors", {}),
+            file_stats=st._collect_stats(self._table, rels),
         )
 
     def abort(self, messages, batchId: int) -> None:

@@ -420,3 +420,23 @@ def test_package_does_not_hand_roll_version_lookup():
         if block.search(open(p).read())
     ]
     assert offenders == []
+
+
+def test_package_does_not_hand_copy_commit_state():
+    """snaptable._commit alone carries parent state forward: no caller
+    rebuilds stats through a carry helper, copies constraints / DVs /
+    stats out of the manifest it just read, or filters with a set
+    rebuilt per element."""
+    patterns = [
+        re.compile(r"_carry_stats"),
+        re.compile(r'(constraints|deletion_vectors|file_stats)=prev\.get\("\1"'),
+        re.compile(r"if \w+ in set\("),
+    ]
+    pkg = os.path.dirname(os.path.dirname(operators.__file__))
+    offenders = [
+        (os.path.relpath(p, pkg), pat.pattern)
+        for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
+        for pat in patterns
+        if pat.search(open(p).read())
+    ]
+    assert offenders == []

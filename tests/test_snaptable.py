@@ -1693,6 +1693,177 @@ def test_deletion_vector_executor_decode_above_threshold(
     assert feed.filter(F.col("_change_type") == "delete").count() == n_del
 
 
+def test_commit_carries_lazy_dv_without_decoding(
+    spark, orders, tmp_path, monkeypatch
+):
+    """A commit that leaves a lazily-resolved deletion vector alone
+    must not decode its sidecar on the driver: the unchanged ref passes
+    through _commit unsorted and the parent's stored ``{"$dv": ...}``
+    entry is reused verbatim."""
+    t = _tbl(tmp_path)
+    st.create_table(orders, t, [])
+    med = orders.approxQuantile("o_totalprice", [0.5], 0.0)[0]
+    st.delete_where(spark, t, [("o_totalprice", ">", float(med))], use_dv=True)
+    monkeypatch.setattr(st, "DV_DRIVER_DECODE_MAX", 16)
+    m = st._read_manifest(t, st.current_version(t))
+    assert any(
+        isinstance(ps, st._LazyDVPositions)
+        for ps in m["deletion_vectors"].values()
+    )
+    decodes = []
+    real = st._decode_dv_binary
+    monkeypatch.setattr(
+        st, "_decode_dv_binary", lambda data: decodes.append(1) or real(data)
+    )
+    ops = {
+        "append": lambda: st.append(orders.limit(5), t),
+        "set_table_properties": lambda: st.set_table_properties(t, {"k": "v"}),
+        "add_constraint": lambda: st.add_constraint(
+            spark, t, "pk", "o_orderkey >= 0"
+        ),
+    }
+    for name, op in ops.items():
+        raw_before = st._raw_manifest(t, st.current_version(t))[
+            "deletion_vectors"
+        ]
+        st._load_dv_sidecar.cache_clear()
+        decodes.clear()
+        v = op()
+        assert decodes == [], name
+        assert st._raw_manifest(t, v)["deletion_vectors"] == raw_before, name
+
+
+@pytest.fixture(scope="module")
+def carry_table(spark, tmp_path_factory):
+    """A table exercising every piece of carried manifest state: a
+    sidecar DV and an inline DV, a CHECK constraint, a renamed (mapped)
+    column, a generated column, row tracking and a table property."""
+    t = str(tmp_path_factory.mktemp("carry") / "t")
+    df = spark.createDataFrame(
+        [(i, "a" if i < 100 else "b", i % 7, i, i * 1.5, f"n{i}") for i in range(200)],
+        "id long, part string, qty int, w int, price double, note string",
+    ).coalesce(1)
+    st.create_table(
+        df, t, ["part"], constraints={"pos": "qty >= 0"}, generated={"dbl": "qty * 2"}
+    )
+    st.rename_column(t, "note", "memo")
+    st.enable_row_tracking(t)
+    st.set_table_properties(t, {"owner": "x"})
+    st.delete_where(spark, t, [("id", "<", 70)], use_dv=True)  # sidecar
+    st.delete_where(spark, t, [("id", ">=", 197)], use_dv=True)  # inline
+    raw = st._raw_manifest(t, st.current_version(t))["deletion_vectors"]
+    assert sorted(type(v).__name__ for v in raw.values()) == ["dict", "list"]
+    return t
+
+
+#: every metadata-only operation -> (call, manifest fields it documents
+#: changing); every other field must equal the parent's
+_METADATA_OPS = {
+    "set_table_properties": (
+        lambda spark, t: st.set_table_properties(t, {"k2": "v"}),
+        {"properties"},
+    ),
+    "unset_table_properties": (
+        lambda spark, t: st.unset_table_properties(t, ["owner"]),
+        {"properties"},
+    ),
+    "add_constraint": (
+        lambda spark, t: st.add_constraint(spark, t, "ids", "id >= 0"),
+        {"constraints"},
+    ),
+    "drop_constraint": (
+        lambda spark, t: st.drop_constraint(t, "pos"),
+        {"constraints"},
+    ),
+    "analyze_table": (
+        lambda spark, t: st.analyze_table(spark, t, ["id"]),
+        {"table_stats"},
+    ),
+    "add_bloom_index": (
+        lambda spark, t: st.add_bloom_index(spark, t, "id"),
+        {"file_stats"},
+    ),
+    "evolve_partitioning": (
+        lambda spark, t: st.evolve_partitioning(t, []),
+        {"partition_cols"},
+    ),
+    "add_columns": (
+        lambda spark, t: st.add_columns(t, [("extra", "int")]),
+        {"schema"},
+    ),
+    "rename_column": (
+        lambda spark, t: st.rename_column(t, "price", "cost"),
+        {"schema", "column_mapping"},
+    ),
+    "widen_column": (
+        lambda spark, t: st.widen_column(t, "w", "long"),
+        {"schema", "reader_features", "writer_features"},
+    ),
+    "drop_column": (
+        lambda spark, t: st.drop_column(t, "price"),
+        {"schema", "retired_columns"},
+    ),
+    "enable_identity": (
+        lambda spark, t: st.enable_identity(t, "sk"),
+        {"identity", "reader_features", "writer_features"},
+    ),
+}
+
+#: per-commit bookkeeping that differs on every commit by design
+_COMMIT_KEYS = {"version", "parent", "operation", "committed_at", "metrics"}
+
+
+@pytest.mark.parametrize("op", sorted(_METADATA_OPS))
+def test_commit_carries_parent_state(spark, carry_table, tmp_path, op):
+    """The commit contract: a metadata-only operation changes exactly
+    the manifest fields it documents; every other field (files, stats,
+    DVs in stored form, constraints, mapping, generated columns, row
+    tracking, properties, features) is the parent's."""
+    import shutil
+
+    t = str(tmp_path / "t")
+    shutil.copytree(carry_table, t)
+    head = st.current_version(t)
+    call, changes = _METADATA_OPS[op]
+    v = call(spark, t)
+    assert v == head + 1
+    before, after = st._read_manifest(t, head), st._read_manifest(t, v)
+    for key in (set(before) | set(after)) - _COMMIT_KEYS - changes:
+        assert after.get(key) == before.get(key), key
+    for key in changes:
+        assert after.get(key) != before.get(key), key
+    raw_dvs = [st._raw_manifest(t, x)["deletion_vectors"] for x in (head, v)]
+    assert raw_dvs[1] == raw_dvs[0]
+
+
+def test_commit_restricts_state_to_committed_files(spark, carry_table, tmp_path):
+    """Rewrites never leave a deletion vector or a stats entry naming a
+    file the committed list no longer holds."""
+    import shutil
+
+    t = str(tmp_path / "t")
+    shutil.copytree(carry_table, t)
+    cols = "id long, part string, qty int, w int, price double, memo string"
+    batch = spark.createDataFrame([(500, "a", 1, 1, 1.0, "x")], cols)
+    ops = [
+        lambda: st.overwrite_partitions(batch, t),
+        lambda: st.replace_where(
+            spark,
+            spark.createDataFrame([(600, "b", 2, 2, 2.0, "y")], cols),
+            t,
+            [("part", "=", "b"), ("id", ">=", 150)],
+        ),
+        lambda: st.delete_where(spark, t, [("id", "=", 120)]),
+        lambda: st.optimize(spark, t, partitions={"part": "a"}),
+    ]
+    for op in ops:
+        v = op()
+        m = st._read_manifest(t, v)
+        live = set(m["files"])
+        assert set(m["deletion_vectors"]) <= live, m["operation"]
+        assert set(m["file_stats"]) <= live, m["operation"]
+
+
 def test_deletion_vectors_merge_on_read(spark, orders, tmp_path):
     """use_dv=True deletes touch NO data file: the commit records row
     positions, readers anti-join them out via the parquet row index,
