@@ -138,20 +138,24 @@ def run_silver(
     """End-to-end silver job: read -> clean -> verify -> annotate ->
     split -> two partitioned zstd Parquet sinks (reference :57-229).
 
-    ``fail_mode="fail_job"`` raises on a failed dataset-level check or
-    any quarantined row, after writes — matching the reference's gate
-    placement.
+    ``fail_mode="fail_job"`` (any case) raises on a failed dataset-level
+    check before the writes, and on any quarantined row after them.
+    ``"quarantine"`` only routes bad rows to the quarantine sink; any
+    other mode is a ``ValueError``.
     """
     from ..sources.readers import read_bronze_csv
     from ..sources.writers import write_partitioned_parquet
 
+    mode = fail_mode.lower()
+    if mode not in ("quarantine", "fail_job"):
+        raise ValueError(f"unknown fail_mode {fail_mode!r}")
     bronze = read_bronze_csv(spark, input_path, infer=True)
     silver = clean_sessions(bronze, precise_timestamps=precise_timestamps)
 
     verification = (
         VerificationSuite().on_data(silver).add_check(silver_check()).run()
     )
-    if fail_mode == "fail_job" and verification.status != CheckStatus.SUCCESS:
+    if mode == "fail_job" and verification.status != CheckStatus.SUCCESS:
         raise RuntimeError(
             f"Data quality FAILED: {verification.status.value}: "
             f"{[r.constraint for r in verification.results if not r.passed]}"
@@ -164,10 +168,15 @@ def run_silver(
     if secondary_partition and secondary_partition in silver.columns:
         partition_cols.append(secondary_partition)
 
-    write_partitioned_parquet(good, silver_path, partition_cols)
-    write_partitioned_parquet(bad, quarantine_path, partition_cols)
-
-    good_count, bad_count = good.count(), bad.count()
-    if bad_count > 0 and fail_mode.lower() == "fail_job":
+    try:
+        write_partitioned_parquet(good, silver_path, partition_cols)
+        write_partitioned_parquet(bad, quarantine_path, partition_cols)
+        good_count, bad_count = good.count(), bad.count()
+    finally:
+        # split_good_bad persisted the annotated frame for the two
+        # sinks and counts; a leftover cache entry would be matched
+        # against every later plan in the session
+        annotated.unpersist()
+    if bad_count > 0 and mode == "fail_job":
         raise RuntimeError(f"Quality gate failed: {bad_count} quarantined rows")
     return SilverResult(verification, good_count, bad_count)

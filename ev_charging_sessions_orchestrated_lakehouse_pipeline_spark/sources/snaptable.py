@@ -719,6 +719,11 @@ _REBASE_POLICY = {
 }
 
 
+def _claims_snapshot(manifest_or_extra: dict | None) -> bool:
+    """Is this a table-wide OPTIMIZE commit (see :func:`_try_rebase`)?"""
+    return (manifest_or_extra or {}).get("optimize_scope") == "table"
+
+
 def _norm_dvs(dvs: dict | None) -> dict:
     return {f: sorted(ps) for f, ps in (dvs or {}).items() if ps}
 
@@ -795,9 +800,18 @@ def _try_rebase(
     l_files = set(files)
     added = [f for f in files if f not in par_files]
     removed = par_files - l_files
+    # a table-wide OPTIMIZE claims the whole snapshot it compacted,
+    # carried files included, so a race with it resolves as if it had
+    # rewritten every file: its own scope when it is the loser, and
+    # every parent file counts as rewritten when a winner is one
+    scope = par_files if _claims_snapshot(extra) else removed
+    if any(
+        _claims_snapshot(_raw_manifest(table, v)) for v in range(parent + 1, head + 1)
+    ):
+        h_files -= par_files
     if set(added) & h_files:
         conflict("commit re-references files a winner owns")
-    if not removed <= h_files:
+    if not scope <= h_files:
         conflict(
             "files this commit rewrites were removed or rewritten "
             "concurrently"
@@ -816,7 +830,7 @@ def _try_rebase(
     par_dv = _norm_dvs(par.get("deletion_vectors"))
     h_dv = _norm_dvs(H.get("deletion_vectors"))
     l_dv = _norm_dvs(deletion_vectors)
-    for f in removed:
+    for f in scope:
         if h_dv.get(f) != par_dv.get(f):
             conflict(
                 f"concurrent deletion vector on a file this commit rewrites ({f})"
@@ -2021,6 +2035,22 @@ def evolve_partitioning(table: str, new_cols: list[str]) -> int:
     _validate_spec(list(new_cols), names)
     if list(new_cols) == list(prev["partition_cols"]):
         return head  # no-op
+    # a bucket directory name does not record its bucket count: files
+    # already under <col>_bucket= dirs would prune (and count as laid
+    # out for OPTIMIZE) under the new count while holding the old one's
+    live_dirs = {k for f in prev["files"] for k in _path_values(f)}
+    for entry in new_cols:
+        kind, _col, _n, name = _parse_transform(entry)
+        if (
+            kind == "bucket"
+            and name in live_dirs
+            and entry not in prev["partition_cols"]
+        ):
+            raise ValueError(
+                f"{entry!r} would re-bucket {name}= directories that live "
+                "files already use; evolve to a spec without it and "
+                "optimize() first"
+            )
     return _commit(
         table, "evolve_partitioning", partition_cols=list(new_cols), parent=head
     )
@@ -2135,43 +2165,57 @@ _ARROW_OF_SPARK = {
 }
 
 
+def _physical_types(man: dict) -> dict:
+    """{physical column: pyarrow type rendering} of the manifest
+    schema's widenable columns — the footer types a rewrite under the
+    current schema produces."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(man["schema"]))
+    mapping = man.get("column_mapping") or {}
+    want = {}
+    for f in schema.fields:
+        # typeName(): "long"/"integer"/..., NOT simpleString()'s SQL
+        # rendering ("bigint"); decimals keep (p,s) via simpleString
+        tn = f.dataType.typeName()
+        if tn == "decimal":
+            # pyarrow renders "decimal128(10, 2)" WITH a space;
+            # Spark's simpleString is "decimal(10,2)" without
+            want[mapping.get(f.name, f.name)] = (
+                f.dataType.simpleString()
+                .replace("decimal", "decimal128")
+                .replace(",", ", ")
+            )
+        elif tn in _ARROW_OF_SPARK:
+            want[mapping.get(f.name, f.name)] = _ARROW_OF_SPARK[tn]
+    return want
+
+
+def _is_narrower(footer_schema, want: dict) -> bool:
+    """True when a file footer stores one of ``want``'s columns at
+    another (narrower) type; an absent column null-fills and needs no
+    promotion."""
+    return any(
+        phys in footer_schema.names and str(footer_schema.field(phys).type) != t
+        for phys, t in want.items()
+    )
+
+
 def _live_files_need_widening(table: str, man: dict) -> list[str]:
     """Files whose PHYSICAL parquet type is narrower than the manifest
     schema — the content that obligates the ``type-widening`` feature.
     Footer metadata reads only (no data); bounded by the live file
     count, acceptable for a rare admin operation."""
     import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
 
-    schema = StructType.fromJson(json.loads(man["schema"]))
-    mapping = man.get("column_mapping") or {}
-    wide_cols = {}
-    for f in schema.fields:
-        # typeName(): "long"/"integer"/..., NOT simpleString()'s SQL
-        # rendering ("bigint"); decimals keep (p,s) via simpleString
-        tn = f.dataType.typeName()
-        if tn == "decimal":
-            wide_cols[mapping.get(f.name, f.name)] = f.dataType.simpleString()
-        elif tn in _ARROW_OF_SPARK:
-            wide_cols[mapping.get(f.name, f.name)] = tn
-    if not wide_cols:
+    want = _physical_types(man)
+    if not want:
         return []
-    offenders = []
-    for rel in man["files"]:
-        fsch = pq.read_schema(os.path.join(table, rel))
-        for phys, simple in wide_cols.items():
-            if phys not in fsch.names:
-                continue  # absent column null-fills; no promotion needed
-            got = str(fsch.field(phys).type)
-            want = _ARROW_OF_SPARK.get(simple) or (
-                # pyarrow renders "decimal128(10, 2)" WITH a space;
-                # Spark's simpleString is "decimal(10,2)" without
-                simple.replace("decimal", "decimal128").replace(",", ", ")
-            )
-            if got != want:
-                offenders.append(rel)
-                break
-    return offenders
+    return [
+        rel
+        for rel in man["files"]
+        if _is_narrower(pq.read_schema(os.path.join(table, rel)), want)
+    ]
 
 
 def drop_feature(table: str, feature: str) -> int:
@@ -5128,14 +5172,38 @@ def optimize(
     """OPTIMIZE [ZORDER BY] as a metadata commit — the snapshot-native
     replacement for the rename-swap dance in
     ``writers.compact_dataset`` (whose docstring already names this
-    design as the real lakehouse mechanism). Rewrites the current
-    snapshot into ``files_per_partition`` files per partition
-    (``cluster_by`` sorts within files so Parquet min/max stats turn
-    selective), verifies the rewrite's row count against the live
-    snapshot BEFORE publishing, then commits a version that references
-    only the compacted files. Readers never see an intermediate state,
+    design as the real lakehouse mechanism). Rewrites files into
+    ``files_per_partition`` files per partition (``cluster_by`` sorts
+    within files so Parquet min/max stats turn selective), verifies
+    the rewrite's row count against the files it replaces BEFORE
+    publishing, then commits a version that references the compacted
+    files in their place. Readers never see an intermediate state,
     time travel to pre-compaction versions keeps working, and a crash
     at any point leaves only unreferenced files for :func:`vacuum`.
+
+    INCREMENTAL BY DEFAULT (Delta's bin-packing rule): a plain call —
+    ``files_per_partition=1`` with no ``cluster_by``, ``zorder``,
+    ``partitions``, ``target_file_bytes`` or ``clusterBy`` table
+    property — rewrites only the partitions that are not already
+    compact (an unpartitioned table is one partition). A partition
+    is compact, and carries by reference with its paths, stats and
+    deletion-vector entries unchanged, when it holds exactly one live
+    file that has no deletion vector, lives in the table's own data
+    tree (not a shallow clone's source), sits under the current
+    partition spec, stores exactly the current physical columns at
+    their current types (no narrower type, no retired column) and,
+    under row tracking, already materializes its row ids. Every other
+    call rewrites its whole scope: the table, or the ``partitions``
+    files. Every call publishes exactly one ``optimize`` version,
+    even one that rewrites nothing; only an OPTIMIZE WHERE that
+    matches no file returns the head unchanged. A table-wide call
+    races with concurrent writers exactly as a full rewrite did: its
+    commit claims the carried files too (:func:`_try_rebase`).
+
+    ``partitions`` is OPTIMIZE WHERE: only files whose directory
+    values match it (identity partition columns of the CURRENT spec;
+    old-spec files never match) rewrite — at 100 TB you compact
+    yesterday's hot partitions, never the whole table.
 
     ``zorder=True`` clusters by the bit-interleaved
     :func:`_zorder_key` over ``cluster_by`` instead of the linear
@@ -5147,13 +5215,12 @@ def optimize(
 
     ``target_file_bytes`` sizes the rewrite by BYTES instead of a
     fixed file count (Delta's OPTIMIZE targetFileSize): the output
-    file count becomes ceil(live_bytes / target), with live bytes
-    read from the manifest's per-file stats — no filesystem stat. On
-    a partitioned table it applies per partition, so pass
-    ``partitions=`` (one scope) or use
-    :func:`auto_compact`'s byte-aware sweep; a table-wide single
-    count would over-split small partitions and under-split big
-    ones.
+    file count becomes ceil(scope_bytes / target), with bytes read
+    from the manifest's per-file stats — no filesystem stat. On a
+    partitioned table it applies per partition, so pass
+    ``partitions=`` (one scope) or use :func:`auto_compact`'s
+    byte-aware sweep; a table-wide single count would over-split
+    small partitions and under-split big ones.
 
     LIQUID-STYLE DEFAULT CLUSTERING: when ``cluster_by`` is omitted
     and the table carries a ``clusterBy`` table property (set via
@@ -5178,34 +5245,128 @@ def optimize(
             "auto_compact(target_file_bytes=...) for the sweep"
         )
     if partitions:
-        # OPTIMIZE WHERE — partition-scoped compaction: at 100 TB you
-        # compact yesterday's hot partitions, never the whole table.
-        # Only the matching directories rewrite; everything else
-        # (files, stats, deletion vectors) carries by reference.
-        return _optimize_partitions(
-            spark, table, prev, head, partitions, files_per_partition,
-            cluster_by, zorder, target_file_bytes=target_file_bytes,
-        )
+        if zorder:
+            raise ValueError("partition-scoped optimize does not support zorder")
+        if not pcols:
+            raise ValueError(f"{table} is unpartitioned; omit partitions")
+        hive = _spec_names(pcols)
+        unknown = set(partitions) - set(hive)
+        if unknown:
+            raise ValueError(
+                f"unknown partition columns {sorted(unknown)}; spec has {hive}"
+            )
+        want = {k: str(v) for k, v in partitions.items()}
+        cand = [
+            f
+            for f in prev["files"]
+            if all(_partition_values(f, hive).get(k) == v for k, v in want.items())
+        ]
+        if not cand:
+            return head  # nothing matches: metadata no-op
+    elif files_per_partition == 1 and not (cluster_by or zorder or target_file_bytes):
+        cand = _uncompacted_files(table, prev)
+    else:
+        cand = prev["files"]
     if target_file_bytes:
         import math
 
-        total = _live_file_bytes(table, prev, prev["files"])
-        files_per_partition = max(1, math.ceil(total / target_file_bytes))
+        files_per_partition = max(
+            1, math.ceil(_live_file_bytes(table, prev, cand) / target_file_bytes)
+        )
+    return _optimize_files(
+        spark,
+        table,
+        prev,
+        head,
+        cand,
+        files_per_partition,
+        cluster_by,
+        zorder,
+        extra=None if partitions else {"optimize_scope": "table"},
+    )
+
+
+def _uncompacted_files(table: str, man: dict) -> list[str]:
+    """The default OPTIMIZE's rewrite set: every live file except the
+    sole file of each partition that is already what a rewrite would
+    produce (the compactness rule in :func:`optimize`'s docstring).
+    Files group by ALL their path values, so an old-spec file never
+    shares a group with current-spec ones. Manifest arithmetic plus
+    one footer read per single-file partition; no data read."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    hive = _spec_names(man["partition_cols"])
+    spec = tuple(sorted(hive))
+    track = bool(man.get("row_tracking"))
+    mapping = man.get("column_mapping") or {}
+    schema = StructType.fromJson(json.loads(man["schema"]))
+    # identity partition columns live in the path, never in the data
+    physical = {
+        mapping.get(f.name, f.name) for f in schema.fields if f.name not in hive
+    } | ({ROW_ID_COL} if track else set())
+    want = _physical_types(man)
+    dvs = man.get("deletion_vectors") or {}
+    stats = man.get("file_stats") or {}
+    groups: dict[tuple, list[str]] = {}
+    for f in man["files"]:
+        groups.setdefault(tuple(sorted(_path_values(f).items())), []).append(f)
+    out: list[str] = []
+    for files in groups.values():
+        f = files[0]
+        if (
+            len(files) == 1
+            and f not in dvs
+            and not os.path.isabs(f)
+            and _file_spec(f) == spec
+            and (not track or (stats.get(f) or {}).get("materialized_row_ids"))
+        ):
+            footer = pq.read_schema(os.path.join(table, f))
+            if set(footer.names) == physical and not _is_narrower(footer, want):
+                continue
+        out.extend(files)
+    return out
+
+
+def _optimize_files(
+    spark: SparkSession,
+    table: str,
+    prev: dict,
+    head: int,
+    cand: list[str],
+    files_per_partition: int,
+    cluster_by: list[str] | None,
+    zorder: bool,
+    extra: dict | None,
+) -> int:
+    """OPTIMIZE's one rewrite body: read ``cand`` (deletion vectors
+    materialize; under row tracking the stable ids materialize into
+    the ROW_ID_COL column) → lay out → write → row-count guard →
+    stats → commit. Every live file outside ``cand`` carries by
+    reference with its stats and deletion vector; an empty ``cand``
+    writes nothing and still commits one version. ``extra`` carries
+    the table-wide marker :func:`_try_rebase` reads."""
+    if not cand:
+        return _commit(table, "optimize", parent=head, extra=extra)
+    from pyspark.sql.types import StructType
+
+    pcols = prev["partition_cols"]
     track = bool(prev.get("row_tracking"))
     if track:
-        # preserve stable row ids across the rewrite by MATERIALIZING
-        # them into the new files (Delta's materialized row-ID column)
-        df = read_snapshot(spark, table, with_row_ids=True).withColumnRenamed(
+        # the identity column derives from these ids at read time and
+        # is never written (enable_identity's metadata-only contract)
+        df = _with_row_ids(spark, table, prev, cand).withColumnRenamed(
             "_row_id", ROW_ID_COL
         )
-        ident = (prev.get("identity") or {}).get("col")
-        if ident:
-            # the read derived the identity column; writing it would
-            # break enable_identity's metadata-only contract (it
-            # re-derives from the preserved row ids on every read)
-            df = df.drop(ident)
     else:
-        df = read_snapshot(spark, table)
+        df = _read_union(
+            spark,
+            table,
+            cand,
+            StructType.fromJson(json.loads(prev["schema"])),
+            dvs=prev.get("deletion_vectors"),
+            mapping=prev.get("column_mapping"),
+        )
     n_before = df.count()
     if zorder:
         if not cluster_by or len(cluster_by) < 2:
@@ -5255,104 +5416,14 @@ def optimize(
     if track:
         for e in new_stats.values():
             e["materialized_row_ids"] = True
-    return _commit(
-        table, "optimize", sorted(new), parent=head, file_stats=new_stats
-    )
-
-
-def _optimize_partitions(
-    spark: SparkSession,
-    table: str,
-    prev: dict,
-    head: int,
-    partitions: dict,
-    files_per_partition: int,
-    cluster_by: list[str] | None,
-    zorder: bool,
-    target_file_bytes: int | None = None,
-) -> int:
-    """Partition-scoped OPTIMIZE: rewrite only the files whose
-    directory values match ``partitions`` (identity partition columns
-    of the CURRENT spec; old-spec files never match and carry over
-    untouched). Deletion vectors of rewritten files materialize; DVs
-    and stats of carried files survive by reference.
-    ``target_file_bytes`` overrides ``files_per_partition`` with
-    ceil(matched_bytes / target) from manifest stats."""
-    from pyspark.sql.types import StructType
-
-    if zorder:
-        raise ValueError("partition-scoped optimize does not support zorder")
-    pcols = prev["partition_cols"]
-    if not pcols:
-        raise ValueError(f"{table} is unpartitioned; omit partitions")
-    hive = _spec_names(pcols)
-    unknown = set(partitions) - set(hive)
-    if unknown:
-        raise ValueError(
-            f"unknown partition columns {sorted(unknown)}; spec has {hive}"
-        )
-    want = {k: str(v) for k, v in partitions.items()}
-    cand = [
-        f
-        for f in prev["files"]
-        if all(_partition_values(f, hive).get(k) == v for k, v in want.items())
-    ]
-    if not cand:
-        return head  # nothing matches: metadata no-op
-    if target_file_bytes:
-        import math
-
-        files_per_partition = max(
-            1,
-            math.ceil(
-                _live_file_bytes(table, prev, cand) / target_file_bytes
-            ),
-        )
-    cand_set = set(cand)
-    carried = [f for f in prev["files"] if f not in cand_set]
-    schema = StructType.fromJson(json.loads(prev["schema"]))
-    track = bool(prev.get("row_tracking"))
-    if track:
-        dfc = _with_row_ids(spark, table, prev, cand).withColumnRenamed(
-            "_row_id", ROW_ID_COL
-        )
-    else:
-        dfc = _read_union(
-            spark,
-            table,
-            cand,
-            schema,
-            dvs=prev.get("deletion_vectors"),
-            mapping=prev.get("column_mapping"),
-        )
-    n_before = dfc.count()
-    laid, hive_names = _layout_frame(dfc, pcols)
-    out = laid.repartition(files_per_partition, *hive_names)
-    if cluster_by:
-        out = out.sortWithinPartitions(*cluster_by)
-    new = _write_data(out, table, pcols)
-    new_paths = [os.path.join(table, f) for f in new]
-    n_after = (
-        spark.read.option("basePath", _data_dir(table)).parquet(*new_paths).count()
-        if new_paths
-        else 0
-    )
-    if n_after != n_before:
-        for f in new:
-            os.unlink(os.path.join(table, f))
-        raise RuntimeError(
-            f"optimize row-count mismatch on {table}: {n_after} != {n_before}"
-        )
-    new_stats = _collect_stats(table, new)
-    if track:
-        for e in new_stats.values():
-            e["materialized_row_ids"] = True
+    rewritten = set(cand)
     return _commit(
         table,
         "optimize",
-        sorted(carried + new),
+        sorted([f for f in prev["files"] if f not in rewritten] + new),
         parent=head,
         file_stats=new_stats,
+        extra=extra,
     )
 
 
@@ -6194,9 +6265,13 @@ def auto_compact(
             # the empty key is the unpartitioned table itself, OR
             # old-spec files a partition evolution left behind (no
             # hive dirs under the current spec). Either way one
-            # FULL-table optimize is the answer — it migrates
-            # old-spec files into the current layout and supersedes
-            # every other planned scope, so stop after it. On a
+            # table-wide optimize is the answer and supersedes every
+            # other planned scope, so stop after it: with one file
+            # per partition it is the incremental default, which
+            # rewrites every partition that is not already one clean
+            # file (old-spec files never are, so they migrate into
+            # the current layout); a larger count rewrites the whole
+            # table. On a
             # partitioned table the byte target sizes the whole
             # rewrite (per-partition scoping can't address dir-less
             # files).

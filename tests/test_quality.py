@@ -4,6 +4,9 @@ edge cases (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -187,3 +190,74 @@ def test_attach_on_golden_silver_matches_run(spark):
     assert {r.constraint: r.metric_value for r in got.results} == {
         r.constraint: r.metric_value for r in baseline.results
     }
+
+
+def _evgen_batch_csv(tmp_path, n_rows: int = 200) -> str:
+    """One perfbench/evgen.py bronze batch as a CSV file. Every batch
+    carries sessionId_null rows, so it fails completeness(sessionId)."""
+    perfbench = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"
+    )
+    sys.path.insert(0, perfbench)
+    try:
+        import evgen
+    finally:
+        sys.path.remove(perfbench)
+    path = tmp_path / "batch.csv"
+    path.write_text(evgen.make_batch(seed=1, day_index=0, n_rows=n_rows).csv_text)
+    return str(path)
+
+
+def test_run_silver_releases_split_cache(spark, tmp_path):
+    """run_silver unpersists the frame split_good_bad persisted for its
+    two sinks: no cache entry outlives the call."""
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
+        run_silver,
+    )
+
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    res = run_silver(
+        spark,
+        _evgen_batch_csv(tmp_path),
+        str(tmp_path / "silver"),
+        str(tmp_path / "quarantine"),
+    )
+    assert res.good_count > 0 and res.bad_count > 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("mode", ["fail_job", "FAIL_JOB"])
+def test_run_silver_fail_job_gates_before_writes(spark, tmp_path, mode):
+    """fail_job in any case stops at the dataset-level gate: neither
+    sink is written."""
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
+        run_silver,
+    )
+
+    silver, quarantine = tmp_path / "silver", tmp_path / "quarantine"
+    with pytest.raises(RuntimeError, match="Data quality FAILED"):
+        run_silver(
+            spark,
+            _evgen_batch_csv(tmp_path),
+            str(silver),
+            str(quarantine),
+            fail_mode=mode,
+        )
+    assert not silver.exists() and not quarantine.exists()
+
+
+def test_run_silver_rejects_unknown_fail_mode(spark, tmp_path):
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
+        run_silver,
+    )
+
+    silver = tmp_path / "silver"
+    with pytest.raises(ValueError, match="unknown fail_mode 'bogus'"):
+        run_silver(
+            spark,
+            _evgen_batch_csv(tmp_path),
+            str(silver),
+            str(tmp_path / "quarantine"),
+            fail_mode="bogus",
+        )
+    assert not silver.exists()

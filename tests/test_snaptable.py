@@ -2257,6 +2257,158 @@ def test_partition_scoped_optimize(spark, orders, tmp_path):
     assert st.optimize(spark, t, partitions={"o_orderstatus": "ZZ"}) == v
 
 
+def _single_file_table(spark, t, pcols, n_rows=30, n_parts=3):
+    """``n_parts`` partitions of ``g`` (or one unpartitioned file), each
+    written as exactly one file."""
+    st.create_table(
+        spark.createDataFrame(
+            [(i, i % n_parts, i * 10) for i in range(n_rows)],
+            "id int, g int, v int",
+        ).coalesce(1),
+        t,
+        pcols,
+    )
+
+
+def test_default_optimize_rewrites_only_uncompacted_partitions(spark, tmp_path):
+    """The default OPTIMIZE rewrites exactly the partitions that are not
+    already one clean file: an append into 2 of 10 partitions and a DV
+    delete in a third make 3 new files, and the other 7 files carry
+    with their paths and stats verbatim."""
+    t = _tbl(tmp_path)
+    _single_file_table(spark, t, ["g"], n_rows=100, n_parts=10)
+    st.append(
+        spark.createDataFrame(
+            [(100 + i, i % 2, 0) for i in range(4)], "id int, g int, v int"
+        ).coalesce(1),
+        t,
+    )
+    st.delete_where(spark, t, [("g", "=", 2), ("id", "<", 50)], use_dv=True)
+    prev = st._read_manifest(t, st.current_version(t))
+    assert len(prev["files"]) == 12 and len(prev["deletion_vectors"]) == 1
+    before = sorted(st.read_snapshot(spark, t).collect())
+
+    m = st._read_manifest(t, st.optimize(spark, t))
+    new = set(m["files"]) - set(prev["files"])
+    carried = {
+        f for f in prev["files"] if st._path_values(f)["g"] not in ("0", "1", "2")
+    }
+    assert len(new) == 3 and len(carried) == 7
+    assert set(m["files"]) == new | carried
+    assert {f: m["file_stats"][f] for f in carried} == {
+        f: prev["file_stats"][f] for f in carried
+    }
+    assert not m["deletion_vectors"]
+    assert sorted(st.read_snapshot(spark, t).collect()) == before
+
+
+def _footers_lack(t, col):
+    import pyarrow.parquet as pq
+
+    m = st._read_manifest(t, st.current_version(t))
+    for f in m["files"]:
+        assert col not in pq.read_schema(os.path.join(t, f)).names, f
+
+
+def _ids_materialized(t):
+    m = st._read_manifest(t, st.current_version(t))
+    assert all(m["file_stats"][f].get("materialized_row_ids") for f in m["files"])
+
+
+@pytest.mark.parametrize(
+    "pcols,mutate,follow_up",
+    [
+        pytest.param(
+            ["g"],
+            lambda spark, t: st.delete_where(
+                spark, t, [("id", "<", 3)], use_dv=True
+            ),
+            lambda t: st.drop_feature(t, "deletion-vectors"),
+            id="dv_materialized",
+        ),
+        pytest.param(
+            ["bucket(3,id)"],
+            lambda spark, t: st.evolve_partitioning(t, []),
+            lambda t: st.drop_feature(t, "hidden-partitioning"),
+            id="legacy_spec_migrated",
+        ),
+        pytest.param(
+            ["g"],
+            lambda spark, t: st.widen_column(t, "v", "bigint"),
+            lambda t: st.drop_feature(t, "type-widening"),
+            id="widened_type_rewritten_wide",
+        ),
+        pytest.param(
+            ["g"],
+            lambda spark, t: st.drop_column(t, "v"),
+            lambda t: _footers_lack(t, "v"),
+            id="retired_column_purged",
+        ),
+        pytest.param(
+            [],
+            lambda spark, t: st.enable_row_tracking(t),
+            _ids_materialized,
+            id="row_ids_materialized",
+        ),
+    ],
+)
+def test_default_optimize_rewrites_single_file_partitions_it_must(
+    spark, tmp_path, pcols, mutate, follow_up
+):
+    """Every side effect a full rewrite had survives the incremental
+    rule: a single-file partition that carries a DV, sits under a
+    legacy spec, stores a narrower type or a retired column, or lacks
+    materialized row ids is still rewritten, with unchanged content."""
+    t = _tbl(tmp_path)
+    _single_file_table(spark, t, pcols)
+    mutate(spark, t)
+    prev = st._read_manifest(t, st.current_version(t))
+    dirs = {os.path.dirname(f) for f in prev["files"]}
+    assert len(dirs) == len(prev["files"])  # one file per partition
+    with pytest.raises((ValueError, AssertionError)):
+        follow_up(t)
+    track = bool(prev.get("row_tracking"))
+    before = sorted(st.read_snapshot(spark, t, with_row_ids=track).collect())
+
+    m = st._read_manifest(t, st.optimize(spark, t))
+    assert not set(prev["files"]) & set(m["files"])
+    assert sorted(st.read_snapshot(spark, t, with_row_ids=track).collect()) == before
+    follow_up(t)
+
+
+def test_default_optimize_moves_borrowed_clone_files_home(spark, tmp_path):
+    """A shallow clone's single-file partitions are borrowed source
+    files, not the clone's own layout: the default OPTIMIZE still
+    rewrites them into the clone's tree."""
+    src, t = str(tmp_path / "src"), _tbl(tmp_path)
+    _single_file_table(spark, src, ["g"])
+    st.clone_table(src, t)
+    before = sorted(st.read_snapshot(spark, t).collect())
+    m = st._read_manifest(t, st.optimize(spark, t))
+    assert m["files"] and not any(os.path.isabs(f) for f in m["files"])
+    assert sorted(st.read_snapshot(spark, t).collect()) == before
+
+
+@pytest.mark.parametrize("pcols", [["g"], []])
+def test_default_optimize_on_compact_table_writes_nothing(spark, tmp_path, pcols):
+    """A table that is already compact still gets its one optimize
+    version, but it references the parent's files, writes no data
+    file and adds nothing to the change feed."""
+    t = _tbl(tmp_path)
+    _single_file_table(spark, t, pcols, n_parts=10)
+    head = st.current_version(t)
+    prev = st._read_manifest(t, head)
+    on_disk = st._list_data_files(t)
+
+    v = st.optimize(spark, t)
+    m = st._read_manifest(t, v)
+    assert v == head + 1 and m["operation"] == "optimize"
+    assert m["files"] == prev["files"]
+    assert m["file_stats"] == prev["file_stats"]
+    assert st._list_data_files(t) == on_disk
+    assert st.changes(spark, t, from_version=head).count() == 0
+
+
 def test_table_layout_is_metadata_only(spark, orders, tmp_path):
     """table_layout answers the small-files report with zero data
     reads — proven by answering AFTER the data directory is gone —
@@ -5907,6 +6059,32 @@ def test_drop_feature_hidden_partitioning_legacy_files(spark, tmp_path):
     head = st._read_manifest(t, st.current_version(t))
     assert "hidden-partitioning" not in (head.get("reader_features") or [])
     assert st.read_snapshot(spark, t).count() == 8
+
+
+def test_evolve_partitioning_refuses_rebucketing_live_dirs(spark, tmp_path):
+    """A bucket directory name does not record its bucket count:
+    evolving bucket(3,id) to bucket(2,id) over live id_bucket= files
+    would prune them under the wrong count (point lookups lose rows)
+    and let the default OPTIMIZE carry them as laid out. Refused until
+    optimize() moves the files out of that layout."""
+    t = str(tmp_path / "rebucket")
+    st.create_table(
+        spark.createDataFrame(
+            [(i, i * 10) for i in range(30)], "id int, v int"
+        ).coalesce(1),
+        t,
+        ["bucket(3,id)"],
+    )
+    with pytest.raises(ValueError, match="re-bucket"):
+        st.evolve_partitioning(t, ["bucket(2,id)"])
+    st.evolve_partitioning(t, [])
+    with pytest.raises(ValueError, match="re-bucket"):
+        st.evolve_partitioning(t, ["bucket(2,id)"])
+    st.optimize(spark, t)  # migrates the id_bucket= files out
+    st.evolve_partitioning(t, ["bucket(2,id)"])
+    st.append(spark.createDataFrame([(30, 300)], "id int, v int"), t)
+    for k in (2, 21, 23, 29, 30):
+        assert st.scan(spark, t, [("id", "=", k)]).count() == 1, k
 
 
 def test_drop_feature_type_widening_decimal(spark, tmp_path):
