@@ -356,17 +356,37 @@ def annotate_rows(df: DataFrame, rules: list[RowRule], reason_col: str = "quaran
     return df.withColumn(reason_col, F.filter(slots, lambda x: x.isNotNull()))
 
 
+class GoodBad(tuple):
+    """The ``(good, bad)`` pair of :func:`split_good_bad`. Used as a
+    context manager it unpersists the frame the split persisted when
+    the block exits, so a caller's two sinks share one cache entry
+    that never outlives them."""
+
+    def __new__(cls, good: DataFrame, bad: DataFrame, cached: DataFrame | None):
+        pair = super().__new__(cls, (good, bad))
+        pair._cached = cached
+        return pair
+
+    def __enter__(self) -> "GoodBad":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self._cached is not None:
+            self._cached.unpersist()
+
+
 def split_good_bad(
     df: DataFrame,
     reason_col: str = "quarantine_reason",
     persist: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> GoodBad:
     """Complementary-filter split. Unlike the reference (which
     recomputes the full source->transform lineage for every action on
     either side), the annotated frame is persisted so the two sinks
-    and their counts share one materialization."""
+    and their counts share one materialization; run them inside
+    ``with split_good_bad(df) as (good, bad):`` to release it."""
     if persist:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     good = df.filter(F.size(reason_col) == 0).drop(reason_col)
     bad = df.filter(F.size(reason_col) > 0)
-    return good, bad
+    return GoodBad(good, bad, df if persist else None)

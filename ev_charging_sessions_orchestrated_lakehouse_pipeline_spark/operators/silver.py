@@ -162,21 +162,14 @@ def run_silver(
         )
 
     annotated = annotate_rows(silver, silver_row_rules())
-    good, bad = split_good_bad(annotated)
-
     partition_cols = ["event_date"]
     if secondary_partition and secondary_partition in silver.columns:
         partition_cols.append(secondary_partition)
 
-    try:
+    with split_good_bad(annotated) as (good, bad):
         write_partitioned_parquet(good, silver_path, partition_cols)
         write_partitioned_parquet(bad, quarantine_path, partition_cols)
         good_count, bad_count = good.count(), bad.count()
-    finally:
-        # split_good_bad persisted the annotated frame for the two
-        # sinks and counts; a leftover cache entry would be matched
-        # against every later plan in the session
-        annotated.unpersist()
     if bad_count > 0 and mode == "fail_job":
         raise RuntimeError(f"Quality gate failed: {bad_count} quarantined rows")
     return SilverResult(verification, good_count, bad_count)

@@ -1963,52 +1963,15 @@ def replace_where(
       changeset) — a reader never observes the deleted-but-not-yet-
       inserted state.
 
-    Scale: footer-stats skipping picks only the files that MAY hold
-    matching rows; everything else carries over by reference. With
-    clustered data a selective replace rewrites a handful of files
-    out of thousands — the same economics as :func:`delete_where`.
+    ``filters`` is a conjunct list or DNF branches, as for
+    :func:`delete_where`, and the replace runs through the same body
+    (:func:`_rewrite_rows`): footer-stats skipping picks only the
+    files that MAY hold matching rows, everything else carries over
+    by reference, survivors keep their stable row ids and the
+    incoming rows land in files of their own with fresh ids.
     """
-    head, prev = _manifest_at(table)
-    if not filters:
-        raise ValueError(
-            "refusing an unfiltered replace_where; use overwrite_table"
-        )
-    cond = _filters_to_column(filters)
-    df = _apply_generated(df, prev.get("generated") or {})
-    stray = df.filter(~cond).limit(1).count()
-    if stray:
-        raise ValueError(
-            f"replace_where: incoming rows violate the predicate "
-            f"{filters}; every written row must match the replaced region"
-        )
-    _validate_constraints(df, prev.get("constraints", {}))
-    pcols = prev["partition_cols"]
-    candidates = _prune_files(table, prev, filters)
-    cand_set = set(candidates)
-    untouched = [f for f in prev["files"] if f not in cand_set]
-    new: list[str] = []
-    if candidates:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(prev["schema"]))
-        cand_df = _read_union(
-            spark,
-            table,
-            candidates,
-            schema,
-            dvs=prev.get("deletion_vectors"),
-            mapping=prev.get("column_mapping"),
-        )
-        survivors = cand_df.filter(~cond)
-        new += _write_data(survivors, table, pcols)
-    new += _write_data(df, table, pcols)
-    return _commit(
-        table,
-        "replace_where",
-        sorted(untouched + new),
-        parent=head,
-        txn=txn,
-        file_stats=_collect_stats(table, new),
+    return _rewrite_rows(
+        spark, table, filters, "replace_where", insert=df, txn=txn
     )
 
 
@@ -2876,38 +2839,29 @@ def read_snapshot(
         version = version_as_of(table, as_of)
     v, manifest = _manifest_at(table, version)
     ident = manifest.get("identity")
-    if with_row_ids or ident:
-        if not manifest.get("row_tracking"):
-            raise ValueError(
-                f"{table} v{v} has no row tracking; call "
-                "enable_row_tracking(table) first"
-            )
-        out = _with_row_ids(spark, table, manifest, manifest["files"])
-        if ident:
-            from pyspark.sql import functions as F
-
-            out = out.withColumn(
-                ident["col"],
-                (
-                    F.lit(int(ident["start"])).cast("bigint")
-                    + F.lit(int(ident["step"])).cast("bigint")
-                    * F.col("_row_id")
-                ),
-            )
-        if not with_row_ids:
-            out = out.drop("_row_id")
+    ids = bool(with_row_ids or ident)
+    if ids and not manifest.get("row_tracking"):
+        raise ValueError(
+            f"{table} v{v} has no row tracking; call "
+            "enable_row_tracking(table) first"
+        )
+    out = _read_files(spark, table, manifest, manifest["files"], row_ids=ids)
+    if not ids:
         return out
-    from pyspark.sql.types import StructType
+    if ident:
+        from pyspark.sql import functions as F
 
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    return _read_union(
-        spark,
-        table,
-        manifest["files"],
-        schema,
-        dvs=manifest.get("deletion_vectors"),
-        mapping=manifest.get("column_mapping"),
-    )
+        out = out.withColumn(
+            ident["col"],
+            (
+                F.lit(int(ident["start"])).cast("bigint")
+                + F.lit(int(ident["step"])).cast("bigint")
+                * F.col(ROW_ID_COL)
+            ),
+        )
+    if with_row_ids:
+        return out.withColumnRenamed(ROW_ID_COL, "_row_id")
+    return out.drop(ROW_ID_COL)
 
 
 def _register_df_view(df, name: str, global_view: bool) -> str:
@@ -2993,14 +2947,13 @@ def enable_row_tracking(table: str) -> int:
     file-path order; ranges sized by footer row counts — no data
     read), the manifest records the high-water mark, and the
     ``row-tracking`` reader feature gates older readers out. From
-    here on every data-adding commit allocates fresh ranges, DV
-    deletes retire ids without touching survivors, and OPTIMIZE and
-    the DV UPDATE path preserve ids by materializing them into the
-    rewritten files (:data:`ROW_ID_COL`), as does :func:`merge_into`
-    (surviving and matched rows keep their ids; only inserts allocate
-    — Delta's preserved-row-tracking writes). update_where's rewrite
-    path assigns fresh ids to rewritten rows — the Delta default
-    without preservation; its DV path preserves. Idempotent."""
+    here on every data-adding commit allocates fresh ranges for the
+    rows it inserts, DV deletes retire ids without touching survivors,
+    and every rewrite preserves ids by materializing them into the
+    rewritten files (:data:`ROW_ID_COL`): OPTIMIZE, DELETE, UPDATE and
+    replace_where in both modes (:func:`_rewrite_rows`), and
+    :func:`merge_into`, whose matched rows inherit their target's id —
+    Delta's preserved-row-tracking writes. Idempotent."""
     head, prev = _manifest_at(table)
     if prev.get("row_tracking"):
         return head
@@ -3031,8 +2984,9 @@ def enable_identity(
     ranges off the table high-water mark, no data rewritten and no
     global sort at any table size), values are unique by
     construction, and they inherit row tracking's stability
-    guarantees verbatim: OPTIMIZE and the DV UPDATE path preserve
-    them, DV deletes retire them, rollback reconciles them. Unlike
+    guarantees verbatim: every rewrite (OPTIMIZE, DELETE, UPDATE,
+    replace_where, MERGE) preserves them, deletes retire them,
+    rollback reconciles them. Unlike
     Delta (which materializes identity values into data files), the
     column derives at read time from the committed id ranges — the
     observable contract (uniqueness, stability, monotone allocation
@@ -3094,49 +3048,69 @@ def _guard_identity(manifest: dict, df: DataFrame) -> None:
         )
 
 
-def _with_row_ids(
-    spark: SparkSession, table: str, manifest: dict, files: list[str]
+def _attach_row_ids(
+    spark: SparkSession, table: str, manifest: dict, df: DataFrame, files
 ) -> DataFrame:
-    """Attach ``_row_id`` to a file subset of a row-tracked snapshot:
-    coalesce(materialized id column, file base + parquet row index).
-    The base map is one slim row per FILE (path, base) joined
-    broadcast on ``_metadata.file_path`` — file-count cardinality,
-    the same metadata-scale join every Delta reader carries; row
-    payloads never shuffle."""
+    """The one stable-row-id rule (Delta row tracking / Iceberg v3 row
+    lineage): on a position-keyed frame (``___f``/``___ri``) of
+    ``files``, ``ROW_ID_COL`` becomes coalesce(the materialized id,
+    the file's ``base_row_id`` + parquet row index). The base map is
+    one slim row per FILE joined broadcast on ``_metadata.file_path``
+    — file-count cardinality, the same metadata-scale join every Delta
+    reader carries; row payloads never shuffle. A file without a base
+    (a commit predating :func:`enable_row_tracking`) yields null."""
     from pyspark.sql import functions as F
+
+    stats = manifest.get("file_stats", {})
+    base_df = local_df(
+        spark,
+        [(_abs_uri(table, f), stats.get(f, {}).get("base_row_id")) for f in files],
+        "___bf string, ___base long",
+    )
+    return (
+        df.join(F.broadcast(base_df), df["___f"] == base_df["___bf"], "left")
+        .withColumn(
+            ROW_ID_COL,
+            F.coalesce(F.col(ROW_ID_COL), F.col("___base") + F.col("___ri")),
+        )
+        .drop("___bf", "___base")
+    )
+
+
+def _read_files(
+    spark: SparkSession,
+    table: str,
+    manifest: dict,
+    files: list[str],
+    keep_pos: bool = False,
+    row_ids: bool = False,
+) -> DataFrame:
+    """Read a file subset of one snapshot under its schema, deletion
+    vectors and column mapping. ``row_ids=True`` materializes each
+    row's stable id into :data:`ROW_ID_COL` (:func:`_attach_row_ids`),
+    so a rewrite that writes the frame back keeps every id;
+    ``keep_pos`` keeps the ``___f``/``___ri`` position columns.
+    Without either it is a plain :func:`_read_union`."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    schema_rt = StructType(
-        list(schema.fields) + [StructField(ROW_ID_COL, LongType(), True)]
-    )
+    if row_ids:
+        schema = StructType(
+            list(schema.fields) + [StructField(ROW_ID_COL, LongType(), True)]
+        )
     df = _read_union(
         spark,
         table,
         files,
-        schema_rt,
+        schema,
         dvs=manifest.get("deletion_vectors"),
-        keep_pos=True,
+        keep_pos=keep_pos or row_ids,
         mapping=manifest.get("column_mapping"),
     )
-    stats = manifest.get("file_stats", {})
-    base_df = local_df(spark, 
-        [
-            (_abs_uri(table, f), stats.get(f, {}).get("base_row_id"))
-            for f in files
-        ],
-        "___bf string, ___base long",
-    )
-    joined = df.join(
-        F.broadcast(base_df), df["___f"] == base_df["___bf"], "left"
-    )
-    keep = [f.name for f in schema.fields]
-    return joined.select(
-        *keep,
-        F.coalesce(
-            F.col(ROW_ID_COL), F.col("___base") + F.col("___ri")
-        ).alias("_row_id"),
-    )
+    if not row_ids or not files:
+        return df
+    df = _attach_row_ids(spark, table, manifest, df, files)
+    return df if keep_pos else df.drop("___f", "___ri")
 
 
 def _abs_uri(table: str, rel_or_abs: str) -> str:
@@ -3729,46 +3703,134 @@ def _filters_to_column(filters: list):
     return cond
 
 
-def _rewrite_matching_files(
-    spark: SparkSession, table: str, filters: list[tuple], transform
+def _rewrite_rows(
+    spark: SparkSession,
+    table: str,
+    filters: list,
+    operation: str,
+    set_exprs: dict[str, str] | None = None,
+    use_dv: bool = False,
+    insert: DataFrame | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> int:
-    """Shared DELETE/UPDATE mechanics: data skipping picks the files
-    that MAY contain matching rows (:func:`_prune_files` over the
-    same conjunctive filters as :func:`scan`), ONLY those files are
-    read and rewritten through ``transform``, and every other file
-    carries over by reference — the Delta DELETE/UPDATE file-rewrite
-    model. With clustered data (see :func:`optimize`) a selective
-    predicate rewrites a handful of files out of thousands."""
+    """The one row-level DML body behind DELETE, UPDATE and
+    replace_where. Data skipping picks the files that MAY hold rows
+    matching ``filters`` (:func:`_prune_files_any`), only those are
+    read, and every other file carries over by reference — the Delta
+    DELETE/UPDATE file-rewrite model: with clustered data (see
+    :func:`optimize`) a selective predicate touches a handful of files
+    out of thousands. Matching rows are deleted, or, with
+    ``set_exprs``, replaced by their UPDATE image.
+
+    Rewrite mode writes the candidate files back without (or with the
+    updated) matching rows. ``use_dv=True`` touches no data file: the
+    matching rows' positions join the deletion vectors and updated
+    rows append as new files. ``insert`` (replace_where's incoming
+    rows; each must match ``filters``) lands as files of its own.
+
+    Stable row ids: under row tracking the candidate read carries
+    every row's id in :data:`ROW_ID_COL` (:func:`_read_files`), so
+    kept and updated rows keep their ids (and identity values) and
+    only ``insert`` rows allocate fresh ones in :func:`_commit`."""
+    from pyspark.sql import functions as F
+
     head, prev = _manifest_at(table)
-    pcols = prev["partition_cols"]
     branches = _as_branches(filters)
     if not branches:
-        raise ValueError("refusing an unfiltered rewrite; pass filters")
+        raise ValueError(f"refusing an unfiltered {operation}; pass filters")
+    cond = _filters_to_column(branches)
+    constraints = prev.get("constraints", {})
+    gen = prev.get("generated") or {}
+    if set_exprs is not None:
+        names = {f["name"] for f in json.loads(prev["schema"])["fields"]}
+        unknown = sorted(set(set_exprs) - names)
+        if not set_exprs or unknown:
+            raise ValueError(
+                f"{operation}: SET must name columns of {table}; "
+                f"got {sorted(set_exprs)}, unknown {unknown}"
+            )
+    if insert is not None:
+        _guard_identity(prev, insert)
+        insert = _apply_generated(insert, gen)
+        if insert.filter(~cond).limit(1).count():
+            raise ValueError(
+                f"{operation}: incoming rows violate the predicate "
+                f"{filters}; every written row must match the replaced region"
+            )
+        _validate_constraints(insert, constraints)
     candidates = _prune_files_any(table, prev, branches)
-    if not candidates:
+    if not candidates and insert is None:
         return head  # stats prove nothing matches: metadata no-op
-    cand_set = set(candidates)
-    untouched = [f for f in prev["files"] if f not in cand_set]
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(prev["schema"]))
-    cand_df = _read_union(
-        spark,
-        table,
-        candidates,
-        schema,
-        dvs=prev.get("deletion_vectors"),
-        mapping=prev.get("column_mapping"),
-    )
-    rewritten, operation = transform(cand_df)
-    _validate_constraints(rewritten, prev.get("constraints", {}))
-    new = _write_data(rewritten, table, pcols)
+    track = bool(prev.get("row_tracking"))
+    files, dvs, rows = prev["files"], None, None
+    if candidates:
+        # ids only where rows are written back (a DV DELETE writes none)
+        cand = _read_files(
+            spark,
+            table,
+            prev,
+            candidates,
+            keep_pos=use_dv,
+            row_ids=track and (set_exprs is not None or not use_dv),
+        )
+        if use_dv:
+            matched = cand.filter(cond)
+            hits = matched.select(
+                F.col("___f").alias("f"), F.col("___ri").alias("p")
+            ).collect()  # bounded: one row per matching row (selective path)
+            if not hits:
+                return head
+            dvs = _dvs_with_hits(table, prev, hits)
+            cand = matched.drop("___f", "___ri")
+        else:
+            cand_set = set(candidates)
+            files = [f for f in files if f not in cand_set]
+        if set_exprs is not None:
+            # one select so every SET expression sees the OLD row (SQL
+            # UPDATE semantics), cast to the DECLARED column type (a
+            # literal like 1000.0 parses as DECIMAL and would otherwise
+            # change the written physical type mid-table)
+            types = {f.name: f.dataType for f in cand.schema.fields}
+            rows = cand.select(
+                *[
+                    F.when(cond, F.expr(set_exprs[c]).cast(types[c]))
+                    .otherwise(F.col(c))
+                    .alias(c)
+                    if c in set_exprs
+                    else F.col(c)
+                    for c in cand.columns
+                ]
+            )
+            # generated columns not explicitly SET recompute from their
+            # definitions (their sources may have changed); explicitly
+            # SET ones validate against the definition
+            recompute = [c for c in gen if c not in set_exprs]
+            rows = _apply_generated(rows.drop(*recompute), gen).select(
+                *cand.columns
+            )
+        elif not use_dv:
+            rows = cand.filter(~cond)
+    new: list[str] = []
+    stats: dict = {}
+    if rows is not None:
+        _validate_constraints(rows, constraints)
+        new = _write_data(rows, table, prev["partition_cols"])
+        stats = _collect_stats(table, new)
+        if track:
+            for e in stats.values():
+                e["materialized_row_ids"] = True
+    if insert is not None:
+        added = _write_data(insert, table, prev["partition_cols"])
+        stats.update(_collect_stats(table, added))
+        new += added
     return _commit(
         table,
         operation,
-        sorted(untouched + new),
+        sorted(files + new),
         parent=head,
-        file_stats=_collect_stats(table, new),
+        txn=txn,
+        file_stats=stats,
+        deletion_vectors=dvs,
     )
 
 
@@ -3790,51 +3852,20 @@ def delete_where(
     touched — the commit records the deleted ROW POSITIONS per file
     and every reader anti-joins them out via the parquet row index.
     At 100 TB this is the difference between rewriting a 1 GB file
-    to delete ten rows and writing a few bytes of metadata. The
-    manifest holds the positions as a JSON int list, so the mode is
-    meant for SELECTIVE deletes (the broadcast DV frame is one row
-    per deleted row); bulk deletes should rewrite — and
+    to delete ten rows and writing a few bytes of metadata. A vector
+    of up to :data:`DV_INLINE_MAX` positions is stored inline in the
+    manifest, a larger one as a binary sidecar file; the mode is
+    meant for SELECTIVE deletes (the positions collect on the driver,
+    one row per deleted row); bulk deletes should rewrite — and
     :func:`optimize` materializes accumulated DVs back into clean
-    files, clearing them."""
-    cond = _filters_to_column(filters)
-    if not use_dv:
-        return _rewrite_matching_files(
-            spark, table, filters, lambda df: (df.filter(~cond), "delete")
-        )
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    head, prev = _manifest_at(table)
-    branches = _as_branches(filters)
-    if not branches:
-        raise ValueError("refusing an unfiltered delete; pass filters")
-    candidates = _prune_files_any(table, prev, branches)
-    if not candidates:
-        return head
-    schema = StructType.fromJson(json.loads(prev["schema"]))
-    # read WITH existing DVs applied so already-deleted rows are not
-    # re-recorded (idempotent re-runs), keeping position sets minimal
-    cand = _read_union(
+    files, clearing them. Either way surviving rows keep their stable
+    row ids (see :func:`_rewrite_rows`)."""
+    return _rewrite_rows(
         spark,
         table,
-        candidates,
-        schema,
-        dvs=prev.get("deletion_vectors"),
-        keep_pos=True,
-        mapping=prev.get("column_mapping"),
-    )
-    hits = (
-        cand.filter(cond)
-        .select(F.col("___f").alias("f"), F.col("___ri").alias("p"))
-        .collect()  # bounded: one row per DELETED row (selective path)
-    )
-    if not hits:
-        return head
-    return _commit(
-        table,
-        "delete_dv",
-        parent=head,
-        deletion_vectors=_dvs_with_hits(table, prev, hits),
+        filters,
+        "delete_dv" if use_dv else "delete",
+        use_dv=use_dv,
     )
 
 
@@ -3864,135 +3895,25 @@ def update_where(
     applied to matching rows (non-matching rows in rewritten files
     pass through unchanged). CHECK constraints re-validate the
     rewritten files before anything publishes. ``filters`` accepts a
-    conjunct list or DNF branches, like :func:`delete_where`.
+    conjunct list or DNF branches, like :func:`delete_where`. An empty
+    ``set_exprs``, or a key that names no column of the table, raises
+    ``ValueError`` before anything is read.
 
     ``use_dv=True`` is the deletion-vector UPDATE (how Delta runs
     UPDATE when DVs are enabled): the OLD matching rows are marked
-    deleted by position — their files untouched — and the updated
+    deleted by position (inline or sidecar vectors, as in
+    :func:`delete_where`) — their files untouched — and the updated
     rows append as new files. Selective updates stop paying the
-    rewrite-the-whole-file tax; OPTIMIZE later materializes."""
-    from pyspark.sql import functions as F
-
-    cond = _filters_to_column(filters)
-
-    if use_dv:
-        from pyspark.sql.types import StructType
-
-        head, prev = _manifest_at(table)
-        branches = _as_branches(filters)
-        if not branches:
-            raise ValueError("refusing an unfiltered update; pass filters")
-        candidates = _prune_files_any(table, prev, branches)
-        if not candidates:
-            return head
-        schema = StructType.fromJson(json.loads(prev["schema"]))
-        track = bool(prev.get("row_tracking"))
-        read_schema = schema
-        if track:
-            from pyspark.sql.types import LongType, StructField
-
-            read_schema = StructType(
-                list(schema.fields)
-                + [StructField(ROW_ID_COL, LongType(), True)]
-            )
-        matched = _read_union(
-            spark,
-            table,
-            candidates,
-            read_schema,
-            dvs=prev.get("deletion_vectors"),
-            keep_pos=True,
-            mapping=prev.get("column_mapping"),
-        ).filter(cond)
-        if track:
-            # preserved row tracking (Delta's row-tracking-preserved
-            # UPDATE): the rewritten rows carry their OLD stable ids,
-            # materialized into the new files like OPTIMIZE does
-            stats0 = prev.get("file_stats", {})
-            base_df = local_df(spark, 
-                [
-                    (_abs_uri(table, f), stats0.get(f, {}).get("base_row_id"))
-                    for f in candidates
-                ],
-                "___bf string, ___base long",
-            )
-            matched = matched.join(
-                F.broadcast(base_df),
-                matched["___f"] == base_df["___bf"],
-                "left",
-            ).withColumn(
-                ROW_ID_COL,
-                F.coalesce(
-                    F.col(ROW_ID_COL), F.col("___base") + F.col("___ri")
-                ),
-            )
-        names = [f.name for f in schema.fields]
-        # SET expressions cast to the DECLARED column type: a literal
-        # like 1000.0 parses as DECIMAL and would otherwise silently
-        # change the written physical type mid-table
-        types = {f.name: f.dataType for f in schema.fields}
-        out_names = names + ([ROW_ID_COL] if track else [])
-        updated = matched.select(
-            *[
-                F.expr(set_exprs[c]).cast(types[c]).alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in out_names
-            ]
-        )
-        # generated columns not explicitly SET recompute from their
-        # definitions (their sources may have changed); explicitly
-        # SET ones validate against the definition
-        gen = prev.get("generated") or {}
-        recompute = [c for c in gen if c not in set_exprs]
-        if recompute:
-            updated = updated.drop(*recompute)
-        updated = _apply_generated(updated, gen).select(*out_names)
-        _validate_constraints(updated, prev.get("constraints", {}))
-        hits = matched.select(
-            F.col("___f").alias("f"), F.col("___ri").alias("p")
-        ).collect()  # bounded: one row per UPDATED row (selective path)
-        if not hits:
-            return head
-        new = _write_data(updated, table, prev["partition_cols"])
-        new_stats = _collect_stats(table, new)
-        if track:
-            for e in new_stats.values():
-                e["materialized_row_ids"] = True
-        return _commit(
-            table,
-            "update_dv",
-            sorted(prev["files"] + new),
-            parent=head,
-            file_stats=new_stats,
-            deletion_vectors=_dvs_with_hits(table, prev, hits),
-        )
-
-    def transform(df: DataFrame):
-        # one select so every SET expression sees the OLD row (SQL
-        # UPDATE semantics), not earlier assignments
-        names = list(df.columns)
-        types = {f.name: f.dataType for f in df.schema.fields}
-        cols = [
-            F.when(cond, F.expr(set_exprs[c]).cast(types[c]))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in names
-        ]
-        out = df.select(*cols)
-        gen = _manifest_at(table)[1].get("generated") or {}
-        # recompute generated columns over the rewritten frame: rows
-        # the predicate matched may have changed the sources, and
-        # untouched rows recompute to their existing values
-        recompute = [c for c in gen if c not in set_exprs]
-        if recompute:
-            out = out.drop(*recompute)
-        out = _apply_generated(out, gen).select(*names)
-        return out, "update"
-
-    return _rewrite_matching_files(spark, table, filters, transform)
+    rewrite-the-whole-file tax; OPTIMIZE later materializes. Both
+    modes keep every row's stable id (see :func:`_rewrite_rows`)."""
+    return _rewrite_rows(
+        spark,
+        table,
+        filters,
+        "update_dv" if use_dv else "update",
+        set_exprs=set_exprs,
+        use_dv=use_dv,
+    )
 
 
 def analyze_table(
@@ -4122,15 +4043,16 @@ def changes(
     that appears as BOTH delete and insert is an update —
     relabeled ``update_preimage`` / ``update_postimage`` and pairable
     by (_commit_version, _row_id) with no value diffing. This is the
-    payoff of preserved row tracking: update_where's DV path
-    materializes the OLD ids into its rewritten rows, so the pairing
-    is exact even though the row changed files. Commits predating
+    payoff of preserved row tracking: every rewrite materializes the
+    OLD ids into the rows it writes, so the pairing is exact even
+    though the row changed files. Commits predating
     :func:`enable_row_tracking` have no ids to pair — their change
     rows surface with a null ``_row_id`` and keep the plain
-    insert/delete labels (never relabeled as update halves). A
-    preserved-id file REWRITE (merge_into) surfaces every carried row
-    as a value-identical update pair — honest "rewritten in place"
-    semantics; consumers diffing values see exactly the real changes.
+    insert/delete labels (never relabeled as update halves). A file
+    REWRITE (DELETE, UPDATE, replace_where or MERGE without deletion
+    vectors) surfaces every carried row as a value-identical update
+    pair — honest "rewritten in place" semantics; consumers diffing
+    values see exactly the real changes.
 
     ``optimize`` commits are skipped entirely: compaction/Z-ORDER
     rewrites are content-identical by contract (optimize() verifies
@@ -4167,22 +4089,13 @@ def changes(
             ):
                 if not rel_paths:
                     continue
-                schema = StructType.fromJson(json.loads(manifest["schema"]))
                 # each side reads under ITS OWN deletion vectors: a
                 # removed file's already-DV-deleted rows were never
                 # visible at `prev`, so they must not surface as
                 # deletes now (and inserts respect the new commit's)
-                if with_row_ids:
-                    body = _with_row_ids(spark, table, manifest, rel_paths)
-                else:
-                    body = _read_union(
-                        spark,
-                        table,
-                        rel_paths,
-                        schema,
-                        dvs=manifest.get("deletion_vectors"),
-                        mapping=manifest.get("column_mapping"),
-                    )
+                body = _read_files(
+                    spark, table, manifest, rel_paths, row_ids=with_row_ids
+                )
                 batch = body.withColumn(
                     "_change_type", F.lit(change)
                 ).withColumn("_commit_version", F.lit(v).cast("bigint"))
@@ -4220,22 +4133,15 @@ def changes(
                 delta = {f: ps for f, ps in delta.items() if ps}
                 if not delta:
                     continue
-                schema = StructType.fromJson(json.loads(cur["schema"]))
-                read_schema = schema
-                if with_row_ids:
-                    from pyspark.sql.types import LongType, StructField
-
-                    read_schema = StructType(
-                        list(schema.fields)
-                        + [StructField(ROW_ID_COL, LongType(), True)]
-                    )
-                keyed = _read_union(
+                # read WITHOUT deletion vectors: the rows wanted are
+                # exactly the ones a vector deletes
+                keyed = _read_files(
                     spark,
                     table,
+                    {**cur, "deletion_vectors": None},
                     sorted(delta),
-                    read_schema,
                     keep_pos=True,
-                    mapping=cur.get("column_mapping"),
+                    row_ids=with_row_ids,
                 )
                 # _abs_uri hoisted per file (see _apply_dvs)
                 delta_uris = {f: _abs_uri(table, f) for f in delta}
@@ -4253,33 +4159,6 @@ def changes(
                     & (keyed["___ri"] == pos_df["___dvp"]),
                     "left_semi",
                 )
-                if with_row_ids:
-                    stats_c = cur.get("file_stats", {})
-                    base_df = local_df(spark, 
-                        [
-                            (
-                                _abs_uri(table, f),
-                                stats_c.get(f, {}).get("base_row_id"),
-                            )
-                            for f in sorted(delta)
-                        ],
-                        "___bf string, ___base long",
-                    )
-                    dv_batch = (
-                        dv_batch.join(
-                            F.broadcast(base_df),
-                            dv_batch["___f"] == base_df["___bf"],
-                            "left",
-                        )
-                        .withColumn(
-                            "_row_id",
-                            F.coalesce(
-                                F.col(ROW_ID_COL),
-                                F.col("___base") + F.col("___ri"),
-                            ),
-                        )
-                        .drop(ROW_ID_COL, "___bf", "___base")
-                    )
                 dv_batch = (
                     dv_batch.drop("___f", "___ri")
                     .withColumn("_change_type", F.lit(dv_change))
@@ -4312,6 +4191,7 @@ def changes(
         # relabel and keep their plain insert/delete labels.
         from pyspark.sql import Window as _W
 
+        out = out.withColumnRenamed(ROW_ID_COL, "_row_id")
         wrid = _W.partitionBy("_commit_version", "_row_id")
         is_upd = F.col("_row_id").isNotNull() & (
             (
@@ -5348,25 +5228,11 @@ def _optimize_files(
     the table-wide marker :func:`_try_rebase` reads."""
     if not cand:
         return _commit(table, "optimize", parent=head, extra=extra)
-    from pyspark.sql.types import StructType
-
     pcols = prev["partition_cols"]
     track = bool(prev.get("row_tracking"))
-    if track:
-        # the identity column derives from these ids at read time and
-        # is never written (enable_identity's metadata-only contract)
-        df = _with_row_ids(spark, table, prev, cand).withColumnRenamed(
-            "_row_id", ROW_ID_COL
-        )
-    else:
-        df = _read_union(
-            spark,
-            table,
-            cand,
-            StructType.fromJson(json.loads(prev["schema"])),
-            dvs=prev.get("deletion_vectors"),
-            mapping=prev.get("column_mapping"),
-        )
+    # the identity column derives from the ids at read time and is
+    # never written (enable_identity's metadata-only contract)
+    df = _read_files(spark, table, prev, cand, row_ids=track)
     n_before = df.count()
     if zorder:
         if not cluster_by or len(cluster_by) < 2:

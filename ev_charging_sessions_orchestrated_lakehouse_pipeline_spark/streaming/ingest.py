@@ -66,14 +66,14 @@ def silver_stream(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         silver = clean_sessions(batch_df)
         annotated = annotate_rows(silver, silver_row_rules())
-        good, bad = split_good_bad(annotated)
         epoch = F.lit(epoch_id).cast("bigint")
-        overwrite_partitions(
-            good.withColumn("_epoch", epoch), silver_path, ["event_date", "_epoch"]
-        )
-        overwrite_partitions(
-            bad.withColumn("_epoch", epoch), quarantine_path, ["event_date", "_epoch"]
-        )
+        with split_good_bad(annotated) as (good, bad):
+            overwrite_partitions(
+                good.withColumn("_epoch", epoch), silver_path, ["event_date", "_epoch"]
+            )
+            overwrite_partitions(
+                bad.withColumn("_epoch", epoch), quarantine_path, ["event_date", "_epoch"]
+            )
         if fault_injector is not None:
             fault_injector(epoch_id)
 
@@ -139,14 +139,14 @@ def silver_stream_snapshot(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         silver = clean_sessions(batch_df)
         annotated = annotate_rows(silver, silver_row_rules())
-        good, bad = split_good_bad(annotated)
         txn = (app_id, int(epoch_id))
-        _commit_epoch(good, table, txn, ["event_date"])
-        if fault_injector is not None:
-            fault_injector(epoch_id)
-        # quarantine rows keep event_date as a plain column but the
-        # table is unpartitioned: rejects routinely carry null dates
-        _commit_epoch(bad, quarantine_table, txn, [])
+        with split_good_bad(annotated) as (good, bad):
+            _commit_epoch(good, table, txn, ["event_date"])
+            if fault_injector is not None:
+                fault_injector(epoch_id)
+            # quarantine rows keep event_date as a plain column but the
+            # table is unpartitioned: rejects routinely carry null dates
+            _commit_epoch(bad, quarantine_table, txn, [])
 
     return (
         bronze.writeStream.foreachBatch(process_batch)

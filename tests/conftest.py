@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import sys
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 import pytest
 
@@ -77,3 +78,68 @@ def sweep_queries(names, worker, max_workers: int = 0) -> list[str]:
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+#: The reference sample: 3,395 bronze rows -> 2,330 good / 1,065
+#: quarantined. Absent outside the reference checkout; the bronze
+#: fixtures below fall back to the seeded generator then.
+SAMPLE_CSV = "/root/reference/data-samples/station_data_dataverse.csv"
+
+
+@pytest.fixture(scope="session")
+def evgen():
+    """perfbench/evgen.py imported as is (the FIXTURES §A1 bronze
+    generator); the package itself never imports perfbench."""
+    perfbench = os.path.join(REPO_ROOT, "perfbench")
+    sys.path.insert(0, perfbench)
+    try:
+        import evgen
+    finally:
+        sys.path.remove(perfbench)
+    return evgen
+
+
+@pytest.fixture
+def evgen_batch_csv(tmp_path, evgen) -> str:
+    """One 200-row generated bronze batch as a CSV file. Every batch
+    carries sessionId_null rows, so it fails completeness(sessionId)."""
+    path = tmp_path / "batch.csv"
+    path.write_text(evgen.make_batch(seed=1, day_index=0, n_rows=200).csv_text)
+    return str(path)
+
+
+@dataclass(frozen=True)
+class BronzeSample:
+    """A bronze CSV and what the silver job must make of it."""
+
+    path: str
+    rows: int
+    good: int
+    bad: int
+    #: distinct sessionId values among quarantined rows (null is one)
+    bad_ids: int
+
+
+@pytest.fixture(scope="session")
+def bronze_sample(tmp_path_factory, evgen) -> BronzeSample:
+    """The reference sample with its golden counts when present;
+    otherwise three consecutive generated days (~3.4k rows, so reruns
+    of one day touch part of the table) with the generator's own
+    expected split."""
+    if os.path.exists(SAMPLE_CSV):
+        return BronzeSample(SAMPLE_CSV, rows=3395, good=2330, bad=1065, bad_ids=1065)
+    batches = [evgen.make_batch(seed=1, day_index=d, n_rows=1110) for d in range(3)]
+    path = tmp_path_factory.mktemp("bronze") / "sessions.csv"
+    path.write_text(
+        batches[0].csv_text
+        + "".join(b.csv_text.split("\n", 1)[1] for b in batches[1:])
+    )
+    bad = sum(b.bad for b in batches)
+    null_ids = sum(b.reasons["sessionId_null"] for b in batches)
+    return BronzeSample(
+        str(path),
+        rows=sum(b.rows for b in batches),
+        good=sum(b.good for b in batches),
+        bad=bad,
+        bad_ids=bad - null_ids + (1 if null_ids else 0),
+    )

@@ -4,9 +4,6 @@ edge cases (SURVEY.md §5)."""
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -118,6 +115,20 @@ def test_split_complementary(spark):
     assert "quarantine_reason" not in good.columns
 
 
+def test_split_context_releases_cache_on_error(spark):
+    """``with split_good_bad(df) as (good, bad):`` persists for the
+    block and unpersists on exit, also when the block raises."""
+    df = spark.createDataFrame([("a", 1.0), (None, 2.0)], "id string, v double")
+    annotated = annotate_rows(df, [RowRule("bad_id", F.col("id").isNull())])
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError):
+        with split_good_bad(annotated) as (good, bad):
+            assert good.count() == 1 and bad.count() == 1
+            assert spark.sparkContext._jsc.getPersistentRDDs().size() == before + 1
+            raise RuntimeError("sink failed")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 @pytest.mark.parametrize(
     "raw,fixed",
     [
@@ -164,7 +175,7 @@ def test_attach_observes_metrics_with_no_extra_pass(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 4
 
 
-def test_attach_on_golden_silver_matches_run(spark):
+def test_attach_on_golden_silver_matches_run(spark, bronze_sample):
     """The reference pipeline's own check, observed during a count
     action over the cleaned golden CSV, reproduces run() exactly."""
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
@@ -175,9 +186,7 @@ def test_attach_on_golden_silver_matches_run(spark):
         read_bronze_csv,
     )
 
-    bronze = read_bronze_csv(
-        spark, "/root/reference/data-samples/station_data_dataverse.csv"
-    )
+    bronze = read_bronze_csv(spark, bronze_sample.path)
     silver = clean_sessions(bronze)
     baseline = (
         VerificationSuite().on_data(silver).add_check(silver_check()).run()
@@ -192,23 +201,7 @@ def test_attach_on_golden_silver_matches_run(spark):
     }
 
 
-def _evgen_batch_csv(tmp_path, n_rows: int = 200) -> str:
-    """One perfbench/evgen.py bronze batch as a CSV file. Every batch
-    carries sessionId_null rows, so it fails completeness(sessionId)."""
-    perfbench = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"
-    )
-    sys.path.insert(0, perfbench)
-    try:
-        import evgen
-    finally:
-        sys.path.remove(perfbench)
-    path = tmp_path / "batch.csv"
-    path.write_text(evgen.make_batch(seed=1, day_index=0, n_rows=n_rows).csv_text)
-    return str(path)
-
-
-def test_run_silver_releases_split_cache(spark, tmp_path):
+def test_run_silver_releases_split_cache(spark, tmp_path, evgen_batch_csv):
     """run_silver unpersists the frame split_good_bad persisted for its
     two sinks: no cache entry outlives the call."""
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
@@ -218,7 +211,7 @@ def test_run_silver_releases_split_cache(spark, tmp_path):
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     res = run_silver(
         spark,
-        _evgen_batch_csv(tmp_path),
+        evgen_batch_csv,
         str(tmp_path / "silver"),
         str(tmp_path / "quarantine"),
     )
@@ -227,7 +220,9 @@ def test_run_silver_releases_split_cache(spark, tmp_path):
 
 
 @pytest.mark.parametrize("mode", ["fail_job", "FAIL_JOB"])
-def test_run_silver_fail_job_gates_before_writes(spark, tmp_path, mode):
+def test_run_silver_fail_job_gates_before_writes(
+    spark, tmp_path, evgen_batch_csv, mode
+):
     """fail_job in any case stops at the dataset-level gate: neither
     sink is written."""
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
@@ -238,7 +233,7 @@ def test_run_silver_fail_job_gates_before_writes(spark, tmp_path, mode):
     with pytest.raises(RuntimeError, match="Data quality FAILED"):
         run_silver(
             spark,
-            _evgen_batch_csv(tmp_path),
+            evgen_batch_csv,
             str(silver),
             str(quarantine),
             fail_mode=mode,
@@ -246,7 +241,7 @@ def test_run_silver_fail_job_gates_before_writes(spark, tmp_path, mode):
     assert not silver.exists() and not quarantine.exists()
 
 
-def test_run_silver_rejects_unknown_fail_mode(spark, tmp_path):
+def test_run_silver_rejects_unknown_fail_mode(spark, tmp_path, evgen_batch_csv):
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
         run_silver,
     )
@@ -255,7 +250,7 @@ def test_run_silver_rejects_unknown_fail_mode(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown fail_mode 'bogus'"):
         run_silver(
             spark,
-            _evgen_batch_csv(tmp_path),
+            evgen_batch_csv,
             str(silver),
             str(tmp_path / "quarantine"),
             fail_mode="bogus",

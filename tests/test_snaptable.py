@@ -166,7 +166,7 @@ def test_rollback_restores_old_state_keeps_history(spark, orders, tmp_path):
     assert st.read_snapshot(spark, t, version=2).count() == 5
 
 
-def test_gold_pipeline_through_snaptable(spark, tmp_path):
+def test_gold_pipeline_through_snaptable(spark, tmp_path, bronze_sample):
     """The reference's gold flow (build_gold + overwritePartitions +
     rerun, gold_etl.py:106-156) lands on the snapshot format with
     idempotent reruns AND gains the time travel the Parquet fallback
@@ -181,7 +181,7 @@ def test_gold_pipeline_through_snaptable(spark, tmp_path):
     bronze = (
         spark.read.option("header", True)
         .option("inferSchema", True)
-        .csv("/root/reference/data-samples/station_data_dataverse.csv")
+        .csv(bronze_sample.path)
     )
     gold = build_gold(clean_sessions(bronze))
     t = str(tmp_path / "fact_ev_session")
@@ -192,8 +192,8 @@ def test_gold_pipeline_through_snaptable(spark, tmp_path):
     st.overwrite_partitions(batch, t)
     st.overwrite_partitions(batch, t)
     final = st.read_snapshot(spark, t)
-    assert final.count() == gold.count() == 3395
-    assert st.read_snapshot(spark, t, version=1).count() == 3395
+    assert final.count() == gold.count() == bronze_sample.rows
+    assert st.read_snapshot(spark, t, version=1).count() == bronze_sample.rows
     assert len(st.history(t)) == 3
 
 
@@ -227,7 +227,9 @@ def test_snapshot_read_partition_prunes_and_pushes_filters(spark, orders, tmp_pa
     assert n_f_files >= 1 and n_scanned >= 1
 
 
-def test_run_gold_snapshot_format_rerun_and_time_travel(spark, tmp_path):
+def test_run_gold_snapshot_format_rerun_and_time_travel(
+    spark, tmp_path, bronze_sample
+):
     """run_gold(table_format='snapshot'): a whole-table run then a
     one-day rerun produce the expected visible state, stay idempotent,
     and leave an auditable version history."""
@@ -241,13 +243,13 @@ def test_run_gold_snapshot_format_rerun_and_time_travel(spark, tmp_path):
     silver = str(tmp_path / "silver")
     run_silver(
         spark,
-        input_path="/root/reference/data-samples/station_data_dataverse.csv",
+        input_path=bronze_sample.path,
         silver_path=silver,
         quarantine_path=str(tmp_path / "quarantine"),
     )
     gold_path = str(tmp_path / "gold_snap")
     n1 = run_gold(spark, silver, gold_path, table_format="snapshot")
-    assert n1 == 2330
+    assert n1 == bronze_sample.good
     day = (
         st.read_snapshot(spark, gold_path)
         .select(F.min("event_date").alias("d"))
@@ -258,19 +260,20 @@ def test_run_gold_snapshot_format_rerun_and_time_travel(spark, tmp_path):
         spark, silver, gold_path, event_date=str(day), table_format="snapshot"
     )
     assert 0 < n2 < n1
-    assert st.read_snapshot(spark, gold_path).count() == 2330  # idempotent rerun
+    # idempotent rerun
+    assert st.read_snapshot(spark, gold_path).count() == bronze_sample.good
     assert [h["operation"] for h in st.history(gold_path)] == [
         "create",
         "overwrite_partitions",
     ]
-    assert st.read_snapshot(spark, gold_path, version=1).count() == 2330
+    assert st.read_snapshot(spark, gold_path, version=1).count() == bronze_sample.good
     # database + snapshot: the head registers as a session SQL view
     # (the Athena-on-Iceberg surface) instead of being refused
     n3 = run_gold(spark, silver, gold_path, database="db", table_format="snapshot")
-    assert n3 == 2330
+    assert n3 == bronze_sample.good
     assert spark.sql(
         "SELECT COUNT(*) AS n FROM db_fact_ev_session"
-    ).collect()[0].n == 2330
+    ).collect()[0].n == bronze_sample.good
     spark.catalog.dropTempView("db_fact_ev_session")
 
 
@@ -345,7 +348,9 @@ def test_txn_epoch_tracks_writer_commits(spark, orders, tmp_path):
     assert st.txn_epoch(t, "writer-b") is None
 
 
-def test_gold_stream_snapshot_kill_and_restart_exactly_once(spark, tmp_path):
+def test_gold_stream_snapshot_kill_and_restart_exactly_once(
+    spark, tmp_path, bronze_sample
+):
     """The txn-idempotent streaming sink: crash AFTER an epoch's
     snapshot commit but BEFORE its checkpoint; on restart the replayed
     epoch must be detected as already-committed and skipped — final
@@ -362,7 +367,7 @@ def test_gold_stream_snapshot_kill_and_restart_exactly_once(spark, tmp_path):
     indir.mkdir()
     import shutil as _sh
 
-    _sh.copy("/root/reference/data-samples/station_data_dataverse.csv", indir / "b.csv")
+    _sh.copy(bronze_sample.path, indir / "b.csv")
     silver_path = str(tmp_path / "silver")
     q = silver_stream(
         spark,
@@ -407,8 +412,8 @@ def test_gold_stream_snapshot_kill_and_restart_exactly_once(spark, tmp_path):
     q3.awaitTermination(180)
 
     got = st.read_snapshot(spark, table)
-    assert got.count() == 2330
-    assert got.select("sessionId").distinct().count() == 2330
+    assert got.count() == bronze_sample.good
+    assert got.select("sessionId").distinct().count() == bronze_sample.good
 
 
 def test_schema_evolution_merge_schema(spark, orders, tmp_path):
@@ -3581,6 +3586,195 @@ class TestRowIdCDF:
         # the plain file-diff CDF is untouched
         got = st.changes(spark, t, 1).collect()
         assert {r.id for r in got} == {3, 4}
+
+
+class TestDMLKeepsRowIds:
+    """One stable-row-id rule for every row-level DML path: DELETE,
+    UPDATE and replace_where (and SQL DELETE, which takes the default
+    path) keep the id of every row they do not delete, in rewrite
+    mode as in DV mode; only rows a commit inserts allocate fresh ids
+    off ``next_row_id``. Identity values derive from the ids, so they
+    stay put too."""
+
+    OPS = ["delete", "update", "replace_where", "sql_delete"]
+
+    @staticmethod
+    def _mk(spark, tmp_path, name, identity=False):
+        t = str(tmp_path / name)
+        df = (
+            spark.createDataFrame(
+                [(i, i * 10) for i in range(10)], "id int, v int"
+            )
+            .repartition(1)
+            .sortWithinPartitions("id")
+        )
+        st.create_table(df, t, [])
+        if identity:
+            st.enable_identity(t, "sk", start=100)
+        else:
+            st.enable_row_tracking(t)
+        return t
+
+    @staticmethod
+    def _run(spark, t, op):
+        """Touch row id=5 through ``op``, in its default mode."""
+        from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
+            ddl,
+        )
+
+        if op == "delete":
+            st.delete_where(spark, t, [("id", "=", 5)])
+        elif op == "update":
+            st.update_where(spark, t, [("id", "=", 5)], {"v": "v + 1"})
+        elif op == "replace_where":
+            new = spark.createDataFrame([(5, 51)], "id int, v int")
+            st.replace_where(spark, new, t, [("id", "=", 5)])
+        else:
+            ddl.execute_sql(spark, f"DELETE FROM `{t}` WHERE id = 5")
+
+    @staticmethod
+    def _ids(spark, t, col="_row_id"):
+        rows = st.read_snapshot(spark, t, with_row_ids=col == "_row_id")
+        return {r.id: r[col] for r in rows.collect()}
+
+    @pytest.mark.parametrize("op", OPS)
+    def test_tracked_survivors_keep_row_ids(self, spark, tmp_path, op):
+        t = self._mk(spark, tmp_path, f"dml_rid_{op}")
+        before = self._ids(spark, t)
+        assert before == {i: i for i in range(10)}
+        self._run(spark, t, op)
+        after = self._ids(spark, t)
+        assert {i: r for i, r in after.items() if i != 5} == {
+            i: i for i in range(10) if i != 5
+        }
+        if op == "update":
+            assert after[5] == 5  # the updated row keeps its id
+        elif op == "replace_where":
+            assert after[5] == 10  # the incoming row is an insert
+        else:
+            assert 5 not in after
+        mark = st._manifest_at(t)[1]["next_row_id"]
+        st.append(
+            spark.createDataFrame([(100, 0)], "id int, v int").coalesce(1), t
+        )
+        got = self._ids(spark, t)
+        assert got[100] == mark
+        assert len(set(got.values())) == len(got)
+
+    @pytest.mark.parametrize("op", OPS)
+    def test_identity_survivors_keep_keys(self, spark, tmp_path, op):
+        t = self._mk(spark, tmp_path, f"dml_sk_{op}", identity=True)
+        st.delete_where(spark, t, [("id", "=", 2)], use_dv=True)
+        self._run(spark, t, op)
+        after = self._ids(spark, t, "sk")
+        assert {i: k for i, k in after.items() if i != 5} == {
+            i: 100 + i for i in range(10) if i not in (2, 5)
+        }
+        if op == "update":
+            assert after[5] == 105
+        elif op == "replace_where":
+            assert after[5] == 110
+        else:
+            assert 5 not in after
+
+    def test_cdf_pairs_rewrite_update(self, spark, tmp_path):
+        t = self._mk(spark, tmp_path, "dml_rid_cdf")
+        st.update_where(spark, t, [("id", "=", 3)], {"v": "999"})
+        cdf = st.changes(spark, t, 2, with_row_ids=True).collect()
+        pre = {r._row_id: r for r in cdf if r._change_type == "update_preimage"}
+        post = {r._row_id: r for r in cdf if r._change_type == "update_postimage"}
+        assert pre[3].id == post[3].id == 3
+        assert (pre[3].v, post[3].v) == (30, 999)
+        # the file's other rows were rewritten in place: value-identical
+        # pairs, and no plain insert or delete at all
+        assert set(pre) == set(post) == set(range(10))
+        assert all(pre[i].v == post[i].v for i in range(10) if i != 3)
+        assert {r._change_type for r in cdf} == {
+            "update_preimage",
+            "update_postimage",
+        }
+        # net multiset rule: state(to) == state(from) - deletes + inserts
+        from collections import Counter
+
+        state = lambda v: Counter(
+            (r.id, r.v) for r in st.read_snapshot(spark, t, version=v).collect()
+        )
+        minus = Counter((r.id, r.v) for r in pre.values())
+        plus = Counter((r.id, r.v) for r in post.values())
+        assert state(2) - minus + plus == state(3)
+
+    def test_replace_where_refuses_identity_values(self, spark, tmp_path):
+        t = self._mk(spark, tmp_path, "dml_sk_always", identity=True)
+        supplied = spark.createDataFrame([(5, 0, 7)], "id int, v int, sk long")
+        with pytest.raises(ValueError, match="GENERATED ALWAYS AS IDENTITY"):
+            st.replace_where(spark, supplied, t, [("id", "=", 5)])
+
+    def test_truncated_identity_table_reads_empty(self, spark, tmp_path):
+        t = self._mk(spark, tmp_path, "dml_sk_empty", identity=True)
+        st.truncate_table(t)
+        assert st.read_snapshot(spark, t).collect() == []
+        got = st.read_snapshot(spark, t, with_row_ids=True)
+        assert got.columns == ["id", "v", "_row_id", "sk"]
+
+    def test_replace_where_dnf_equals_one_replace_per_branch(
+        self, spark, tmp_path
+    ):
+        rows = [(i, i * 10) for i in range(20)]
+        branches = [[("id", "=", 1)], [("id", ">=", 15), ("v", "<", 170)]]
+        new = [(1, -1), (15, -15), (16, -16)]
+        tables = []
+        for name in ("dnf_once", "dnf_each"):
+            t = str(tmp_path / name)
+            st.create_table(
+                spark.createDataFrame(rows, "id int, v int").repartition(3, "id"),
+                t,
+                [],
+            )
+            tables.append(t)
+        once, each = tables
+        st.replace_where(
+            spark, spark.createDataFrame(new, "id int, v int"), once, branches
+        )
+        st.replace_where(
+            spark, spark.createDataFrame(new[:1], "id int, v int"), each, branches[0]
+        )
+        st.replace_where(
+            spark, spark.createDataFrame(new[1:], "id int, v int"), each, branches[1]
+        )
+        got = sorted(st.read_snapshot(spark, once).collect())
+        assert got == sorted(st.read_snapshot(spark, each).collect())
+        assert (1, -1) in got and (17, 170) in got and (16, 160) not in got
+        # every incoming row must still match one branch
+        with pytest.raises(ValueError, match="violate the predicate"):
+            st.replace_where(
+                spark, spark.createDataFrame([(3, 0)], "id int, v int"), once, branches
+            )
+
+    @pytest.mark.parametrize("use_dv", [False, True])
+    @pytest.mark.parametrize("set_exprs", [{}, {"vv": "0"}])
+    def test_update_without_a_column_to_set_refuses(
+        self, spark, tmp_path, use_dv, set_exprs
+    ):
+        """An empty SET map, or a SET key naming no column, is refused
+        before anything commits: it must not pass as a DELETE of the
+        matching rows, nor as an UPDATE that changes nothing."""
+        t = self._mk(spark, tmp_path, "dml_set_refused")
+        head = st.current_version(t)
+        with pytest.raises(ValueError, match="SET must name columns"):
+            st.update_where(spark, t, [("id", "=", 5)], set_exprs, use_dv=use_dv)
+        assert st.current_version(t) == head
+        assert self._ids(spark, t) == {i: i for i in range(10)}
+
+
+def test_one_dml_body_and_one_row_id_rule():
+    """DELETE, UPDATE and replace_where share snaptable._rewrite_rows,
+    and the base-row-id map that derives stable ids is built in one
+    place (snaptable._attach_row_ids)."""
+    src = open(st.__file__).read()
+    assert src.count('"___bf string, ___base long"') == 1
+    assert src.count("refusing an unfiltered") == 1
+    assert not hasattr(st, "_rewrite_matching_files")
+    assert not hasattr(st, "_with_row_ids")
 
 
 def test_rollback_keeps_row_ids(spark, tmp_path):

@@ -19,13 +19,10 @@ from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources.readers 
     read_fixture,
 )
 
-SAMPLE_CSV = "/root/reference/data-samples/station_data_dataverse.csv"
-
-
-def test_silver_stream_matches_batch(spark, tmp_path):
+def test_silver_stream_matches_batch(spark, tmp_path, bronze_sample):
     indir = tmp_path / "in"
     indir.mkdir()
-    shutil.copy(SAMPLE_CSV, indir / "batch1.csv")
+    shutil.copy(bronze_sample.path, indir / "batch1.csv")
 
     q = silver_stream(
         spark,
@@ -38,8 +35,36 @@ def test_silver_stream_matches_batch(spark, tmp_path):
 
     good = spark.read.parquet(str(tmp_path / "silver"))
     bad = spark.read.parquet(str(tmp_path / "quarantine"))
-    assert good.count() == 2330
-    assert bad.count() == 1065
+    assert good.count() == bronze_sample.good
+    assert bad.count() == bronze_sample.bad
+
+
+@pytest.mark.parametrize("sink", ["parquet", "snapshot"])
+def test_silver_stream_releases_split_cache(spark, tmp_path, evgen, sink):
+    """Every epoch unpersists the frame split_good_bad persisted for
+    its two sinks: two one-file epochs leave no cache entry behind."""
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming import (
+        silver_stream_snapshot,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    for day in (0, 1):
+        batch = evgen.make_batch(seed=1, day_index=day, n_rows=100)
+        (indir / f"day{day}.csv").write_text(batch.csv_text)
+    start = silver_stream if sink == "parquet" else silver_stream_snapshot
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    q = start(
+        spark,
+        str(indir),
+        str(tmp_path / "silver"),
+        str(tmp_path / "quarantine"),
+        str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(180)
+    assert q.lastProgress["batchId"] == 1  # one epoch per file
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
 def test_windowed_counts_stream_vs_batch(spark, sf_dir, tmp_path):
@@ -257,7 +282,7 @@ def test_session_windows_stream_vs_batch(spark, sf_dir, tmp_path):
     assert got == batch
 
 
-def test_gold_stream_matches_batch_gold(spark, tmp_path):
+def test_gold_stream_matches_batch_gold(spark, tmp_path, bronze_sample):
     """Full streaming medallion: silver_stream(CSV) -> gold_stream
     (silver parquet file stream) must land the same gold fact rows
     as the batch run_gold over the same silver data."""
@@ -273,7 +298,7 @@ def test_gold_stream_matches_batch_gold(spark, tmp_path):
 
     indir = tmp_path / "in"
     indir.mkdir()
-    _sh.copy(SAMPLE_CSV, indir / "batch1.csv")
+    _sh.copy(bronze_sample.path, indir / "batch1.csv")
     silver_path = str(tmp_path / "silver")
     q = silver_stream(
         spark,
@@ -298,14 +323,16 @@ def test_gold_stream_matches_batch_gold(spark, tmp_path):
 
     got = spark.read.parquet(gold_path)
     expected = build_gold(silver_batch)
-    assert got.count() == 2330 == expected.count()
+    assert got.count() == bronze_sample.good == expected.count()
     key = lambda r: (r.sessionId, r.event_date)
     g = {key(r): (r.session_duration_minutes, r.avg_cost_per_kwh) for r in got.collect()}
     e = {key(r): (r.session_duration_minutes, r.avg_cost_per_kwh) for r in expected.collect()}
     assert g == e
 
 
-def test_silver_stream_kill_and_restart_exactly_once(spark, tmp_path):
+def test_silver_stream_kill_and_restart_exactly_once(
+    spark, tmp_path, bronze_sample
+):
     """Kill the silver stream AFTER a batch's sink writes but BEFORE
     its epoch commit (the worst-case crash point for foreachBatch),
     restart it, and assert the final silver/quarantine state has no
@@ -319,9 +346,9 @@ def test_silver_stream_kill_and_restart_exactly_once(spark, tmp_path):
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    lines = open(SAMPLE_CSV).read().splitlines()
+    lines = open(bronze_sample.path).read().splitlines()
     header, rows = lines[0], lines[1:]
-    assert len(rows) == 3395
+    assert len(rows) == bronze_sample.rows
     indir = tmp_path / "in"
     indir.mkdir()
     for i, chunk in enumerate((rows[:1200], rows[1200:2400], rows[2400:])):
@@ -366,10 +393,10 @@ def test_silver_stream_kill_and_restart_exactly_once(spark, tmp_path):
     good = spark.read.parquet(silver_path)
     bad = spark.read.parquet(quarantine_path)
     # exactly-once: golden split totals, nothing lost, nothing doubled
-    assert good.count() == 2330
-    assert bad.count() == 1065
-    assert good.select("sessionId").distinct().count() == 2330
-    assert bad.select("sessionId").distinct().count() == 1065
+    assert good.count() == bronze_sample.good
+    assert bad.count() == bronze_sample.bad
+    assert good.select("sessionId").distinct().count() == bronze_sample.good
+    assert bad.select("sessionId").distinct().count() == bronze_sample.bad_ids
     # the replayed epoch's rows live under their epoch partition once
     assert good.select("_epoch").distinct().count() >= 2
 
@@ -1314,7 +1341,9 @@ def test_stream_stream_left_outer_emits_unmatched_after_watermark(
     assert [(r[0], r[1], r[2]) for r in matched] == [(1, 101, 201)]
 
 
-def test_silver_stream_snapshot_kill_and_replay_state_identical(spark, tmp_path):
+def test_silver_stream_snapshot_kill_and_replay_state_identical(
+    spark, tmp_path, bronze_sample
+):
     """Streaming silver ingest INTO THE ACID SNAPSHOT TABLE (round-11
     VERDICT item 5): kill the stream between the good-table commit and
     the epoch checkpoint, restart, and the replayed batch is SKIPPED by
@@ -1329,7 +1358,7 @@ def test_silver_stream_snapshot_kill_and_replay_state_identical(spark, tmp_path)
         silver_stream_snapshot,
     )
 
-    lines = open(SAMPLE_CSV).read().splitlines()
+    lines = open(bronze_sample.path).read().splitlines()
     header, rows = lines[0], lines[1:]
     indir = tmp_path / "in"
     indir.mkdir()
@@ -1365,9 +1394,9 @@ def test_silver_stream_snapshot_kill_and_replay_state_identical(spark, tmp_path)
     good = st.read_snapshot(spark, table)
     bad = st.read_snapshot(spark, qtable)
     # exactly-once: golden split totals, nothing lost, nothing doubled
-    assert good.count() == 2330
-    assert bad.count() == 1065
-    assert good.select("sessionId").distinct().count() == 2330
+    assert good.count() == bronze_sample.good
+    assert bad.count() == bronze_sample.bad
+    assert good.select("sessionId").distinct().count() == bronze_sample.good
     # the replayed epoch did NOT create a duplicate good-table version:
     # exactly one commit per epoch (create + 2 appends = v3)
     assert st.current_version(table) == 3
@@ -1613,7 +1642,9 @@ def test_snapshot_stream_source_starting_version(spark, tmp_path):
     assert rows == [(3, "A", 30, 2)]
 
 
-def test_streaming_medallion_through_snapshot_tables(spark, tmp_path):
+def test_streaming_medallion_through_snapshot_tables(
+    spark, tmp_path, bronze_sample
+):
     """The full medallion with the LAKE FORMAT as the streaming
     fabric: bronze CSV -> silver ACID snapshot table (foreachBatch
     sink, txn epochs) -> `snapshot_stream` SOURCE tails the silver
@@ -1631,7 +1662,7 @@ def test_streaming_medallion_through_snapshot_tables(spark, tmp_path):
     )
     from pyspark.sql import functions as F
 
-    lines = open(SAMPLE_CSV).read().splitlines()
+    lines = open(bronze_sample.path).read().splitlines()
     header, rows = lines[0], lines[1:]
     indir = tmp_path / "in"
     indir.mkdir()
