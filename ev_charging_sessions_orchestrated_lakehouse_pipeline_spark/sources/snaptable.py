@@ -50,6 +50,12 @@ Log-structured design (the same shape as the Delta/Iceberg logs):
 - **One commit contract**: :func:`_commit` alone decides what a new
   manifest carries forward from its parent; callers pass only what
   their operation changes.
+- **One write path**: every data-adding commit admits its new rows
+  through :func:`_admit` (identity refusal, generated columns, CHECK
+  constraints) and writes its files, with their footer stats, through
+  :func:`_write_data` under the column mapping that commit lands with;
+  :func:`_fresh_aliases` is the one rule that gives a new column a
+  physical alias.
 
 At 100 TB the manifests stay tiny (file paths + counts, not data) and
 the read plan is exactly the same partition-pruned Parquet scan as a
@@ -899,44 +905,38 @@ def _try_rebase(
     return head, new_files, new_stats, new_dv
 
 
-def _head_mapping(table: str) -> dict:
-    """The current head's column mapping {logical: physical} (empty
-    before the table exists or when no rename/drop ever happened)."""
-    head = current_version(table)
-    if head is None:
-        return {}
-    return _read_manifest(table, head).get("column_mapping") or {}
-
-
 def _write_data(
     df: DataFrame,
     table: str,
     partition_cols: list[str],
-    mapping: dict | None = None,
-) -> list[str]:
+    mapping: dict,
+) -> tuple[list[str], dict]:
     """Write a commit's data files into the shared data/ tree and
     return the relative paths of exactly the files this write
-    produced. The write STAGES into a per-commit temp directory and
-    renames each file into place (same filesystem — metadata-only
-    moves): attribution is exact by construction, so two writers
-    writing into the same table CONCURRENTLY can never claim each
-    other's files (a before/after listing diff would — the
-    reconciliation path in :func:`_try_rebase` depends on this).
-    Crashed writes leave an orphaned staging dir; :func:`vacuum`
-    sweeps those past the grace window.
+    produced, with their footer stats (:func:`_collect_stats`). The
+    write STAGES into a per-commit temp directory and renames each
+    file into place (same filesystem — metadata-only moves):
+    attribution is exact by construction, so two writers writing into
+    the same table CONCURRENTLY can never claim each other's files (a
+    before/after listing diff would — the reconciliation path in
+    :func:`_try_rebase` depends on this). Crashed writes leave an
+    orphaned staging dir; :func:`vacuum` sweeps those past the grace
+    window.
 
     Under column mapping, files ALWAYS carry physical names — the
     incoming frame is logical, so mapped columns rename before the
     write (the one write chokepoint every commit path goes through,
     so appends, rewrites, OPTIMIZE, and MERGE all stay consistent
-    with files written before a rename). ``mapping`` defaults to the
-    current head's; callers mid-evolution pass the updated one."""
-    if mapping is None:
-        mapping = _head_mapping(table)
+    with files written before a rename). ``mapping`` is the column
+    mapping of the manifest the commit lands with: the parent's, a
+    reconciled one, or ``{}`` for create and replace. A frame that
+    carries :data:`ROW_ID_COL` (stable ids preserved through a
+    rewrite) marks every file it writes ``materialized_row_ids``."""
+    cols = df.columns
     renames = {
         logical: phys
         for logical, phys in mapping.items()
-        if logical != phys and logical in df.columns
+        if logical != phys and logical in cols
     }
     if renames:
         # one atomic select, NOT withColumnsRenamed: chained renames
@@ -946,9 +946,7 @@ def _write_data(
         # holds two o_totalprice columns and the second rename hits
         # both). Aliasing every column against the ORIGINAL frame in
         # a single projection is order-independent.
-        df = df.select(
-            *[df[c].alias(renames.get(c, c)) for c in df.columns]
-        )
+        df = df.select(*[df[c].alias(renames.get(c, c)) for c in cols])
     data = _data_dir(table)
     os.makedirs(data, exist_ok=True)
     stage = os.path.join(data, f"{_STAGING_PREFIX}{uuid.uuid4().hex}")
@@ -971,7 +969,12 @@ def _write_data(
             os.rename(os.path.join(dirpath, f), dst)
             produced.append(os.path.relpath(dst, table))
     shutil.rmtree(stage, ignore_errors=True)
-    return sorted(produced)
+    produced.sort()
+    stats = _collect_stats(table, produced)
+    if ROW_ID_COL in cols:
+        for e in stats.values():
+            e["materialized_row_ids"] = True
+    return produced, stats
 
 
 def _collect_stats(table: str, rel_paths: list[str]) -> dict:
@@ -1513,6 +1516,24 @@ def _apply_generated(df: DataFrame, generated: dict[str, str]) -> DataFrame:
     return df
 
 
+def _admit(manifest: dict, df: DataFrame) -> DataFrame:
+    """The one admission gate for NEW rows, checked against the state
+    the commit lands in (``manifest``): a GENERATED ALWAYS identity
+    column is refused (the commit allocates its values), generated
+    columns are computed or validated (:func:`_apply_generated`) and
+    CHECK constraints are enforced (:func:`_validate_constraints`).
+    Rows a rewrite carries over (DML, OPTIMIZE) do not pass it."""
+    ident = (manifest.get("identity") or {}).get("col")
+    if ident and ident in df.columns:
+        raise ValueError(
+            f"column {ident!r} is GENERATED ALWAYS AS IDENTITY; "
+            "writers must not supply it"
+        )
+    df = _apply_generated(df, manifest.get("generated") or {})
+    _validate_constraints(df, manifest.get("constraints") or {})
+    return df
+
+
 def txn_epoch(
     table: str, app_id: str, at_version: int | None = None
 ) -> int | None:
@@ -1587,10 +1608,9 @@ def create_table(
     partition_cols = partition_cols or []
     if current_version(table) is not None:
         raise ValueError(f"{table} already exists; use overwrite_table")
-    df = _apply_generated(df, generated or {})
+    df = _admit({"generated": generated, "constraints": constraints}, df)
     _validate_spec(partition_cols, set(df.columns))
-    _validate_constraints(df, constraints or {})
-    files = _write_data(df, table, partition_cols)
+    files, stats = _write_data(df, table, partition_cols, {})
     return _commit(
         table,
         "create",
@@ -1599,7 +1619,7 @@ def create_table(
         df.schema.json(),
         parent=None,
         txn=txn,
-        file_stats=_collect_stats(table, files),
+        file_stats=stats,
         constraints=constraints,
         generated=generated,
     )
@@ -1667,6 +1687,21 @@ def _evolve_schema(prev_schema_json: str, df: DataFrame, merge_schema: bool) -> 
     return StructType(old.fields + extra).json()
 
 
+def _fresh_aliases(prev: dict, mapping: dict, names, version: int) -> dict:
+    """The one physical-alias rule (the resurrection guard): each new
+    logical column in ``names`` whose name is still claimed physically
+    — a mapped physical name in ``mapping`` or a retired one — gets a
+    fresh ``<name>__r<version>`` alias. Otherwise files written before
+    a rename or drop would surface their unrelated stale values under
+    the new column instead of nulls. Returns ``mapping`` plus those
+    aliases."""
+    claimed = set(mapping.values()) | set(prev.get("retired_columns") or [])
+    return {
+        **mapping,
+        **{n: f"{n}__r{version}" for n in names if n in claimed},
+    }
+
+
 def append(
     df: DataFrame,
     table: str,
@@ -1680,34 +1715,22 @@ def append(
     evolution — the in-engine twin of the reference crawler's
     UPDATE_IN_DATABASE policy, infra/glue-crawlers.tf:47-50, and of
     Delta's mergeSchema): the manifest schema gains the new fields
-    and earlier files read as null for them."""
+    and earlier files read as null for them; a new column whose name
+    is still claimed physically takes a fresh alias
+    (:func:`_fresh_aliases`)."""
     head, prev = _manifest_at(table)
-    _guard_identity(prev, df)
-    df = _apply_generated(df, prev.get("generated") or {})
+    df = _admit(prev, df)
     schema_json = _evolve_schema(prev["schema"], df, merge_schema)
-    mapping = dict(prev.get("column_mapping") or {})
-    if schema_json != prev["schema"]:
-        # Resurrection guard: a NEW logical column whose name matches
-        # a physical name still present in old data files (a column
-        # renamed away or dropped earlier) must get a fresh physical
-        # alias — otherwise old files would surface their unrelated
-        # stale values under the new column instead of nulls.
-        from pyspark.sql.types import StructType
-
-        old_names = {
-            f.name
-            for f in StructType.fromJson(json.loads(prev["schema"])).fields
-        }
-        used_physical = (
-            {mapping.get(n, n) for n in old_names}
-            | set(mapping.values())
-            | set(prev.get("retired_columns") or [])
-        )
-        for f in StructType.fromJson(json.loads(schema_json)).fields:
-            if f.name not in old_names and f.name in used_physical:
-                mapping[f.name] = f"{f.name}__r{head + 1}"
-    _validate_constraints(df, prev.get("constraints", {}))
-    new = _write_data(df, table, prev["partition_cols"], mapping=mapping)
+    old = {f["name"] for f in json.loads(prev["schema"])["fields"]}
+    added = [
+        f["name"]
+        for f in json.loads(schema_json)["fields"]
+        if f["name"] not in old
+    ]
+    mapping = _fresh_aliases(
+        prev, prev.get("column_mapping") or {}, added, head + 1
+    )
+    new, stats = _write_data(df, table, prev["partition_cols"], mapping)
     return _commit(
         table,
         _operation,
@@ -1715,7 +1738,7 @@ def append(
         schema_json=schema_json,
         parent=head,
         txn=txn,
-        file_stats=_collect_stats(table, new),
+        file_stats=stats,
         column_mapping=mapping,
         extra=_extra,
     )
@@ -1754,8 +1777,10 @@ def replace_table(
     stays sticky, as with every feature — DROP FEATURE removes it);
     without the reset a replace would either accept writer-supplied
     values for an always-generated column or declare identity on a
-    column absent from the new schema. Table properties carry over
-    (Delta keeps them too), so an appendOnly declaration still
+    column absent from the new schema. The new files are written
+    under that empty mapping too, so a column renamed before the
+    replace reads its values back, not nulls. Table properties carry
+    over (Delta keeps them too), so an appendOnly declaration still
     refuses the replace."""
     head = current_version(table)
     if head is None:
@@ -1765,7 +1790,7 @@ def replace_table(
         prev["partition_cols"] if partition_cols is None else partition_cols
     )
     _validate_spec(pcols, set(df.columns))
-    files = _write_data(df, table, pcols)
+    files, stats = _write_data(df, table, pcols, {})
     return _commit(
         table,
         "replace",
@@ -1774,7 +1799,7 @@ def replace_table(
         df.schema.json(),
         head,
         txn=txn,
-        file_stats=_collect_stats(table, files),
+        file_stats=stats,
         constraints={},
         column_mapping={},
         retired_columns=[],
@@ -1786,7 +1811,6 @@ def replace_table(
 def overwrite_table(
     df: DataFrame,
     table: str,
-    materialized_row_ids: bool = False,
     next_row_id: int | None = None,
     parent_version: int | None = None,
     txn: tuple[str, int] | None = None,
@@ -1800,10 +1824,10 @@ def overwrite_table(
     their physical alias, and a new schema column colliding with a
     still-claimed physical name (a surviving mapped physical or a
     retired one — e.g. the frame reintroduces column ``a`` after
-    RENAME a->b) gets a fresh physical alias, exactly as append's
-    resurrection guard does. Carrying the mapping blind would commit a
-    head whose read-side rename (physical->logical) targets a column
-    absent from the committed schema — an unreadable table.
+    RENAME a->b) gets a fresh physical alias (:func:`_fresh_aliases`).
+    Carrying the mapping blind would commit a head whose read-side
+    rename (physical->logical) targets a column absent from the
+    committed schema — an unreadable table.
 
     ``parent_version``: same contract as
     :func:`overwrite_partitions` — the snapshot the rewrite was
@@ -1814,33 +1838,22 @@ def overwrite_table(
         current_version(table) if parent_version is None else int(parent_version)
     )
     if head is None:
-        return create_table(df, table)
+        return create_table(df, table, txn=txn)
     prev = _read_manifest(table, head)
-    _guard_identity(prev, df)
-    df = _apply_generated(df, prev.get("generated") or {})
-    _validate_constraints(df, prev.get("constraints", {}))
-    # materialized_row_ids: the frame carries ROW_ID_COL (preserved
-    # row tracking through a rewrite, e.g. merge_into) — the column
-    # lands in the data files but NEVER in the committed schema
-    new_names = {
-        f.name for f in df.schema.fields if f.name != ROW_ID_COL
-    }
-    mapping = {
+    df = _admit(prev, df)
+    # a frame carrying ROW_ID_COL (preserved row tracking through a
+    # rewrite, e.g. merge_into) lands it in the data files but NEVER
+    # in the committed schema
+    new_names = set(df.columns) - {ROW_ID_COL}
+    kept = {
         logical: physical
         for logical, physical in (prev.get("column_mapping") or {}).items()
         if logical in new_names
     }
-    used_physical = set(mapping.values()) | set(
-        prev.get("retired_columns") or []
+    mapping = _fresh_aliases(
+        prev, kept, sorted(new_names - set(kept)), head + 1
     )
-    for name in sorted(new_names - set(mapping)):
-        if name in used_physical:
-            mapping[name] = f"{name}__r{head + 1}"
-    new = _write_data(df, table, prev["partition_cols"], mapping=mapping)
-    stats = _collect_stats(table, new)
-    if materialized_row_ids:
-        for e in stats.values():
-            e["materialized_row_ids"] = True
+    new, stats = _write_data(df, table, prev["partition_cols"], mapping)
     return _commit(
         table,
         "overwrite",
@@ -1863,7 +1876,6 @@ def overwrite_partitions(
     table: str,
     txn: tuple[str, int] | None = None,
     schema_json: str | None = None,
-    materialized_row_ids: bool = False,
     next_row_id: int | None = None,
     parent_version: int | None = None,
 ) -> int:
@@ -1903,10 +1915,10 @@ def overwrite_partitions(
             f"spec (e.g. {legacy[0]}); run optimize() to migrate them to "
             f"{pcols} before dynamic partition overwrite"
         )
-    _guard_identity(prev, df)
-    df = _apply_generated(df, prev.get("generated") or {})
-    _validate_constraints(df, prev.get("constraints", {}))
-    new = _write_data(df, table, pcols)
+    df = _admit(prev, df)
+    new, new_stats = _write_data(
+        df, table, pcols, prev.get("column_mapping") or {}
+    )
     hive = _spec_names(pcols)
     touched = {tuple(sorted(_partition_values(f, hive).items())) for f in new}
     kept = [
@@ -1914,10 +1926,6 @@ def overwrite_partitions(
         for f in prev["files"]
         if tuple(sorted(_partition_values(f, hive).items())) not in touched
     ]
-    new_stats = _collect_stats(table, new)
-    if materialized_row_ids:
-        for e in new_stats.values():
-            e["materialized_row_ids"] = True
     return _commit(
         table,
         "overwrite_partitions",
@@ -2652,7 +2660,7 @@ def drop_column(table: str, col: str) -> int:
     physical name is recorded as retired, and no data file changes —
     old versions still time-travel to the full schema. A later
     ``append(..., merge_schema=True)`` that re-adds the same logical
-    name gets a FRESH physical alias (see :func:`append`'s
+    name gets a FRESH physical alias (:func:`_fresh_aliases`, the
     resurrection guard), so dropped data can never silently resurface
     under a new column."""
     head, prev = _manifest_at(table)
@@ -2699,12 +2707,11 @@ def add_columns(
     (the full DDL type parser lives JVM-side); atomic types parse
     driver-only so the CLI's metadata actions stay JVM-free.
 
-    Resurrection guard (same rule as :func:`append` /
-    :func:`overwrite_table`): a new logical name colliding with a
-    still-claimed or retired PHYSICAL name takes a fresh physical
-    alias in the column mapping — otherwise ``RENAME a->b`` followed
-    by ``ADD COLUMNS (a int)`` would read b's old data back out under
-    the new column."""
+    Resurrection guard (:func:`_fresh_aliases`, the one physical-alias
+    rule): a new logical name colliding with a still-claimed or
+    retired PHYSICAL name takes a fresh physical alias in the column
+    mapping — otherwise ``RENAME a->b`` followed by ``ADD COLUMNS (a
+    int)`` would read b's old data back out under the new column."""
     head, prev = _manifest_at(table)
     from pyspark.sql.types import StructField, StructType
 
@@ -2737,15 +2744,9 @@ def add_columns(
         raise ValueError(
             f"column(s) {sorted(clash)} already exist in {table}"
         )
-    mapping = dict(prev.get("column_mapping") or {})
-    used_physical = (
-        {mapping.get(n, n) for n in names}
-        | set(mapping.values())
-        | set(prev.get("retired_columns") or [])
+    mapping = _fresh_aliases(
+        prev, prev.get("column_mapping") or {}, new_names, head + 1
     )
-    for f in added:
-        if f.name in used_physical:
-            mapping[f.name] = f"{f.name}__r{head + 1}"
     new_schema = StructType(
         list(schema.fields)
         + [StructField(f.name, f.dataType, True) for f in added]
@@ -3035,17 +3036,6 @@ def enable_identity(
     return _commit(
         table, "enable_identity", parent=head, file_stats=stats, extra=extra
     )
-
-
-def _guard_identity(manifest: dict, df: DataFrame) -> None:
-    """GENERATED ALWAYS enforcement: incoming frames must not carry
-    the identity column — its values are allocated by the commit."""
-    ident = manifest.get("identity")
-    if ident and ident["col"] in df.columns:
-        raise ValueError(
-            f"column {ident['col']!r} is GENERATED ALWAYS AS IDENTITY; "
-            "writers must not supply it"
-        )
 
 
 def _attach_row_ids(
@@ -3739,7 +3729,6 @@ def _rewrite_rows(
     if not branches:
         raise ValueError(f"refusing an unfiltered {operation}; pass filters")
     cond = _filters_to_column(branches)
-    constraints = prev.get("constraints", {})
     gen = prev.get("generated") or {}
     if set_exprs is not None:
         names = {f["name"] for f in json.loads(prev["schema"])["fields"]}
@@ -3750,14 +3739,12 @@ def _rewrite_rows(
                 f"got {sorted(set_exprs)}, unknown {unknown}"
             )
     if insert is not None:
-        _guard_identity(prev, insert)
-        insert = _apply_generated(insert, gen)
+        insert = _admit(prev, insert)
         if insert.filter(~cond).limit(1).count():
             raise ValueError(
                 f"{operation}: incoming rows violate the predicate "
                 f"{filters}; every written row must match the replaced region"
             )
-        _validate_constraints(insert, constraints)
     candidates = _prune_files_any(table, prev, branches)
     if not candidates and insert is None:
         return head  # stats prove nothing matches: metadata no-op
@@ -3810,19 +3797,20 @@ def _rewrite_rows(
             )
         elif not use_dv:
             rows = cand.filter(~cond)
+    if rows is not None:
+        _validate_constraints(rows, prev.get("constraints", {}))
     new: list[str] = []
     stats: dict = {}
-    if rows is not None:
-        _validate_constraints(rows, constraints)
-        new = _write_data(rows, table, prev["partition_cols"])
-        stats = _collect_stats(table, new)
-        if track:
-            for e in stats.values():
-                e["materialized_row_ids"] = True
-    if insert is not None:
-        added = _write_data(insert, table, prev["partition_cols"])
-        stats.update(_collect_stats(table, added))
-        new += added
+    for frame in (rows, insert):
+        if frame is not None:
+            written, written_stats = _write_data(
+                frame,
+                table,
+                prev["partition_cols"],
+                prev.get("column_mapping") or {},
+            )
+            new += written
+            stats.update(written_stats)
     return _commit(
         table,
         operation,
@@ -5221,8 +5209,8 @@ def _optimize_files(
 ) -> int:
     """OPTIMIZE's one rewrite body: read ``cand`` (deletion vectors
     materialize; under row tracking the stable ids materialize into
-    the ROW_ID_COL column) → lay out → write → row-count guard →
-    stats → commit. Every live file outside ``cand`` carries by
+    the ROW_ID_COL column) → lay out → write with stats → row-count
+    guard → commit. Every live file outside ``cand`` carries by
     reference with its stats and deletion vector; an empty ``cand``
     writes nothing and still commits one version. ``extra`` carries
     the table-wide marker :func:`_try_rebase` reads."""
@@ -5265,7 +5253,9 @@ def _optimize_files(
         ).sortWithinPartitions(*cluster_by)
     else:
         out = df.coalesce(files_per_partition)
-    new = _write_data(out, table, pcols)
+    new, new_stats = _write_data(
+        out, table, pcols, prev.get("column_mapping") or {}
+    )
     new_paths = [os.path.join(table, f) for f in new]
     n_after = (
         spark.read.option("basePath", _data_dir(table)).parquet(*new_paths).count()
@@ -5278,10 +5268,6 @@ def _optimize_files(
         raise RuntimeError(
             f"optimize row-count mismatch on {table}: {n_after} != {n_before}"
         )
-    new_stats = _collect_stats(table, new)
-    if track:
-        for e in new_stats.values():
-            e["materialized_row_ids"] = True
     rewritten = set(cand)
     return _commit(
         table,
@@ -5386,16 +5372,13 @@ def merge_into(
         and not not_matched_by_source_delete
         and not not_matched_by_source
     )
-    if evolved_cols:
+    mapping = man.get("column_mapping") or {}
+    if _fresh_aliases(man, mapping, evolved_cols, head + 1) != mapping:
         # a new logical name colliding with a still-claimed physical
-        # name (mapped or retired) needs the resurrection-guard
-        # remapping that only the full overwrite path implements —
-        # take it (correct, just unpruned) in that rare case
-        claimed = set((man.get("column_mapping") or {}).values()) | set(
-            man.get("retired_columns") or []
-        )
-        if any(c in claimed for c in evolved_cols):
-            pruned = False
+        # name needs the fresh alias that only the full overwrite
+        # path commits — take it (correct, just unpruned) in that
+        # rare case
+        pruned = False
     if pruned:
         touched = [
             tuple(r) for r in source.select(*pcols).distinct().collect()
@@ -5519,7 +5502,6 @@ def merge_into(
                 if evolved_cols
                 else None
             ),
-            materialized_row_ids=track,
             next_row_id=next_mark,
             # commit against the head the WHOLE merge was computed on
             # (target read, dup probe, insert count, id allocation):
@@ -5533,7 +5515,6 @@ def merge_into(
     return overwrite_table(
         merged,
         table,
-        materialized_row_ids=track,
         next_row_id=next_mark,
         parent_version=head,
         txn=txn,

@@ -447,6 +447,43 @@ def test_overwrite_after_rename_reconciles_mapping(spark, orders, tmp_path):
     assert st.scan(spark, t, [("total_price", ">", 0)]).count() == 500
 
 
+@pytest.mark.parametrize("how", ["api", "sql"])
+def test_replace_after_rename_reads_values(spark, tmp_path, how):
+    """CREATE OR REPLACE after RENAME a->b commits an empty column
+    mapping, so its files must be written under that mapping: the
+    renamed column reads its values (not NULL) and every data file's
+    footer carries exactly the physical names the manifest maps to."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
+        ddl,
+    )
+
+    t = str(tmp_path / "cm_replace")
+    st.create_table(spark.createDataFrame([(1, 10)], "id int, a int"), t, [])
+    st.rename_column(t, "a", "b")
+    if how == "api":
+        st.replace_table(
+            spark.createDataFrame([(3, 30), (4, 40)], "id int, b int"), t
+        )
+    else:
+        ddl.execute_sql(
+            spark,
+            "CREATE OR REPLACE TABLE cm_replace AS "
+            "SELECT * FROM VALUES (3, 30), (4, 40) AS v(id, b)",
+            warehouse=str(tmp_path),
+        )
+    got = sorted(tuple(r) for r in st.read_snapshot(spark, t).collect())
+    assert got == [(3, 30), (4, 40)]
+    m = st._read_manifest(t, st.current_version(t))
+    mapping = m.get("column_mapping") or {}
+    physical = {mapping.get(c, c) for c in ("id", "b")}
+    for f in m["files"]:
+        assert set(pq.read_schema(os.path.join(t, f)).names) == physical, f
+
+
 def test_overwrite_drops_mapping_of_departed_columns(spark, orders, tmp_path):
     """A logical column that leaves the schema in an overwrite takes
     its mapping entry with it; the manifest never maps columns absent

@@ -89,7 +89,7 @@ def test_crashed_write_is_invisible_and_vacuumable(spark, orders, tmp_path):
     st.create_table(orders, t, ["o_orderstatus"])
     n = st.read_snapshot(spark, t).count()
     # simulate the crash: data lands, no manifest follows
-    st._write_data(orders.limit(50), t, ["o_orderstatus"])
+    st._write_data(orders.limit(50), t, ["o_orderstatus"], {})
     assert st.read_snapshot(spark, t).count() == n  # readers unaffected
     report = st.vacuum(t, grace_seconds=0)
     assert report["deleted_files"] > 0 and report["expired_versions"] == 0
@@ -346,6 +346,16 @@ def test_txn_epoch_tracks_writer_commits(spark, orders, tmp_path):
     st.append(orders.limit(5), t)  # untagged commit by someone else
     assert st.txn_epoch(t, "writer-a") == 1
     assert st.txn_epoch(t, "writer-b") is None
+
+
+def test_overwrite_table_on_missing_table_records_txn(spark, tmp_path):
+    """overwrite_table on a missing table creates it, and that create
+    records the writer's txn epoch exactly as replace_table's does."""
+    df = spark.createDataFrame([(1,)], "id int")
+    for name, write in (("ow", st.overwrite_table), ("rp", st.replace_table)):
+        t = str(tmp_path / name)
+        assert write(df, t, txn=("app", 7)) == 1
+        assert st.txn_epoch(t, "app") == 7
 
 
 def test_gold_stream_snapshot_kill_and_restart_exactly_once(
@@ -676,7 +686,7 @@ def test_two_independent_writers_exactly_one_wins_then_v3(spark, orders, tmp_pat
             head = st.current_version(t)
             prev = st._read_manifest(t, head)
             assert st.append(batch_a, t) == 2  # writer A commits v2
-            new = st._write_data(batch_b, t, prev["partition_cols"])
+            new, _ = st._write_data(batch_b, t, prev["partition_cols"], {})
             return st._commit(
                 t, "append", sorted(prev["files"] + new),
                 prev["partition_cols"], prev["schema"], head,
@@ -2315,9 +2325,14 @@ def _footers_lack(t, col):
         assert col not in pq.read_schema(os.path.join(t, f)).names, f
 
 
-def _ids_materialized(t):
+def _ids_materialized(t, files=None):
+    """Every file of the head (or just ``files``) is marked as carrying
+    materialized row ids."""
     m = st._read_manifest(t, st.current_version(t))
-    assert all(m["file_stats"][f].get("materialized_row_ids") for f in m["files"])
+    files = m["files"] if files is None else files
+    assert files and all(
+        m["file_stats"][f].get("materialized_row_ids") for f in files
+    )
 
 
 @pytest.mark.parametrize(
@@ -3777,6 +3792,29 @@ def test_one_dml_body_and_one_row_id_rule():
     assert not hasattr(st, "_with_row_ids")
 
 
+def test_one_write_path_and_one_alias_rule():
+    """Every data-adding commit writes through snaptable._write_data
+    under an explicit column mapping: no head-mapping lookup remains,
+    the physical-alias f-string exists once (snaptable._fresh_aliases),
+    only the writer marks materialized row ids, and only the writer
+    collects footer stats."""
+    import ast
+
+    src = open(st.__file__).read()
+    assert not hasattr(st, "_head_mapping")
+    assert src.count('__r{') == 1
+    assert src.count('"materialized_row_ids"] = True') <= 1
+    callers = [
+        fn.name
+        for fn in ast.walk(ast.parse(src))
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_collect_stats"
+    ]
+    assert callers == ["_write_data"]
+
+
 def test_rollback_keeps_row_ids(spark, tmp_path):
     """Rollback publishes the TARGET's stats verbatim — which predate
     row tracking when restoring an early version. Carried files must
@@ -4426,6 +4464,7 @@ def test_merge_preserves_row_ids_and_cdf_pairs_updates(spark, tmp_path):
     st.enable_row_tracking(t)  # v2: ids 0..7 in id order
     src = spark.createDataFrame([(3, 999), (100, 1)], "id int, v int")
     st.merge_into(spark, t, src, ["id"])  # v3
+    _ids_materialized(t)  # the unpruned merge rewrote every file
     ids = {
         r.id: r._row_id
         for r in st.read_snapshot(spark, t, with_row_ids=True).collect()
@@ -4472,7 +4511,10 @@ def test_merge_preserves_row_ids_on_partitioned_table(spark, tmp_path):
     src = spark.createDataFrame(
         [(1, "A", 999), (50, "A", 5)], "id int, g string, v int"
     )
+    carried = set(st._read_manifest(t, st.current_version(t))["files"])
     st.merge_into(spark, t, src, ["id"])
+    m = st._read_manifest(t, st.current_version(t))
+    _ids_materialized(t, [f for f in m["files"] if f not in carried])
     after = {
         r.id: r._row_id
         for r in st.read_snapshot(spark, t, with_row_ids=True).collect()
@@ -5507,7 +5549,7 @@ def test_table_properties_append_only_and_vacuum_grace(spark, tmp_path):
     # vacuum grace default from the property: fresh orphans survive
     st.set_table_properties(t, {"vacuum.graceSeconds": "3600"})
     st._write_data(
-        spark.createDataFrame([(999, 9.0)], "id int, v double"), t, []
+        spark.createDataFrame([(999, 9.0)], "id int, v double"), t, [], {}
     )  # simulated crashed write, seconds old
     rep = st.vacuum(t)  # no grace arg -> property applies
     assert rep["deleted_files"] == 0 and rep["skipped_young_files"] > 0
