@@ -56,6 +56,11 @@ Log-structured design (the same shape as the Delta/Iceberg logs):
   :func:`_write_data` under the column mapping that commit lands with;
   :func:`_fresh_aliases` is the one rule that gives a new column a
   physical alias.
+- **One change-feed planner**: :func:`_change_plan` alone says which
+  rows a commit inserted or deleted; the batch :func:`changes`, the
+  streaming change feed and its admission budget all read through
+  it, and an unchanged deletion vector is compared by reference,
+  never decoded.
 
 At 100 TB the manifests stay tiny (file paths + counts, not data) and
 the read plan is exactly the same partition-pruned Parquet scan as a
@@ -730,10 +735,6 @@ def _claims_snapshot(manifest_or_extra: dict | None) -> bool:
     return (manifest_or_extra or {}).get("optimize_scope") == "table"
 
 
-def _norm_dvs(dvs: dict | None) -> dict:
-    return {f: sorted(ps) for f, ps in (dvs or {}).items() if ps}
-
-
 def _try_rebase(
     table: str,
     parent: int,
@@ -833,9 +834,14 @@ def _try_rebase(
         for f in w_add:
             if frozenset(_path_values(f).items()) in touched:
                 conflict(f"concurrent append into a rewritten partition ({f})")
-    par_dv = _norm_dvs(par.get("deletion_vectors"))
-    h_dv = _norm_dvs(H.get("deletion_vectors"))
-    l_dv = _norm_dvs(deletion_vectors)
+    # vectors are sorted lists or lazy sidecar refs (see _commit), so
+    # `!=` compares them as they are and an unchanged ref never decodes
+    par_dv, h_dv, l_dv = (
+        {f: ps for f, ps in (dvs or {}).items() if ps}
+        for dvs in (
+            par.get("deletion_vectors"), H.get("deletion_vectors"), deletion_vectors
+        )
+    )
     for f in scope:
         if h_dv.get(f) != par_dv.get(f):
             conflict(
@@ -1092,8 +1098,11 @@ def _commit(
         **{f: s for f, s in (base.get("file_stats") or {}).items() if f in live},
         **(file_stats or {}),
     }
+    # sorted once here, so a rebase compares them as stored; an
+    # unchanged lazy ref stays unsorted: its sidecar is already sorted
+    # and deduped, and sorting would decode it on the driver
     deletion_vectors = {
-        f: ps
+        f: ps if isinstance(ps, _LazyDVPositions) else sorted(ps)
         for f, ps in inherit(deletion_vectors, "deletion_vectors", {}).items()
         if ps and f in live
     }
@@ -1180,12 +1189,7 @@ def _commit(
         "files": files,
         "file_stats": file_stats,
         "constraints": constraints,
-        # an unchanged lazy ref stays unsorted: its sidecar is already
-        # sorted and deduped, and sorting would decode it on the driver
-        "deletion_vectors": {
-            f: ps if isinstance(ps, _LazyDVPositions) else sorted(ps)
-            for f, ps in deletion_vectors.items()
-        },
+        "deletion_vectors": deletion_vectors,
     }
     if column_mapping:
         manifest["column_mapping"] = column_mapping
@@ -3797,7 +3801,9 @@ def _rewrite_rows(
             )
         elif not use_dv:
             rows = cand.filter(~cond)
-    if rows is not None:
+    if set_exprs is not None:
+        # only UPDATE makes new row images; surviving and inserted rows
+        # were admitted when written (replace_where's by _admit above)
         _validate_constraints(rows, prev.get("constraints", {}))
     new: list[str] = []
     stats: dict = {}
@@ -4003,6 +4009,46 @@ def history(table: str) -> list[dict]:
     return out
 
 
+def _change_plan(prev: dict | None, cur: dict) -> list[tuple]:
+    """The one rule for what commit ``cur`` changed, row by row, since
+    ``prev`` (None before a table's first commit): the reads behind
+    both :func:`changes` and the streaming change feed
+    (``streaming/cdf_source.py``). Each entry is ``(rel, side,
+    positions, select, change)``: file ``rel`` read under manifest
+    ``side``, whole minus that side's vector ``positions``, or with
+    ``select`` only ``positions``, and labelled ``change``.
+
+    - OPTIMIZE gives nothing: compaction and Z-ORDER are
+      content-identical by contract (optimize() verifies the row
+      count), like Delta's no-data compaction commits.
+    - An added file is an ``insert`` under ``cur``'s vectors. A removed
+      file is a ``delete`` under ``prev``'s: rows already masked there
+      were never visible, so they are not deletes now.
+    - A kept file counts only if its vector entry differs (``!=``; an
+      unchanged lazy sidecar ref compares by identity and is never
+      decoded). Its grown positions are merge-on-read ``delete``s, its
+      shrunk ones (a rollback past a MoR delete) re-``insert``s —
+      dropping either side breaks the net effect
+      ``state(cur) == state(prev) - deletes + inserts``."""
+    if cur["operation"] == "optimize":
+        return []
+    prev = prev or {"files": []}
+    before, after = set(prev["files"]), set(cur["files"])
+    was_dv = prev.get("deletion_vectors") or {}
+    now_dv = cur.get("deletion_vectors") or {}
+    plan = [(f, cur, now_dv.get(f), False, "insert") for f in sorted(after - before)]
+    plan += [(f, prev, was_dv.get(f), False, "delete") for f in sorted(before - after)]
+    deltas: dict[str, list] = {"delete": [], "insert": []}
+    for f in sorted(after & before):
+        was, now = was_dv.get(f) or None, now_dv.get(f) or None
+        if was != now:
+            was, now = set(was or ()), set(now or ())
+            for change, ps in (("delete", now - was), ("insert", was - now)):
+                if ps:
+                    deltas[change].append((f, cur, sorted(ps), True, change))
+    return plan + deltas["delete"] + deltas["insert"]
+
+
 def changes(
     spark: SparkSession,
     table: str,
@@ -4015,11 +4061,14 @@ def changes(
     ``to_version`` (default: head), tagged with ``_change_type``
     ('insert' | 'delete') and ``_commit_version``.
 
-    File-diff CDF, no row tracking: for each commit, rows in files the
-    commit ADDED are inserts and rows in files it REMOVED are deletes.
-    UPDATE therefore surfaces as delete+insert (Delta without
-    ``update_pre/postimage``), and a row that merely moved files
-    (e.g. a ``delete_where`` rewriting the survivors of a touched
+    File-diff CDF, no row tracking: each commit's changes come from
+    :func:`_change_plan`, the one planner the streaming change feed
+    uses too — rows in files the commit ADDED are inserts, rows in
+    files it REMOVED are deletes, deletion-vector deltas on kept files
+    are position-selected deletes or re-inserts, and OPTIMIZE commits
+    emit nothing. UPDATE therefore surfaces as delete+insert (Delta
+    without ``update_pre/postimage``), and a row that merely moved
+    files (e.g. a ``delete_where`` rewriting the survivors of a touched
     file) appears as a self-cancelling delete+insert pair — the NET
     multiset effect is always exact:
     ``state(to) == state(from) - deletes + inserts`` (property-tested
@@ -4042,14 +4091,11 @@ def changes(
     pair — honest "rewritten in place" semantics; consumers diffing
     values see exactly the real changes.
 
-    ``optimize`` commits are skipped entirely: compaction/Z-ORDER
-    rewrites are content-identical by contract (optimize() verifies
-    the row count), so like Delta's OPTIMIZE they emit no CDF rows.
-
     Scale: reads ONLY the files each commit touched — the whole point
     of consuming a 100 TB table incrementally instead of diffing two
     full snapshots. Manifest diffs are driver-side set ops on file
-    path lists (tiny); no data file is opened twice.
+    path lists (tiny), an unchanged deletion vector is never decoded,
+    and no data file is opened twice.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
@@ -4069,90 +4115,44 @@ def changes(
         if v > to:
             break
         cur = _read_manifest(table, v)
-        if cur["operation"] != "optimize":
-            before, after = set(prev["files"]), set(cur["files"])
-            for rel_paths, change, manifest in (
-                (sorted(after - before), "insert", cur),
-                (sorted(before - after), "delete", prev),
-            ):
-                if not rel_paths:
-                    continue
-                # each side reads under ITS OWN deletion vectors: a
-                # removed file's already-DV-deleted rows were never
-                # visible at `prev`, so they must not surface as
-                # deletes now (and inserts respect the new commit's)
+        # one read per (side, select, change) group, in plan order
+        reads: dict[tuple, tuple[dict, dict]] = {}
+        for rel, side, ps, select, change in _change_plan(prev, cur):
+            reads.setdefault((id(side), select, change), (side, {}))[1][rel] = ps
+        for (_, select, change), (side, delta) in reads.items():
+            if not select:
                 body = _read_files(
-                    spark, table, manifest, rel_paths, row_ids=with_row_ids
+                    spark, table, side, list(delta), row_ids=with_row_ids
                 )
-                batch = body.withColumn(
-                    "_change_type", F.lit(change)
-                ).withColumn("_commit_version", F.lit(v).cast("bigint"))
-                parts.append(batch)
-            # merge-on-read DV deltas on still-present files, BOTH
-            # directions: positions newly ADDED to a vector are this
-            # commit's deleted rows; positions REMOVED from a vector
-            # (rollback/restore past a MoR delete) are re-inserted
-            # rows — omitting the shrink side would silently break
-            # the net-effect invariant (state(to) == state(from) -
-            # deletes + inserts) exactly where only DVs changed.
-            prev_dv = prev.get("deletion_vectors", {})
-            cur_dv = cur.get("deletion_vectors", {})
-            kept_both = set(cur["files"]) & set(prev["files"])
-            for delta, dv_change in (
-                (
-                    {
-                        f: sorted(
-                            set(cur_dv.get(f, [])) - set(prev_dv.get(f, []))
-                        )
-                        for f in kept_both
-                    },
-                    "delete",
-                ),
-                (
-                    {
-                        f: sorted(
-                            set(prev_dv.get(f, [])) - set(cur_dv.get(f, []))
-                        )
-                        for f in kept_both
-                    },
-                    "insert",
-                ),
-            ):
-                delta = {f: ps for f, ps in delta.items() if ps}
-                if not delta:
-                    continue
-                # read WITHOUT deletion vectors: the rows wanted are
-                # exactly the ones a vector deletes
+            else:
+                # read WITHOUT deletion vectors and keep exactly the
+                # selected positions (_abs_uri hoisted per file, see
+                # _apply_dvs)
                 keyed = _read_files(
                     spark,
                     table,
-                    {**cur, "deletion_vectors": None},
-                    sorted(delta),
+                    {**side, "deletion_vectors": None},
+                    list(delta),
                     keep_pos=True,
                     row_ids=with_row_ids,
                 )
-                # _abs_uri hoisted per file (see _apply_dvs)
-                delta_uris = {f: _abs_uri(table, f) for f in delta}
-                pos_rows = [
-                    (delta_uris[f], int(p))
-                    for f, ps in delta.items()
-                    for p in ps
-                ]
-                pos_df = local_df(spark, 
-                    pos_rows, "___dvf string, ___dvp long"
+                uris = {f: _abs_uri(table, f) for f in delta}
+                pos_df = local_df(
+                    spark,
+                    [(uris[f], int(p)) for f, ps in delta.items() for p in ps],
+                    "___dvf string, ___dvp long",
                 )
-                dv_batch = keyed.join(
+                body = keyed.join(
                     F.broadcast(pos_df),
                     (keyed["___f"] == pos_df["___dvf"])
                     & (keyed["___ri"] == pos_df["___dvp"]),
                     "left_semi",
+                ).drop("___f", "___ri")
+            parts.append(
+                body.withColumn("_change_type", F.lit(change)).withColumn(
+                    "_commit_version", F.lit(v).cast("bigint")
                 )
-                dv_batch = (
-                    dv_batch.drop("___f", "___ri")
-                    .withColumn("_change_type", F.lit(dv_change))
-                    .withColumn("_commit_version", F.lit(v).cast("bigint"))
-                )
-                parts.append(dv_batch)
+            )
         prev = cur
     if not parts:
         schema = StructType.fromJson(json.loads(prev["schema"]))

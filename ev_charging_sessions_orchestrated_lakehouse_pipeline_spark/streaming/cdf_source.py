@@ -15,22 +15,24 @@ source-side state. Commits stream as their ADDED files (one input
 partition per file, the parallelism unit, like Delta's file-based
 streaming batches), each row tagged ``_commit_version``.
 
+Each commit is planned by :func:`..sources.snaptable._change_plan`,
+the one planner the batch :func:`..sources.snaptable.changes` feed
+uses too: every entry of its plan becomes one input partition.
 Semantics match Delta's source contract:
 
 * append commits stream their new rows;
-* OPTIMIZE commits are skipped entirely (content-identical by
-  contract — no rows to stream, like Delta's no-data compaction
+* OPTIMIZE commits stream nothing (the planner gives them no entry:
+  content-identical by contract, like Delta's no-data compaction
   commits);
-* a commit that REMOVES files or touches deletion vectors is an
-  error by default (a pure append feed cannot represent it), skipped
-  wholesale with ``skipChangeCommits=true`` (Delta's option
-  verbatim), or — with ``readChangeFeed=true`` — streamed as
-  ROW-LEVEL CHANGES: ``_change_type`` insert|delete in the batch
-  :func:`..sources.snaptable.changes` vocabulary (added files as
-  inserts, removed files as deletes under the parent's DVs, kept
+* a commit whose plan holds anything but whole-file inserts (it
+  REMOVES files or changes deletion vectors) is an error by default
+  (a pure append feed cannot represent it), skipped wholesale with
+  ``skipChangeCommits=true`` (Delta's option verbatim), or — with
+  ``readChangeFeed=true`` — streamed as ROW-LEVEL CHANGES:
+  ``_change_type`` insert|delete, the batch feed's rows (added files
+  as inserts, removed files as deletes under the parent's DVs, kept
   files' DV deltas as position-selected MoR deletes or rollback
-  re-inserts), pinned row-for-row equal to the batch feed. The
-  cursor-driven batch consumer is
+  re-inserts). The cursor-driven batch consumer is
   :func:`..sources.snaptable.refresh_count_sum_view`.
 
 Scale: the driver plans each micro-batch from manifest DIFFS (tiny,
@@ -295,31 +297,19 @@ class SnapshotStreamReader(DataSourceStreamReader):
                     prev = st._read_manifest(self._table, v)
                 continue
             cur = st._read_manifest(self._table, v)
-            before = set(prev["files"]) if prev is not None else set()
-            added = [f for f in cur["files"] if f not in before]
-            n = len(added)
-            b = sum(self._file_bytes(cur, f) for f in added)
+            # the files a batch will read, each with the side whose
+            # stats size it: a change feed reads its plan (deletes and
+            # DV deltas too, none for OPTIMIZE), an append feed the
+            # added files
             if self._cdf:
-                # change-feed batches also READ removed files (deletes)
-                # and DV-delta files (MoR deletes / un-deletes) — a
-                # delete-heavy commit must spend the budget too
-                cur_set = set(cur["files"])
-                removed = [f for f in before if f not in cur_set]
-                n += len(removed)
-                b += sum(
-                    self._file_bytes(prev or {}, f) for f in removed
-                )
-                dv_b = st._norm_dvs(
-                    (prev or {}).get("deletion_vectors")
-                )
-                dv_n = st._norm_dvs(cur.get("deletion_vectors"))
-                dv_delta = [
-                    f
-                    for f in before & cur_set
-                    if dv_b.get(f) != dv_n.get(f)
-                ]
-                n += len(dv_delta)
-                b += sum(self._file_bytes(cur, f) for f in dv_delta)
+                sides = {
+                    rel: side for rel, side, *_ in st._change_plan(prev, cur)
+                }
+            else:
+                before = set(prev["files"]) if prev is not None else set()
+                sides = {f: cur for f in cur["files"] if f not in before}
+            n = len(sides)
+            b = sum(self._file_bytes(side, f) for f, side in sides.items())
             if end > self._cursor and (
                 (budget and spent + n > budget)
                 or (budget_b and spent_b + b > budget_b)
@@ -444,58 +434,10 @@ class SnapshotStreamReader(DataSourceStreamReader):
         return out
 
     def _plan_commit(self, st, prev, cur, version: int):
-        if cur["operation"] == "optimize":
-            return []  # content-identical rewrite: nothing to stream
-        before = set(prev["files"]) if prev else set()
-        added = [f for f in cur["files"] if f not in before]
-        removed = sorted(before - set(cur["files"]))
-        dv_before = st._norm_dvs((prev or {}).get("deletion_vectors"))
-        dv_now = st._norm_dvs(cur.get("deletion_vectors"))
-        pcols = st._spec_names(cur["partition_cols"])
-        if self._cdf:
-            # the batch changes() vocabulary, planned as partitions:
-            # added files -> inserts (under the commit's own DVs),
-            # removed files -> deletes (under the PARENT's DVs — rows
-            # already masked there were never visible, so they are
-            # not deletes now), kept files' NEW DV positions -> MoR
-            # deletes (read exactly those positions)
-            parts = [
-                self._mk_part(
-                    st, cur, pcols, f, version,
-                    dv_positions=dv_now.get(f),
-                )
-                for f in added
-            ]
-            parts += [
-                self._mk_part(
-                    st, prev, pcols, f, version,
-                    dv_positions=dv_before.get(f),
-                    change="delete",
-                )
-                for f in removed
-            ]
-            for f in sorted(set(cur["files"]) & before):
-                now = set(dv_now.get(f, []))
-                was = set(dv_before.get(f, []))
-                # both DV directions: grown vector = MoR deletes,
-                # shrunk vector (rollback/restore past a MoR delete)
-                # = re-inserted rows — dropping the shrink side would
-                # silently break the net-effect replay
-                for positions, change in (
-                    (sorted(now - was), "delete"),
-                    (sorted(was - now), "insert"),
-                ):
-                    if positions:
-                        parts.append(
-                            self._mk_part(
-                                st, cur, pcols, f, version,
-                                dv_positions=positions,
-                                dv_select=True,
-                                change=change,
-                            )
-                        )
-            return parts
-        if removed or dv_before != dv_now:
+        plan = st._change_plan(prev, cur)
+        if not self._cdf and any(
+            select or change != "insert" for _, _, _, select, change in plan
+        ):
             if self._skip_changes:
                 return []  # Delta's skipChangeCommits: drop wholesale
             raise ValueError(
@@ -506,8 +448,13 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 "readChangeFeed=true to stream them as change rows, "
                 "or consume the batch change feed (snaptable.changes)"
             )
+        pcols = st._spec_names(cur["partition_cols"])
         return [
-            self._mk_part(st, cur, pcols, f, version) for f in added
+            self._mk_part(
+                st, side, pcols, rel, version,
+                dv_positions=ps, dv_select=select, change=change,
+            )
+            for rel, side, ps, select, change in plan
         ]
 
     def _plan_snapshot(self, st, cur, version: int):
@@ -516,7 +463,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         row set streams as adds — whatever operation wrote it
         (optimize, DV delete, ...), with deletion vectors applied
         per file on the executor (the positions ride the partition)."""
-        dvs = st._norm_dvs(cur.get("deletion_vectors"))
+        dvs = cur.get("deletion_vectors") or {}
         pcols = st._spec_names(cur["partition_cols"])
         return [
             self._mk_part(
@@ -536,9 +483,10 @@ class SnapshotStreamReader(DataSourceStreamReader):
         dv_select=False,
         change="insert",
     ):
-        """``manifest`` is the side the file reads under: the commit
-        for inserts/kept files, the PARENT for removed files (its
-        stats hold the file's row-id allocation)."""
+        """``manifest`` is the side the file reads under (the plan
+        entry's side): the commit for inserts/kept files, the PARENT
+        for removed files (its stats hold the file's row-id
+        allocation)."""
         pv = st._partition_values(f, pcols)
         # that side's row-id allocation, when it has one — the most
         # durable identity source (see partitions()'s post-pass)
@@ -559,8 +507,9 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 if c in pv and c in self._schema_names
             ],
             schema_ddl=self._schema_json,
-            # _norm_dvs already sorts; carry the list through as-is
-            dv_positions=dv_positions or None,
+            # a plain list: the partition pickles to workers, which
+            # must not import the engine (a lazy ref decodes here)
+            dv_positions=list(dv_positions) if dv_positions else None,
             dv_select=dv_select,
             change=change,
             add_alloc=add_alloc,
@@ -970,8 +919,8 @@ def read_snapshot_stream(
     batch (manifest stats, no filesystem stat) and composes with the
     file cap — Delta's pairing: file sizes vary by orders of
     magnitude at scale, so a count cap alone admits uneven batches. ``read_change_feed``
-    streams row-level changes (``_change_type`` insert|delete, the
-    batch :func:`..sources.snaptable.changes` vocabulary) instead of
+    streams row-level changes (``_change_type`` insert|delete, planned
+    like the batch :func:`..sources.snaptable.changes`) instead of
     the append-only feed — the streaming leg of incremental view
     maintenance."""
     r = spark.readStream.format(SOURCE_NAME)

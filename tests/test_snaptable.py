@@ -1714,7 +1714,9 @@ def test_commit_carries_lazy_dv_without_decoding(
     """A commit that leaves a lazily-resolved deletion vector alone
     must not decode its sidecar on the driver: the unchanged ref passes
     through _commit unsorted and the parent's stored ``{"$dv": ...}``
-    entry is reused verbatim."""
+    entry is reused verbatim — also when the commit loses a publish
+    race and rebases (_try_rebase compares vectors by reference), and
+    when changes() plans and reads a range over it."""
     t = _tbl(tmp_path)
     st.create_table(orders, t, [])
     med = orders.approxQuantile("o_totalprice", [0.5], 0.0)[0]
@@ -1730,12 +1732,39 @@ def test_commit_carries_lazy_dv_without_decoding(
     monkeypatch.setattr(
         st, "_decode_dv_binary", lambda data: decodes.append(1) or real(data)
     )
+
+    def rebased_append():
+        # a winner publishes the version this append computed against
+        # first, so the append rebases onto it
+        fired = []
+
+        def race(table, version, manifest):
+            if not fired:
+                fired.append(version)
+                st.append(orders.limit(2), t)
+
+        st.pre_publish_hook = race
+        try:
+            v = st.append(orders.limit(3), t)
+        finally:
+            st.pre_publish_hook = None
+        assert v == fired[0] + 1
+        assert st._raw_manifest(t, v)["rebased_from"] == fired[0] - 1
+        return v
+
+    def changes_over_append():
+        head = st.current_version(t)
+        assert st.changes(spark, t, head - 2).count() == 5
+        return head
+
     ops = {
         "append": lambda: st.append(orders.limit(5), t),
         "set_table_properties": lambda: st.set_table_properties(t, {"k": "v"}),
         "add_constraint": lambda: st.add_constraint(
             spark, t, "pk", "o_orderkey >= 0"
         ),
+        "rebased_append": rebased_append,
+        "changes": changes_over_append,
     }
     for name, op in ops.items():
         raw_before = st._raw_manifest(t, st.current_version(t))[
@@ -3677,6 +3706,34 @@ class TestDMLKeepsRowIds:
         assert len(set(got.values())) == len(got)
 
     @pytest.mark.parametrize("op", OPS)
+    def test_constraints_checked_only_on_new_rows(
+        self, spark, tmp_path, monkeypatch, op
+    ):
+        """CHECK constraints validate the rows a DML commit makes new
+        (UPDATE's row images, replace_where's incoming rows through
+        _admit), never a rewrite's surviving rows: those were admitted
+        when written, and add_constraint validated the whole table."""
+        t = self._mk(spark, tmp_path, f"dml_chk_{op}")
+        st.add_constraint(spark, t, "pos", "v >= 0")
+        checked = []
+        real = st._validate_constraints
+        monkeypatch.setattr(
+            st,
+            "_validate_constraints",
+            lambda df, cs: checked.append(df.count()) or real(df, cs),
+        )
+        self._run(spark, t, op)
+        # rows checked per call: the candidate file's 10 updated rows,
+        # or replace_where's 1 incoming row
+        assert checked == {"update": [10], "replace_where": [1]}.get(op, [])
+        if op == "update":
+            for use_dv in (False, True):
+                with pytest.raises(st.ConstraintViolation, match="pos"):
+                    st.update_where(
+                        spark, t, [("id", "=", 1)], {"v": "-1"}, use_dv=use_dv
+                    )
+
+    @pytest.mark.parametrize("op", OPS)
     def test_identity_survivors_keep_keys(self, spark, tmp_path, op):
         t = self._mk(spark, tmp_path, f"dml_sk_{op}", identity=True)
         st.delete_where(spark, t, [("id", "=", 2)], use_dv=True)
@@ -3813,6 +3870,41 @@ def test_one_write_path_and_one_alias_rule():
         and getattr(node.func, "id", None) == "_collect_stats"
     ]
     assert callers == ["_write_data"]
+
+
+def test_one_change_feed_planner():
+    """The batch and streaming change feeds plan each commit through
+    snaptable._change_plan: the OPTIMIZE-emits-nothing test exists once,
+    in the planner; cdf_source.py neither tests for OPTIMIZE nor diffs
+    two manifests' deletion vectors itself; _norm_dvs, which sorted
+    (and so decoded) every vector, is defined nowhere."""
+    import ast
+    import pathlib
+
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming import (
+        cdf_source,
+    )
+
+    pkg = pathlib.Path(st.__file__).parent.parent
+    optimize_tests = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        assert "def _norm_dvs" not in src, path
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Compare) and any(
+                    isinstance(c, ast.Constant) and c.value == "optimize"
+                    for c in [node.left, *node.comparators]
+                ) and "operation" in ast.unparse(node):
+                    optimize_tests.append((path.name, fn.name))
+    assert optimize_tests == [("snaptable.py", "_change_plan")]
+    src = open(cdf_source.__file__).read()
+    assert 'operation"] == "optimize"' not in src
+    # the one read of a manifest's vectors left is the bootstrap
+    # snapshot (_plan_snapshot), which diffs nothing
+    assert src.count('"deletion_vectors"') == 1
 
 
 def test_rollback_keeps_row_ids(spark, tmp_path):

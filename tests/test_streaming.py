@@ -2336,9 +2336,9 @@ def test_snapshot_stream_read_change_feed_matches_batch_cdf(
     spark, tmp_path
 ):
     """readChangeFeed=true: the stream's change rows over a range of
-    append / rewrite-DELETE / MoR-DELETE / overwrite commits must
-    equal the batch change feed (snaptable.changes) row-for-row, and
-    the net effect replays the final state."""
+    append / rewrite-DELETE / MoR-DELETE / MoR-UPDATE / overwrite /
+    MERGE commits must equal the batch change feed (snaptable.changes)
+    row-for-row, and the net effect replays the final state."""
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
         snaptable as st,
     )
@@ -2355,8 +2355,18 @@ def test_snapshot_stream_read_change_feed_matches_batch_cdf(
     st.append(spark.createDataFrame([(6, "A", 60)], "id int, g string, v int"), t)
     st.delete_where(spark, t, [("v", "<", 20)])  # rewrite delete
     st.delete_where(spark, t, [("id", "=", 4)], use_dv=True)  # MoR delete
+    # MoR update: grows a kept file's DV and adds a file in one commit
+    st.update_where(spark, t, [("id", "=", 5)], {"v": "v + 1"}, use_dv=True)
     st.overwrite_partitions(
         spark.createDataFrame([(9, "B", 90)], "id int, g string, v int"), t
+    )
+    st.merge_into(
+        spark,
+        t,
+        spark.createDataFrame(
+            [(2, "A", 21), (7, "A", 70)], "id int, g string, v int"
+        ),
+        ["id"],
     )
     st.optimize(spark, t)  # must contribute nothing
 
