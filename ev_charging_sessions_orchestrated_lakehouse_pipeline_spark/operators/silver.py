@@ -143,13 +143,14 @@ def run_silver(
     ``"quarantine"`` only routes bad rows to the quarantine sink; any
     other mode is a ``ValueError``.
     """
+    from ..schemas import EV_BRONZE_SCHEMA
     from ..sources.readers import read_bronze_csv
     from ..sources.writers import write_partitioned_parquet
 
     mode = fail_mode.lower()
     if mode not in ("quarantine", "fail_job"):
         raise ValueError(f"unknown fail_mode {fail_mode!r}")
-    bronze = read_bronze_csv(spark, input_path, infer=True)
+    bronze = read_bronze_csv(spark, input_path, schema=EV_BRONZE_SCHEMA)
     silver = clean_sessions(bronze, precise_timestamps=precise_timestamps)
 
     verification = (

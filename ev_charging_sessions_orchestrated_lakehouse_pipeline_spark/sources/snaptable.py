@@ -2963,20 +2963,29 @@ def enable_row_tracking(table: str) -> int:
     if prev.get("row_tracking"):
         return head
     stats = {f: dict(e) for f, e in prev.get("file_stats", {}).items()}
-    nxt = 0
-    for f in sorted(prev["files"]):
-        e = stats.setdefault(f, {})
-        if "rows" not in e:
-            e["rows"] = _file_rows(table, f)
-        e["base_row_id"] = nxt
-        nxt += int(e["rows"])
     return _commit(
         table,
         "enable_row_tracking",
         parent=head,
         file_stats=stats,
-        extra={"row_tracking": True, "next_row_id": nxt},
+        extra=_start_row_tracking(table, prev["files"], stats),
     )
+
+
+def _start_row_tracking(table: str, files: list[str], stats: dict) -> dict:
+    """The first id allocation of a table (:func:`enable_row_tracking`,
+    or :func:`enable_identity` on an untracked table): each file gets
+    a contiguous ``base_row_id`` range in ``stats``, in sorted-path
+    order, sized by its footer row count (no data read). Returns the
+    manifest fields that turn tracking on at the high-water mark."""
+    nxt = 0
+    for f in sorted(files):
+        e = stats.setdefault(f, {})
+        if "rows" not in e:
+            e["rows"] = _file_rows(table, f)
+        e["base_row_id"] = nxt
+        nxt += int(e["rows"])
+    return {"row_tracking": True, "next_row_id": nxt}
 
 
 def enable_identity(
@@ -3027,16 +3036,7 @@ def enable_identity(
     stats = {f: dict(e) for f, e in prev.get("file_stats", {}).items()}
     extra: dict = {"identity": spec}
     if not prev.get("row_tracking"):
-        # first enablement allocates the id ranges exactly as
-        # enable_row_tracking does (sorted-path order, footer counts)
-        nxt = 0
-        for f in sorted(prev["files"]):
-            e = stats.setdefault(f, {})
-            if "rows" not in e:
-                e["rows"] = _file_rows(table, f)
-            e["base_row_id"] = nxt
-            nxt += int(e["rows"])
-        extra.update({"row_tracking": True, "next_row_id": nxt})
+        extra.update(_start_row_tracking(table, prev["files"], stats))
     return _commit(
         table, "enable_identity", parent=head, file_stats=stats, extra=extra
     )
@@ -5395,7 +5395,6 @@ def merge_into(
         target = target.filter(cond)
     next_mark: int | None = None
     if track:
-        from pyspark.sql import Window as _W
         from pyspark.sql import functions as F
 
         from ..operators.merge import (
@@ -5458,18 +5457,31 @@ def merge_into(
         inserts = incoming.filter(F.col(ROW_ID_COL).isNull()).drop(
             ROW_ID_COL
         )
-        mark = int(man.get("next_row_id") or 0)
-        n_new = inserts.count()  # bounded: the merge batch's inserts
-        # deterministic fresh ids above the mark; the key-ordered
-        # window runs over the INSERT subset only (pinned above, so
-        # the counted and written sets are identical by construction)
+        # dense fresh ids above the mark, numbered where the rows
+        # are (no single-task global window): one count per partition
+        # of the pinned insert set (bounded: one row per partition), a
+        # driver prefix sum, then mark + offset[partition] + position
+        # in partition. Pinned above, so the counted and the written
+        # rows are the same rows in the same places.
+        counts = dict(
+            inserts.groupBy(F.spark_partition_id()).count().collect()
+        )
+        offsets = []
+        next_mark = int(man.get("next_row_id") or 0)
+        for pid in range(max(counts, default=0) + 1):
+            offsets.append(next_mark)
+            next_mark += counts.get(pid, 0)
+        # monotonically_increasing_id = partition << 33 | position
+        mid = F.monotonically_increasing_id()
         fresh = inserts.withColumn(
             ROW_ID_COL,
-            F.row_number().over(_W.orderBy(*keys)).cast("long")
-            + F.lit(mark - 1).cast("long"),
+            F.element_at(
+                F.array(*[F.lit(o).cast("long") for o in offsets]),
+                (F.shiftright(mid, 33) + 1).cast("int"),
+            )
+            + mid.bitwiseAND((1 << 33) - 1),
         )
         merged = kept.unionByName(matched).unionByName(fresh)
-        next_mark = mark + int(n_new)
     else:
         merged = merge_upsert(
             target,

@@ -1,12 +1,17 @@
-"""Structured Streaming SOURCE and SINK over the snapshot table —
-the Delta streaming source/sink pair (DeltaSource's reservoir-version
-offsets; DeltaSink's txn-tagged epoch commits) rebuilt on the Python
-DataSource API (Spark 4):
+"""Structured Streaming SOURCE over the snapshot table — Delta's
+streaming source (DeltaSource's reservoir-version offsets) rebuilt on
+the Python DataSource API (Spark 4) — and the sink that pairs with it:
 
     register_snapshot_stream(spark)
     df = read_snapshot_stream(spark, table)          # readStream
-    df.writeStream.trigger(availableNow=True)...
     write_snapshot_stream(spark, df2, other_table, ckpt)  # sink
+
+The DataSource is read-only. The sink, :func:`write_snapshot_stream`,
+is a ``foreachBatch`` over :func:`..sources.snaptable.append`: each
+epoch is one append commit tagged ``txn = (app_id, epoch_id)`` (the
+DeltaSink handshake), written by the same path every batch commit
+takes, and a replayed epoch is skipped by the one exactly-once check,
+:func:`.ingest._commit_epoch`.
 
 Offsets are COMMIT VERSIONS (``{"version": N}`` = every commit <= N
 consumed), so resume-from-checkpoint replays a deterministic range of
@@ -66,9 +71,7 @@ from ..functions.localframe import local_df
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
 SOURCE_NAME = "snapshot_stream"
@@ -581,270 +584,6 @@ class SnapshotStreamReader(DataSourceStreamReader):
         pass
 
 
-#: Spark's ExternalCatalogUtils.escapePathName character set (the
-#: Hive partition-path escaping) — the writer must land values in the
-#: SAME directory names Spark's own partitioned writes produce
-_HIVE_ESCAPE = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {
-    "\x7f"
-}
-
-
-def _hive_escape(value) -> str:
-    # Spark's getPartitionValueString maps null AND the empty string
-    # to the default-partition sentinel (both read back as NULL)
-    if value is None or str(value) == "":
-        return _HIVE_NULL
-    s = str(value)
-    return "".join(
-        f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE else ch for ch in s
-    )
-
-
-@dataclass
-class _WriteResult(WriterCommitMessage):
-    """Files one task staged: [(staged_abs_path, final_rel_path)]."""
-
-    files: list
-
-
-class SnapshotStreamWriter(DataSourceStreamWriter):
-    """Per-epoch EXACTLY-ONCE sink into a snapshot table — the Delta
-    streaming-sink protocol at the DataSource level
-    (``df.writeStream.format("snapshot_stream")``), replacing the
-    foreachBatch boilerplate:
-
-    * executors write their rows as Parquet into a per-task STAGING
-      directory under the table's data/ tree (pyarrow, grouped by
-      partition value, Spark-compatible hive path escaping) —
-      invisible until the manifest publishes; a crashed task's files
-      are vacuum-reclaimed orphans;
-    * the driver's ``commit(messages, batchId)`` renames staged files
-      into their final partition dirs, collects footer stats (the
-      same data-skipping index batch writes get), and publishes ONE
-      append commit carrying ``txn = (app_id, batchId)`` — the
-      idempotent-writer handshake: a REPLAYED epoch whose commit
-      already published is detected via txn_epoch and skipped (its
-      staged files are removed), so kill/replay converges bit-for-bit;
-    * a lost publish race auto-rebases (appends are always disjoint —
-      :func:`..sources.snaptable._try_rebase`).
-
-    Contract: the table must already exist (create it with
-    ``create_table`` or let :func:`write_snapshot_stream` do it);
-    incoming columns must match the table schema; tables with CHECK
-    constraints or generated columns are refused — those are
-    evaluated by Spark expressions the executor-side Arrow path
-    cannot run (use the foreachBatch helpers for them)."""
-
-    def __init__(self, schema, options: dict) -> None:
-        st = _manifest_chain("")
-        self._table = _opt_path(options)
-        opts = {k.lower(): v for k, v in options.items()}
-        # txn identity: explicit appId, else derived from the
-        # checkpoint location — Delta's sink keys its txn on the
-        # query/checkpoint for the same reason: a FIXED default shared
-        # by every caller would make one query's epochs look like
-        # another's replays (silently dropped batches). A fresh
-        # checkpoint means a fresh identity and reprocessing, exactly
-        # like Delta.
-        app_id = opts.get("appid")
-        if not app_id:
-            ckpt = opts.get("checkpointlocation")
-            if not ckpt:
-                raise ValueError(
-                    "snapshot_stream sink needs option 'appId' or "
-                    "'checkpointLocation' to key its exactly-once txn"
-                )
-            import hashlib
-
-            app_id = (
-                "snapshot_stream_writer_"
-                + hashlib.sha256(os.path.abspath(ckpt).encode()).hexdigest()[
-                    :16
-                ]
-            )
-        self._app_id = app_id
-        try:
-            _, man = st._manifest_at(self._table)
-        except ValueError as exc:
-            raise ValueError(
-                f"{self._table} does not exist; create it first "
-                "(snaptable.create_table or write_snapshot_stream)"
-            ) from exc
-        if man.get("constraints"):
-            raise ValueError(
-                "snapshot_stream sink cannot validate CHECK "
-                f"constraints {sorted(man['constraints'])}; use the "
-                "foreachBatch helpers (silver_stream_snapshot)"
-            )
-        if man.get("generated") or man.get("identity"):
-            raise ValueError(
-                "snapshot_stream sink cannot evaluate generated/"
-                "identity columns; use the foreachBatch helpers"
-            )
-        if any("(" in str(e) for e in man["partition_cols"]):
-            raise ValueError(
-                "snapshot_stream sink cannot materialize hidden-"
-                f"partitioning transforms {man['partition_cols']}; "
-                "use the batch writers / foreachBatch helpers"
-            )
-        table_types = {
-            f["name"]: f["type"]
-            for f in json.loads(man["schema"])["fields"]
-        }
-        incoming = {
-            f.name: json.loads(f.json())["type"] for f in schema.fields
-        }
-        if incoming != table_types:
-            raise ValueError(
-                f"stream schema {sorted(incoming.items())} does not "
-                f"match table schema {sorted(table_types.items())} "
-                "(names AND types)"
-            )
-        self._schema_json = man["schema"]
-        self._init_meta = {
-            "schema": man["schema"],
-            "constraints": man.get("constraints") or {},
-            "column_mapping": man.get("column_mapping") or {},
-            "partition_cols": man["partition_cols"],
-            "generated": man.get("generated") or {},
-            "identity": man.get("identity"),
-        }
-        self._pcols = st._spec_names(man["partition_cols"])
-        mapping = man.get("column_mapping") or {}
-        self._renames = {
-            logical: phys
-            for logical, phys in mapping.items()
-            if logical != phys
-        }
-        self._data_dir = st._data_dir(self._table)
-        self._staging_prefix = st._STAGING_PREFIX
-
-    # -- executors --------------------------------------------------------
-    def write(self, iterator) -> "_WriteResult":
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        # group this task's rows by partition value; the body writes
-        # under the TABLE-schema-derived arrow types (from_pylist
-        # casts/validates), so the files' physical types match what
-        # batch reads and _read_union expect — a pandas round-trip
-        # would silently widen ints and poison nullable columns
-        groups: dict = {}
-        for r in iterator:
-            d = r.asDict()
-            key = tuple(d.pop(c) for c in self._pcols)
-            groups.setdefault(key, []).append(d)
-        if not groups:
-            return _WriteResult(files=[])
-        full = StructType.fromJson(json.loads(self._schema_json))
-        body_schema = to_arrow_schema(
-            StructType([f for f in full.fields if f.name not in self._pcols])
-        )
-        stage = os.path.join(
-            self._data_dir, self._staging_prefix + _uuid.uuid4().hex
-        )
-        out = []
-        for key, dicts in groups.items():
-            hive = [
-                f"{c}={_hive_escape(v)}"
-                for c, v in zip(self._pcols, key)
-            ]
-            tbl = pa.Table.from_pylist(dicts, schema=body_schema)
-            if self._renames:
-                tbl = tbl.rename_columns(
-                    [self._renames.get(c, c) for c in tbl.column_names]
-                )
-            fname = f"part-{_uuid.uuid4().hex}.parquet"
-            # manifest entries are TABLE-relative and data lives under
-            # data/ (matching _write_data's layout)
-            final_rel = os.path.join("data", *hive, fname)
-            staged_abs = os.path.join(stage, *hive, fname)
-            os.makedirs(os.path.dirname(staged_abs), exist_ok=True)
-            pq.write_table(tbl, staged_abs)
-            out.append((staged_abs, final_rel))
-        return _WriteResult(files=out)
-
-    # -- driver -----------------------------------------------------------
-    def _staged(self, messages):
-        return [
-            pair
-            for m in messages
-            if m is not None
-            for pair in m.files
-        ]
-
-    def _cleanup(self, staged) -> None:
-        import shutil
-
-        stages = set()
-        for staged_abs, _rel in staged:
-            p = staged_abs
-            while not os.path.basename(p).startswith(self._staging_prefix):
-                p = os.path.dirname(p)
-            stages.add(p)
-        for s in stages:
-            shutil.rmtree(s, ignore_errors=True)
-
-    def commit(self, messages, batchId: int) -> None:
-        st = _manifest_chain(self._table)
-        staged = self._staged(messages)
-        done = st.txn_epoch(self._table, self._app_id)
-        if done is not None and batchId <= done:
-            self._cleanup(staged)  # replayed epoch: already durable
-            return
-        if not staged:
-            return  # empty batch: nothing to publish (epochs may gap)
-        head, prev = st._manifest_at(self._table)
-        # metadata-change guard (Delta's MetadataChangedException for
-        # a QUIESCENT change — racing ones are caught by _try_rebase):
-        # schema/constraint/mapping/partition DDL committed between
-        # epochs invalidates what the executors wrote and what this
-        # sink validated at start; republishing the init-time schema
-        # would silently REVERT the DDL, and skipping a new CHECK
-        # constraint would publish unvalidated rows under it.
-        now_meta = {
-            "schema": prev["schema"],
-            "constraints": prev.get("constraints") or {},
-            "column_mapping": prev.get("column_mapping") or {},
-            "partition_cols": prev["partition_cols"],
-            "generated": prev.get("generated") or {},
-            "identity": prev.get("identity"),
-        }
-        if now_meta != self._init_meta:
-            self._cleanup(staged)
-            changed = sorted(
-                k for k in now_meta if now_meta[k] != self._init_meta[k]
-            )
-            raise ValueError(
-                f"{self._table} metadata changed mid-stream "
-                f"({', '.join(changed)}); restart the stream to pick "
-                "up the new table definition"
-            )
-        rels = []
-        for staged_abs, rel in staged:
-            final = os.path.join(self._table, rel)
-            os.makedirs(os.path.dirname(final), exist_ok=True)
-            os.rename(staged_abs, final)
-            rels.append(rel)
-        self._cleanup(staged)  # empty husk dirs
-        st._commit(
-            self._table,
-            "append",
-            sorted(prev["files"] + rels),
-            schema_json=self._schema_json,
-            parent=head,
-            txn=(self._app_id, int(batchId)),
-            file_stats=st._collect_stats(self._table, rels),
-        )
-
-    def abort(self, messages, batchId: int) -> None:
-        self._cleanup(self._staged(messages))
-
-
 class SnapshotStreamDataSource(DataSource):
     """``spark.readStream.format("snapshot_stream").load(table)``."""
 
@@ -873,15 +612,6 @@ class SnapshotStreamDataSource(DataSource):
 
     def streamReader(self, schema) -> SnapshotStreamReader:
         return SnapshotStreamReader(schema, dict(self.options))
-
-    def streamWriter(self, schema, overwrite: bool) -> SnapshotStreamWriter:
-        if overwrite:
-            raise ValueError(
-                "snapshot_stream sink is append-only (outputMode "
-                "'append'); use foreachBatch + overwrite_partitions "
-                "for complete-mode semantics"
-            )
-        return SnapshotStreamWriter(schema, dict(self.options))
 
 
 def register_snapshot_stream(spark) -> None:
@@ -942,6 +672,24 @@ def read_snapshot_stream(
     )
 
 
+def _sink_epoch(table: str, app_id: str, batch, epoch_id: int) -> None:
+    """One epoch of :func:`write_snapshot_stream`: one
+    :func:`..sources.snaptable.append` commit tagged ``txn = (app_id,
+    epoch_id)``, skipped when the table already committed the epoch
+    (:func:`.ingest._commit_epoch`). An empty epoch publishes nothing
+    (epoch ids may gap in the txn index)."""
+    from ..sources import snaptable as st
+    from .ingest import _commit_epoch
+
+    txn = (app_id, int(epoch_id))
+
+    def commit() -> None:
+        if not batch.isEmpty():
+            st.append(batch, table, txn=txn)
+
+    _commit_epoch(table, txn, commit)
+
+
 def write_snapshot_stream(
     spark,
     df,
@@ -951,26 +699,42 @@ def write_snapshot_stream(
     app_id: str | None = None,
     available_now: bool = True,
 ):
-    """Start the exactly-once snapshot sink for a streaming frame
-    (:class:`SnapshotStreamWriter`), creating the table (empty, with
-    ``partition_cols``) if it does not exist yet — table creation
-    needs a live SparkSession, which only this driver-side helper
-    has. The txn identity defaults to a digest of the checkpoint
-    location (one logical writer per checkpoint, like Delta); pass
-    ``app_id`` to name it explicitly. Returns the StreamingQuery."""
+    """Start the exactly-once snapshot sink for a streaming frame — the
+    Delta streaming-sink protocol as a ``foreachBatch``: every epoch
+    is one txn-tagged :func:`..sources.snaptable.append`
+    (:func:`_sink_epoch`), so the sink takes append's admission gate
+    (identity refusal, generated columns, CHECK constraints), its
+    writer (hidden partitioning, Spark's hive escaping, footer stats)
+    and its conflict rebase, each checked against the head the epoch
+    lands on: DDL committed between epochs is honoured, or the epoch
+    refuses (a renamed, dropped or retyped column).
+
+    Creates the table (empty, with ``partition_cols``) if it does not
+    exist yet; a stream carrying a column the table lacks, or one it
+    retypes, is refused here, before any epoch runs. The txn identity
+    defaults to a digest of the checkpoint location (one logical
+    writer per checkpoint, like Delta: a fixed default shared by every
+    caller would make one query's epochs look like another's replays,
+    and a fresh checkpoint means a fresh identity and reprocessing);
+    pass ``app_id`` to name it explicitly. Returns the
+    StreamingQuery."""
+    import functools
+    import hashlib
+
     from ..sources import snaptable as st
 
     if st.current_version(table) is None:
         st.create_table(
             local_df(spark, [], df.schema), table, partition_cols or []
         )
-    w = (
-        df.writeStream.format(SOURCE_NAME)
-        .option("table", table)
-        .option("checkpointLocation", checkpoint)
+    st._evolve_schema(st._manifest_at(table)[1]["schema"], df, merge_schema=False)
+    app_id = app_id or (
+        "snapshot_stream_writer_"
+        + hashlib.sha256(os.path.abspath(checkpoint).encode()).hexdigest()[:16]
     )
-    if app_id:
-        w = w.option("appId", app_id)
+    w = df.writeStream.foreachBatch(
+        functools.partial(_sink_epoch, table, app_id)
+    ).option("checkpointLocation", checkpoint)
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start(table)
+    return w.start()

@@ -20,6 +20,30 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
+def _commit_epoch(table: str, txn: tuple[str, int], commit) -> None:
+    """The one exactly-once replay check of every txn-tagged snapshot
+    sink (the Delta idempotent-writer protocol): run ``commit`` — which
+    must tag its commit with ``txn = (app_id, epoch_id)`` — unless
+    ``table`` already committed that epoch for that app id
+    (:func:`..sources.snaptable.txn_epoch`), in which case the replayed
+    epoch is skipped and ``table`` is left as it is."""
+    from ..sources import snaptable
+
+    done = snaptable.txn_epoch(table, txn[0])
+    if done is None or txn[1] > done:
+        commit()
+
+
+def _create_or_append(df: DataFrame, table: str, pcols, txn) -> None:
+    """An epoch's commit into a table its first epoch creates."""
+    from ..sources import snaptable
+
+    if snaptable.current_version(table) is None:
+        snaptable.create_table(df, table, pcols, txn=txn)
+    else:
+        snaptable.append(df, table, txn=txn)
+
+
 def silver_stream(
     spark: SparkSession,
     input_dir: str,
@@ -118,7 +142,6 @@ def silver_stream_snapshot(
     from ..operators.quality import annotate_rows, split_good_bad
     from ..operators.silver import clean_sessions, silver_row_rules
     from ..schemas import EV_BRONZE_SCHEMA
-    from ..sources import snaptable
 
     bronze = (
         spark.readStream.option("header", True)
@@ -127,26 +150,25 @@ def silver_stream_snapshot(
         .csv(input_dir)
     )
 
-    def _commit_epoch(df: DataFrame, tbl: str, txn, pcols) -> None:
-        done = snaptable.txn_epoch(tbl, txn[0])
-        if done is not None and txn[1] <= done:
-            return  # replay of an already-committed epoch for this table
-        if snaptable.current_version(tbl) is None:
-            snaptable.create_table(df, tbl, pcols, txn=txn)
-        else:
-            snaptable.append(df, tbl, txn=txn)
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         silver = clean_sessions(batch_df)
         annotated = annotate_rows(silver, silver_row_rules())
         txn = (app_id, int(epoch_id))
         with split_good_bad(annotated) as (good, bad):
-            _commit_epoch(good, table, txn, ["event_date"])
+            _commit_epoch(
+                table,
+                txn,
+                lambda: _create_or_append(good, table, ["event_date"], txn),
+            )
             if fault_injector is not None:
                 fault_injector(epoch_id)
             # quarantine rows keep event_date as a plain column but the
             # table is unpartitioned: rejects routinely carry null dates
-            _commit_epoch(bad, quarantine_table, txn, [])
+            _commit_epoch(
+                quarantine_table,
+                txn,
+                lambda: _create_or_append(bad, quarantine_table, [], txn),
+            )
 
     return (
         bronze.writeStream.foreachBatch(process_batch)
@@ -294,7 +316,6 @@ def gold_stream_snapshot(
     ``fault_injector``: optional ``(epoch_id) -> None`` run after the
     commit, before the epoch checkpoint — the mid-crash test seam."""
     from ..operators.gold import build_gold
-    from ..sources import snaptable
 
     silver = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -303,17 +324,14 @@ def gold_stream_snapshot(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = snaptable.txn_epoch(table, app_id)
-        if done is not None and epoch_id <= done:
-            return  # replay of an already-committed epoch
-        gold = build_gold(batch_df)
         txn = (app_id, int(epoch_id))
-        if snaptable.current_version(table) is None:
-            snaptable.create_table(gold, table, ["event_date"], txn=txn)
-        else:
-            snaptable.append(gold, table, txn=txn)
-        if fault_injector is not None:
-            fault_injector(epoch_id)
+
+        def commit() -> None:
+            _create_or_append(build_gold(batch_df), table, ["event_date"], txn)
+            if fault_injector is not None:
+                fault_injector(epoch_id)
+
+        _commit_epoch(table, txn, commit)
 
     return (
         silver.writeStream.foreachBatch(process_batch)
@@ -373,39 +391,41 @@ def cdc_merge_stream(
         )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = snaptable.txn_epoch(table, app_id)
-        if done is not None and epoch_id <= done:
-            return  # replay of an already-committed epoch
-        batch = batch_df
-        if order_cols:
-            batch = compact_changelog(batch, keys, order_cols)
-            # ordering/meta columns (sequence numbers, source LSNs)
-            # are batch plumbing, not table payload — drop the ones
-            # the target schema doesn't carry before the whole-row
-            # merge
-            import json as _json
+        txn = (app_id, int(epoch_id))
 
-            schema = snaptable._manifest_at(table)[1]["schema"]
-            target_cols = {f["name"] for f in _json.loads(schema)["fields"]}
-            extra = [
-                c
-                for c in order_cols
-                if c not in target_cols and c != delete_col
-            ]
-            if extra:
-                batch = batch.drop(*extra)
-        if batch.isEmpty():
-            return
-        snaptable.merge_into(
-            spark,
-            table,
-            batch,
-            keys,
-            delete_col=delete_col,
-            txn=(app_id, int(epoch_id)),
-        )
-        if fault_injector is not None:
-            fault_injector(epoch_id)
+        def commit() -> None:
+            batch = batch_df
+            if order_cols:
+                batch = compact_changelog(batch, keys, order_cols)
+                # ordering/meta columns (sequence numbers, source LSNs)
+                # are batch plumbing, not table payload — drop the ones
+                # the target schema doesn't carry before the whole-row
+                # merge
+                import json as _json
+
+                schema = snaptable._manifest_at(table)[1]["schema"]
+                target_cols = {f["name"] for f in _json.loads(schema)["fields"]}
+                extra = [
+                    c
+                    for c in order_cols
+                    if c not in target_cols and c != delete_col
+                ]
+                if extra:
+                    batch = batch.drop(*extra)
+            if batch.isEmpty():
+                return
+            snaptable.merge_into(
+                spark,
+                table,
+                batch,
+                keys,
+                delete_col=delete_col,
+                txn=txn,
+            )
+            if fault_injector is not None:
+                fault_injector(epoch_id)
+
+        _commit_epoch(table, txn, commit)
 
     w = source_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint
@@ -548,24 +568,26 @@ def cdc_scd2_stream(
         attrs = [c for c in source_stream.columns if c not in skip]
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = snaptable.txn_epoch(table, app_id)
-        if done is not None and epoch_id <= done:
-            return  # replay of an already-committed epoch
-        if batch_df.isEmpty():
-            return
-        scd2_apply_to_table(
-            spark,
-            table,
-            batch_df,
-            keys,
-            ts_col,
-            attrs,
-            tiebreak=tiebreak,
-            delete_col=delete_col,
-            txn=(app_id, int(epoch_id)),
-        )
-        if fault_injector is not None:
-            fault_injector(epoch_id)
+        txn = (app_id, int(epoch_id))
+
+        def commit() -> None:
+            if batch_df.isEmpty():
+                return
+            scd2_apply_to_table(
+                spark,
+                table,
+                batch_df,
+                keys,
+                ts_col,
+                attrs,
+                tiebreak=tiebreak,
+                delete_col=delete_col,
+                txn=txn,
+            )
+            if fault_injector is not None:
+                fault_injector(epoch_id)
+
+        _commit_epoch(table, txn, commit)
 
     w = source_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint
@@ -613,18 +635,19 @@ def corpus_prep_stream(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = snaptable.txn_epoch(table, app_id)
-        if done is not None and epoch_id <= done:
-            return
-        ev = eval_hashes_for(spark.read.schema(doc_schema).parquet(eval_dir))
         txn = (app_id, int(epoch_id))
-        if snaptable.current_version(table) is None:
-            out = prep_batch(batch_df, ev, history_digests=None)
-            snaptable.create_table(out, table, ["source"], txn=txn)
-        else:
-            history = snaptable.read_snapshot(spark, table).select("digest")
+
+        def commit() -> None:
+            ev = eval_hashes_for(spark.read.schema(doc_schema).parquet(eval_dir))
+            history = (
+                snaptable.read_snapshot(spark, table).select("digest")
+                if snaptable.current_version(table) is not None
+                else None
+            )
             out = prep_batch(batch_df, ev, history_digests=history)
-            snaptable.append(out, table, txn=txn)
+            _create_or_append(out, table, ["source"], txn)
+
+        _commit_epoch(table, txn, commit)
 
     return (
         docs.writeStream.foreachBatch(process_batch)

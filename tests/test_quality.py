@@ -256,3 +256,29 @@ def test_run_silver_rejects_unknown_fail_mode(spark, tmp_path, evgen_batch_csv):
             fail_mode="bogus",
         )
     assert not silver.exists()
+
+
+@pytest.mark.parametrize("bronze", ["evgen_batch_csv", "bronze_sample"])
+def test_clean_sessions_same_under_inferred_and_pinned_bronze_schema(
+    spark, request, bronze
+):
+    """run_silver reads bronze under schemas.EV_BRONZE_SCHEMA, as the
+    silver streams do, instead of inferring it in an extra pass: the
+    cleaned frame has the same schema and rows either way."""
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
+        clean_sessions,
+    )
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.schemas import (
+        EV_BRONZE_SCHEMA,
+    )
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources.readers import (
+        read_bronze_csv,
+    )
+
+    fixture = request.getfixturevalue(bronze)
+    path = getattr(fixture, "path", fixture)
+    inferred = clean_sessions(read_bronze_csv(spark, path, infer=True))
+    pinned = clean_sessions(read_bronze_csv(spark, path, schema=EV_BRONZE_SCHEMA))
+    assert pinned.schema == inferred.schema
+    rows = [sorted(map(tuple, df.collect()), key=repr) for df in (inferred, pinned)]
+    assert rows[0] == rows[1] and len(rows[0]) > 0

@@ -3872,6 +3872,91 @@ def test_one_write_path_and_one_alias_rule():
     assert callers == ["_write_data"]
 
 
+def test_one_streaming_write_path():
+    """The streaming sink writes through snaptable.append: in the whole
+    package only snaptable._write_data collects footer stats (plain or
+    attribute calls), no DataSource stream writer exists, and the
+    streaming package asks txn_epoch for its replay check in one place
+    (ingest._commit_epoch)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(st.__file__).parent.parent
+    calls, in_writer, txn_checks = 0, 0, 0
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        assert "DataSourceStreamWriter" not in src, path
+        if path.parent.name == "streaming":
+            txn_checks += src.count("txn_epoch(")
+        tree = ast.parse(src)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "_write_data":
+                in_writer += sum(
+                    isinstance(n, ast.Call)
+                    and getattr(n.func, "id", None) == "_collect_stats"
+                    for n in ast.walk(node)
+                )
+            if isinstance(node, ast.Call) and "_collect_stats" in (
+                getattr(node.func, "id", None),
+                getattr(node.func, "attr", None),
+            ):
+                calls += 1
+    assert calls == in_writer == 1
+    assert txn_checks == 1
+
+
+def test_merge_numbers_inserts_per_partition(spark, tmp_path, monkeypatch):
+    """A row-tracked MERGE numbers its fresh inserts where they are —
+    per-partition counts, a driver prefix sum, position in partition —
+    not through an unpartitioned window that moves every insert into
+    one task: the merged frame's plan has no Window without a
+    partition spec, the inserts span several partitions, and their ids
+    are exactly mark..mark+n-1."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "rt_merge_wide")
+    st.create_table(
+        spark.createDataFrame([(i, i) for i in range(4)], "id int, v int")
+        .repartition(1)
+        .sortWithinPartitions("id"),
+        t,
+        [],
+    )
+    st.enable_row_tracking(t)
+    mark = st._manifest_at(t)[1]["next_row_id"]
+    seen = []
+    write = st.overwrite_table
+
+    def spy(df, *a, **kw):
+        seen.append(df)
+        return write(df, *a, **kw)
+
+    monkeypatch.setattr(st, "overwrite_table", spy)
+    n = 30
+    src = spark.createDataFrame(
+        [(2, 99)] + [(100 + i, i) for i in range(n)], "id int, v int"
+    ).repartition(3)
+    st.merge_into(spark, t, src, ["id"])
+    (merged,) = seen
+    plan = merged._jdf.queryExecution().optimizedPlan()
+    nodes = []
+    while (node := plan.apply(len(nodes))) is not None:
+        nodes.append(node)
+    assert len(nodes) > 3
+    assert all(
+        n.partitionSpec().nonEmpty() for n in nodes if n.nodeName() == "Window"
+    )
+    fresh = merged.filter(F.col("id") >= 100)
+    assert fresh.select(F.spark_partition_id()).distinct().count() >= 2
+    ids = {
+        r.id: r._row_id
+        for r in st.read_snapshot(spark, t, with_row_ids=True).collect()
+    }
+    assert {ids[100 + i] for i in range(n)} == set(range(mark, mark + n))
+    assert {ids[i] for i in range(4)} == set(range(4))
+    assert st._manifest_at(t)[1]["next_row_id"] == mark + n
+
+
 def test_one_change_feed_planner():
     """The batch and streaming change feeds plan each commit through
     snaptable._change_plan: the OPTIMIZE-emits-nothing test exists once,

@@ -2133,9 +2133,8 @@ def test_snapshot_stream_max_bytes_per_trigger_bounds_batches(
 
 
 # ---------------------------------------------------------------------------
-# snapshot_stream SINK (streaming/cdf_source.SnapshotStreamWriter):
-# df.writeStream.format("snapshot_stream") — per-epoch exactly-once
-# append commits, replacing the foreachBatch boilerplate
+# snapshot_stream SINK (streaming/cdf_source.write_snapshot_stream): a
+# foreachBatch whose every epoch is one txn-tagged snaptable.append
 # ---------------------------------------------------------------------------
 
 
@@ -2188,148 +2187,203 @@ def test_snapshot_stream_sink_end_to_end_and_resume(spark, tmp_path):
     assert glob.glob(t + "/data/_staging-*") == []  # staging all cleaned
 
 
-def test_snapshot_stream_sink_replayed_epoch_skipped(spark, tmp_path):
-    """The exactly-once core at the writer protocol level: a REPLAYED
-    commit (same batchId, fresh staged files — the engine re-running
-    an epoch whose commit already published) must publish nothing and
-    reclaim its staged files."""
-    from pyspark.sql import Row
-
+def test_snapshot_stream_sink_replayed_and_empty_epochs_publish_nothing(
+    spark, tmp_path
+):
+    """The exactly-once core, on the sink's epoch body: an epoch the
+    table already committed (same app id and epoch id, fresh rows —
+    the engine re-running an epoch whose commit published) publishes
+    nothing, and neither does an empty epoch."""
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
         snaptable as st,
     )
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming.cdf_source import (
-        SnapshotStreamDataSource,
+        _sink_epoch,
     )
 
     t = str(tmp_path / "tbl")
-    st.create_table(
-        spark.createDataFrame([], "id int, g string, v int"), t, ["g"]
-    )
-    ds = SnapshotStreamDataSource({"path": t, "appId": "sink_proto"})
-    w = ds.streamWriter(
-        spark.createDataFrame([], "id int, g string, v int").schema, False
-    )
-    m1 = w.write(iter([Row(id=1, g="A", v=10), Row(id=2, g="B", v=20)]))
-    w.commit([m1], 0)
+    schema = "id int, g string, v int"
+    st.create_table(spark.createDataFrame([], schema), t, ["g"])
+    batch = spark.createDataFrame([(1, "A", 10), (2, "B", 20)], schema)
+    _sink_epoch(t, "sink_proto", batch, 0)
     assert st.current_version(t) == 2
     rows = sorted((r.id, r.g, r.v) for r in st.read_snapshot(spark, t).collect())
     assert rows == [(1, "A", 10), (2, "B", 20)]
-    # replay of epoch 0: fresh staged files, same batchId
-    m2 = w.write(iter([Row(id=1, g="A", v=10), Row(id=2, g="B", v=20)]))
-    w.commit([m2], 0)
-    assert st.current_version(t) == 2  # nothing published
-    import glob
-
-    assert glob.glob(t + "/data/_staging-*") == []
-    # abort cleans staged files too
-    m3 = w.write(iter([Row(id=9, g="A", v=90)]))
-    w.abort([m3, None], 1)
-    assert glob.glob(t + "/data/_staging-*") == []
+    _sink_epoch(t, "sink_proto", batch, 0)  # replay of epoch 0
     assert st.current_version(t) == 2
+    _sink_epoch(t, "sink_proto", spark.createDataFrame([], schema), 1)
+    assert st.current_version(t) == 2
+    assert st.txn_epoch(t, "sink_proto") == 0
 
 
-def test_snapshot_stream_sink_refusals(spark, tmp_path):
-    """Contract gates: missing table, CHECK constraints, schema
-    mismatch, and complete/overwrite mode all refuse loudly."""
+def test_snapshot_stream_sink_check_constraints_and_mid_stream_ddl(
+    spark, tmp_path
+):
+    """Each epoch is an append against the head it lands on: a
+    CHECK-constrained table takes a conforming epoch and refuses a
+    violating one without publishing, a constraint added between
+    epochs is enforced, and a column renamed between epochs refuses
+    the stale-named epoch instead of reverting the rename."""
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
         snaptable as st,
     )
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming.cdf_source import (
-        SnapshotStreamDataSource,
+        _sink_epoch,
     )
-
-    schema = spark.createDataFrame([], "id int, v int").schema
-    ds = SnapshotStreamDataSource(
-        {"path": str(tmp_path / "absent"), "appId": "x"}
-    )
-    with pytest.raises(ValueError, match="does not exist"):
-        ds.streamWriter(schema, False)
 
     t = str(tmp_path / "con")
-    st.create_table(spark.createDataFrame([(1, 1)], "id int, v int"), t, [])
-    st.add_constraint(spark, t, "v_pos", "v > 0")
-    ds = SnapshotStreamDataSource({"path": t, "appId": "x"})
-    with pytest.raises(ValueError, match="CHECK"):
-        ds.streamWriter(schema, False)
+    schema = "id int, v int"
+    st.create_table(
+        spark.createDataFrame([], schema), t, [], constraints={"v_pos": "v > 0"}
+    )
+    _sink_epoch(t, "c", spark.createDataFrame([(1, 10)], schema), 0)
+    head = st.current_version(t)
+    with pytest.raises(st.ConstraintViolation, match="v_pos"):
+        _sink_epoch(t, "c", spark.createDataFrame([(2, -5)], schema), 1)
+    assert st.current_version(t) == head
+    st.add_constraint(spark, t, "v_small", "v < 100")
+    with pytest.raises(st.ConstraintViolation, match="v_small"):
+        _sink_epoch(t, "c", spark.createDataFrame([(3, 500)], schema), 1)
+    st.rename_column(t, "id", "key")
+    head = st.current_version(t)
+    with pytest.raises(ValueError, match="adds columns"):
+        _sink_epoch(t, "c", spark.createDataFrame([(4, 5)], schema), 1)
+    assert st.current_version(t) == head
+    assert sorted(tuple(r) for r in st.read_snapshot(spark, t).collect()) == [
+        (1, 10)
+    ]
+    assert st.txn_epoch(t, "c") == 0
 
-    t2 = str(tmp_path / "plain")
-    st.create_table(spark.createDataFrame([(1, 1)], "id int, v int"), t2, [])
-    ds = SnapshotStreamDataSource({"path": t2, "appId": "x"})
-    with pytest.raises(ValueError, match="does not match"):
-        ds.streamWriter(
-            spark.createDataFrame([], "id int, OTHER int").schema, False
+
+def test_snapshot_stream_sink_generated_column_and_hidden_partitioning(
+    spark, tmp_path
+):
+    """A table with a generated column under ``bucket(4,k)`` hidden
+    partitioning takes the sink's epochs exactly as a batch append of
+    the same rows: same rows back, same partition layout."""
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
+        snaptable as st,
+    )
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming.cdf_source import (
+        _sink_epoch,
+    )
+
+    schema = "k int, v int"
+    rows = [(k, k * 3) for k in range(12)]
+    tables = [str(tmp_path / "sink"), str(tmp_path / "batch")]
+    for t in tables:
+        st.create_table(
+            spark.createDataFrame([], schema),
+            t,
+            ["bucket(4,k)"],
+            generated={"v2": "v * 2"},
         )
-    with pytest.raises(ValueError, match="append-only"):
-        ds.streamWriter(schema, True)
+    _sink_epoch(tables[0], "gen", spark.createDataFrame(rows, schema), 0)
+    st.append(spark.createDataFrame(rows, schema), tables[1])
+    sink, batch = (
+        sorted(tuple(r) for r in st.read_snapshot(spark, t).collect())
+        for t in tables
+    )
+    assert sink == batch == [(k, k * 3, k * 6) for k in range(12)]
+    dirs = [
+        sorted({f.rsplit("/", 1)[0] for f in st._manifest_at(t)[1]["files"]})
+        for t in tables
+    ]
+    assert dirs[0] == dirs[1] and len(dirs[0]) > 1
 
 
-def test_snapshot_stream_sink_metadata_change_and_gates(spark, tmp_path):
-    """Mid-stream DDL fails the epoch commit instead of silently
-    reverting the DDL or skipping a new CHECK constraint (Delta's
-    MetadataChangedException for quiescent changes); hidden
-    partitioning, type mismatches, and a missing txn identity refuse
-    at setup; an empty-string partition value lands in the hive
-    default-partition dir like Spark's own writes."""
-    from pyspark.sql import Row
+def test_snapshot_stream_sink_empty_and_null_partition_values_read_null(
+    spark, tmp_path
+):
+    """An empty-string or null partition value lands where Spark's own
+    partitioned write puts it and reads back as null."""
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
+        snaptable as st,
+    )
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming.cdf_source import (
+        _sink_epoch,
+    )
+
+    t = str(tmp_path / "nulls")
+    schema = "id int, g string"
+    st.create_table(spark.createDataFrame([], schema), t, ["g"])
+    _sink_epoch(
+        t, "n", spark.createDataFrame([(1, ""), (2, None), (3, "a")], schema), 0
+    )
+    got = sorted((r.id, r.g) for r in st.read_snapshot(spark, t).collect())
+    assert got == [(1, None), (2, None), (3, "a")]
+
+
+def test_snapshot_stream_sink_refuses_extra_or_retyped_column_at_start(
+    spark, tmp_path
+):
+    """A stream carrying a column the table lacks, or one it retypes,
+    is refused by append's own schema gate before any query starts."""
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
+        snaptable as st,
+    )
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming.cdf_source import (
+        write_snapshot_stream,
+    )
+
+    t = str(tmp_path / "typed")
+    st.create_table(spark.createDataFrame([(1, 1)], "id int, v int"), t, [])
+    src = tmp_path / "in"
+    src.mkdir()
+    active = len(spark.streams.active)
+    for ddl, match in (
+        ("id int, v int, extra int", "adds columns"),
+        ("id int, v string", "type conflict"),
+    ):
+        stream = spark.readStream.schema(ddl).parquet(str(src))
+        with pytest.raises(ValueError, match=match):
+            write_snapshot_stream(spark, stream, t, str(tmp_path / "ck"))
+    assert len(spark.streams.active) == active
+    assert st.current_version(t) == 1
+
+
+def test_snapshot_stream_sink_default_app_id_and_gated_tables(spark, tmp_path):
+    """Without ``app_id`` the sink keys its txn on
+    ``"snapshot_stream_writer_" + sha256(abspath(checkpoint))[:16]``, so
+    a checkpoint an earlier sink wrote resumes without reprocessing; and
+    the sink writes into a table with a CHECK constraint, a generated
+    column and hidden partitioning at once."""
+    import hashlib
+    import os
 
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.sources import (
         snaptable as st,
     )
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.streaming.cdf_source import (
-        SnapshotStreamDataSource,
-        _hive_escape,
+        write_snapshot_stream,
     )
 
-    t = str(tmp_path / "meta")
+    schema = "k int, v int"
+    src = str(tmp_path / "in")
+    spark.createDataFrame([(1, 10), (2, 20)], schema).coalesce(1).write.parquet(
+        src
+    )
+    t = str(tmp_path / "tbl")
     st.create_table(
-        spark.createDataFrame([], "id int, g string, v int"), t, ["g"]
+        spark.createDataFrame([], schema),
+        t,
+        ["bucket(4,k)"],
+        constraints={"v_pos": "v > 0"},
+        generated={"v2": "v * 2"},
     )
-    schema = spark.createDataFrame([], "id int, g string, v int").schema
-    ds = SnapshotStreamDataSource({"path": t, "appId": "meta_guard"})
-    w = ds.streamWriter(schema, False)
-    m = w.write(iter([Row(id=1, g="A", v=10)]))
-    w.commit([m], 0)
-    # DDL lands between epochs: next commit must fail, not clobber
-    st.add_constraint(spark, t, "v_pos", "v > 0")
-    m2 = w.write(iter([Row(id=2, g="B", v=-5)]))
-    with pytest.raises(ValueError, match="metadata changed mid-stream"):
-        w.commit([m2], 1)
-    import glob
-
-    assert glob.glob(t + "/data/_staging-*") == []  # staged reclaimed
-    rows = sorted((r.id, r.v) for r in st.read_snapshot(spark, t).collect())
-    assert rows == [(1, 10)]  # the unvalidated row never published
-
-    # hidden-partitioning transform spec: refuse at setup
-    th = str(tmp_path / "hidden")
-    st.create_table(
-        spark.createDataFrame([(1, 7)], "k int, v int"), th, ["bucket(4,k)"]
+    ck = str(tmp_path / "ck")
+    q = write_snapshot_stream(
+        spark, spark.readStream.schema(schema).parquet(src), t, ck
     )
-    ds2 = SnapshotStreamDataSource({"path": th, "appId": "x"})
-    with pytest.raises(ValueError, match="hidden-partitioning"):
-        ds2.streamWriter(spark.createDataFrame([], "k int, v int").schema, False)
-
-    # same names, different TYPE: refuse at setup, not mid-epoch
-    tp = str(tmp_path / "typed")
-    st.create_table(
-        spark.createDataFrame([], "id int, g string, v int"), tp, ["g"]
+    q.awaitTermination(180)
+    assert q.exception() is None
+    got = sorted(tuple(r) for r in st.read_snapshot(spark, t).collect())
+    assert got == [(1, 10, 20), (2, 20, 40)]
+    app_id = (
+        "snapshot_stream_writer_"
+        + hashlib.sha256(os.path.abspath(ck).encode()).hexdigest()[:16]
     )
-    ds3 = SnapshotStreamDataSource({"path": tp, "appId": "x"})
-    with pytest.raises(ValueError, match="names AND types"):
-        ds3.streamWriter(
-            spark.createDataFrame([], "id int, g string, v string").schema,
-            False,
-        )
-
-    # no appId and no checkpointLocation: no txn identity to key on
-    ds4 = SnapshotStreamDataSource({"path": tp})
-    with pytest.raises(ValueError, match="appId"):
-        ds4.streamWriter(schema, False)
-
-    # empty string joins None in the hive default partition
-    assert _hive_escape("") == "__HIVE_DEFAULT_PARTITION__"
-    assert _hive_escape(None) == "__HIVE_DEFAULT_PARTITION__"
+    assert st.txn_epoch(t, app_id) == 0
 
 
 def test_snapshot_stream_read_change_feed_matches_batch_cdf(
