@@ -6,12 +6,13 @@ hand-rolled rule array for row-level quarantine (:170-191). This
 module rebuilds both natively on DataFrame aggregates:
 
 - **Check / VerificationSuite**: declarative constraints compiled to
-  ONE ``df.agg(...)`` pass over the data (Deequ runs its own Spark
-  jobs; we fold all scan-level metrics into a single job — at 100 TB
-  the difference between one scan and N scans is the whole game).
-  Uniqueness constraints need a per-column groupBy, so each adds one
-  extra (shuffled, but combiner-reduced) pass — same as Deequ's
-  grouping analyzers.
+  ONE pass over the data (Deequ runs its own Spark jobs; we fold all
+  scan-level metrics into a single job — at 100 TB the difference
+  between one scan and N scans is the whole game). Uniqueness
+  constraints need a per-column groupBy (shuffled, but
+  combiner-reduced — same as Deequ's grouping analyzers); the first
+  one carries the scan-level metrics through ``df.observe``, so only
+  a second uniqueness constraint adds a pass.
 - **Deequ null semantics preserved** (the subtle part, SURVEY.md
   §7.3): nulls FAIL ``is_complete``, PASS ``is_non_negative`` and
   ``is_contained_in``; ``is_unique`` counts rows whose value occurs
@@ -201,9 +202,10 @@ class Check:
 
 
 class VerificationSuite:
-    """Runs checks with the fewest possible data passes: all
-    scan-level metrics of all checks fold into one ``agg``; one
-    groupBy job per distinct uniqueness column."""
+    """Runs checks with the fewest possible data passes: one groupBy
+    job per uniqueness constraint, the first of which also carries every
+    scan-level metric of every check; a suite with no uniqueness
+    constraint folds them into one ``agg``."""
 
     def __init__(self):
         self._df: DataFrame | None = None
@@ -259,21 +261,28 @@ class VerificationSuite:
         return VerificationResult(status, results)
 
     def run(self) -> VerificationResult:
+        """Evaluate every check. The scan-level metrics ride along
+        with the first uniqueness ``groupBy`` job through
+        ``df.observe`` — so a suite scans its input once per
+        uniqueness constraint and no more; a suite without one runs
+        the single ``agg`` job."""
+        from pyspark.sql import Observation
+
         assert self._df is not None, "call on_data first"
         df = self._df
         scan, grouping = self._split_constraints()
+        metrics = [c.metric.alias(f"m{i}") for i, (_, c) in enumerate(scan)]
         values: dict[int, float | None] = {}
-        if scan:
-            row = df.agg(
-                *[
-                    c.metric.alias(f"m{i}")
-                    for i, (_, c) in enumerate(scan)
-                ]
-            ).collect()[0]
-            for i in range(len(scan)):
-                v = row[f"m{i}"]
-                values[id(scan[i][1])] = float(v) if v is not None else None
-        values.update(self._grouping_values(df, grouping))
+        if scan and grouping:
+            observation = Observation()
+            observed = df.observe(observation, *metrics)
+            values.update(self._grouping_values(observed, grouping[:1]))
+            values.update(self._grouping_values(df, grouping[1:]))
+            values.update(_scan_values(scan, observation.get))
+        else:
+            if scan:
+                values.update(_scan_values(scan, df.agg(*metrics).collect()[0]))
+            values.update(self._grouping_values(df, grouping))
         return self._assemble(values)
 
     def attach(self, df: DataFrame) -> tuple[DataFrame, "ObservedVerification"]:
@@ -325,12 +334,19 @@ class ObservedVerification:
     def result(self) -> VerificationResult:
         values: dict[int, float | None] = {}
         if self._scan:
-            got = self._observation.get  # blocks until the action completes
-            for i, (_, c) in enumerate(self._scan):
-                v = got[f"m{i}"]
-                values[id(c)] = float(v) if v is not None else None
+            # blocks until the action completes
+            values.update(_scan_values(self._scan, self._observation.get))
         values.update(self._suite._grouping_values(self._df, self._grouping))
         return self._suite._assemble(values)
+
+
+def _scan_values(scan, row) -> dict[int, float | None]:
+    """{id(constraint): value} from the ``m<i>`` metric row of a
+    scan-level pass (an ``agg`` row or an observation's dict)."""
+    return {
+        id(c): None if row[f"m{i}"] is None else float(row[f"m{i}"])
+        for i, (_, c) in enumerate(scan)
+    }
 
 
 # ---------------------------------------------------------------------------

@@ -4,10 +4,10 @@
 
 Metrics are exposed as INTEGER counts (not fractions) so the DuckDB
 oracle comparison is bit-exact — a fraction would ride on float
-division order. The aggregation shape is identical to what
+division order. The aggregation shape is the one
 ``VerificationSuite.run`` compiles: every scan-level metric folds into
-ONE ``df.agg(...)`` pass (single scan at 100 TB), uniqueness adds one
-combiner-reduced groupBy pass.
+ONE pass (single scan at 100 TB), uniqueness adds one combiner-reduced
+groupBy pass — which ``run`` lets carry the scan-level metrics too.
 """
 
 from __future__ import annotations

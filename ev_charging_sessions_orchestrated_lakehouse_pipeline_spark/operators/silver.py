@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import decode_map, fix_year
@@ -61,21 +61,16 @@ def clean_sessions(df: DataFrame, precise_timestamps: bool = False) -> DataFrame
     minute-granularity quirk (fix_year drops seconds — SURVEY.md §2.3
     F2); True keeps full precision.
     """
-    out = df.drop(*[c for c in EV_SILVER_DROP_COLS if c in df.columns])
+    # ONE projection: every withColumn is an eager analysis over py4j
+    exprs = {c: F.col(c) for c in df.columns if c not in EV_SILVER_DROP_COLS}
     for col, typ in EV_SILVER_CASTS.items():
-        out = out.withColumn(col, F.col(col).cast(typ))
-    out = (
-        out.withColumn(
-            "created", F.to_timestamp(fix_year("created", precise=precise_timestamps))
-        )
-        .withColumn(
-            "ended", F.to_timestamp(fix_year("ended", precise=precise_timestamps))
-        )
-        .withColumn("event_date", F.to_date("created"))
-        .withColumn("facilityType", decode_map("facilityType", FACILITY_TYPE_NAMES))
-        .withColumn("weekday", decode_map("weekday", WEEKDAY_NAMES))
-    )
-    return out
+        exprs[col] = F.col(col).cast(typ)
+    for col in ("created", "ended"):
+        exprs[col] = F.to_timestamp(fix_year(exprs[col], precise=precise_timestamps))
+    exprs["event_date"] = F.to_date(exprs["created"])
+    exprs["facilityType"] = decode_map(exprs["facilityType"], FACILITY_TYPE_NAMES)
+    exprs["weekday"] = decode_map(exprs["weekday"], WEEKDAY_NAMES)
+    return df.select(*[e.alias(c) for c, e in exprs.items()])
 
 
 def silver_check() -> Check:
@@ -152,25 +147,28 @@ def run_silver(
         raise ValueError(f"unknown fail_mode {fail_mode!r}")
     bronze = read_bronze_csv(spark, input_path, schema=EV_BRONZE_SCHEMA)
     silver = clean_sessions(bronze, precise_timestamps=precise_timestamps)
-
-    verification = (
-        VerificationSuite().on_data(silver).add_check(silver_check()).run()
-    )
-    if mode == "fail_job" and verification.status != CheckStatus.SUCCESS:
-        raise RuntimeError(
-            f"Data quality FAILED: {verification.status.value}: "
-            f"{[r.constraint for r in verification.results if not r.passed]}"
-        )
-
     annotated = annotate_rows(silver, silver_row_rules())
     partition_cols = ["event_date"]
     if secondary_partition and secondary_partition in silver.columns:
         partition_cols.append(secondary_partition)
 
+    # bronze is scanned ONCE: verification runs on the frame the split
+    # persisted (its first job fills the cache both writes then read),
+    # and the good/bad counts ride along with the writes
     with split_good_bad(annotated) as (good, bad):
-        write_partitioned_parquet(good, silver_path, partition_cols)
-        write_partitioned_parquet(bad, quarantine_path, partition_cols)
-        good_count, bad_count = good.count(), bad.count()
+        verification = (
+            VerificationSuite().on_data(annotated).add_check(silver_check()).run()
+        )
+        if mode == "fail_job" and verification.status != CheckStatus.SUCCESS:
+            raise RuntimeError(
+                f"Data quality FAILED: {verification.status.value}: "
+                f"{[r.constraint for r in verification.results if not r.passed]}"
+            )
+        good_obs, bad_obs = Observation(), Observation()
+        n = F.count(F.lit(1)).alias("n")
+        write_partitioned_parquet(good.observe(good_obs, n), silver_path, partition_cols)
+        write_partitioned_parquet(bad.observe(bad_obs, n), quarantine_path, partition_cols)
+        good_count, bad_count = good_obs.get["n"], bad_obs.get["n"]
     if bad_count > 0 and mode == "fail_job":
         raise RuntimeError(f"Quality gate failed: {bad_count} quarantined rows")
     return SilverResult(verification, good_count, bad_count)

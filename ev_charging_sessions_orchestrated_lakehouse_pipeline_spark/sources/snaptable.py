@@ -61,6 +61,13 @@ Log-structured design (the same shape as the Delta/Iceberg logs):
   streaming change feed and its admission budget all read through
   it, and an unchanged deletion vector is compared by reference,
   never decoded.
+- **Time-range skipping**: each file's footer min/max stats cover
+  DATE and TIMESTAMP columns too, kept in the manifest as epoch days
+  and epoch microseconds (:func:`_temporal_bounds`), so
+  :func:`_prune_files` skips files outside a ``created`` range with no
+  partition filter. The session writes INT64 TIMESTAMP(MICROS), so
+  every new file has them; INT96 files, from Spark's default or an
+  older commit, carry none and are never skipped on time.
 
 At 100 TB the manifests stay tiny (file paths + counts, not data) and
 the read plan is exactly the same partition-pruned Parquet scan as a
@@ -983,12 +990,39 @@ def _write_data(
     return produced, stats
 
 
+#: the INT64 TIMESTAMP units Spark writes (outputTimestampType
+#: TIMESTAMP_MICROS or TIMESTAMP_MILLIS), as multiples of a microsecond
+_MICROS_PER_UNIT = {"milliseconds": 1000, "microseconds": 1}
+
+
+def _temporal_bounds(stats) -> tuple[int, int] | None:
+    """A DATE or INT64 TIMESTAMP column chunk's footer min/max in the
+    JSON-stable integer form the manifest keeps: epoch days for a
+    DATE, epoch microseconds for a TIMESTAMP in micros or millis.
+    None for every other column, INT96 timestamps included (Parquet
+    defines no order for INT96, so writers emit no min/max for it)."""
+    kind = stats.logical_type.type
+    if kind == "DATE" and stats.physical_type == "INT32":
+        return stats.min_raw, stats.max_raw
+    if kind != "TIMESTAMP" or stats.physical_type != "INT64":
+        return None
+    unit = json.loads(stats.logical_type.to_json()).get("timeUnit")
+    scale = _MICROS_PER_UNIT.get(unit)
+    if scale is None:
+        return None
+    return stats.min_raw * scale, stats.max_raw * scale
+
+
 def _collect_stats(table: str, rel_paths: list[str]) -> dict:
     """Per-file row counts and column min/max from the Parquet
     footers (one metadata read per file, no data scan) — the
     data-skipping index a Delta log keeps in addStats. Only
-    JSON-stable scalar types (bool/int/float/str) are kept; columns
-    with missing or exotic stats simply don't prune."""
+    JSON-stable scalars are kept: bool/int/float/str bounds as they
+    are, and DATE / INT64 TIMESTAMP bounds as integers — epoch days
+    and epoch microseconds (:func:`_temporal_bounds`), which
+    :func:`_prune_files` compares against a literal converted the way
+    ``F.lit`` converts it. Columns with missing or exotic stats
+    (INT96 timestamps among them) simply don't prune."""
     import pyarrow.parquet as pq
 
     out = {}
@@ -1016,17 +1050,22 @@ def _collect_stats(table: str, rel_paths: list[str]) -> dict:
                     nulls[name] = nulls.get(name, 0) + stats.null_count
                 if not stats.has_min_max:
                     continue
-                try:
-                    lo, hi = stats.min, stats.max
-                except Exception:
-                    # pyarrow can't extract min/max for some physical
-                    # types (e.g. wide decimals) — such columns simply
-                    # don't prune, same as missing stats
-                    continue
-                if not isinstance(lo, (bool, int, float, str)) or not isinstance(
-                    hi, (bool, int, float, str)
-                ):
-                    continue
+                bounds = _temporal_bounds(stats)
+                if bounds is not None:
+                    lo, hi = bounds
+                else:
+                    try:
+                        lo, hi = stats.min, stats.max
+                    except Exception:
+                        # pyarrow can't extract min/max for some
+                        # physical types (e.g. wide decimals) — such
+                        # columns simply don't prune, same as missing
+                        # stats
+                        continue
+                    if not isinstance(
+                        lo, (bool, int, float, str)
+                    ) or not isinstance(hi, (bool, int, float, str)):
+                        continue
                 mins[name] = lo if name not in mins else min(mins[name], lo)
                 maxs[name] = hi if name not in maxs else max(maxs[name], hi)
         out[rel] = {
@@ -3364,16 +3403,69 @@ _OPS = {
 }
 
 
+#: a TIMESTAMP_NTZ wall clock and the instant Spark casts it to (to
+#: compare it with a TIMESTAMP literal) differ by the session zone's
+#: offset, which lies between UTC-12 and UTC+14 — so the instant lies
+#: in [wall - 14 h, wall + 12 h] whatever the session time zone
+_NTZ_BELOW_US = 14 * 3600 * 10**6
+_NTZ_ABOVE_US = 12 * 3600 * 10**6
+
+
+def _temporal_literal(kind: str, op: str, val):
+    """A filter literal on a ``kind`` column in the integer domain of
+    its footer bounds, converted by pyspark's own ``toInternal`` — the
+    conversion ``F.lit`` applies when :func:`_filters_to_column`
+    re-applies the filter — or None when the conjunct must not prune:
+    a string, a date against a timestamp or a datetime against a date
+    (Spark compares those after a cast), a naive datetime in a session
+    that types it TIMESTAMP_NTZ, or a datetime before the Gregorian
+    switch (``F.lit`` rebases those from the Julian calendar). A
+    TIMESTAMP_NTZ column takes the literal as the instant ``F.lit``
+    makes of it; :func:`_prune_files` widens that column's bounds by
+    the zone offsets instead."""
+    import datetime
+
+    from pyspark.sql.types import DateType, TimestampType
+
+    if op == "in":
+        vs = [_temporal_literal(kind, "=", v) for v in val]
+        return None if any(v is None for v in vs) else vs
+    if kind == "date":
+        return DateType().toInternal(val) if type(val) is datetime.date else None
+    if not isinstance(val, datetime.datetime) or val.year <= 1582:
+        return None
+    if kind == "timestamp" and val.tzinfo is None:
+        from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+        if is_timestamp_ntz_preferred():
+            return None
+    return TimestampType().toInternal(val)
+
+
 def _prune_files(table: str, manifest: dict, filters: list[tuple]) -> list[str]:
     """Files that MAY contain matching rows: a file is skipped only
     when its footer min/max (or its partition-path value, for
     equality on partition columns) PROVES no row satisfies a
     conjunct. Missing stats never prune — skipping is an
-    optimization, correctness comes from re-applying the filter."""
+    optimization, correctness comes from re-applying the filter.
+    DATE and TIMESTAMP bounds are integers; a conjunct on such a
+    column compares them against its literal as
+    :func:`_temporal_literal` converts it, or does not prune."""
     stats = manifest.get("file_stats", {})
     # footer stats and bloom bitmaps key by PHYSICAL column names
     # (they come from the files); filters arrive logical
     cmap = manifest.get("column_mapping") or {}
+    # the columns whose footer bounds are integers (_temporal_bounds)
+    temporal = {
+        f["name"]: f["type"]
+        for f in json.loads(manifest["schema"])["fields"]
+        if f["type"] in ("date", "timestamp", "timestamp_ntz")
+    }
+    converted = {
+        i: _temporal_literal(temporal[col], op, val)
+        for i, (col, op, val) in enumerate(filters)
+        if col in temporal and op in _OPS
+    }
     kept = []
     for f in manifest["files"]:
         fstat = stats.get(f, {})
@@ -3383,7 +3475,7 @@ def _prune_files(table: str, manifest: dict, filters: list[tuple]) -> list[str]:
         # own path columns
         pvals = _path_values(f)
         alive = True
-        for col, op, val in filters:
+        for i, (col, op, val) in enumerate(filters):
             phys = cmap.get(col, col)
             if op in ("isnull", "notnull"):
                 # Delta's nullCount skipping: a file with zero nulls
@@ -3448,6 +3540,12 @@ def _prune_files(table: str, manifest: dict, filters: list[tuple]) -> list[str]:
             lo, hi = mins.get(phys), maxs.get(phys)
             if lo is None or hi is None:
                 continue  # no stats: cannot prune this conjunct
+            if col in temporal:
+                val = converted[i]
+                if val is None:
+                    continue
+                if temporal[col] == "timestamp_ntz":
+                    lo, hi = lo - _NTZ_BELOW_US, hi + _NTZ_ABOVE_US
             try:
                 if not _OPS[op](lo, hi, val):
                     alive = False

@@ -241,6 +241,65 @@ def test_run_silver_fail_job_gates_before_writes(
     assert not silver.exists() and not quarantine.exists()
 
 
+def test_run_silver_counts_come_from_the_writes_and_quarantine_gates_after(
+    spark, tmp_path, evgen
+):
+    """The good/bad counts observed on the two writes equal the rows
+    written and the generator's split; with fail_job, a batch that
+    passes every dataset-level check but quarantines rows raises only
+    after both sinks are written."""
+    import csv
+    import io
+
+    from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
+        run_silver,
+    )
+
+    batch = evgen.make_batch(seed=2, day_index=0, n_rows=120)
+    res = run_silver(
+        spark,
+        _write(tmp_path / "all.csv", batch.csv_text),
+        str(tmp_path / "s1"),
+        str(tmp_path / "q1"),
+    )
+    assert (res.good_count, res.bad_count) == (batch.good, batch.bad)
+    assert spark.read.parquet(str(tmp_path / "s1")).count() == batch.good
+    assert spark.read.parquet(str(tmp_path / "q1")).count() == batch.bad
+
+    # keep only rows every dataset-level constraint admits; the
+    # zero-kWh, end-before-start and null-timestamp rows still quarantine
+    ids = ("sessionId", "userId", "stationId", "locationId")
+    measures = ("kwhTotal", "dollars", "chargeTimeHrs", "distance")
+    rows = list(csv.DictReader(io.StringIO(batch.csv_text)))
+    ok = [
+        r
+        for r in rows
+        if all(r[c] not in ("", "NA") for c in ids)
+        and all(r[c] in ("", "NA") or float(r[c]) >= 0 for c in measures)
+        and r["facilityType"] in ("1", "2", "3", "4")
+    ]
+    out = io.StringIO()
+    w = csv.DictWriter(out, fieldnames=list(rows[0]), lineterminator="\n")
+    w.writeheader()
+    w.writerows(ok)
+    silver, quarantine = tmp_path / "s2", tmp_path / "q2"
+    with pytest.raises(RuntimeError, match="Quality gate failed"):
+        run_silver(
+            spark,
+            _write(tmp_path / "ok.csv", out.getvalue()),
+            str(silver),
+            str(quarantine),
+            fail_mode="fail_job",
+        )
+    assert spark.read.parquet(str(silver)).count() > 0
+    assert spark.read.parquet(str(quarantine)).count() > 0
+
+
+def _write(path, text) -> str:
+    path.write_text(text)
+    return str(path)
+
+
 def test_run_silver_rejects_unknown_fail_mode(spark, tmp_path, evgen_batch_csv):
     from ev_charging_sessions_orchestrated_lakehouse_pipeline_spark.operators.silver import (
         run_silver,
