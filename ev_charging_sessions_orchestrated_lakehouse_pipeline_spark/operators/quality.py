@@ -261,29 +261,19 @@ class VerificationSuite:
         return VerificationResult(status, results)
 
     def run(self) -> VerificationResult:
-        """Evaluate every check. The scan-level metrics ride along
-        with the first uniqueness ``groupBy`` job through
-        ``df.observe`` — so a suite scans its input once per
+        """Evaluate every check. The first uniqueness ``groupBy`` job
+        runs on :meth:`attach`'s observed frame, so the scan-level
+        metrics ride along with it — a suite scans its input once per
         uniqueness constraint and no more; a suite without one runs
         the single ``agg`` job."""
-        from pyspark.sql import Observation
-
         assert self._df is not None, "call on_data first"
-        df = self._df
         scan, grouping = self._split_constraints()
-        metrics = [c.metric.alias(f"m{i}") for i, (_, c) in enumerate(scan)]
-        values: dict[int, float | None] = {}
-        if scan and grouping:
-            observation = Observation()
-            observed = df.observe(observation, *metrics)
-            values.update(self._grouping_values(observed, grouping[:1]))
-            values.update(self._grouping_values(df, grouping[1:]))
-            values.update(_scan_values(scan, observation.get))
-        else:
-            if scan:
-                values.update(_scan_values(scan, df.agg(*metrics).collect()[0]))
-            values.update(self._grouping_values(df, grouping))
-        return self._assemble(values)
+        if not grouping:
+            row = self._df.agg(*_scan_metrics(scan)).collect()[0] if scan else None
+            return self._assemble(_scan_values(scan, row))
+        observed, handle = self.attach(self._df)
+        handle._ran = self._grouping_values(observed, grouping[:1])
+        return handle.result()
 
     def attach(self, df: DataFrame) -> tuple[DataFrame, "ObservedVerification"]:
         """Zero-extra-pass verification via Spark's Observation API:
@@ -313,10 +303,7 @@ class VerificationSuite:
         if not scan:
             return df, ObservedVerification(self, None, scan, grouping, df)
         observation = Observation()
-        observed = df.observe(
-            observation,
-            *[c.metric.alias(f"m{i}") for i, (_, c) in enumerate(scan)],
-        )
+        observed = df.observe(observation, *_scan_metrics(scan))
         return observed, ObservedVerification(self, observation, scan, grouping, df)
 
 
@@ -330,19 +317,30 @@ class ObservedVerification:
         self._scan = scan
         self._grouping = grouping
         self._df = df
+        # uniqueness values VerificationSuite.run already computed:
+        # its first groupBy job is the action the observation rides on
+        self._ran: dict[int, float | None] = {}
 
     def result(self) -> VerificationResult:
-        values: dict[int, float | None] = {}
+        values = dict(self._ran)
         if self._scan:
             # blocks until the action completes
             values.update(_scan_values(self._scan, self._observation.get))
-        values.update(self._suite._grouping_values(self._df, self._grouping))
+        pending = [g for g in self._grouping if id(g[1]) not in values]
+        values.update(self._suite._grouping_values(self._df, pending))
         return self._suite._assemble(values)
+
+
+def _scan_metrics(scan) -> list:
+    """The ``m<i>`` metric columns of the scan-level constraints —
+    the one list both the ``agg`` pass and ``observe`` evaluate."""
+    return [c.metric.alias(f"m{i}") for i, (_, c) in enumerate(scan)]
 
 
 def _scan_values(scan, row) -> dict[int, float | None]:
     """{id(constraint): value} from the ``m<i>`` metric row of a
-    scan-level pass (an ``agg`` row or an observation's dict)."""
+    scan-level pass (an ``agg`` row or an observation's dict; None
+    when there is no scan-level constraint)."""
     return {
         id(c): None if row[f"m{i}"] is None else float(row[f"m{i}"])
         for i, (_, c) in enumerate(scan)

@@ -3411,34 +3411,45 @@ _NTZ_BELOW_US = 14 * 3600 * 10**6
 _NTZ_ABOVE_US = 12 * 3600 * 10**6
 
 
-def _temporal_literal(kind: str, op: str, val):
+@functools.lru_cache(maxsize=64)
+def _temporal_columns(schema_json: str) -> dict[str, str]:
+    """{column: type} of a manifest schema's DATE / TIMESTAMP /
+    TIMESTAMP_NTZ columns — the ones whose footer bounds are integers
+    (:func:`_temporal_bounds`). Cached by the schema string, so the
+    branches of one scan and the scans of one table version parse it
+    once."""
+    return {
+        f["name"]: f["type"]
+        for f in json.loads(schema_json)["fields"]
+        if f["type"] in ("date", "timestamp", "timestamp_ntz")
+    }
+
+
+def _temporal_literal(kind: str, op: str, val, ntz_preferred):
     """A filter literal on a ``kind`` column in the integer domain of
     its footer bounds, converted by pyspark's own ``toInternal`` — the
     conversion ``F.lit`` applies when :func:`_filters_to_column`
     re-applies the filter — or None when the conjunct must not prune:
     a string, a date against a timestamp or a datetime against a date
     (Spark compares those after a cast), a naive datetime in a session
-    that types it TIMESTAMP_NTZ, or a datetime before the Gregorian
-    switch (``F.lit`` rebases those from the Julian calendar). A
-    TIMESTAMP_NTZ column takes the literal as the instant ``F.lit``
-    makes of it; :func:`_prune_files` widens that column's bounds by
-    the zone offsets instead."""
+    that types it TIMESTAMP_NTZ (``ntz_preferred()``), or a datetime
+    before the Gregorian switch (``F.lit`` rebases those from the
+    Julian calendar). A TIMESTAMP_NTZ column takes the literal as the
+    instant ``F.lit`` makes of it; :func:`_prune_files` widens that
+    column's bounds by the zone offsets instead."""
     import datetime
 
     from pyspark.sql.types import DateType, TimestampType
 
     if op == "in":
-        vs = [_temporal_literal(kind, "=", v) for v in val]
+        vs = [_temporal_literal(kind, "=", v, ntz_preferred) for v in val]
         return None if any(v is None for v in vs) else vs
     if kind == "date":
         return DateType().toInternal(val) if type(val) is datetime.date else None
     if not isinstance(val, datetime.datetime) or val.year <= 1582:
         return None
-    if kind == "timestamp" and val.tzinfo is None:
-        from pyspark.sql.utils import is_timestamp_ntz_preferred
-
-        if is_timestamp_ntz_preferred():
-            return None
+    if kind == "timestamp" and val.tzinfo is None and ntz_preferred():
+        return None
     return TimestampType().toInternal(val)
 
 
@@ -3455,14 +3466,20 @@ def _prune_files(table: str, manifest: dict, filters: list[tuple]) -> list[str]:
     # footer stats and bloom bitmaps key by PHYSICAL column names
     # (they come from the files); filters arrive logical
     cmap = manifest.get("column_mapping") or {}
-    # the columns whose footer bounds are integers (_temporal_bounds)
-    temporal = {
-        f["name"]: f["type"]
-        for f in json.loads(manifest["schema"])["fields"]
-        if f["type"] in ("date", "timestamp", "timestamp_ntz")
-    }
+    # the columns whose footer bounds are integers; only a min/max
+    # conjunct can read them
+    temporal = (
+        _temporal_columns(manifest["schema"])
+        if any(op in _OPS for _, op, _ in filters)
+        else {}
+    )
+    # the session's literal typing is one py4j round trip, asked at
+    # most once per call and only for a naive datetime on a TIMESTAMP
+    from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+    ntz_preferred = functools.cache(is_timestamp_ntz_preferred)
     converted = {
-        i: _temporal_literal(temporal[col], op, val)
+        i: _temporal_literal(temporal[col], op, val, ntz_preferred)
         for i, (col, op, val) in enumerate(filters)
         if col in temporal and op in _OPS
     }
